@@ -69,6 +69,16 @@ def _ddl_for(pdf) -> str:
     return ", ".join(parts)
 
 
+def _end_row(options, n_rows: int) -> int:
+    """The ``endRow`` option clamped to the file (default: its end)."""
+    end = options.get("endrow", options.get("endRow"))
+    if end is None:
+        return n_rows
+    if int(end) < 0:
+        raise ValueError("endRow must be >= 0")
+    return min(int(end), n_rows)
+
+
 class ReplayDataSource(DataSource):
     """Replays one parquet file as row-ordered micro-batches."""
 
@@ -96,6 +106,12 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
         if self.batch_rows <= 0 or self.start_row < 0:
             raise ValueError("batchRows must be positive and startRow >= 0")
         self._pdf = _load_pdf(self.path)
+        # endRow: stop the replay before this row (the source runs dry
+        # there) — a deterministic mid-stream stop for the restart
+        # queries (q310), whose resumed run omits the option
+        self.end_row = _end_row(options, len(self._pdf))
+        if self.end_row < self.start_row:
+            raise ValueError("endRow must be >= startRow")
         # orderBy: replay in a deterministic sort order instead of
         # file order (comma-separated columns; stable mergesort so
         # ties keep file order). An event-time-ordered replay makes
@@ -122,7 +138,7 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         lo = start["row"]
-        hi = min(lo + self.batch_rows, len(self._pdf))
+        hi = min(lo + self.batch_rows, self.end_row)
         return self._rows(lo, hi), {"row": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> "_CopyableRows":

@@ -25,14 +25,16 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import collect_memory_sink, run_stream
 from cli_spark.tables import events_stream, load_table
 
 
-def _drain_memory_sink(spark: SparkSession, agg: DataFrame, prefix: str) -> DataFrame:
-    """Run a streaming aggregation to completion (availableNow) into a
-    memory sink, materialize the result, and DROP the sink's temp view
-    so repeated invocations in one session don't accumulate
-    fully-materialized tables in driver memory.
+def _drain_memory_sink(
+    spark: SparkSession, agg: DataFrame, prefix: str, output_mode: str = "complete"
+) -> DataFrame:
+    """Run a streaming aggregation over a bounded source to completion
+    (`run_stream`) into a memory sink and return the materialized
+    result (`collect_memory_sink` drops the sink's temp view).
 
     CONTRACT: callers must pass an AGGREGATED stream (windowed/keyed
     rollup) whose output cardinality is bounded by group count — the
@@ -54,18 +56,13 @@ def _drain_memory_sink(spark: SparkSession, agg: DataFrame, prefix: str) -> Data
             + analyzed
         )
     sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    query = (
+    run_stream(
         agg.writeStream.format("memory")
         .queryName(sink_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
+        .outputMode(output_mode)
         .start()
     )
-    query.awaitTermination()
-    sink = spark.table(sink_name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(sink_name)
-    return out
+    return collect_memory_sink(spark, sink_name)
 
 
 @register(
@@ -230,7 +227,7 @@ GROUP BY date_trunc('hour', ts), event_type
 )
 def q103_streaming_tumbling_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Structured Streaming: readStream over the events parquet,
-    watermarked tumbling aggregation, availableNow trigger into a
+    watermarked tumbling aggregation, drained into a
     memory sink (complete mode), result returned as the sink table.
 
     The watermark is wider than the data's time span, so no row is
@@ -284,7 +281,7 @@ FROM mark GROUP BY user_id, sess_no
 )
 def q124_streaming_session_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming session windows: readStream over the events
-    parquet, per-user 30-minute-gap session aggregation, availableNow
+    parquet, per-user 30-minute-gap session aggregation, drained
     into a memory sink (complete mode). The oracle is the classic
     batch sessionization (lag-gap → running session number) on
     MICROSECOND-truncated timestamps with a STRICT > gap test,
@@ -357,7 +354,7 @@ def q214_streaming_enrichment_true(spark: SparkSession, sf_dir: str) -> DataFram
     dimension (the canonical "enrich the stream with the dim table"
     pattern — Spark re-plans the static side per micro-batch, so dim
     updates between batches are picked up), then a per-segment
-    aggregation drained through the availableNow memory sink.
+    aggregation drained through the memory sink.
 
     The static side is broadcast (dim-sized); the streaming state is
     one row per market segment. This is the graded complement of
@@ -401,7 +398,7 @@ def q246_streaming_sliding_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Structured Streaming run of the SLIDING window aggregation
     (1-hour windows every 15 minutes — q101's streaming sibling, the
     same F.window expression under readStream): watermarked, drained
-    through the availableNow memory sink in complete mode. Every event
+    through the memory sink in complete mode. Every event
     belongs to exactly 4 windows; the streaming state is one row per
     open window, and the watermark (wider than the data span) never
     drops a row, so the result must equal the ×4-expansion batch
@@ -448,7 +445,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair (unbounded) and so must land in a distributed sink, not
     a driver-resident memory table. Both sides carry watermarks (the
     state-cleanup contract a production stream-stream join needs);
-    under availableNow every match emits within the run, so the
+    drained by `run_stream` every match emits within the run, so the
     per-user pair census over the sink equals the batch interval-join
     oracle exactly."""
     import shutil
@@ -484,12 +481,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(f"{out_root}/pairs")
 
-    query = (
-        joined.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_stream(joined.writeStream.foreachBatch(sink).start())
     try:
         pairs = spark.read.parquet(f"{out_root}/pairs")
         result = (
@@ -527,9 +519,6 @@ def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFram
     after the source reports exhaustion; complete-mode aggregation is
     batch-slicing-invariant, so it must equal the batch oracle
     exactly whatever the batch boundaries."""
-    import time
-    import uuid as _uuid
-
     from cli_spark.sources.replay_datasource import register_replay_source
 
     register_replay_source(spark)
@@ -552,29 +541,7 @@ def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFram
             "value_sum",
         )
     )
-    name = "replay_graded_" + _uuid.uuid4().hex[:8]
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_memory_sink(spark, agg, "replay_graded")
 
 
 def _run_restart_recovery(
@@ -582,11 +549,14 @@ def _run_restart_recovery(
     extra_options: dict | None = None,
 ) -> tuple[DataFrame, dict]:
     """Shared engine for q310/q352: run the replayed windowed
-    aggregation with a checkpoint, STOP the query mid-stream, restart
-    it from the same checkpoint, drain to exhaustion, and return
-    (result, evidence). Evidence records where phase 1 stopped and
-    the offset phase 2 resumed from, so tests can assert the restart
-    really was a mid-stream recovery rather than a fresh start.
+    aggregation with a checkpoint, STOP it mid-stream, restart it from
+    the same checkpoint, drain to exhaustion, and return (result,
+    evidence). The stop is made by the source: phase 1 replays with
+    ``endRow`` = 2 batches, so it drains exactly rows [0, 2·batchRows)
+    and commits them; phase 2 omits the option and must resume at row
+    2·batchRows. Evidence records phase 1's event count and the offset
+    phase 2 resumed from, so tests can assert the restart really was a
+    mid-stream recovery rather than a fresh start.
     ``fmt`` selects the source: "replay" (driver-side simple reader)
     or "replay_part" (q330's partitioned DataSourceStreamReader —
     recovery then re-plans executor-side partitions for the
@@ -594,7 +564,6 @@ def _run_restart_recovery(
     import json
     import shutil
     import tempfile
-    import time
     import uuid as _uuid
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -606,11 +575,11 @@ def _run_restart_recovery(
     register_replay_partitioned(spark)
     ckpt = tempfile.mkdtemp(prefix="cli_spark_ckpt_")
     # ~10 micro-batches at ANY scale factor (parquet footer read is
-    # driver-side metadata only), so the kill always lands mid-stream
+    # driver-side metadata only), so the stop always lands mid-stream
     n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
     batch_rows = max(1, (n_rows + 9) // 10)
 
-    def build() -> DataFrame:
+    def start(name: str, end_row: int | None = None):
         reader = (
             spark.readStream.format(fmt)
             .option("path", f"{sf_dir}/events.parquet")
@@ -618,9 +587,11 @@ def _run_restart_recovery(
         )
         for k, v in (extra_options or {}).items():
             reader = reader.option(k, v)
-        stream = reader.load()
-        return (
-            stream.groupBy(F.window("ts", "1 hour"), "event_type")
+        if end_row is not None:
+            reader = reader.option("endRow", end_row)
+        agg = (
+            reader.load()
+            .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 dsum(F.col("value")).alias("value_sum"),
@@ -632,81 +603,35 @@ def _run_restart_recovery(
                 "value_sum",
             )
         )
-
-    evidence: dict = {}
-    try:
-        # ---- phase 1: run a few micro-batches, then kill the query
-        name1 = "restart_p1_" + _uuid.uuid4().hex[:8]
-        q1 = (
-            build().writeStream.format("memory")
-            .queryName(name1)
+        return (
+            agg.writeStream.format("memory")
+            .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="200 milliseconds")
             .start()
         )
-        t0 = time.time()
-        while time.time() - t0 < 60:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
-                break
-            time.sleep(0.05)
-        q1.stop()
-        q1.awaitTermination()
-        p1 = spark.table(name1)
-        p1_rows, p1_schema = p1.collect(), p1.schema
-        part = sum(r["n_events"] for r in p1_rows)
-        evidence["phase1_events"] = int(part)
-        evidence["batch_rows"] = batch_rows
-        spark.catalog.dropTempView(name1)
+
+    evidence: dict = {"batch_rows": batch_rows}
+    try:
+        # ---- phase 1: the source runs dry after two batches
+        name1 = "restart_p1_" + _uuid.uuid4().hex[:8]
+        run_stream(start(name1, end_row=2 * batch_rows))
+        p1 = collect_memory_sink(spark, name1)
+        evidence["phase1_events"] = int(p1.agg(F.sum("n_events")).first()[0])
 
         # ---- phase 2: restart from the SAME checkpoint, drain fully
         name2 = "restart_p2_" + _uuid.uuid4().hex[:8]
-        q2 = (
-            build().writeStream.format("memory")
-            .queryName(name2)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = q2.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q2.stop()
-            q2.awaitTermination()
+        q2 = start(name2)
+        run_stream(q2)
         for p in q2.recentProgress:
-            src = (p.get("sources") or [{}])[0]
-            so = src.get("startOffset")
+            so = (p.get("sources") or [{}])[0].get("startOffset")
             if so is not None:
-                if isinstance(so, str):
-                    # Python stream sources report the offset dict's
-                    # repr (single quotes), not JSON
-                    try:
-                        so = json.loads(so)
-                    except ValueError:
-                        import ast
-
-                        so = ast.literal_eval(so)
-                evidence["phase2_start_row"] = int(so.get("row", 0))
+                # Python stream sources report the offset dict's repr
+                # (single quotes), not JSON
+                so = json.loads(so.replace("'", '"')) if isinstance(so, str) else so
+                evidence["phase2_start_row"] = int(so["row"])
                 break
-        sink = spark.table(name2)
-        rows = sink.collect()
-        if rows:
-            out = spark.createDataFrame(rows, sink.schema)
-        else:
-            # phase 1 won the race and consumed every batch before the
-            # stop landed; with no new data, complete mode re-emits
-            # nothing — phase 1's full-state snapshot IS the answer
-            evidence["phase1_completed_stream"] = True
-            out = spark.createDataFrame(p1_rows, p1_schema)
-        spark.catalog.dropTempView(name2)
+        out = collect_memory_sink(spark, name2)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return out, evidence
@@ -727,9 +652,9 @@ GROUP BY date_trunc('hour', ts), event_type
 def q310_streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming CHECKPOINT RECOVERY, graded (VERDICT r6 #8): the
     replayed event stream's windowed aggregation is started with a
-    checkpoint directory, STOPPED after the first committed
-    micro-batches (a simulated driver crash — the stop point is
-    intentionally timing-dependent), then RESTARTED from the same
+    checkpoint directory, STOPPED after its first two committed
+    micro-batches (a simulated driver crash; the source's ``endRow``
+    makes the stop point deterministic), then RESTARTED from the same
     checkpoint and drained to exhaustion. The restarted query resumes
     from the recorded replay offset with its state-store contents
     intact, so the final complete-mode result must equal the
@@ -812,9 +737,6 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
     hourly census cut at the last finalized hour — any state lost
     between the chained operators, or a mis-propagated watermark,
     breaks the hash."""
-    import time
-    import uuid as _uuid
-
     import pyarrow.parquet as pq
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -850,29 +772,7 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
             "value_sum",
         )
     )
-    name = "chained_" + _uuid.uuid4().hex[:8]
-    query = (
-        lvl2.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_memory_sink(spark, lvl2, "chained", "append")
 
 
 @register(
@@ -960,7 +860,6 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
     import tempfile
-    import time
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1005,29 +904,7 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
                 "value_sum",
             )
         )
-        name = "wmdrop_" + uuid.uuid4().hex[:8]
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
-        sink = spark.table(name)
-        out = spark.createDataFrame(sink.collect(), sink.schema)
-        spark.catalog.dropTempView(name)
-        return out
+        return _drain_memory_sink(spark, agg, "wmdrop", "append")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1079,7 +956,6 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
     by this query's bit-exact oracle match across ~20 batches."""
     import shutil
     import tempfile
-    import time
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1101,22 +977,7 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(f"{out_root}/kept")
 
-        query = (
-            deduped.writeStream.foreachBatch(sink)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(deduped.writeStream.foreachBatch(sink).start())
         kept = spark.read.parquet(f"{out_root}/kept")
         result = kept.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_unique"),
@@ -1175,7 +1036,6 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
     parquet sink."""
     import shutil
     import tempfile
-    import time
     from collections.abc import Iterator
 
     import pandas as pd
@@ -1229,23 +1089,11 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
                 f"{out_root}/upd"
             )
 
-        query = (
+        run_stream(
             totals.writeStream.foreachBatch(sink)
             .outputMode("update")
-            .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
         upd = spark.read.parquet(f"{out_root}/upd")
         from pyspark.sql.window import Window as _Win
 
@@ -1288,8 +1136,6 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rank has full tie-breaks. The memory sink holds K rows,
     not the keyed state, so the driver footprint is K regardless of
     user cardinality."""
-    import time
-
     from cli_spark.sources.replay_datasource import register_replay_source
 
     e = load_table(spark, sf_dir, "events")
@@ -1311,29 +1157,7 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n_events").desc(), F.col("user_id").asc())
         .limit(10)
     )
-    name = "topk_" + uuid.uuid4().hex[:8]
-    query = (
-        ranked.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 5 and time.time() - t0 < 240:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_memory_sink(spark, ranked, "topk")
 
 
 @register(
@@ -1403,7 +1227,6 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
     day's data — and the oracle reproduces that strict cut."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1451,22 +1274,7 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(f"{out_root}/rows")
 
-        query = (
-            joined.writeStream.foreachBatch(sink)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(joined.writeStream.foreachBatch(sink).start())
         rows = spark.read.parquet(f"{out_root}/rows")
         matched = (
             rows.filter(F.col("e_user").isNotNull())
@@ -1520,9 +1328,6 @@ def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataF
     equal the batch oracle exactly; correctness is batch-slicing- AND
     partition-slicing-invariant, so any row lost or duplicated at a
     partition boundary breaks the hash."""
-    import time
-    import uuid as _uuid
-
     import pyarrow.parquet as pq
 
     from cli_spark.sources.replay_partitioned import register_replay_partitioned
@@ -1550,29 +1355,7 @@ def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataF
             "value_sum",
         )
     )
-    name = "replay_part_" + _uuid.uuid4().hex[:8]
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_memory_sink(spark, agg, "replay_part")
 
 
 @register(
@@ -1601,13 +1384,29 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: per-batch writes are distributed parquet appends to
     one partition directory; the final census is an ordinary scan-agg
-    over the sink. The kill point is timing-dependent by design; the
-    final state is not."""
+    over the sink. The crash is deterministic: phase 1's sink raises
+    right after writing batch ``_Q331_CRASH_BATCH``, which is then
+    offset-logged but never committed, so the restart always
+    re-executes it (asserted in tests/test_streaming.py through
+    `_run_idempotent_sink_recovery`'s evidence)."""
+    out, _evidence = _run_idempotent_sink_recovery(spark, sf_dir)
+    return out
+
+
+# the batch q331's phase-1 sink fails on, after writing it
+_Q331_CRASH_BATCH = 1
+
+
+def _run_idempotent_sink_recovery(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, dict]:
+    """q331's engine: returns (census, evidence) where evidence holds
+    the batch id phase 1 crashed on and the batch ids phase 2 ran."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
+    from pyspark.errors import StreamingQueryException
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1616,17 +1415,21 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
     batch_rows = max(1, (n_rows + 9) // 10)
     ckpt = tempfile.mkdtemp(prefix="cli_spark_idem_ckpt_")
     out_root = tempfile.mkdtemp(prefix="cli_spark_idem_out_")
+    evidence: dict = {"crash_batch_id": _Q331_CRASH_BATCH, "phase2_batch_ids": []}
 
-    def build() -> DataFrame:
-        stream = (
+    def start(sink):
+        return (
             spark.readStream.format("replay")
             .option("path", f"{sf_dir}/events.parquet")
             .option("batchRows", batch_rows)
             .load()
+            .select("event_id", "ts", "value")
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        return stream.select("event_id", "ts", "value")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.withColumn("_bid", F.lit(batch_id))
             .write.mode("overwrite")
@@ -1635,42 +1438,29 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
             .parquet(out_root + "/rows")
         )
 
+    def crashing_sink(batch_df: DataFrame, batch_id: int) -> None:
+        write(batch_df, batch_id)
+        if batch_id == _Q331_CRASH_BATCH:
+            raise RuntimeError(f"q331: simulated crash after writing batch {batch_id}")
+
+    def recording_sink(batch_df: DataFrame, batch_id: int) -> None:
+        evidence["phase2_batch_ids"].append(batch_id)
+        write(batch_df, batch_id)
+
     try:
-        # phase 1: run a few batches, then kill mid-stream
-        q1 = (
-            build().writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
-        t0 = time.time()
-        while time.time() - t0 < 60:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
-                break
-            time.sleep(0.05)
-        q1.stop()
-        q1.awaitTermination()
+        # phase 1: the sink crashes after writing the crash batch, so
+        # that batch is in the offset log but not the commit log
+        try:
+            run_stream(start(crashing_sink))
+        except StreamingQueryException as exc:
+            if "q331: simulated crash" not in str(exc):
+                raise
+        else:
+            raise RuntimeError("q331: phase 1 drained without the simulated crash")
 
         # phase 2: restart from the checkpoint; the in-flight batch
         # re-executes and OVERWRITES its own partition (idempotent)
-        q2 = (
-            build().writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = q2.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q2.stop()
-            q2.awaitTermination()
+        run_stream(start(recording_sink))
         rows = spark.read.parquet(out_root + "/rows")
         result = (
             rows.groupBy(F.window("ts", "1 hour"))
@@ -1688,7 +1478,7 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(out_root, ignore_errors=True)
-    return out
+    return out, evidence
 
 
 @register(
@@ -1721,7 +1511,6 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the census is the q100 two-level distinct shape."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1797,22 +1586,7 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(f"{out_root}/rows")
 
-        query = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(stream.writeStream.foreachBatch(sink).start())
         tail = spark.read.parquet(f"{out_root}/rows")
         # The merge is gap-free iff the file's replay order equals
         # event_id order (first `cutover` file rows = smallest
@@ -1891,7 +1665,6 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1912,24 +1685,12 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
             .select(F.col("event_id").cast("string").alias("k"))
         )
-        query = (
+        run_stream(
             stream.writeStream.format("checksum")
             .option("path", out_root)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
         total, acc, n_batches = 0, 0, 0
         for f in sorted(_os.listdir(out_root)):
             if not f.startswith("batch_"):
@@ -2022,7 +1783,6 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     eviction cuts exactly."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2071,22 +1831,7 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(f"{out_root}/rows")
 
-        query = (
-            joined.writeStream.foreachBatch(sink)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(joined.writeStream.foreachBatch(sink).start())
         rows = spark.read.parquet(f"{out_root}/rows")
         matched = (
             rows.filter(F.col("p_id").isNotNull() & F.col("e_id").isNotNull())
@@ -2158,7 +1903,6 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is part of the contract."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2181,25 +1925,13 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * (10 ** MONEY_SCALE)).cast("long"))
             .alias("value_cents"),
         )
-        query = (
+        run_stream(
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
         spark.catalog.dropTempView(name)
         md = spark.read.format("state-metadata").load(ckpt).collect()
         if len(md) != 1 or md[0]["operatorName"] != "stateStoreSave":
@@ -2254,7 +1986,6 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
     statistic, finish the non-mergeable shape in batch."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2282,22 +2013,7 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
             )
             partial.write.mode("append").parquet(f"{out_root}/partials")
 
-        query = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(stream.writeStream.foreachBatch(sink).start())
         partials = spark.read.parquet(f"{out_root}/partials")
         types = ["click", "error", "purchase", "signup", "view"]
         pivoted = (
@@ -2356,8 +2072,6 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
     join at job start) is the SCD2-correct pattern. Graded: per-tier
     census of the drained stream; the oracle closed-forms the version
     arithmetic and reaches the same numbers without any join."""
-    import time
-
     import pyarrow.parquet as pq
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -2401,30 +2115,7 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.lit(1)).alias("n_events"),
         dsum(F.col("value")).alias("value_sum"),
     )
-    name = "scd2_" + uuid.uuid4().hex[:8]
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        import time as _t
-        idle, t0 = 0, _t.time()
-        while idle < 5 and _t.time() - t0 < 240:
-            _t.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out.select(
+    return _drain_memory_sink(spark, agg, "scd2").select(
         F.col("tier").cast("long").alias("tier"), "n_events", "value_sum"
     )
 
@@ -2574,27 +2265,22 @@ def q391_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .queryName(name)
                 .outputMode("complete")
                 .option("checkpointLocation", tmp + "/ck")
-                .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
+            run_stream(q)
             committed = [p for p in q.recentProgress if p["numInputRows"] > 0]
             if len(committed) < 2:
                 raise RuntimeError(
                     f"q391 expected multi-batch RocksDB run, got "
                     f"{len(committed)} data batches"
                 )
-            metrics = (q.lastProgress or {}).get("stateOperators", [{}])[0] \
-                .get("customMetrics", {})
+            metrics = committed[-1]["stateOperators"][0].get("customMetrics", {})
             if not any("rocksdb" in k.lower() for k in metrics):
                 raise RuntimeError(
                     "q391: no RocksDB custom metrics in progress — "
                     "state did not run on RocksDBStateStoreProvider"
                 )
-            sink = spark.table(name)
-            rows = sink.collect()
-            out = spark.createDataFrame(rows, sink.schema)
-            spark.catalog.dropTempView(name)
+            out = collect_memory_sink(spark, name)
         finally:
             if prev is None:
                 spark.conf.unset(key)
@@ -2653,27 +2339,13 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
             .select("event_id", "event_type", "value")
         )
-        q = (
+        run_stream(
             stream.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", tmp + "/ck")
             .outputMode("append")
-            .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            import time as _time
-
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = q.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q.stop()
-            q.awaitTermination()
         if not os.path.isdir(out_dir + "/_spark_metadata"):
             raise RuntimeError("q395: file sink wrote no _spark_metadata log")
         # plant an orphan: copy a committed part file under an
@@ -2745,28 +2417,12 @@ def _stream_join_sides(spark: SparkSession, sf_dir: str):
 def _drain_foreach_parquet(spark: SparkSession, joined: DataFrame,
                            out_root: str) -> DataFrame:
     """Run a streaming frame into an append parquet foreachBatch sink
-    until the replay sources go idle; return the written rows."""
-    import time as _time
+    until the replay sources run dry; return the written rows."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(f"{out_root}/rows")
 
-    query = (
-        joined.writeStream.foreachBatch(sink)
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, _time.time()
-        while idle < 5 and _time.time() - t0 < 240:
-            _time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(joined.writeStream.foreachBatch(sink).start())
     return spark.read.parquet(f"{out_root}/rows")
 
 
@@ -2954,9 +2610,6 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.4 fixed) either flushes windows early (missing late-batch
     matches) or never flushes them; both break the bit-exact match
     with the drained-to-exhaustion oracle."""
-    import time as _time
-    import uuid as _uuid
-
     import pyarrow.parquet as pq
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -3007,29 +2660,7 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "err_value_sum",
         )
     )
-    name = "joinagg_" + _uuid.uuid4().hex[:8]
-    query = (
-        hourly.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        idle, t0 = 0, _time.time()
-        while idle < 3 and _time.time() - t0 < 180:
-            _time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_memory_sink(spark, hourly, "joinagg", "append")
 
 
 @register(
@@ -3060,7 +2691,6 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistency contract fan-out exists to provide)."""
     import shutil
     import tempfile
-    import time as _time
 
     import pyarrow.parquet as pq
 
@@ -3087,22 +2717,7 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 batch_df.unpersist()
 
-        query = (
-            stream.writeStream.foreachBatch(fanout)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(stream.writeStream.foreachBatch(fanout).start())
 
         def census(path: str, prefix: str) -> DataFrame:
             return spark.read.parquet(path).groupBy("event_type").agg(
@@ -3177,7 +2792,6 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader is graded separately from the join output."""
     import shutil
     import tempfile
-    import time as _time
 
     pur, err, cond = _stream_join_sides(spark, sf_dir)
     joined = pur.join(err, cond, "inner")
@@ -3187,23 +2801,11 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(f"{out_root}/rows")
 
-        query = (
+        run_stream(
             joined.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
         left = (
             spark.read.format("statestore")
             .option("path", ckpt).option("joinSide", "left").load()

@@ -1,5 +1,16 @@
-"""foreachBatch partial-drain helper shared by the TRUE-stream
-mergeable-sketch queries (q473/q476/q479/q481/q486/q491/q493/q496/q500).
+"""How the TRUE-stream queries end, and the partial-drain helper
+shared by the mergeable-sketch queries
+(q473/q476/q479/q481/q486/q491/q493/q496/q500).
+
+Every stream over a bounded source (the replay parquet sources, the
+single-file events stream) is started under the DEFAULT trigger and
+ended by `run_stream`: `processAllAvailable()` returns once the source
+reports no new data AND every data and no-data micro-batch (the final
+watermark advance that flushes append-mode windows) has committed, so
+no result depends on wall-clock polling. Memory sinks are read back
+with `collect_memory_sink`.
+
+The drain below (`drain_partials`) is the sketch family's sink.
 
 Measured motivation (round 15 optimization, guide §1/§6): with the
 partials round-tripped through per-batch `write.mode("append")
@@ -32,6 +43,38 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+
+def run_stream(query: StreamingQuery) -> None:
+    """Drain a started stream over a BOUNDED source, then stop it.
+
+    `processAllAvailable()` blocks until the source has no new data
+    and the last batch (including any no-data batch that advances the
+    watermark) has committed; it re-raises the query's failure. The
+    stop runs in any case, so a failed or interrupted drain never
+    leaks a running query.
+
+    Out of scope: streams over an UNBOUNDED source. q427 and q444
+    read `rate-micro-batch`, which always has another batch, so
+    `processAllAvailable()` would never return, and available-now
+    folds it into a single batch; they keep their data-predicate
+    waits, which raise on a shortfall."""
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+        query.awaitTermination()
+
+
+def collect_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """Materialize memory sink ``name`` as a local DataFrame and drop
+    its temp view, so repeated invocations in one session don't keep
+    fully-materialized sink tables on the driver."""
+    sink = spark.table(name)
+    out = spark.createDataFrame(sink.collect(), sink.schema)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # Hard per-batch ceiling enforcing the sketch-grain contract in CODE
@@ -68,12 +111,13 @@ def drain_partials(
         partial = partial_of(batch_df, batch_id)
         if not schema_cell:
             schema_cell.append(partial.schema)
-        batch_rows = partial.collect()
+        # limit(cap + 1): a fact-grain batch trips the guard after at
+        # most cap + 1 rows reach the driver, not after all of them
+        batch_rows = partial.limit(MAX_PARTIAL_ROWS_PER_BATCH + 1).collect()
         if len(batch_rows) > MAX_PARTIAL_ROWS_PER_BATCH:
             raise ValueError(
-                f"drain_partials: batch {batch_id} produced "
-                f"{len(batch_rows)} partial rows (> "
-                f"{MAX_PARTIAL_ROWS_PER_BATCH}) — partials must be "
+                f"drain_partials: batch {batch_id} produced more than "
+                f"{MAX_PARTIAL_ROWS_PER_BATCH} partial rows — partials must be "
                 "sketch-grain; use a durable sink for fact-grain "
                 "streams"
             )
@@ -81,18 +125,16 @@ def drain_partials(
 
     from cli_spark.session import scoped_replay_ckpt_manager
 
-    # direct-write checkpoint file manager for the bounded replay run
-    # (round-16: ~1.8 s/query of rename-protocol cost removed; see
-    # session.replay_ckpt_manager for the measurement and the
-    # production parameterization)
+    # FileSystem-API checkpoint file manager for the bounded replay
+    # run (round 16: ~1.8 s/query; see session.py for what it does
+    # and does not change)
     with scoped_replay_ckpt_manager(spark):
         query = stream.writeStream.foreachBatch(_sink).start()
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    if not schema_cell:  # stream produced no micro-batch at all
-        raise RuntimeError("replay stream delivered no micro-batch")
+        run_stream(query)
+    # an empty source still runs one empty batch 0; there is nothing
+    # to merge unless some batch carried rows
+    if not any(p["numInputRows"] for p in query.recentProgress):
+        raise RuntimeError("replay stream delivered no micro-batch with input rows")
     return spark.createDataFrame(rows, schema_cell[0])
 
 

@@ -7,6 +7,10 @@ progression) against exact DuckDB oracles; watermark-dependent
 emission cuts follow the empirical-pin method established by
 q279/q354 (pin the <=/< boundary against Spark 4.1.2 with a dedicated
 run, document it, encode it identically in the oracle).
+
+q425 and q426 replay a bounded file and end through `run_stream`;
+q427 and q444 read the unbounded rate-micro-batch source, so they stop
+on a data predicate instead (see `drain.run_stream`).
 """
 
 from __future__ import annotations
@@ -24,30 +28,7 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
-from cli_spark.tables import load_table
-
-
-def _run_until_idle(query, timeout_s: float = 180.0, idle_polls: int = 3) -> None:
-    """Poll a processing-time-triggered stream until it has drained
-    (idle_polls consecutive zero-input progress reports), then stop."""
-    try:
-        idle, t0 = 0, time.time()
-        while idle < idle_polls and time.time() - t0 < timeout_s:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
-
-
-def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    return out
+from cli_spark.streaming.drain import collect_memory_sink, run_stream
 
 
 @register(
@@ -133,15 +114,13 @@ def q425_multiwatermark_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(key, policy)
         try:
             name = f"q425_{policy}_{_uuid.uuid4().hex[:8]}"
-            q = (
+            run_stream(
                 agg.writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")
-                .trigger(processingTime="100 milliseconds")
                 .start()
             )
-            _run_until_idle(q)
-            return _drain_memory_sink(spark, name)
+            return collect_memory_sink(spark, name)
         finally:
             if prev is None:
                 spark.conf.unset(key)
@@ -244,15 +223,13 @@ def q426_state_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     name = f"q426_{_uuid.uuid4().hex[:8]}"
-    q = (
+    run_stream(
         sessions.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(processingTime="100 milliseconds")
         .start()
     )
-    _run_until_idle(q)
-    raw = _drain_memory_sink(spark, name)
+    raw = collect_memory_sink(spark, name)
     return (
         raw.groupBy((F.col("user_id") % 10).alias("user_bucket"))
         .agg(

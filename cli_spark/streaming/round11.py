@@ -249,26 +249,23 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         # per-partition fixed cost EVERY batch — size it to the
         # ~5k-row batch grain, not the core count (session.py
         # stream_partitions; round-15 optimization, guide §2.2/§5)
-        # scoped_replay_ckpt_manager (round 16): the rename-based
-        # manager paid create-temp + rename for every offset/commit
-        # log entry AND every state-store delta file (8 partitions x
-        # ~40 batches); the direct-write manager drops that protocol
-        # for this throwaway per-invocation checkpoint (measured on
-        # the drained siblings: ~1.8 s/run; here it also covers the
-        # state store's 320 delta commits).
+        # scoped_replay_ckpt_manager (round 16): the FileSystem-API
+        # checkpoint manager for this throwaway per-invocation
+        # checkpoint. Both managers are rename-based (temp file +
+        # .crc, then rename); the saving is per-call overhead of the
+        # default FileContext path, paid for every offset/commit log
+        # entry and every state-store delta file (8 partitions x ~40
+        # batches) — see session.py for the file-operation diff.
         from cli_spark.session import (
             scoped_replay_ckpt_manager,
             scoped_shuffle_partitions,
             stream_partitions,
         )
+        from cli_spark.streaming.drain import run_stream
 
         with scoped_shuffle_partitions(spark, stream_partitions()), \
                 scoped_replay_ckpt_manager(spark):
-            query = deduped.writeStream.foreachBatch(sink).start()
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+            run_stream(deduped.writeStream.foreachBatch(sink).start())
         emitted = spark.read.parquet(f"{out_root}/emitted")
         per_key = emitted.groupBy("event_type", "event_id").agg(
             F.count(F.lit(1)).alias("n_em"))

@@ -4,10 +4,10 @@
 # later in round 15 when the parity shard crossed 20 min on its own
 # after the round's six new oracle-parity entries).
 #
-# Shard A runs the TRUE-stream oracle-parity tests (the long pole:
-# ~25 replay runs of ~20 real micro-batches each, whose batch counts
-# are hard-coded in the oracles and so do not shrink with a smaller
-# SF). Shard B runs the remaining driver-mimicking parity suite
+# Shard A runs the 42 TRUE-stream oracle-parity tests (the long pole:
+# most replay 10-40 real micro-batches, whose batch counts are
+# hard-coded in the oracles and so do not shrink with a smaller SF).
+# Shard B runs the remaining driver-mimicking parity suite
 # (~450 Spark-vs-DuckDB exact comparisons). Shard C runs everything
 # else. The three processes run CONCURRENTLY, each with its own Spark
 # JVM (local[8] per the session fixture; the box has 32 vCPUs) — safe

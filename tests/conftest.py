@@ -13,9 +13,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "stream_parity: TRUE-stream oracle-parity tests (the ~25 "
-        "multi-micro-batch runs, 15-45 s each — the suite's long "
-        "pole; scripts/run_tests_sharded.sh runs them as their own "
+        "stream_parity: TRUE-stream oracle-parity tests (the 42 "
+        "multi-micro-batch runs, 2-30 s each on a 4-vCPU box, each "
+        "ending when its source runs dry — the suite's long pole; "
+        "scripts/run_tests_sharded.sh runs them as their own "
         "concurrent shard)")
 
 

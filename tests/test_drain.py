@@ -120,3 +120,53 @@ def test_drain_partials_rejects_fact_grain_streams(spark, replay_part, monkeypat
 
     with pytest.raises((ValueError, StreamingQueryException), match="sketch-grain"):
         drain_mod.drain_partials(spark, stream, fact_grain)
+
+
+@pytest.fixture()
+def empty_replay_part(spark):
+    tmp = tempfile.mkdtemp(prefix="drain_empty_")
+    spark.range(0, 0).select(
+        F.col("id"), (F.col("id") % 7).alias("grp")
+    ).repartition(1).write.mode("overwrite").parquet(tmp)
+    [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    yield part
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_run_stream_empty_source_returns_empty_sink(spark, empty_replay_part):
+    """A zero-row replay file: the source is dry from the start, so
+    run_stream returns as soon as the first trigger finds no data and
+    the memory sink holds nothing."""
+    import time
+    import uuid
+
+    from cli_spark.streaming.drain import collect_memory_sink, run_stream
+
+    register_replay_source(spark)
+    stream = (
+        spark.readStream.format("replay")
+        .option("path", empty_replay_part)
+        .option("batchRows", 25)
+        .load()
+    )
+    name = "empty_" + uuid.uuid4().hex[:6]
+    t0 = time.monotonic()
+    run_stream(stream.writeStream.format("memory").queryName(name).start())
+    assert time.monotonic() - t0 < 60
+    out = collect_memory_sink(spark, name)
+    assert out.count() == 0
+    assert out.columns == ["id", "grp"]
+
+
+def test_drain_partials_rejects_empty_stream(spark, empty_replay_part):
+    """The same zero-row file through drain_partials runs no
+    micro-batch, so there is no partial schema to return."""
+    register_replay_source(spark)
+    stream = (
+        spark.readStream.format("replay")
+        .option("path", empty_replay_part)
+        .option("batchRows", 25)
+        .load()
+    )
+    with pytest.raises(RuntimeError, match="delivered no micro-batch"):
+        drain_partials(spark, stream, lambda df, _bid: df)

@@ -8,10 +8,14 @@ prose references to the builder's own harness tooling (e.g. a
 `.claude/skills/...` path in a docstring). This test closes that gap
 and runs with every pytest session, so the scan is effectively
 pre-commit.
+
+A second scan keeps wall-clock polling loops out of the streaming
+layer (see `test_no_polling_sleeps_in_streaming`).
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -40,3 +44,33 @@ def test_no_harness_references_in_source():
                     if rx.search(line):
                         hits.append(f"{path.relative_to(REPO)}:{i}: {line.strip()}")
     assert not hits, "non-public harness references found:\n" + "\n".join(hits)
+
+
+# Streams over a bounded source end through drain.run_stream, never
+# through a wall-clock poll. Only the two queries over the unbounded
+# rate-micro-batch source wait on a data predicate.
+SLEEP_ALLOWED = {"q427_rate_micro_batch_source", "q444_streaming_observed_metrics"}
+
+
+def _is_sleep_call(node) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    return (isinstance(f, ast.Attribute) and f.attr == "sleep") or (
+        isinstance(f, ast.Name) and f.id == "sleep"
+    )
+
+
+def test_no_polling_sleeps_in_streaming():
+    hits: list[str] = []
+    for path in sorted(REPO.glob("cli_spark/streaming/**/*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            name = getattr(top, "name", None)
+            if name in SLEEP_ALLOWED:
+                continue
+            for node in ast.walk(top):
+                if _is_sleep_call(node):
+                    hits.append(
+                        f"{path.relative_to(REPO)}:{node.lineno} in {name or 'module'}")
+    assert not hits, "sleep() calls outside the allow-list:\n" + "\n".join(hits)

@@ -577,12 +577,12 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
     arrives in one batch and cross-batch semantics go unexercised)
     and the streamed windowed aggregate must equal the batch result
     exactly."""
-    import time
     import uuid
 
     from pyspark.sql import functions as F
 
     from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import run_stream
     from cli_spark.tables import load_table
 
     register_replay_source(spark)
@@ -602,25 +602,15 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(processingTime="200 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 120:
-            time.sleep(0.4)
-            p = q.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert len(data_batches) >= 2, "replay must split into micro-batches"
-        assert sum(p["numInputRows"] for p in data_batches) == batch_total
-        sink = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
-    finally:
-        q.stop()
+    run_stream(q)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) >= 2, "replay must split into micro-batches"
+    assert sum(p["numInputRows"] for p in data_batches) == batch_total
+    sink = spark.createDataFrame(
+        spark.table(name).collect(), spark.table(name).schema
+    )
     batch = load_table(spark, sf_dir, "events").groupBy(
         F.window("ts", "1 hour")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -646,24 +636,11 @@ def test_replay_restart_recovery_midstream(spark, sf_dir):
 
     # phase 2 resumed from a COMMITTED nonzero offset: genuine
     # recovery, not a fresh start (phase 1 must also have stopped
-    # before the end, or the "restart" proves nothing). The kill
-    # point is timing-dependent: on a fast or heavily loaded box
-    # phase 1 can drain every batch before the stop lands
-    # (_run_restart_recovery records phase1_completed_stream) — the
-    # result is still correct (asserted above) but recovery is
-    # unobservable, so the mid-stream evidence is skipped rather
-    # than failed (ADVICE r7).
-    if (
-        ev.get("phase1_completed_stream")
-        or "phase2_start_row" not in ev
-        or ev["phase1_events"] >= got_total
-    ):
-        import pytest as _pytest
-
-        _pytest.skip(
-            f"phase 1 drained the stream before the kill landed; "
-            f"mid-stream recovery unobservable this run: {ev}"
-        )
+    # before the end, or the "restart" proves nothing). Phase 1's
+    # source runs dry at endRow = 2 batches, so the stop point is
+    # deterministic and this evidence is asserted on every run.
+    assert ev["phase2_start_row"] == 2 * ev["batch_rows"], ev
+    assert ev["phase1_events"] == ev["phase2_start_row"], ev
     assert ev["phase2_start_row"] > 0, ev
     assert ev["phase1_events"] < got_total, ev
     assert ev["phase2_start_row"] <= ev["phase1_events"] + 1000, ev
@@ -751,7 +728,7 @@ def test_partitioned_restart_recovery_midstream(spark, sf_dir):
     must resume from the committed row offset and re-plan
     executor-side partitions for only the uncommitted range, with the
     drained result bit-identical to the batch aggregation. Same
-    timing-race skip discipline as the simple-source test."""
+    deterministic endRow stop as the simple-source test."""
     from cli_spark.streaming.batch_windows import _run_restart_recovery
 
     out, ev = _run_restart_recovery(
@@ -779,20 +756,32 @@ def test_partitioned_restart_recovery_midstream(spark, sf_dir):
     for r in re_agg:
         assert expected[r["window_start"]] == r["n_events"]
 
-    if (
-        ev.get("phase1_completed_stream")
-        or "phase2_start_row" not in ev
-        or ev["phase1_events"] >= got_total
-    ):
-        import pytest as _pytest
-
-        _pytest.skip(
-            f"phase 1 drained the stream before the kill landed; "
-            f"mid-stream recovery unobservable this run: {ev}"
-        )
+    assert ev["phase2_start_row"] == 2 * ev["batch_rows"], ev
+    assert ev["phase1_events"] == ev["phase2_start_row"], ev
     assert ev["phase2_start_row"] > 0, ev
     assert ev["phase1_events"] < got_total, ev
     assert ev["phase2_start_row"] <= ev["phase1_events"] + 1000, ev
+
+
+def test_idempotent_sink_reexecutes_failed_batch(spark, sf_dir):
+    """q331's crash is deterministic: phase 1's sink raises right
+    after writing one batch, so that batch is offset-logged but never
+    committed. The restart must re-execute exactly that batch id first
+    (its partition overwritten, not appended) and the census over the
+    sink must still equal the batch aggregation."""
+    from cli_spark.plans.registry import registry
+    from cli_spark.streaming.batch_windows import _run_idempotent_sink_recovery
+
+    out, ev = _run_idempotent_sink_recovery(spark, sf_dir)
+    assert ev["phase2_batch_ids"], ev
+    assert ev["phase2_batch_ids"][0] == ev["crash_batch_id"], ev
+
+    expected = {
+        r["window_start"]: r["n_events"]
+        for r in registry()["q100_tumbling_window"].fn(spark, sf_dir).collect()
+    }
+    got = {r["window_start"]: r["n_events"] for r in out.collect()}
+    assert got == expected
 
 
 def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
@@ -803,10 +792,10 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
     finalize the preceding hour, strict (<) semantics would emit
     nothing.  A Spark upgrade flipping the boundary breaks this test
     before it silently flips the q354 oracle."""
-    import time
     import uuid
 
     from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import run_stream
 
     pdf = pd.DataFrame(
         {
@@ -844,25 +833,13 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
         .select(F.col("window.start").alias("window_start"), "n_events")
     )
     name = "boundary_" + uuid.uuid4().hex[:6]
-    q = (
+    run_stream(
         lvl2.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 120:
-            time.sleep(0.3)
-            p = q.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-        rows = spark.table(name).collect()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    rows = spark.table(name).collect()
     # Non-strict cut: the [00:00, 01:00) hour (end == max ts) DID
     # finalize, with exactly the 3 pre-boundary rows; the hour
     # containing the boundary row itself did not.
