@@ -731,13 +731,17 @@ def q385_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # n0/n1 in ONE aggregation (round 16, VERDICT r15 item 5): keep1
-    # holds exactly one doc per distinct md5 key (row_number = 1), so
-    # |keep1| == countDistinct(key) — two serialized count() actions
+    # holds exactly one doc per md5 key (row_number = 1), so |keep1|
+    # is the number of distinct keys — two serialized count() actions
     # fused into a single job. keep1 itself stays persisted for the
     # stage-2 joins; its cache materializes inside the n2 action.
+    # NULL text has a NULL key, which keep1's window groups as one
+    # key but countDistinct skips; coalescing it to '' (never an md5)
+    # counts that group once, as keep1 keeps it.
     cnt = docs.agg(
         F.count(F.lit(1)).alias("n0"),
-        F.countDistinct(F.md5(F.encode("text", "utf-8"))).alias("n1"),
+        F.countDistinct(F.coalesce(
+            F.md5(F.encode("text", "utf-8")), F.lit(""))).alias("n1"),
     ).collect()[0]
     n0, n1 = cnt["n0"], cnt["n1"]
     w = Window.partitionBy("key").orderBy("doc_id")

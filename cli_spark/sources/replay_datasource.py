@@ -35,38 +35,47 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 
-def _load_pdf(path: str):
-    """Parquet → pandas with ns-timestamps coerced to micros."""
+# Arrow type -> Spark DDL type; anything else is read as string
+_SPARK_TYPES = {
+    "int64": "long",
+    "int32": "int",
+    "double": "double",
+    "float": "float",
+    "string": "string",
+    "large_string": "string",
+    "bool": "boolean",
+}
+
+
+def _ddl_for(path: str) -> str:
+    """The Spark schema of a parquet file or directory, from the
+    footer metadata alone."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pdf = pq.read_table(path).to_pandas()
-    for col in pdf.columns:
-        if str(pdf[col].dtype).startswith("datetime64"):
-            # micros precision + explicit UTC: Spark's streaming-source
-            # row conversion rejects tz-naive pandas Timestamps, and the
-            # batch loader treats the file's naive nanos as UTC instants
-            pdf[col] = pdf[col].astype("datetime64[us]").dt.tz_localize("UTC")
-    return pdf
+    return ", ".join(
+        f"{f.name} "
+        + ("timestamp" if pa.types.is_timestamp(f.type)
+           else _SPARK_TYPES.get(str(f.type), "string"))
+        for f in pq.ParquetDataset(path).schema)
 
 
-def _ddl_for(pdf) -> str:
-    mapping = {
-        "int64": "long",
-        "int32": "int",
-        "float64": "double",
-        "float32": "float",
-        "object": "string",
-        "bool": "boolean",
-    }
-    parts = []
-    for col in pdf.columns:
-        dt = str(pdf[col].dtype)
-        if dt.startswith("datetime64"):
-            spark_t = "timestamp"
-        else:
-            spark_t = mapping.get(dt, "string")
-        parts.append(f"{col} {spark_t}")
-    return ", ".join(parts)
+def _rows_of(tbl) -> list[tuple]:
+    """An Arrow table's rows as tuples. NULL stays None in every
+    column type (a pandas round-trip turns a NULL integer into a NaN
+    double). Timestamps come out as UTC-aware micros: Spark's
+    streaming-source row conversion rejects tz-naive timestamps, and
+    the batch loader treats the file's naive values as UTC instants
+    (truncating nanos, as the batch loader's ``ts div 1000`` does)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = []
+    for field, col in zip(tbl.schema, tbl.columns):
+        if pa.types.is_timestamp(field.type):
+            col = pc.cast(col, pa.timestamp("us", tz="UTC"), safe=False)
+        cols.append(col.to_pylist())
+    return list(zip(*cols))
 
 
 def _end_row(options, n_rows: int) -> int:
@@ -90,7 +99,7 @@ class ReplayDataSource(DataSource):
         path = self.options.get("path")
         if not path or not os.path.exists(path):
             raise ValueError(f"replay source requires an existing path, got {path!r}")
-        return _ddl_for(_load_pdf(path))
+        return _ddl_for(path)
 
     def simpleStreamReader(self, schema) -> "ReplayStreamReader":
         return ReplayStreamReader(self.options)
@@ -105,11 +114,13 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
         self.start_row = int(options.get("startrow", options.get("startRow", 0)))
         if self.batch_rows <= 0 or self.start_row < 0:
             raise ValueError("batchRows must be positive and startRow >= 0")
-        self._pdf = _load_pdf(self.path)
+        import pyarrow.parquet as pq
+
+        self._tbl = pq.read_table(self.path)
         # endRow: stop the replay before this row (the source runs dry
         # there) — a deterministic mid-stream stop for the restart
         # queries (q310), whose resumed run omits the option
-        self.end_row = _end_row(options, len(self._pdf))
+        self.end_row = _end_row(options, self._tbl.num_rows)
         if self.end_row < self.start_row:
             raise ValueError("endRow must be >= startRow")
         # orderBy: replay in a deterministic sort order instead of
@@ -120,9 +131,7 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
         order = options.get("orderby", options.get("orderBy"))
         if order:
             cols = [c.strip() for c in order.split(",") if c.strip()]
-            self._pdf = self._pdf.sort_values(cols, kind="mergesort").reset_index(
-                drop=True
-            )
+            self._tbl = self._tbl.sort_by([(c, "ascending") for c in cols])
 
     def initialOffset(self) -> dict:
         return {"row": self.start_row}
@@ -133,8 +142,7 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
         # copyable/picklable (planPartitions copy.copy()s cache
         # entries) — a plain generator fails the second, a plain list
         # the first
-        chunk = self._pdf.iloc[lo:hi]
-        return _CopyableRows(list(chunk.itertuples(index=False, name=None)))
+        return _CopyableRows(_rows_of(self._tbl.slice(lo, hi - lo)))
 
     def read(self, start: dict):
         lo = start["row"]

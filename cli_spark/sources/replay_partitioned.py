@@ -37,7 +37,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from cli_spark.sources.replay_datasource import _ddl_for, _end_row, _load_pdf
+from cli_spark.sources.replay_datasource import _ddl_for, _end_row, _rows_of
 
 
 class RangePartition(InputPartition):
@@ -64,7 +64,7 @@ class ReplayPartitionedDataSource(DataSource):
         path = self.options.get("path")
         if not path or not os.path.exists(path):
             raise ValueError(f"replay_part requires an existing path, got {path!r}")
-        return _ddl_for(_load_pdf(path))
+        return _ddl_for(path)
 
     def streamReader(self, schema) -> "ReplayPartitionedStreamReader":
         return ReplayPartitionedStreamReader(self.options)
@@ -140,14 +140,9 @@ class ReplayPartitionedStreamReader(DataSourceStreamReader):
 
         pf = pq.ParquetFile(partition.path)
         tbl = pf.read_row_groups(list(range(partition.rg_lo, partition.rg_hi)))
-        pdf = tbl.to_pandas()
-        for col in pdf.columns:
-            if str(pdf[col].dtype).startswith("datetime64"):
-                pdf[col] = pdf[col].astype("datetime64[us]").dt.tz_localize("UTC")
-        rel_lo = partition.lo - partition.rg_row0
-        rel_hi = partition.hi - partition.rg_row0
-        chunk = pdf.iloc[rel_lo:rel_hi]
-        return iter(chunk.itertuples(index=False, name=None))
+        chunk = tbl.slice(partition.lo - partition.rg_row0,
+                          partition.hi - partition.lo)
+        return iter(_rows_of(chunk))
 
 
 def register_replay_partitioned(spark) -> None:

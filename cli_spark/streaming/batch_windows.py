@@ -25,7 +25,11 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
-from cli_spark.streaming.drain import collect_memory_sink, run_stream
+from cli_spark.streaming.drain import (
+    collect_memory_sink,
+    replay_file,
+    run_stream,
+)
 from cli_spark.tables import events_stream, load_table
 
 
@@ -856,33 +860,19 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     collect); the streaming plan itself is the production shape:
     watermarked source → windowed hash aggregation with RocksDB-able
     keyed state, bounded by live-window count, not stream length."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from cli_spark.sources.replay_datasource import register_replay_source
 
     e = load_table(spark, sf_dir, "events")
-    n = e.count()
-    bsz = max(500, -(-n // 40))  # ceil
-    tmp = tempfile.mkdtemp(prefix="q279_replay_")
-    try:
-        (
-            e.select(
-                "event_id",
-                "ts",
-                "event_type",
-                "value",
-                F.md5(F.col("event_id").cast("string")).alias("_k"),
-            )
-            .repartition(1)
-            .sortWithinPartitions("_k", "event_id")
-            .drop("_k")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    scrambled = e.select(
+        "event_id",
+        "ts",
+        "event_type",
+        "value",
+        F.md5(F.col("event_id").cast("string")).alias("_k"),
+    )
+    with replay_file(spark, scrambled, ("_k", "event_id"),
+                     drop=("_k",)) as (part, n):
+        bsz = max(500, -(-n // 40))  # ceil
         register_replay_source(spark)
         stream = (
             spark.readStream.format("replay")
@@ -905,8 +895,6 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
         return _drain_memory_sink(spark, agg, "wmdrop", "append")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(

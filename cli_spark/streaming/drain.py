@@ -1,49 +1,60 @@
-"""How the TRUE-stream queries end, and the partial-drain helper
-shared by the mergeable-sketch queries
-(q473/q476/q479/q481/q486/q491/q493/q496/q500).
+"""How the TRUE-stream queries replay their input and how they end.
 
-Every stream over a bounded source (the replay parquet sources, the
-single-file events stream) is started under the DEFAULT trigger and
-ended by `run_stream`: `processAllAvailable()` returns once the source
-reports no new data AND every data and no-data micro-batch (the final
-watermark advance that flushes append-mode windows) has committed, so
-no result depends on wall-clock polling. Memory sinks are read back
-with `collect_memory_sink`.
+Entry points:
 
-The drain below (`drain_partials`) is the sketch family's sink.
+* `replay_file(spark, rows, order_by, drop=())` — the sorted replay
+  prep: one single-file parquet of ``rows`` in ``order_by`` order,
+  yielded as ``(path, n)`` and removed on exit. Every stream that
+  replays a prepared file (q279, q453 and the sketch streams) gets
+  its file here.
+* `replay_partials(spark, rows, order_by, partial_of, drop=())` — the
+  mergeable-sketch streams (q473/q476/q479/q481/q486/q491/q493/q496/
+  q500): `replay_file`, the `replay` source at
+  ``batchRows = ceil(n / N_BATCHES)``, and `drain_partials`. It owns
+  the file layout, the batch sizing and the batch identity, so a
+  query only states its partial and its merge.
+* `run_stream(query)` — how every stream over a bounded source ends:
+  `processAllAvailable()` returns once the source reports no new data
+  AND every data and no-data micro-batch (the final watermark advance
+  that flushes append-mode windows) has committed, so no result
+  depends on wall-clock polling. Memory sinks are read back with
+  `collect_memory_sink`.
 
-Measured motivation (round 15 optimization, guide §1/§6): with the
-partials round-tripped through per-batch `write.mode("append")
-.parquet(...)`, each ~20-batch replay run paid ~20 FileFormatWriter
-commit protocols (plan + _temporary rename + footer) plus a final
-directory listing/read — StreamingQueryProgress showed addBatch at
-~250 ms/batch of which the parquet write was ~110 ms/batch and moving
-the files to tmpfs changed nothing (the cost is the commit protocol,
-not the disk). Collecting each batch's partial to the driver instead
-cut addBatch ~40% per batch and removes the read-back job entirely.
+`drain_partials` is the sketch family's sink. Each micro-batch's
+partial is collected to the driver instead of appended to parquet:
+with a per-batch `write.mode("append").parquet(...)` each ~20-batch
+run paid ~20 FileFormatWriter commit protocols plus a read-back
+(round 15: addBatch ~250 ms/batch, ~110 ms of it the write; tmpfs
+changed nothing), and driver collection cut addBatch ~40%.
 
-Why driver accumulation is sound here and NOT a scale cheat: every
-partial in this family is SKETCH-grain — O(buckets | registers |
-counters | bottom-k samples) rows per batch REGARDLESS of input
-volume (that boundedness is the graded property of the sketches).
-The driver therefore holds n_batches x sketch-size rows, the same
-metadata-sized relation the parquet round-trip produced, and the same
-order of magnitude the queries already collect() as their final
-result. Fact-grain streams (q453's dropDuplicatesWithinWatermark
-emissions) do NOT use this helper — they keep the durable foreachBatch
-file sink, per the repo's fact-grain rule. A durable production
-deployment of a sketch pipeline writes the same partials to a sink
-table from the same foreachBatch; the merge algebra downstream is
-byte-identical either way, which the all-rows DuckDB oracles continue
-to prove.
+Driver accumulation is sound only because every partial is
+SKETCH-grain — O(buckets | registers | counters | bottom-k samples)
+rows per batch regardless of input volume — so the driver holds
+n_batches x sketch-size rows, the same order as the queries' final
+results. `MAX_PARTIAL_ROWS_PER_BATCH` enforces that in code.
+Fact-grain streams (q453's dropDuplicatesWithinWatermark emissions)
+keep a durable foreachBatch file sink; the merge algebra downstream is
+the same either way, which the all-rows DuckDB oracles prove.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+# Target micro-batch count of the sketch streams. Read at call time
+# so tests can patch it (the fast-mode fixture runs 5); the oracles
+# hard-code the graded 20.
+N_BATCHES = 20
 
 
 def run_stream(query: StreamingQuery) -> None:
@@ -94,21 +105,27 @@ def drain_partials(
 ) -> DataFrame:
     """Run ``stream`` to completion under the default trigger,
     evaluating ``partial_of(batch_df, batch_id)`` in each micro-batch's
-    foreachBatch and accumulating the partial's rows on the driver.
-    Returns ONE DataFrame holding every partial row (schema = the
-    partial plan's schema), equivalent to the previous
-    parquet-append-then-read-back relation.
+    foreachBatch and accumulating the partial's rows on the driver,
+    tagged with a ``batch_id`` long column. Returns ONE local
+    DataFrame holding every partial row (schema = the partial plan's
+    schema + ``batch_id``).
 
     Raises ``ValueError`` when one batch's partial exceeds
     ``MAX_PARTIAL_ROWS_PER_BATCH`` rows — driver accumulation is only
-    sound for sketch-grain partials (bounded rows per batch regardless
-    of input volume); fact-grain streams must keep a durable sink
-    (q453's parquet append is the reference)."""
+    sound for sketch-grain partials; fact-grain streams must keep a
+    durable sink (q453's parquet append is the reference). Raises
+    ``RuntimeError`` when no batch carried input rows, or when the
+    batches that did are not numbered ``0..k-1`` — the batch identity
+    the callers' mid-stream splits rely on. The ids are read from
+    ``recentProgress``, which keeps the last 100 progress events
+    (``spark.sql.streaming.numRecentProgressUpdates``): far more than
+    the ~21 a sketch stream runs."""
     rows: list = []
     schema_cell: list = []
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        partial = partial_of(batch_df, batch_id)
+        partial = partial_of(batch_df, batch_id).withColumn(
+            "batch_id", F.lit(batch_id).cast("long"))
         if not schema_cell:
             schema_cell.append(partial.schema)
         # limit(cap + 1): a fact-grain batch trips the guard after at
@@ -133,9 +150,29 @@ def drain_partials(
         run_stream(query)
     # an empty source still runs one empty batch 0; there is nothing
     # to merge unless some batch carried rows
-    if not any(p["numInputRows"] for p in query.recentProgress):
+    data_ids = _data_batch_ids(query.recentProgress)
+    if not data_ids:
         raise RuntimeError("replay stream delivered no micro-batch with input rows")
+    if data_ids != list(range(len(data_ids))):
+        raise RuntimeError(
+            f"replay stream's data batches are {data_ids}, not "
+            f"0..{len(data_ids) - 1}")
     return spark.createDataFrame(rows, schema_cell[0])
+
+
+def _data_batch_ids(progress: list) -> list[int]:
+    """Ids of the batches that read input rows, ascending. A batch
+    counts when its input rows are non-zero or, after the first batch
+    (whose start offset is reported as none), when its source offsets
+    moved: ``numInputRows`` comes from the batch plan's scan metrics,
+    which stay 0 when a partial never reads its batch (a plan pruned to
+    an empty relation), while the offsets record what the source
+    delivered."""
+    return sorted(
+        p.batchId for p in progress
+        if p.numInputRows
+        or (p.batchId > 0
+            and any(s.startOffset != s.endOffset for s in p.sources)))
 
 
 def replay_row_count(part_path: str) -> int:
@@ -146,3 +183,81 @@ def replay_row_count(part_path: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(part_path).metadata.num_rows
+
+
+@contextmanager
+def replay_file(
+    spark: SparkSession,
+    rows: DataFrame,
+    order_by: tuple[str | Column, ...],
+    drop: tuple[str, ...] = (),
+) -> Iterator[tuple[str, int]]:
+    """Write ``rows`` as ONE parquet file sorted by ``order_by``, minus
+    the ``drop`` columns, and yield ``(path, n)`` with ``n`` read from
+    the footer. The temp dir is removed on exit, also when the body
+    raises.
+
+    The file is the replay source's input: `replay` reads one file in
+    row order, so the sort here IS the stream's arrival order
+    (repartition(1) + an in-partition sort — no driver collect, no
+    global range exchange)."""
+    tmp = tempfile.mkdtemp(prefix="replay_")
+    try:
+        (
+            rows.repartition(1)
+            .sortWithinPartitions(*order_by)
+            .drop(*drop)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        [path] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        yield path, replay_row_count(path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def replay_partials(
+    spark: SparkSession,
+    rows: DataFrame,
+    order_by: tuple[str | Column, ...],
+    partial_of: Callable[[DataFrame, int], DataFrame],
+    drop: tuple[str, ...] = (),
+) -> tuple[DataFrame, int, int, int]:
+    """Replay ``rows`` (sorted by ``order_by``, minus ``drop``) through
+    ~``N_BATCHES`` TRUE micro-batches and drain each batch's
+    ``partial_of(batch_df, batch_id)`` to the driver.
+
+    Returns ``(parts, n, batch_rows, n_batches)``: the local relation
+    of every partial row tagged with ``batch_id``, the replayed row
+    count, ``batch_rows = ceil(n / N_BATCHES)`` and
+    ``n_batches = ceil(n / batch_rows)`` — the oracles' ``bsz`` and
+    ``nb`` CTEs. The temp file is gone by the time this returns; the
+    partials never reference it.
+
+    Batch identity: the source cuts the file into consecutive
+    ``batch_rows``-row slices, and `drain_partials` checks that the
+    batches carrying rows are numbered ``0..k-1``, so batch
+    ``batch_id`` holds rows ``[batch_id * batch_rows,
+    (batch_id + 1) * batch_rows)`` of the sorted file and
+    ``k == n_batches``. A first-half split is therefore
+    ``batch_id < n_batches DIV 2`` — the oracles'
+    ``rn <= (nb DIV 2) * bsz``. It is the same split the old
+    ``dense_rank`` form took: every data batch of a histogram or HLL
+    stream yields a non-empty partial, so its dense rank over the
+    partials' batch ids was ``batch_id + 1`` and its maximum was
+    ``n_batches``. ``n_batches`` never comes from the partials, whose
+    batches can be empty (q479: an all-singleton batch has no
+    Misra-Gries counter)."""
+    from cli_spark.sources.replay_datasource import register_replay_source
+
+    with replay_file(spark, rows, order_by, drop) as (path, n):
+        batch_rows = max(1, -(-n // N_BATCHES))
+        register_replay_source(spark)
+        stream = (
+            spark.readStream.format("replay")
+            .option("path", path)
+            .option("batchRows", batch_rows)
+            .load()
+        )
+        parts = drain_partials(spark, stream, partial_of)
+    return parts, n, batch_rows, -(-n // batch_rows)

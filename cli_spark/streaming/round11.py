@@ -158,22 +158,18 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     through this same replay source (module docstring;
     tests/test_streaming_ddww.py keeps the probes as regression
     pins)."""
-    import glob
-    import os
-    import shutil
     import tempfile
 
     from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import replay_file
 
     e = load_table(spark, sf_dir, "events")
-    lo, hi, n = e.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts")),
-        F.count(F.lit(1))).collect()[0]
+    lo, hi = e.agg(
+        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).collect()[0]
     span = hi - lo
     off_us = span * _OFF_PM // 1000
     jit_us = span * _JIT_PM // 1000
     delay_us = span * _DELAY_PM // 1000
-    bsz = -(-(n * 2) // 40)  # ceil
     ts_us = F.unix_micros("ts") + F.col("copy") * F.lit(off_us)
     echoed = (
         e.select("event_id", "ts", "event_type")
@@ -187,17 +183,13 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
             "copy",
         )
     )
-    tmp = tempfile.mkdtemp(prefix="q453_replay_")
-    out_root = tempfile.mkdtemp(prefix="q453_sink_")
-    try:
-        (
-            echoed.repartition(1)
-            .sortWithinPartitions("arr_us", "event_id", "copy")
-            .drop("arr_us", "copy")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    with (
+        tempfile.TemporaryDirectory(prefix="q453_sink_",
+                                    ignore_cleanup_errors=True) as out_root,
+        replay_file(spark, echoed, ("arr_us", "event_id", "copy"),
+                    drop=("arr_us", "copy")) as (part, n),
+    ):
+        bsz = -(-n // 40)  # ceil: ~40 batches over both copies
         register_replay_source(spark)
         stream = (
             spark.readStream.format("replay")
@@ -289,8 +281,4 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
                 .cast("long").alias("n_fully_late"),
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)

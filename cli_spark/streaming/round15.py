@@ -26,10 +26,10 @@ from pyspark.sql.window import Window
 
 from cli_spark.operators.round11 import _H60_DUCK, _H60_SPARK, _TWO60
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import N_BATCHES, replay_partials
 from cli_spark.tables import load_table
 
 _SK = 64  # sketch size (bottom-k over the 60-bit md5 hash lane)
-_N_BATCHES = 20  # target micro-batch count (batchRows = ceil(n / 20))
 
 # user-day activity key — distinct counts per event type land in the
 # sketch's sampling regime (~1.6k keys/type vs k=64 at sf0.01) and
@@ -49,7 +49,7 @@ WITH base AS (
   FROM events
 ),
 n AS (SELECT COUNT(*) AS cnt FROM base),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n CROSS JOIN bsz),
 pool AS (SELECT DISTINCT event_type, h FROM base),
 sk AS (
@@ -143,63 +143,16 @@ def q481_streaming_theta_intersection(
     per executor and the union of any set of shards/days/clusters is
     one more bottom-64 — nobody ever re-scans. The single float step
     (2^60 / theta) is one shared IEEE chain floored to BIGINT; all
-    counting is exact integers. n_batches = ceil(n/bsz) in Python,
-    matching the oracle (the q479 ADVICE idiom — never derived from
-    data-bearing partials)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
+    counting is exact integers."""
     e = load_table(spark, sf_dir, "events")
     base = e.select(
         "event_type", "event_id", "ts",
         F.expr(_H60_SPARK.format(key=_KEY_SPARK)).alias("h"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q481_replay_")
-    try:
-        (
-            base.repartition(1)
-            .sortWithinPartitions(F.unix_micros("ts"), F.col("event_id"))
-            .drop("ts")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
-
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.select("event_type", "h").distinct()
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("event_type")
-                        .orderBy(F.col("h").asc())),
-                )
-                .filter(F.col("rn") <= _SK)
-                .select("event_type", "h")
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        # ORDER-STATISTIC MERGE: bottom-64 of the distinct union of the
-        # per-batch bottom-64s == bottom-64 of the all-rows pool
-        parts = drain_partials(spark, stream, partial_of)
-        sk = (
-            parts.select("event_type", "h").distinct()
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.select("event_type", "h").distinct()
             .withColumn(
                 "rn",
                 F.row_number().over(
@@ -208,81 +161,96 @@ def q481_streaming_theta_intersection(
             )
             .filter(F.col("rn") <= _SK)
             .select("event_type", "h")
-            .persist()
         )
-        types = sk.select("event_type").distinct()
-        pl = (
-            types.select(F.col("event_type").alias("s1"))
-            .join(types.select(F.col("event_type").alias("s2")),
-                  F.col("s1") < F.col("s2"))
+
+    parts, _, _, nb = replay_partials(
+        spark, base, (F.unix_micros("ts"), F.col("event_id")), partial_of,
+        drop=("ts",))
+    # ORDER-STATISTIC MERGE: bottom-64 of the distinct union of the
+    # per-batch bottom-64s == bottom-64 of the all-rows pool
+    sk = (
+        parts.select("event_type", "h").distinct()
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("event_type")
+                .orderBy(F.col("h").asc())),
         )
-        un = (
-            pl.join(F.broadcast(sk), F.col("event_type") == F.col("s1"))
-            .select("s1", "s2", "h")
-            .unionByName(
-                pl.join(F.broadcast(sk), F.col("event_type") == F.col("s2"))
-                .select("s1", "s2", "h"))
-            .distinct()
+        .filter(F.col("rn") <= _SK)
+        .select("event_type", "h")
+        .persist()
+    )
+    types = sk.select("event_type").distinct()
+    pl = (
+        types.select(F.col("event_type").alias("s1"))
+        .join(types.select(F.col("event_type").alias("s2")),
+              F.col("s1") < F.col("s2"))
+    )
+    un = (
+        pl.join(F.broadcast(sk), F.col("event_type") == F.col("s1"))
+        .select("s1", "s2", "h")
+        .unionByName(
+            pl.join(F.broadcast(sk), F.col("event_type") == F.col("s2"))
+            .select("s1", "s2", "h"))
+        .distinct()
+    )
+    two60_long = 1152921504606846976
+    th = (
+        un.select(
+            "s1", "s2", "h",
+            F.row_number().over(
+                Window.partitionBy("s1", "s2").orderBy(F.col("h").asc())
+            ).alias("rn"),
         )
-        two60_long = 1152921504606846976
-        th = (
-            un.select(
-                "s1", "s2", "h",
-                F.row_number().over(
-                    Window.partitionBy("s1", "s2").orderBy(F.col("h").asc())
-                ).alias("rn"),
-            )
-            .groupBy("s1", "s2")
-            .agg(F.coalesce(
-                F.max(F.when(F.col("rn") == _SK, F.col("h"))),
-                F.lit(two60_long)).alias("theta"))
+        .groupBy("s1", "s2")
+        .agg(F.coalesce(
+            F.max(F.when(F.col("rn") == _SK, F.col("h"))),
+            F.lit(two60_long)).alias("theta"))
+    )
+    com = (
+        sk.select(F.col("event_type").alias("s1"), "h")
+        .join(sk.select(F.col("event_type").alias("s2"),
+                        F.col("h").alias("h2")),
+              (F.col("h") == F.col("h2")) & (F.col("s1") < F.col("s2")))
+        .select("s1", "s2", "h")
+    )
+    ni = (
+        th.join(com.withColumnRenamed("h", "ch"), ["s1", "s2"], "left")
+        .groupBy("s1", "s2", "theta")
+        .agg(F.coalesce(
+            F.sum(F.when(F.col("ch") < F.col("theta"), 1).otherwise(0)),
+            F.lit(0)).cast("long").alias("n_below"))
+    )
+    # exact audit baseline from the batch table (never from the
+    # stream — the stream only ever shipped sketches)
+    pool = base.select("event_type", "h").distinct()
+    ex = (
+        pool.select(F.col("event_type").alias("s1"), "h")
+        .join(pool.select(F.col("event_type").alias("s2"),
+                          F.col("h").alias("h2")),
+              (F.col("h") == F.col("h2")) & (F.col("s1") < F.col("s2")))
+        .groupBy("s1", "s2")
+        .agg(F.count(F.lit(1)).cast("long").alias("exact_inter"))
+    )
+    result = (
+        ni.join(ex, ["s1", "s2"], "left")
+        .select(
+            "s1", "s2",
+            F.coalesce("exact_inter", F.lit(0)).cast("long")
+            .alias("exact_inter"),
+            F.expr(f"CAST(floor(CAST(n_below AS DOUBLE) * {_TWO60} / "
+                   "CAST(theta AS DOUBLE)) AS BIGINT)")
+            .alias("est_inter"),
         )
-        com = (
-            sk.select(F.col("event_type").alias("s1"), "h")
-            .join(sk.select(F.col("event_type").alias("s2"),
-                            F.col("h").alias("h2")),
-                  (F.col("h") == F.col("h2")) & (F.col("s1") < F.col("s2")))
-            .select("s1", "s2", "h")
+        .withColumn(
+            "err_ppm",
+            F.expr("CAST(abs(est_inter - exact_inter) * 1000000 "
+                   "DIV GREATEST(exact_inter, 1) AS BIGINT)"),
         )
-        ni = (
-            th.join(com.withColumnRenamed("h", "ch"), ["s1", "s2"], "left")
-            .groupBy("s1", "s2", "theta")
-            .agg(F.coalesce(
-                F.sum(F.when(F.col("ch") < F.col("theta"), 1).otherwise(0)),
-                F.lit(0)).cast("long").alias("n_below"))
-        )
-        # exact audit baseline from the batch table (never from the
-        # stream — the stream only ever shipped sketches)
-        pool = base.select("event_type", "h").distinct()
-        ex = (
-            pool.select(F.col("event_type").alias("s1"), "h")
-            .join(pool.select(F.col("event_type").alias("s2"),
-                              F.col("h").alias("h2")),
-                  (F.col("h") == F.col("h2")) & (F.col("s1") < F.col("s2")))
-            .groupBy("s1", "s2")
-            .agg(F.count(F.lit(1)).cast("long").alias("exact_inter"))
-        )
-        result = (
-            ni.join(ex, ["s1", "s2"], "left")
-            .select(
-                "s1", "s2",
-                F.coalesce("exact_inter", F.lit(0)).cast("long")
-                .alias("exact_inter"),
-                F.expr(f"CAST(floor(CAST(n_below AS DOUBLE) * {_TWO60} / "
-                       "CAST(theta AS DOUBLE)) AS BIGINT)")
-                .alias("est_inter"),
-            )
-            .withColumn(
-                "err_ppm",
-                F.expr("CAST(abs(est_inter - exact_inter) * 1000000 "
-                       "DIV GREATEST(exact_inter, 1) AS BIGINT)"),
-            )
-            .withColumn("n_batches", F.lit(nb).cast("long"))
-        )
-        out = spark.createDataFrame(result.collect(), result.schema)
-        sk.unpersist()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .withColumn("n_batches", F.lit(nb).cast("long"))
+    )
+    out = spark.createDataFrame(result.collect(), result.schema)
+    sk.unpersist()
     return out
 
 
@@ -306,7 +274,7 @@ WITH base AS (
   FROM events
 ),
 n AS (SELECT COUNT(*) AS cnt FROM base),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n CROSS JOIN bsz),
 -- the ESTIMATE is computed corpus-wise (q472's chain): a hash match
 -- against the stream side's batch-reservoir merge IS the mergeability
@@ -386,18 +354,9 @@ def q486_streaming_priority_sample(
     k+1 heap; the total-weight dashboard needs no second pass).
 
     Every HT term is floored to integer micros before summation; the
-    priority and err chains are the shared verbatim IEEE expressions;
-    n_batches = ceil(n/bsz) in Python (the q479 ADVICE idiom). The
-    sink's per-batch top-k runs as WindowGroupLimit (k+1-row heaps
+    priority and err chains are the shared verbatim IEEE expressions.
+    The sink's per-batch top-k runs as WindowGroupLimit (k+1-row heaps
     per partition, never a full sort)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
     e = load_table(spark, sf_dir, "events")
     base = e.select(
         "event_type", "event_id", "ts",
@@ -405,84 +364,61 @@ def q486_streaming_priority_sample(
         F.expr(_H60_SPARK.format(key="event_id")).alias("h"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q486_replay_")
-    try:
-        (
-            base.repartition(1)
-            .sortWithinPartitions(F.unix_micros("ts"), F.col("event_id"))
-            .drop("ts")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
-
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.withColumn("p", F.expr(_PRI))
-                .withColumn(
-                    "rk",
-                    F.row_number().over(
-                        Window.partitionBy("event_type")
-                        .orderBy(F.col("p").desc(), F.col("event_id").asc())),
-                )
-                .filter(F.col("rk") <= _PS_K + 1)
-                .select("event_type", "event_id", "w", "h")
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        shipped = drain_partials(spark, stream, partial_of)
-        ship = shipped.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("shipped_rows"))
-        # ORDER-STATISTIC MERGE: one more top-(k+1) over shipped rows
-        mr = (
-            shipped.withColumn("p", F.expr(_PRI))
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.withColumn("p", F.expr(_PRI))
             .withColumn(
                 "rk",
                 F.row_number().over(
                     Window.partitionBy("event_type")
                     .orderBy(F.col("p").desc(), F.col("event_id").asc())),
             )
+            .filter(F.col("rk") <= _PS_K + 1)
+            .select("event_type", "event_id", "w", "h")
         )
-        taus = mr.filter(F.col("rk") == _PS_K + 1).select(
-            F.col("event_type").alias("tt"), F.col("p").alias("tau_raw"))
-        est = (
-            mr.filter(F.col("rk") <= _PS_K)
-            .join(F.broadcast(taus), F.col("event_type") == F.col("tt"),
-                  "left")
-            .withColumn("tau", F.coalesce("tau_raw", F.lit(0.0)))
-            .groupBy("event_type")
-            .agg(F.sum(F.expr(_HT_TERM)).cast("long").alias("est_micro"))
+
+    shipped, _, _, nb = replay_partials(
+        spark, base, (F.unix_micros("ts"), F.col("event_id")), partial_of,
+        drop=("ts",))
+    ship = shipped.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("shipped_rows"))
+    # ORDER-STATISTIC MERGE: one more top-(k+1) over shipped rows
+    mr = (
+        shipped.withColumn("p", F.expr(_PRI))
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("event_type")
+                .orderBy(F.col("p").desc(), F.col("event_id").asc())),
         )
-        exact = base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("w").cast("long").alias("w_exact"),
+    )
+    taus = mr.filter(F.col("rk") == _PS_K + 1).select(
+        F.col("event_type").alias("tt"), F.col("p").alias("tau_raw"))
+    est = (
+        mr.filter(F.col("rk") <= _PS_K)
+        .join(F.broadcast(taus), F.col("event_type") == F.col("tt"),
+              "left")
+        .withColumn("tau", F.coalesce("tau_raw", F.lit(0.0)))
+        .groupBy("event_type")
+        .agg(F.sum(F.expr(_HT_TERM)).cast("long").alias("est_micro"))
+    )
+    exact = base.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum("w").cast("long").alias("w_exact"),
+    )
+    result = (
+        exact.join(F.broadcast(est), "event_type")
+        .join(F.broadcast(ship), "event_type")
+        .select(
+            "event_type", "n_events", "w_exact", "est_micro",
+            F.expr(_ERR_PPM.format(est="est_micro",
+                                   unscale="/ 1000000.0",
+                                   exact="w_exact")).alias("err_ppm"),
+            "shipped_rows",
+            F.lit(nb).cast("long").alias("n_batches"),
         )
-        result = (
-            exact.join(F.broadcast(est), "event_type")
-            .join(F.broadcast(ship), "event_type")
-            .select(
-                "event_type", "n_events", "w_exact", "est_micro",
-                F.expr(_ERR_PPM.format(est="est_micro",
-                                       unscale="/ 1000000.0",
-                                       exact="w_exact")).alias("err_ppm"),
-                "shipped_rows",
-                F.lit(nb).cast("long").alias("n_batches"),
-            )
-        )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    )
+    return spark.createDataFrame(result.collect(), result.schema)
 
 
 # ---------------------------------------------------------------- q491
@@ -538,7 +474,7 @@ WITH base AS (
   FROM events
 ),
 n0 AS (SELECT COUNT(*) AS cnt FROM base),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n0),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n0),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n0 CROSS JOIN bsz),
 qs AS (SELECT unnest([50, 90, 99]) AS q),
 fbc AS (
@@ -593,16 +529,7 @@ def q491_streaming_logbucket_quantiles(
     power-of-2 bucket per type (≤ 64 forever, by construction — int64
     has 63 usable buckets) regardless of volume OR RANGE; each batch
     pays one map-side-combined count; the post-run merge is
-    metadata-sized. n_batches = ceil(n/bsz) in Python (the q479
-    ADVICE idiom)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
+    metadata-sized."""
     e = load_table(spark, sf_dir, "events")
     base = e.select(
         "event_type", "event_id", "ts",
@@ -610,106 +537,81 @@ def q491_streaming_logbucket_quantiles(
                "CAST(1 AS BIGINT))").alias("cents"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q491_replay_")
-    try:
-        (
-            base.repartition(1)
-            .sortWithinPartitions(F.unix_micros("ts"), F.col("event_id"))
-            .drop("ts")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
-
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.select("event_type",
-                                F.expr(_LB_SPARK).alias("b"))
-                .groupBy("event_type", "b")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        # bucket-wise ADDITION merge of the per-batch partials
-        bc = (
-            drain_partials(spark, stream, partial_of)
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.select("event_type",
+                            F.expr(_LB_SPARK).alias("b"))
             .groupBy("event_type", "b")
-            .agg(F.sum("c").cast("long").alias("c"))
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        npt = bc.groupBy("event_type").agg(
-            F.sum("c").cast("long").alias("n"))
-        cum = bc.select(
-            "event_type", "b",
-            F.sum("c").over(
-                Window.partitionBy("event_type")
-                .orderBy(F.col("b").asc())).alias("cum"),
+
+    parts, _, _, nb = replay_partials(
+        spark, base, (F.unix_micros("ts"), F.col("event_id")), partial_of,
+        drop=("ts",))
+    # bucket-wise ADDITION merge of the per-batch partials
+    bc = parts.groupBy("event_type", "b").agg(
+        F.sum("c").cast("long").alias("c"))
+    npt = bc.groupBy("event_type").agg(
+        F.sum("c").cast("long").alias("n"))
+    cum = bc.select(
+        "event_type", "b",
+        F.sum("c").over(
+            Window.partitionBy("event_type")
+            .orderBy(F.col("b").asc())).alias("cum"),
+    )
+    qs = spark.createDataFrame([(50,), (90,), (99,)], "q long")
+    tgt = npt.crossJoin(F.broadcast(qs)).select(
+        "event_type", "q", "n",
+        F.expr("(q * n + 99) DIV 100").alias("tgt"))
+    sel = (
+        tgt.join(
+            cum.withColumnRenamed("event_type", "et"),
+            (F.col("et") == F.col("event_type"))
+            & (F.col("cum") >= F.col("tgt")),
         )
-        qs = spark.createDataFrame([(50,), (90,), (99,)], "q long")
-        tgt = npt.crossJoin(F.broadcast(qs)).select(
-            "event_type", "q", "n",
-            F.expr("(q * n + 99) DIV 100").alias("tgt"))
-        sel = (
-            tgt.join(
-                cum.withColumnRenamed("event_type", "et"),
-                (F.col("et") == F.col("event_type"))
-                & (F.col("cum") >= F.col("tgt")),
-            )
-            .groupBy("event_type", "q", "n")
-            .agg(F.min("b").cast("long").alias("bucket_sel"))
-            .withColumn(
-                "est_cents",
-                # BIGINT first arg so the shift is 64-bit: INT
-                # shiftleft silently wraps once bucket_sel >= 31
-                # (cents >= 2^31) while the BIGINT-shift DuckDB
-                # oracle would not (ADVICE r14).
-                F.expr("CAST(CASE WHEN bucket_sel = 0 THEN 1 "
-                       "ELSE shiftleft(CAST(1 AS BIGINT), "
-                       "CAST(bucket_sel AS INT)) + "
-                       "shiftleft(CAST(1 AS BIGINT), "
-                       "CAST(bucket_sel AS INT) - 1) END "
-                       "AS BIGINT)"),
-            )
+        .groupBy("event_type", "q", "n")
+        .agg(F.min("b").cast("long").alias("bucket_sel"))
+        .withColumn(
+            "est_cents",
+            # BIGINT first arg so the shift is 64-bit: INT
+            # shiftleft silently wraps once bucket_sel >= 31
+            # (cents >= 2^31) while the BIGINT-shift DuckDB
+            # oracle would not (ADVICE r14).
+            F.expr("CAST(CASE WHEN bucket_sel = 0 THEN 1 "
+                   "ELSE shiftleft(CAST(1 AS BIGINT), "
+                   "CAST(bucket_sel AS INT)) + "
+                   "shiftleft(CAST(1 AS BIGINT), "
+                   "CAST(bucket_sel AS INT) - 1) END "
+                   "AS BIGINT)"),
         )
-        # exact audit from the batch table (never from the stream)
-        ranked = base.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("event_type")
-                .orderBy(F.col("cents").asc(), F.col("event_id").asc())),
+    )
+    # exact audit from the batch table (never from the stream)
+    ranked = base.withColumn(
+        "rk",
+        F.row_number().over(
+            Window.partitionBy("event_type")
+            .orderBy(F.col("cents").asc(), F.col("event_id").asc())),
+    )
+    g = base.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("gn"))
+    exact = (
+        ranked.join(F.broadcast(g), "event_type")
+        .crossJoin(F.broadcast(qs.withColumnRenamed("q", "q2")))
+        .filter(F.col("rk") == F.expr("(q2 * gn + 99) DIV 100"))
+        .select(F.col("event_type").alias("et2"),
+                F.col("q2"),
+                F.col("cents").cast("long").alias("exact_cents"))
+    )
+    result = (
+        sel.join(exact, (F.col("et2") == F.col("event_type"))
+                 & (F.col("q2") == F.col("q")))
+        .select(
+            "event_type", F.col("q").cast("long").alias("q"), "n",
+            "bucket_sel", "est_cents", "exact_cents",
+            F.expr("CAST(abs(est_cents - exact_cents) * 1000000 "
+                   "DIV GREATEST(exact_cents, 1) AS BIGINT)")
+            .alias("rel_err_ppm"),
+            F.lit(nb).cast("long").alias("n_batches"),
         )
-        g = base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("gn"))
-        exact = (
-            ranked.join(F.broadcast(g), "event_type")
-            .crossJoin(F.broadcast(qs.withColumnRenamed("q", "q2")))
-            .filter(F.col("rk") == F.expr("(q2 * gn + 99) DIV 100"))
-            .select(F.col("event_type").alias("et2"),
-                    F.col("q2"),
-                    F.col("cents").cast("long").alias("exact_cents"))
-        )
-        result = (
-            sel.join(exact, (F.col("et2") == F.col("event_type"))
-                     & (F.col("q2") == F.col("q")))
-            .select(
-                "event_type", F.col("q").cast("long").alias("q"), "n",
-                "bucket_sel", "est_cents", "exact_cents",
-                F.expr("CAST(abs(est_cents - exact_cents) * 1000000 "
-                       "DIV GREATEST(exact_cents, 1) AS BIGINT)")
-                .alias("rel_err_ppm"),
-                F.lit(nb).cast("long").alias("n_batches"),
-            )
-        )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    )
+    return spark.createDataFrame(result.collect(), result.schema)

@@ -26,12 +26,8 @@ from cli_spark.operators.round15 import (
     _MAXLONG,
 )
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import N_BATCHES, replay_partials
 from cli_spark.tables import load_table
-
-# target micro-batch count (batchRows = ceil(n / 20)); own module
-# attribute (not imported by value) so the tests' fast-mode fixture
-# can patch it — the oracle string hard-codes the graded 20.
-_N_BATCHES = 20
 
 # one-sided Hoeffding slack at delta = 0.05 for a coverage proportion
 # over n_test exchangeable points: sqrt(ln(1/delta) / (2n)), in ppm.
@@ -48,7 +44,7 @@ WITH base AS (
   FROM documents
 ),
 n0 AS (SELECT COUNT(*) AS cnt FROM base WHERE split = 2),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n0),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n0),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n0 CROSS JOIN bsz),
 pred AS (
   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_train,
@@ -131,17 +127,7 @@ def q493_streaming_conformal_monitor(
     the same sink runs per executor and any window/shard/day rollup
     of the monitor is one more addition — nobody re-scores old
     points. The single float step (the Hoeffding slack) is one shared
-    IEEE chain floored to BIGINT; everything else is exact integers.
-    n_batches = ceil(n/bsz) in Python, matching the oracle (the q479
-    ADVICE idiom — never derived from data-bearing partials)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
+    IEEE chain floored to BIGINT; everything else is exact integers."""
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "lang", "doc_id", F.col("n_chars").alias("y"),
@@ -186,83 +172,60 @@ def q493_streaming_conformal_monitor(
     test_rows = base.filter(F.col("split") == 2).select(
         "lang", "doc_id", "y")
 
-    tmp = tempfile.mkdtemp(prefix="q493_replay_")
-    try:
-        (
-            test_rows.repartition(1)
-            .sortWithinPartitions(F.col("doc_id").asc())
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
+    # calibration lookup as MAP LITERALS, not a per-batch join:
+    # foreachBatch plans every micro-batch fresh, so the previous
+    # broadcast-join form paid one BroadcastExchange job PER BATCH
+    # for a table of one row per language (round-15 optimization,
+    # guide §3.1/§1 — q493 measured ~5 s slower than its drained
+    # siblings, the per-batch broadcast being the only difference).
+    # The isin filter preserves the inner join's drop of test
+    # languages absent from the train split.
+    langs = [r["lang"] for r in static_rows]
+    pm = F.create_map(*[F.lit(x) for r in static_rows
+                        for x in (r["lang"], r["pred_chars"])])
+    qm = F.create_map(*[F.lit(x) for r in static_rows
+                        for x in (r["lang"], r["qhat"])])
 
-        # calibration lookup as MAP LITERALS, not a per-batch join:
-        # foreachBatch plans every micro-batch fresh, so the previous
-        # broadcast-join form paid one BroadcastExchange job PER BATCH
-        # for a table of one row per language (round-15 optimization,
-        # guide §3.1/§1 — q493 measured ~5 s slower than its drained
-        # siblings, the per-batch broadcast being the only difference).
-        # The isin filter preserves the inner join's drop of test
-        # languages absent from the train split.
-        langs = [r["lang"] for r in static_rows]
-        pm = F.create_map(*[F.lit(x) for r in static_rows
-                            for x in (r["lang"], r["pred_chars"])])
-        qm = F.create_map(*[F.lit(x) for r in static_rows
-                            for x in (r["lang"], r["qhat"])])
-
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.filter(F.col("lang").isin(langs))
-                .select(
-                    "lang",
-                    F.when(F.abs(F.col("y") - pm[F.col("lang")])
-                           <= qm[F.col("lang")], 1).otherwise(0).alias("cov"),
-                )
-                .groupBy("lang")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_test"),
-                    F.sum("cov").cast("long").alias("n_covered"),
-                )
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        # ADDITION MERGE: per-lang sums over the per-batch count pairs
-        merged = (
-            drain_partials(spark, stream, partial_of)
-            .groupBy("lang")
-            .agg(F.sum("n_test").cast("long").alias("n_test"),
-                 F.sum("n_covered").cast("long").alias("n_covered"))
-        )
-        result = (
-            merged.join(F.broadcast(static), "lang")
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.filter(F.col("lang").isin(langs))
             .select(
-                "lang", "n_train", "n_calib", "n_test", "pred_chars",
-                F.col("qhat").cast("long").alias("qhat"), "n_covered",
-                F.expr("CAST(n_covered * 1000000 DIV GREATEST(n_test, 1) "
-                       "AS BIGINT)").alias("coverage_ppm"),
-                F.lit(900000).cast("long").alias("nominal_ppm"),
+                "lang",
+                F.when(F.abs(F.col("y") - pm[F.col("lang")])
+                       <= qm[F.col("lang")], 1).otherwise(0).alias("cov"),
             )
-            .withColumn("slack_ppm", F.expr(_CM_SLACK))
-            .withColumn(
-                "alarm",
-                F.expr("CAST(CASE WHEN coverage_ppm + slack_ppm < 900000 "
-                       "THEN 1 ELSE 0 END AS BIGINT)"))
-            .withColumn("n_batches", F.lit(nb).cast("long"))
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_test"),
+                F.sum("cov").cast("long").alias("n_covered"),
+            )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    parts, _, _, nb = replay_partials(
+        spark, test_rows, (F.col("doc_id").asc(),), partial_of)
+    # ADDITION MERGE: per-lang sums over the per-batch count pairs
+    merged = (
+        parts.groupBy("lang")
+        .agg(F.sum("n_test").cast("long").alias("n_test"),
+             F.sum("n_covered").cast("long").alias("n_covered"))
+    )
+    result = (
+        merged.join(F.broadcast(static), "lang")
+        .select(
+            "lang", "n_train", "n_calib", "n_test", "pred_chars",
+            F.col("qhat").cast("long").alias("qhat"), "n_covered",
+            F.expr("CAST(n_covered * 1000000 DIV GREATEST(n_test, 1) "
+                   "AS BIGINT)").alias("coverage_ppm"),
+            F.lit(900000).cast("long").alias("nominal_ppm"),
+        )
+        .withColumn("slack_ppm", F.expr(_CM_SLACK))
+        .withColumn(
+            "alarm",
+            F.expr("CAST(CASE WHEN coverage_ppm + slack_ppm < 900000 "
+                   "THEN 1 ELSE 0 END AS BIGINT)"))
+        .withColumn("n_batches", F.lit(nb).cast("long"))
+    )
+    return spark.createDataFrame(result.collect(), result.schema)
 
 
 # ---------------------------------------------------------------- q496
@@ -287,7 +250,7 @@ WITH base AS (
   FROM events
 ),
 n0 AS (SELECT COUNT(*) AS cnt FROM base),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n0),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n0),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n0 CROSS JOIN bsz),
 qs AS (SELECT unnest(ARRAY{list(_SD_QS)}) AS q),
 bc AS (
@@ -379,16 +342,7 @@ def q496_streaming_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per type — at gamma = 2^(1/k) that is k*63 counters max FOREVER,
     regardless of volume or range; each batch pays one
     map-side-combined count and ships a few dozen integers; the
-    post-run merge and quantile selection run at bucket grain.
-    n_batches = ceil(n/bsz) in Python (the q479 ADVICE idiom)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
+    post-run merge and quantile selection run at bucket grain."""
     e = load_table(spark, sf_dir, "events")
     base = e.select(
         "event_type", "event_id", "ts",
@@ -396,111 +350,86 @@ def q496_streaming_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                "CAST(1 AS BIGINT))").alias("cents"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q496_replay_")
-    try:
-        (
-            base.repartition(1)
-            .sortWithinPartitions(F.unix_micros("ts"), F.col("event_id"))
-            .drop("ts")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
-
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.select("event_type",
-                                F.expr(_DD_BUCKET).alias("b"))
-                .groupBy("event_type", "b")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        # bucket-wise ADDITION merge of the per-batch partials
-        bc = (
-            drain_partials(spark, stream, partial_of)
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.select("event_type",
+                            F.expr(_DD_BUCKET).alias("b"))
             .groupBy("event_type", "b")
-            .agg(F.sum("c").cast("long").alias("c"))
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        nt = bc.groupBy("event_type").agg(
-            F.sum("c").cast("long").alias("n"),
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
+
+    parts, _, _, nb = replay_partials(
+        spark, base, (F.unix_micros("ts"), F.col("event_id")), partial_of,
+        drop=("ts",))
+    # bucket-wise ADDITION merge of the per-batch partials
+    bc = parts.groupBy("event_type", "b").agg(
+        F.sum("c").cast("long").alias("c"))
+    nt = bc.groupBy("event_type").agg(
+        F.sum("c").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_buckets"),
+    )
+    cum = bc.select(
+        "event_type", "b",
+        F.sum("c").over(
+            Window.partitionBy("event_type")
+            .orderBy(F.col("b").asc())).alias("cum"),
+    )
+    qs = spark.createDataFrame([(q,) for q in _SD_QS], "q long")
+    tgt = nt.crossJoin(F.broadcast(qs)).select(
+        "event_type", "q", "n", "n_buckets",
+        F.expr("(q * n + 99) DIV 100").alias("tgt"))
+    sel = (
+        tgt.join(
+            cum.withColumnRenamed("event_type", "et"),
+            (F.col("et") == F.col("event_type"))
+            & (F.col("cum") >= F.col("tgt")),
         )
-        cum = bc.select(
-            "event_type", "b",
-            F.sum("c").over(
-                Window.partitionBy("event_type")
-                .orderBy(F.col("b").asc())).alias("cum"),
+        .groupBy("event_type", "q", "n", "n_buckets")
+        .agg(F.min("b").cast("long").alias("bucket_sel"))
+    )
+    est = (
+        sel.withColumn(
+            "m",
+            F.expr(f"CASE WHEN bucket_sel = 0 THEN 1 "
+                   f"ELSE {_DD_MID_SPARK} END"))
+        .withColumn("c", F.expr(
+            "CAST(floor(sqrt(CAST(m AS DOUBLE))) AS BIGINT)"))
+        .withColumn("est_cents",
+                    F.expr(f"CAST({_DD_ISQRT} AS BIGINT)"))
+        .drop("m", "c")
+    )
+    # exact audit from the batch table (never from the stream)
+    ranked = base.withColumn(
+        "rk",
+        F.row_number().over(
+            Window.partitionBy("event_type")
+            .orderBy(F.col("cents").asc(), F.col("event_id").asc())),
+    )
+    g = base.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("gn"))
+    exact = (
+        ranked.join(F.broadcast(g), "event_type")
+        .crossJoin(F.broadcast(qs.withColumnRenamed("q", "q2")))
+        .filter(F.col("rk") == F.expr("(q2 * gn + 99) DIV 100"))
+        .select(F.col("event_type").alias("et2"),
+                F.col("q2"),
+                F.col("cents").cast("long").alias("exact_cents"))
+    )
+    result = (
+        est.join(exact, (F.col("et2") == F.col("event_type"))
+                 & (F.col("q2") == F.col("q")))
+        .select(
+            "event_type", F.col("q").cast("long").alias("q"), "n",
+            "n_buckets", "bucket_sel", "est_cents", "exact_cents",
+            F.expr("CAST(abs(est_cents - exact_cents) * 1000000 "
+                   "DIV GREATEST(exact_cents, 1) AS BIGINT)")
+            .alias("rel_err_ppm"),
+            F.expr(f"CAST({_DD_CONTRACT} AS BIGINT)")
+            .alias("contract_ok"),
+            F.lit(nb).cast("long").alias("n_batches"),
         )
-        qs = spark.createDataFrame([(q,) for q in _SD_QS], "q long")
-        tgt = nt.crossJoin(F.broadcast(qs)).select(
-            "event_type", "q", "n", "n_buckets",
-            F.expr("(q * n + 99) DIV 100").alias("tgt"))
-        sel = (
-            tgt.join(
-                cum.withColumnRenamed("event_type", "et"),
-                (F.col("et") == F.col("event_type"))
-                & (F.col("cum") >= F.col("tgt")),
-            )
-            .groupBy("event_type", "q", "n", "n_buckets")
-            .agg(F.min("b").cast("long").alias("bucket_sel"))
-        )
-        est = (
-            sel.withColumn(
-                "m",
-                F.expr(f"CASE WHEN bucket_sel = 0 THEN 1 "
-                       f"ELSE {_DD_MID_SPARK} END"))
-            .withColumn("c", F.expr(
-                "CAST(floor(sqrt(CAST(m AS DOUBLE))) AS BIGINT)"))
-            .withColumn("est_cents",
-                        F.expr(f"CAST({_DD_ISQRT} AS BIGINT)"))
-            .drop("m", "c")
-        )
-        # exact audit from the batch table (never from the stream)
-        ranked = base.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("event_type")
-                .orderBy(F.col("cents").asc(), F.col("event_id").asc())),
-        )
-        g = base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("gn"))
-        exact = (
-            ranked.join(F.broadcast(g), "event_type")
-            .crossJoin(F.broadcast(qs.withColumnRenamed("q", "q2")))
-            .filter(F.col("rk") == F.expr("(q2 * gn + 99) DIV 100"))
-            .select(F.col("event_type").alias("et2"),
-                    F.col("q2"),
-                    F.col("cents").cast("long").alias("exact_cents"))
-        )
-        result = (
-            est.join(exact, (F.col("et2") == F.col("event_type"))
-                     & (F.col("q2") == F.col("q")))
-            .select(
-                "event_type", F.col("q").cast("long").alias("q"), "n",
-                "n_buckets", "bucket_sel", "est_cents", "exact_cents",
-                F.expr("CAST(abs(est_cents - exact_cents) * 1000000 "
-                       "DIV GREATEST(exact_cents, 1) AS BIGINT)")
-                .alias("rel_err_ppm"),
-                F.expr(f"CAST({_DD_CONTRACT} AS BIGINT)")
-                .alias("contract_ok"),
-                F.lit(nb).cast("long").alias("n_batches"),
-            )
-        )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    )
+    return spark.createDataFrame(result.collect(), result.schema)
 
 
 # ---------------------------------------------------------------- q500
@@ -524,7 +453,7 @@ WITH base AS (
   FROM events
 ),
 n0 AS (SELECT COUNT(*) AS cnt FROM base WHERE split = 1),
-bsz AS (SELECT CAST(ceil(cnt / {_N_BATCHES}.0) AS BIGINT) AS b FROM n0),
+bsz AS (SELECT CAST(ceil(cnt / {N_BATCHES}.0) AS BIGINT) AS b FROM n0),
 nb AS (SELECT (cnt + b - 1) // b AS nb FROM n0 CROSS JOIN bsz),
 cnt AS (
   SELECT event_type, b,
@@ -589,16 +518,7 @@ def q500_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothing/terms/alarm run at bucket grain post-merge. At
     100 TB/day the monitor's nightly cost is the current window's
     scan; the reference histogram is a 63-integer-per-type artifact
-    reused until re-baselining. n_batches = ceil(n/bsz) in Python
-    (the q479 ADVICE idiom)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import drain_partials, replay_row_count
-
+    reused until re-baselining."""
     e = load_table(spark, sf_dir, "events")
     base = e.select(
         "event_type", "event_id", "ts",
@@ -608,88 +528,63 @@ def q500_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cur_side = base.filter(F.col("split") == 1)
 
-    tmp = tempfile.mkdtemp(prefix="q500_replay_")
-    try:
-        (
-            cur_side.repartition(1)
-            .sortWithinPartitions(F.unix_micros("ts"), F.col("event_id"))
-            .select("event_type", "event_id", "b")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        n = replay_row_count(part)
-        bsz = -(-n // _N_BATCHES)  # ceil
-        nb = -(-n // bsz)
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
+    def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            batch_df.groupBy("event_type", "b")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
 
-        def partial_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return (
-                batch_df.groupBy("event_type", "b")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-
-        # bucket-wise ADDITION merge of the streamed current window
-        cur = (
-            drain_partials(spark, stream, partial_of)
-            .groupBy("event_type", "b")
-            .agg(F.sum("c").cast("long").alias("cur_n"))
+    parts, _, _, nb = replay_partials(
+        spark, cur_side, (F.unix_micros("ts"), F.col("event_id")),
+        partial_of, drop=("ts", "split"))
+    # bucket-wise ADDITION merge of the streamed current window
+    cur = parts.groupBy("event_type", "b").agg(
+        F.sum("c").cast("long").alias("cur_n"))
+    # reference histogram: computed batch-side, once
+    ref = (
+        base.filter(F.col("split") == 0)
+        .groupBy("event_type", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("ref_n"))
+    )
+    # union bucket spine of both sides (q499's observed spine)
+    cnt = (
+        ref.join(cur, ["event_type", "b"], "full_outer")
+        .select(
+            "event_type", "b",
+            F.coalesce("ref_n", F.lit(0)).cast("long").alias("ref_n"),
+            F.coalesce("cur_n", F.lit(0)).cast("long").alias("cur_n"),
         )
-        # reference histogram: computed batch-side, once
-        ref = (
-            base.filter(F.col("split") == 0)
-            .groupBy("event_type", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("ref_n"))
+    )
+    nt = cnt.groupBy(F.col("event_type").alias("et")).agg(
+        F.sum("ref_n").cast("long").alias("ref_total"),
+        F.sum("cur_n").cast("long").alias("cur_total"),
+        F.count(F.lit(1)).cast("long").alias("n_buckets"),
+    )
+    ppm = (
+        cnt.join(F.broadcast(nt), F.col("et") == F.col("event_type"))
+        .select(
+            "event_type", F.col("b").alias("bucket"), "ref_n",
+            "cur_n", "n_buckets",
+            F.expr("(ref_n + 1) * 1000000 DIV "
+                   "(ref_total + n_buckets)").alias("ref_ppm"),
+            F.expr("(cur_n + 1) * 1000000 DIV "
+                   "(cur_total + n_buckets)").alias("cur_ppm"),
         )
-        # union bucket spine of both sides (q499's observed spine)
-        cnt = (
-            ref.join(cur, ["event_type", "b"], "full_outer")
-            .select(
-                "event_type", "b",
-                F.coalesce("ref_n", F.lit(0)).cast("long").alias("ref_n"),
-                F.coalesce("cur_n", F.lit(0)).cast("long").alias("cur_n"),
-            )
+    )
+    term = ppm.withColumn("term_ppm", F.expr(_PSI_TERM))
+    summ = term.groupBy(F.col("event_type").alias("st")).agg(
+        F.sum("term_ppm").cast("long").alias("psi_ppm"))
+    result = (
+        term.join(F.broadcast(summ),
+                  F.col("st") == F.col("event_type"))
+        .select(
+            "event_type", "bucket", "ref_n", "cur_n",
+            F.col("ref_ppm").cast("long").alias("ref_ppm"),
+            F.col("cur_ppm").cast("long").alias("cur_ppm"),
+            "term_ppm", "n_buckets", "psi_ppm",
+            F.expr(f"CAST(CASE WHEN psi_ppm > {_PSI_ALARM_PPM} "
+                   "THEN 1 ELSE 0 END AS BIGINT)").alias("alarm"),
+            F.lit(nb).cast("long").alias("n_batches"),
         )
-        nt = cnt.groupBy(F.col("event_type").alias("et")).agg(
-            F.sum("ref_n").cast("long").alias("ref_total"),
-            F.sum("cur_n").cast("long").alias("cur_total"),
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-        )
-        ppm = (
-            cnt.join(F.broadcast(nt), F.col("et") == F.col("event_type"))
-            .select(
-                "event_type", F.col("b").alias("bucket"), "ref_n",
-                "cur_n", "n_buckets",
-                F.expr("(ref_n + 1) * 1000000 DIV "
-                       "(ref_total + n_buckets)").alias("ref_ppm"),
-                F.expr("(cur_n + 1) * 1000000 DIV "
-                       "(cur_total + n_buckets)").alias("cur_ppm"),
-            )
-        )
-        term = ppm.withColumn("term_ppm", F.expr(_PSI_TERM))
-        summ = term.groupBy(F.col("event_type").alias("st")).agg(
-            F.sum("term_ppm").cast("long").alias("psi_ppm"))
-        result = (
-            term.join(F.broadcast(summ),
-                      F.col("st") == F.col("event_type"))
-            .select(
-                "event_type", "bucket", "ref_n", "cur_n",
-                F.col("ref_ppm").cast("long").alias("ref_ppm"),
-                F.col("cur_ppm").cast("long").alias("cur_ppm"),
-                "term_ppm", "n_buckets", "psi_ppm",
-                F.expr(f"CAST(CASE WHEN psi_ppm > {_PSI_ALARM_PPM} "
-                       "THEN 1 ELSE 0 END AS BIGINT)").alias("alarm"),
-                F.lit(nb).cast("long").alias("n_batches"),
-            )
-        )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    )
+    return spark.createDataFrame(result.collect(), result.schema)

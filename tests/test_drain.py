@@ -1,10 +1,13 @@
-"""Focused tests for cli_spark.streaming.drain — the round-15
-optimization that replaced the sketch queries' per-batch parquet
-append + read-back with driver-side accumulation of the (bounded,
-sketch-grain) partials. Asserts the helper's contract directly:
-every batch's partial rows survive, the schema is the partial plan's
-schema, batch ids tag rows correctly across >= 2 real micro-batches,
-and the footer row count matches a Spark count of the same file."""
+"""Focused tests for cli_spark.streaming.drain — the replay prep
+(`replay_file`), the sketch streams' drain (`drain_partials`,
+`replay_partials`) and the stream ending (`run_stream`). Asserts the
+helpers' contracts directly: every batch's partial rows survive, the
+schema is the partial plan's schema plus the ``batch_id`` tag the
+drain adds, batch ids tag rows correctly across >= 2 real
+micro-batches, NULL group keys merge like any other key, the batch
+count never depends on which partials are empty, the footer row count
+matches a Spark count of the same file, and the replay file is gone
+after a normal or a failed run."""
 
 from __future__ import annotations
 
@@ -17,7 +20,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from cli_spark.sources.replay_datasource import register_replay_source
-from cli_spark.streaming.drain import drain_partials, replay_row_count
+import cli_spark.streaming.drain as drain
+from cli_spark.streaming.drain import (
+    drain_partials,
+    replay_file,
+    replay_partials,
+    replay_row_count,
+)
 
 
 @pytest.fixture()
@@ -44,11 +53,8 @@ def test_drain_partials_accumulates_every_batch(spark, replay_part):
     )
 
     def partial_of(batch_df, batch_id):
-        return (
-            batch_df.groupBy("grp")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
+        return batch_df.groupBy("grp").agg(
+            F.count(F.lit(1)).cast("long").alias("c"))
 
     parts = drain_partials(spark, stream, partial_of)
     rows = parts.collect()
@@ -88,7 +94,6 @@ def test_drain_partials_keeps_empty_partials(spark, replay_part):
             batch_df.groupBy("grp")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .filter(F.lit(batch_id % 2 == 0))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
 
     parts = drain_partials(spark, stream, partial_of)
@@ -170,3 +175,101 @@ def test_drain_partials_rejects_empty_stream(spark, empty_replay_part):
     )
     with pytest.raises(RuntimeError, match="delivered no micro-batch"):
         drain_partials(spark, stream, lambda df, _bid: df)
+
+
+def _grp_rows(spark, null_every: int):
+    """97 rows; ``grp`` is NULL on every ``null_every``-th id (1: all)."""
+    return spark.range(0, 97).select(
+        F.col("id"),
+        F.when(F.col("id") % null_every == 0, F.lit(None))
+        .otherwise(F.col("id") % 7).alias("grp"),
+    )
+
+
+@pytest.mark.parametrize("null_every", [5, 1], ids=["some_null", "all_null"])
+def test_replay_partials_merges_null_group_keys(spark, monkeypatch, null_every):
+    """NULL is one more group key: the merged per-batch counts equal
+    an all-rows count, NULL group included, also when every key is
+    NULL."""
+    monkeypatch.setattr(drain, "N_BATCHES", 4)
+    rows = _grp_rows(spark, null_every)
+
+    def partial_of(batch_df, batch_id):
+        return batch_df.groupBy("grp").agg(
+            F.count(F.lit(1)).cast("long").alias("c"))
+
+    parts, n, batch_rows, n_batches = replay_partials(
+        spark, rows, ("id",), partial_of)
+    assert (n, batch_rows, n_batches) == (97, 25, 4)
+    merged = {
+        r["grp"]: r["s"]
+        for r in parts.groupBy("grp").agg(
+            F.sum("c").cast("long").alias("s")).collect()
+    }
+    exact = {r["grp"]: r["count"] for r in rows.groupBy("grp").count().collect()}
+    assert merged == exact
+    assert None in merged
+    assert sum(merged.values()) == 97
+
+
+def test_replay_partials_counts_batches_with_empty_partials(spark, monkeypatch):
+    """A partial that ships no rows for a non-empty batch (the q479
+    Misra-Gries case) does not change ``n_batches``: it is
+    ceil(n / batch_rows), never the number of batch ids in the
+    partials."""
+    monkeypatch.setattr(drain, "N_BATCHES", 5)
+
+    def partial_of(batch_df, batch_id):
+        return (
+            batch_df.groupBy("grp")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+            .filter(F.lit(batch_id % 2 == 0))
+        )
+
+    parts, n, batch_rows, n_batches = replay_partials(
+        spark, _grp_rows(spark, 5), ("id",), partial_of)
+    assert n_batches == -(-n // batch_rows) == 5
+    ids = {r["batch_id"] for r in parts.collect()}
+    assert ids == {0, 2, 4}
+
+
+def test_replay_file_yields_sorted_single_file(spark, tmp_path, monkeypatch):
+    """The file holds ``rows`` in ``order_by`` order minus ``drop``,
+    and ``n`` is its footer count."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = spark.range(0, 50).select(
+        "id", (F.lit(49) - F.col("id")).alias("rev"))
+    with replay_file(spark, rows, ("rev",), drop=("rev",)) as (path, n):
+        assert n == 50
+        got = spark.read.parquet(path)
+        assert got.columns == ["id"]
+        assert [r["id"] for r in got.collect()] == list(range(49, -1, -1))
+    assert not list(tmp_path.glob("replay_*"))
+
+
+def test_replay_partials_removes_file_on_return_and_on_error(
+        spark, tmp_path, monkeypatch):
+    """The replay temp dir exists while the stream runs and is gone
+    after a normal return and after a ``partial_of`` that raises."""
+    from pyspark.errors import StreamingQueryException
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(drain, "N_BATCHES", 2)
+    seen: list = []
+
+    def partial_of(batch_df, batch_id):
+        seen.extend(tmp_path.glob("replay_*"))
+        return batch_df.groupBy("grp").agg(
+            F.count(F.lit(1)).cast("long").alias("c"))
+
+    replay_partials(spark, _grp_rows(spark, 5), ("id",), partial_of)
+    assert seen, "the replay dir must exist while the stream runs"
+    assert not list(tmp_path.glob("replay_*"))
+
+    def failing(batch_df, batch_id):
+        raise ValueError("partial failed")
+
+    with pytest.raises((ValueError, StreamingQueryException),
+                       match="partial failed"):
+        replay_partials(spark, _grp_rows(spark, 5), ("id",), failing)
+    assert not list(tmp_path.glob("replay_*"))

@@ -688,3 +688,36 @@ def test_mestimate_shrinkage_interpolates(spark, sf_dir):
             if prev_dist is not None:
                 assert dist <= prev_dist + 1  # +1 for floor jitter
             prev_dist = dist
+
+
+# ---------------------------------------------------------- q385
+
+
+def test_cascade_counts_null_text_as_one_exact_key(spark, sf_dir, tmp_path):
+    """q385's stage 1 keeps one doc per md5 key, and a NULL text is one
+    more key (the window partitions NULLs together). A documents
+    table with one NULL text must report stage-1 n_out equal to that
+    keep1 row count — the distinct texts, NULL included — and hand
+    the same count to stage 2 as n_in."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cli_spark.operators.pipeline import q385_dedup_cascade_audit
+
+    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
+    docs = tbl.to_pandas()
+    docs.loc[docs["doc_id"].idxmin(), "text"] = None
+    pq.write_table(pa.Table.from_pandas(docs, schema=tbl.schema,
+                                        preserve_index=False),
+                   tmp_path / "documents.parquet")
+    os.symlink(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+
+    keep1_rows = docs["text"].nunique(dropna=False)
+    assert docs["text"].isna().sum() == 1
+    rows = {r["stage"]: r
+            for r in q385_dedup_cascade_audit(spark, str(tmp_path)).collect()}
+    assert rows["1_exact"]["n_in"] == len(docs)
+    assert rows["1_exact"]["n_out"] == keep1_rows
+    assert rows["2_minhash"]["n_in"] == keep1_rows
