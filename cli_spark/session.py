@@ -91,23 +91,17 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def stream_partitions() -> int:
-    """Shuffle-partition count for stateful streaming micro-batches.
-
-    A stateful operator creates one state-store instance per shuffle
-    partition, and EVERY micro-batch pays per-partition fixed cost:
-    a task, a state-store load + commit (delta file + CRC + rename
-    under the HDFS-backed provider), and scheduler overhead. The right
-    number tracks per-batch volume, not the box's core count: the
-    replay fixtures deliver ~5k-row micro-batches, where 32 partitions
-    is ~40× more per-batch fixed cost than data (round-15 measurement:
-    q453 spent most of its ~1 s/batch on fixed per-partition work).
-    Production streams size this to state volume / throughput via
-    SPARK_GRAFT_STREAM_PARTITIONS (e.g. hundreds on a cluster); the
-    local default 8 keeps the driver's bench method unchanged while
-    matching the fixture's batch grain. Results are partitioning-
-    invariant — state is keyed, the watermark is global."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+# Shuffle-partition count for stateful streaming micro-batches.
+# A stateful operator creates one state-store instance per shuffle
+# partition, and EVERY micro-batch pays per-partition fixed cost: a
+# task, a state-store load + commit (delta file + CRC + rename under
+# the HDFS-backed provider), and scheduler overhead. The right number
+# tracks per-batch volume, not the box's core count: the replay
+# fixtures deliver ~5k-row micro-batches, where 32 partitions is ~40×
+# more per-batch fixed cost than data (round-15 measurement: q453
+# spent most of its ~1 s/batch on fixed per-partition work). Results
+# are partitioning-invariant — state is keyed, the watermark is global.
+STREAM_PARTITIONS = 8
 
 
 class scoped_shuffle_partitions:
@@ -138,9 +132,9 @@ class scoped_shuffle_partitions:
 # a temp file plus its .crc companion, both renamed into place. The
 # saving is therefore per-call overhead of the default FileContext
 # API path (metadata lookups an inotify trace cannot see), not fewer
-# writes or renames. Crash-atomicity is the same under both, so
-# SPARK_GRAFT_CKPT_MANAGER only matters where a store needs its own
-# manager (object stores without atomic rename).
+# writes or renames. Crash-atomicity is the same under both; a store
+# that needs its own manager (object stores without atomic rename)
+# sets it through Spark's key, which this scope leaves alone.
 _CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 _DIRECT_CKPT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -148,27 +142,23 @@ _DIRECT_CKPT_MANAGER = (
 )
 
 
-def replay_ckpt_manager() -> str:
-    return os.environ.get("SPARK_GRAFT_CKPT_MANAGER", _DIRECT_CKPT_MANAGER)
-
-
 class scoped_replay_ckpt_manager:
-    """Apply the replay-stream checkpoint file manager for the
-    duration of one stream run and restore the session default on
-    exit (the manager class is read at query start)."""
+    """Apply the FileSystem-API checkpoint file manager for the
+    duration of one replay-stream run (the manager class is read at
+    query start) when the session sets no manager of its own, and
+    unset it on exit. A session's own manager stays in force."""
 
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
 
     def __enter__(self) -> None:
-        self.old = self.spark.conf.get(_CKPT_MANAGER_KEY, None)
-        self.spark.conf.set(_CKPT_MANAGER_KEY, replay_ckpt_manager())
+        self.own = self.spark.conf.get(_CKPT_MANAGER_KEY, None)
+        if self.own is None:
+            self.spark.conf.set(_CKPT_MANAGER_KEY, _DIRECT_CKPT_MANAGER)
 
     def __exit__(self, *exc) -> None:
-        if self.old is None:
+        if self.own is None:
             self.spark.conf.unset(_CKPT_MANAGER_KEY)
-        else:
-            self.spark.conf.set(_CKPT_MANAGER_KEY, self.old)
 
 
 def materialize_local(df):

@@ -27,7 +27,10 @@ from cli_spark.functions.determinism import (
 from cli_spark.plans.registry import register
 from cli_spark.streaming.drain import (
     collect_memory_sink,
+    drain_rows,
+    replay_batch_rows,
     replay_file,
+    replay_stream,
     run_stream,
 )
 from cli_spark.tables import events_stream, load_table
@@ -452,9 +455,6 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained by `run_stream` every match emits within the run, so the
     per-user pair census over the sink equals the batch interval-join
     oracle exactly."""
-    import shutil
-    import tempfile
-
     purchases = (
         events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -480,14 +480,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
         & (F.col("e_ts") <= F.col("p_ts")),
     )
-    out_root = tempfile.mkdtemp(prefix="q264_pairs_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(f"{out_root}/pairs")
-
-    run_stream(joined.writeStream.foreachBatch(sink).start())
-    try:
-        pairs = spark.read.parquet(f"{out_root}/pairs")
+    with drain_rows(spark, joined) as pairs:
         result = (
             pairs.groupBy(F.col("p_user").alias("user_id"))
             .agg(
@@ -495,10 +488,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("e_value")).alias("error_value_sum"),
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -515,23 +505,15 @@ GROUP BY date_trunc('hour', ts), event_type
 )
 def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE MULTI-micro-batch streaming: the events table replayed
-    through the custom `replay` Python DataSource in 500-row batches
-    (the single-file testdata otherwise arrives in ONE batch and
-    cross-batch state accumulation never executes — q103's documented
-    limitation), aggregated under complete mode so per-window state
-    must accumulate correctly ACROSS batches. The result is read
-    after the source reports exhaustion; complete-mode aggregation is
-    batch-slicing-invariant, so it must equal the batch oracle
-    exactly whatever the batch boundaries."""
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", 500)
-        .load()
-    )
+    through the custom `replay` Python DataSource in ~20 batches of
+    at least 500 rows (the single-file testdata otherwise arrives in
+    ONE batch and cross-batch state accumulation never executes —
+    q103's documented limitation), aggregated under complete mode so
+    per-window state must accumulate correctly ACROSS batches. The
+    result is read after the source reports exhaustion; complete-mode
+    aggregation is batch-slicing-invariant, so it must equal the batch
+    oracle exactly whatever the batch boundaries."""
+    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 20, min_rows=500)
     agg = (
         stream.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
@@ -570,31 +552,18 @@ def _run_restart_recovery(
     import tempfile
     import uuid as _uuid
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.sources.replay_partitioned import register_replay_partitioned
-
-    import pyarrow.parquet as pq
-
-    register_replay_source(spark)
-    register_replay_partitioned(spark)
+    path = f"{sf_dir}/events.parquet"
     ckpt = tempfile.mkdtemp(prefix="cli_spark_ckpt_")
-    # ~10 micro-batches at ANY scale factor (parquet footer read is
-    # driver-side metadata only), so the stop always lands mid-stream
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
+    # ~10 micro-batches at ANY scale factor, so the stop always lands
+    # mid-stream
+    _, batch_rows = replay_batch_rows(path, 10)
 
     def start(name: str, end_row: int | None = None):
-        reader = (
-            spark.readStream.format(fmt)
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-        )
-        for k, v in (extra_options or {}).items():
-            reader = reader.option(k, v)
+        options = dict(extra_options or {})
         if end_row is not None:
-            reader = reader.option("endRow", end_row)
+            options["endRow"] = end_row
         agg = (
-            reader.load()
+            replay_stream(spark, path, 10, source=fmt, **options)
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -741,20 +710,8 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
     hourly census cut at the last finalized hour — any state lost
     between the chained operators, or a mis-propagated watermark,
     breaks the hash."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .option("orderBy", "ts,event_id")
-        .load()
-    )
+    stream = replay_stream(
+        spark, f"{sf_dir}/events.parquet", 10, orderBy="ts,event_id")
     lvl1 = (
         stream.withWatermark("ts", "0 seconds")
         .groupBy(F.window("ts", "10 minutes"))
@@ -860,8 +817,6 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     collect); the streaming plan itself is the production shape:
     watermarked source → windowed hash aggregation with RocksDB-able
     keyed state, bounded by live-window count, not stream length."""
-    from cli_spark.sources.replay_datasource import register_replay_source
-
     e = load_table(spark, sf_dir, "events")
     scrambled = e.select(
         "event_id",
@@ -871,17 +826,10 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
         F.md5(F.col("event_id").cast("string")).alias("_k"),
     )
     with replay_file(spark, scrambled, ("_k", "event_id"),
-                     drop=("_k",)) as (part, n):
-        bsz = max(500, -(-n // 40))  # ceil
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
+                     drop=("_k",)) as (part, _):
         agg = (
-            stream.withWatermark("ts", "2 hours")
+            replay_stream(spark, part, 40, min_rows=500)
+            .withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -942,41 +890,18 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
     its min-doc_id row per key (deterministic reduce) before the
     stateful dedup. The single-partition replay contract is asserted
     by this query's bit-exact oracle match across ~20 batches."""
-    import shutil
-    import tempfile
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    d = load_table(spark, sf_dir, "documents")
-    n = d.count()
-    bsz = max(50, -(-n // 20))
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("batchRows", bsz)
-        .load()
-    )
+    stream = replay_stream(spark, f"{sf_dir}/documents.parquet", 20, min_rows=50)
     deduped = stream.select(
         "doc_id", "lang", F.md5(F.expr("substring(text, 1, 100)")).alias("h")
     ).dropDuplicates(["h"])
-    out_root = tempfile.mkdtemp(prefix="q285_dedup_")
-    try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(f"{out_root}/kept")
-
-        run_stream(deduped.writeStream.foreachBatch(sink).start())
-        kept = spark.read.parquet(f"{out_root}/kept")
+    with drain_rows(spark, deduped) as kept:
         result = kept.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_unique"),
             F.sum("doc_id").alias("doc_id_sum"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -1022,25 +947,13 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
     state is one small row per user in the state store (RocksDB in
     production); per-batch output rides a distributed foreachBatch
     parquet sink."""
-    import shutil
-    import tempfile
     from collections.abc import Iterator
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.window import Window as _Win
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    e = load_table(spark, sf_dir, "events")
-    n = e.count()
-    bsz = max(500, -(-n // 25))
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", bsz)
-        .load()
-    )
+    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 25, min_rows=500)
 
     def _update(key, batches: Iterator[pd.DataFrame], state: GroupState):
         cnt, cents, ub = state.get if state.exists else (0, 0, 0)
@@ -1070,35 +983,21 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out_root = tempfile.mkdtemp(prefix="q294_state_")
-    try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.withColumn("_b", F.lit(batch_id)).write.mode("append").parquet(
-                f"{out_root}/upd"
-            )
-
-        run_stream(
-            totals.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .start()
-        )
-        upd = spark.read.parquet(f"{out_root}/upd")
-        from pyspark.sql.window import Window as _Win
-
+    with drain_rows(spark, totals, "update") as upd:
+        # `ub` increases by 1 on every emission for a key, so a user's
+        # last emission is the one with the largest n_update_batches
         last = (
             upd.withColumn(
                 "rn",
                 F.row_number().over(
-                    _Win.partitionBy("user_id").orderBy(F.col("_b").desc())
+                    _Win.partitionBy("user_id")
+                    .orderBy(F.col("n_update_batches").desc())
                 ),
             )
             .filter(F.col("rn") == 1)
             .select("user_id", "n_events", "value_cents", "n_update_batches")
         )
-        out = spark.createDataFrame(last.collect(), last.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(last.collect(), last.schema)
 
 
 @register(
@@ -1124,18 +1023,7 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rank has full tie-breaks. The memory sink holds K rows,
     not the keyed state, so the driver footprint is K regardless of
     user cardinality."""
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    e = load_table(spark, sf_dir, "events")
-    n = e.count()
-    bsz = max(500, -(-n // 20))
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", bsz)
-        .load()
-    )
+    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 20, min_rows=500)
     ranked = (
         stream.groupBy("user_id")
         .agg(
@@ -1213,57 +1101,8 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
     the final watermark are still in the join state when the stream
     ends — exactly as in production, where they'd emit on the next
     day's data — and the oracle reproduces that strict cut."""
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-        )
-
-    pur = (
-        src().filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    err = (
-        src().filter(F.col("event_type") == "error")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-            F.col("value").alias("e_value"),
-        )
-    )
-    joined = pur.join(
-        err,
-        (F.col("e_user") == F.col("p_user"))
-        & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
-        & (F.col("e_ts") <= F.col("p_ts")),
-        "leftOuter",
-    )
-    out_root = tempfile.mkdtemp(prefix="q318_outer_")
-    try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(f"{out_root}/rows")
-
-        run_stream(joined.writeStream.foreachBatch(sink).start())
-        rows = spark.read.parquet(f"{out_root}/rows")
+    pur, err, cond = _stream_join_sides(spark, sf_dir)
+    with drain_rows(spark, pur.join(err, cond, "leftOuter")) as rows:
         matched = (
             rows.filter(F.col("e_user").isNotNull())
             .groupBy(F.col("p_user").alias("u"))
@@ -1286,10 +1125,7 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
                 F.coalesce("err_value_sum", F.lit(0.0)).alias("err_value_sum"),
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -1316,20 +1152,9 @@ def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataF
     equal the batch oracle exactly; correctness is batch-slicing- AND
     partition-slicing-invariant, so any row lost or duplicated at a
     partition boundary breaks the hash."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_partitioned import register_replay_partitioned
-
-    register_replay_partitioned(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
-    stream = (
-        spark.readStream.format("replay_part")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .option("numPartitions", 4)
-        .load()
-    )
+    stream = replay_stream(
+        spark, f"{sf_dir}/events.parquet", 10, source="replay_part",
+        numPartitions=4)
     agg = (
         stream.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
@@ -1393,24 +1218,15 @@ def _run_idempotent_sink_recovery(
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
     from pyspark.errors import StreamingQueryException
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
     ckpt = tempfile.mkdtemp(prefix="cli_spark_idem_ckpt_")
     out_root = tempfile.mkdtemp(prefix="cli_spark_idem_out_")
     evidence: dict = {"crash_batch_id": _Q331_CRASH_BATCH, "phase2_batch_ids": []}
 
     def start(sink):
         return (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
+            replay_stream(spark, f"{sf_dir}/events.parquet", 10)
             .select("event_id", "ts", "value")
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
@@ -1497,16 +1313,8 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the replay contract; overlap dedup is an exact-key
     dropDuplicates on the unioned row-level relation (keyed shuffle);
     the census is the q100 two-level distinct shape."""
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
+    path = f"{sf_dir}/events.parquet"
+    n_rows, batch_rows = replay_batch_rows(path, 10)
     cutover = (n_rows * 6) // 10
     overlap_start = max(0, cutover - batch_rows // 2)
 
@@ -1561,21 +1369,9 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stream side: replay from BEFORE the cutover (overlap on purpose)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .option("startRow", overlap_start)
-        .load()
-        .select("event_id", "ts", "user_id", "value")
-    )
-    out_root = tempfile.mkdtemp(prefix="q337_tail_")
-    try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(f"{out_root}/rows")
-
-        run_stream(stream.writeStream.foreachBatch(sink).start())
-        tail = spark.read.parquet(f"{out_root}/rows")
+    stream = replay_stream(spark, path, 10, startRow=overlap_start).select(
+        "event_id", "ts", "user_id", "value")
+    with drain_rows(spark, stream) as tail:
         # The merge is gap-free iff the file's replay order equals
         # event_id order (first `cutover` file rows = smallest
         # `cutover` ids). Assert it instead of assuming it (ADVICE
@@ -1607,10 +1403,7 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_sum",
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -1654,25 +1447,14 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
     from cli_spark.sources.checksum_sink import register_checksum_sink
-    from cli_spark.sources.replay_datasource import register_replay_source
 
-    register_replay_source(spark)
     register_checksum_sink(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
     out_root = tempfile.mkdtemp(prefix="q338_cks_")
     ckpt = tempfile.mkdtemp(prefix="q338_ckpt_")
     try:
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-            .select(F.col("event_id").cast("string").alias("k"))
-        )
+        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
+            F.col("event_id").cast("string").alias("k"))
         run_stream(
             stream.writeStream.format("checksum")
             .option("path", out_root)
@@ -1769,58 +1551,8 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     still inside the final watermark stay in state unemitted — the
     production steady-state — and the oracle reproduces both strict
     eviction cuts exactly."""
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-        )
-
-    pur = (
-        src().filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    err = (
-        src().filter(F.col("event_type") == "error")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("e_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-            F.col("value").alias("e_value"),
-        )
-    )
-    joined = pur.join(
-        err,
-        (F.col("e_user") == F.col("p_user"))
-        & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
-        & (F.col("e_ts") <= F.col("p_ts")),
-        "fullOuter",
-    )
-    out_root = tempfile.mkdtemp(prefix="q370_fullouter_")
-    try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(f"{out_root}/rows")
-
-        run_stream(joined.writeStream.foreachBatch(sink).start())
-        rows = spark.read.parquet(f"{out_root}/rows")
+    pur, err, cond = _stream_join_sides(spark, sf_dir)
+    with drain_rows(spark, pur.join(err, cond, "fullOuter")) as rows:
         matched = (
             rows.filter(F.col("p_id").isNotNull() & F.col("e_id").isNotNull())
             .groupBy(F.col("p_user").alias("u"))
@@ -1852,10 +1584,7 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
                 F.coalesce("err_value_sum", F.lit(0.0)).alias("err_value_sum"),
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -1892,22 +1621,10 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 5) // 6)
     ckpt = tempfile.mkdtemp(prefix="q371_ckpt_")
     name = "ss_" + uuid.uuid4().hex[:8]
     try:
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-        )
+        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 6)
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.round(F.col("value") * (10 ** MONEY_SCALE)).cast("long"))
@@ -1975,19 +1692,7 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 7) // 8)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .load()
-    )
+    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 8)
     out_root = tempfile.mkdtemp(prefix="q383_pivot_")
     try:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -2060,11 +1765,6 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
     join at job start) is the SCD2-correct pattern. Graded: per-tier
     census of the drained stream; the oracle closed-forms the version
     arithmetic and reaches the same numbers without any join."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
     BASE_US = 1704067200000000  # 2024-01-01 00:00:00 UTC
     SLOT_US = 864000000000      # 10 days
     users = (
@@ -2083,15 +1783,8 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
             ((F.col("user_id") + F.col("version")) % 3).alias("tier"),
         )
     )
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 7) // 8)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .load()
-        .withColumn("t_us", F.unix_micros("ts"))
-    )
+    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 8).withColumn(
+        "t_us", F.unix_micros("ts"))
     enriched = stream.join(
         dim,
         (stream.user_id == dim.user_id)
@@ -2310,23 +2003,11 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
     tmp = tempfile.mkdtemp(prefix="q395_filesink_")
     out_dir = tmp + "/out"
     try:
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-            .select("event_id", "event_type", "value")
-        )
+        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
+            "event_id", "event_type", "value")
         run_stream(
             stream.writeStream.format("parquet")
             .option("path", out_dir)
@@ -2357,23 +2038,13 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_join_sides(spark: SparkSession, sf_dir: str):
     """Purchase / error replay-source sides shared by the
     stream-stream join-type matrix (q318 outer, q370 full outer,
-    q396 semi, q397 anti): both streams replay the same events file
-    in ~10 micro-batches with a 2-hour watermark."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
+    q396 semi, q397 anti, q414's state reader): both streams replay
+    the same events file in ~10 micro-batches with a 2-hour watermark.
+    Each side carries every column a caller reads; the callers
+    aggregate named columns, so the extra ones change no result."""
 
     def src() -> DataFrame:
-        return (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-        )
+        return replay_stream(spark, f"{sf_dir}/events.parquet", 10)
 
     pur = (
         src().filter(F.col("event_type") == "purchase")
@@ -2392,6 +2063,7 @@ def _stream_join_sides(spark: SparkSession, sf_dir: str):
             F.col("event_id").alias("e_id"),
             F.col("user_id").alias("e_user"),
             F.col("ts").alias("e_ts"),
+            F.col("value").alias("e_value"),
         )
     )
     cond = (
@@ -2400,18 +2072,6 @@ def _stream_join_sides(spark: SparkSession, sf_dir: str):
         & (F.col("e_ts") <= F.col("p_ts"))
     )
     return pur, err, cond
-
-
-def _drain_foreach_parquet(spark: SparkSession, joined: DataFrame,
-                           out_root: str) -> DataFrame:
-    """Run a streaming frame into an append parquet foreachBatch sink
-    until the replay sources run dry; return the written rows."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(f"{out_root}/rows")
-
-    run_stream(joined.writeStream.foreachBatch(sink).start())
-    return spark.read.parquet(f"{out_root}/rows")
 
 
 @register(
@@ -2452,22 +2112,13 @@ def q396_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grade censuses flagged purchases per user, which catches
     both failure modes: a per-match duplicate emission overcounts
     vs the DISTINCT oracle, a dropped match undercounts."""
-    import shutil
-    import tempfile
-
     pur, err, cond = _stream_join_sides(spark, sf_dir)
-    joined = pur.join(err, cond, "leftSemi")
-    out_root = tempfile.mkdtemp(prefix="q396_semi_")
-    try:
-        rows = _drain_foreach_parquet(spark, joined, out_root)
+    with drain_rows(spark, pur.join(err, cond, "leftSemi")) as rows:
         res = rows.groupBy(F.col("p_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_flagged"),
             dsum(F.col("p_value")).alias("flagged_value_sum"),
         )
-        out = spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(res.collect(), res.schema)
 
 
 @register(
@@ -2528,22 +2179,14 @@ def q397_streaming_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces the strict eviction cut exactly — an early emission
     (before the watermark proof) would be a false positive on any
     fixture where the match arrives late."""
-    import shutil
-    import tempfile
-
     pur, err, cond = _stream_join_sides(spark, sf_dir)
     joined = pur.join(err, cond, "leftOuter").filter(F.col("e_id").isNull())
-    out_root = tempfile.mkdtemp(prefix="q397_anti_")
-    try:
-        rows = _drain_foreach_parquet(spark, joined, out_root)
+    with drain_rows(spark, joined) as rows:
         res = rows.groupBy(F.col("p_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_clean"),
             dsum(F.col("p_value")).alias("clean_value_sum"),
         )
-        out = spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(out_root, ignore_errors=True)
-    return out
+        return spark.createDataFrame(res.collect(), res.schema)
 
 
 @register(
@@ -2598,22 +2241,10 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.4 fixed) either flushes windows early (missing late-batch
     matches) or never flushes them; both break the bit-exact match
     with the drained-to-exhaustion oracle."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
 
     def src() -> DataFrame:
-        return (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .option("orderBy", "ts,event_id")
-            .load()
-        )
+        return replay_stream(
+            spark, f"{sf_dir}/events.parquet", 10, orderBy="ts,event_id")
 
     pur = (
         src().filter(F.col("event_type") == "purchase")
@@ -2680,22 +2311,10 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 9) // 10)
     out_root = tempfile.mkdtemp(prefix="q411_fanout_")
     try:
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", f"{sf_dir}/events.parquet")
-            .option("batchRows", batch_rows)
-            .load()
-            .select("event_id", "event_type", "value")
-        )
+        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
+            "event_id", "event_type", "value")
 
         def fanout(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.persist()
@@ -2784,13 +2403,10 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     pur, err, cond = _stream_join_sides(spark, sf_dir)
     joined = pur.join(err, cond, "inner")
     ckpt = tempfile.mkdtemp(prefix="q414_ckpt_")
-    out_root = tempfile.mkdtemp(prefix="q414_out_")
     try:
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(f"{out_root}/rows")
-
+        # the join rows are never read: only the checkpoint's state is
         run_stream(
-            joined.writeStream.foreachBatch(sink)
+            joined.writeStream.format("noop")
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -2806,5 +2422,4 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(rows, "side string, n_state_rows long")
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_root, ignore_errors=True)
     return out

@@ -2,17 +2,26 @@
 
 Entry points:
 
+* `replay_stream(spark, path, batches, *, min_rows=1, source="replay",
+  **options)` — every replay stream opens here: it registers the
+  source, reads ``n`` from the parquet footer, sets
+  ``batchRows = max(min_rows, ceil(n / batches))`` and passes the
+  source options through (``orderBy``, ``startRow``, ``endRow``,
+  ``numPartitions``). `replay_batch_rows` gives the same ``(n,
+  batch_rows)`` to callers that need the numbers.
+* `drain_rows(spark, stream, output_mode="append")` — the per-row
+  (fact-grain) drain: the stream runs into a foreachBatch sink that
+  appends each micro-batch to parquet in a temp dir, and the rows are
+  yielded read back; the dir is removed on exit.
 * `replay_file(spark, rows, order_by, drop=())` — the sorted replay
   prep: one single-file parquet of ``rows`` in ``order_by`` order,
-  yielded as ``(path, n)`` and removed on exit. Every stream that
-  replays a prepared file (q279, q453 and the sketch streams) gets
-  its file here.
+  yielded as ``(path, n)`` and removed on exit (q279, q453 and the
+  sketch streams).
 * `replay_partials(spark, rows, order_by, partial_of, drop=())` — the
   mergeable-sketch streams (q473/q476/q479/q481/q486/q491/q493/q496/
-  q500): `replay_file`, the `replay` source at
-  ``batchRows = ceil(n / N_BATCHES)``, and `drain_partials`. It owns
-  the file layout, the batch sizing and the batch identity, so a
-  query only states its partial and its merge.
+  q500): `replay_file`, `replay_stream` at ``N_BATCHES`` and
+  `drain_partials`. It owns the file layout, the batch sizing and the
+  batch identity, so a query only states its partial and its merge.
 * `run_stream(query)` — how every stream over a bounded source ends:
   `processAllAvailable()` returns once the source reports no new data
   AND every data and no-data micro-batch (the final watermark advance
@@ -32,9 +41,9 @@ SKETCH-grain — O(buckets | registers | counters | bottom-k samples)
 rows per batch regardless of input volume — so the driver holds
 n_batches x sketch-size rows, the same order as the queries' final
 results. `MAX_PARTIAL_ROWS_PER_BATCH` enforces that in code.
-Fact-grain streams (q453's dropDuplicatesWithinWatermark emissions)
-keep a durable foreachBatch file sink; the merge algebra downstream is
-the same either way, which the all-rows DuckDB oracles prove.
+Fact-grain streams keep a durable sink (`drain_rows`, or q453's own
+foreachBatch file sink); the merge algebra downstream is the same
+either way, which the all-rows DuckDB oracles prove.
 """
 
 from __future__ import annotations
@@ -176,13 +185,78 @@ def _data_batch_ids(progress: list) -> list[int]:
 
 
 def replay_row_count(part_path: str) -> int:
-    """Row count of an already-written replay parquet file, straight
-    from the footer metadata — replaces a full-scan Spark count() job
-    in the stream-prep path (the file was just written by the same
-    query, so footer == table cardinality by construction)."""
+    """Row count of a parquet file straight from the footer metadata:
+    the file's cardinality with no Spark count() job."""
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(part_path).metadata.num_rows
+
+
+def replay_batch_rows(path: str, batches: int, min_rows: int = 1) -> tuple[int, int]:
+    """``(n, batch_rows)`` for replaying the parquet file ``path`` in
+    about ``batches`` micro-batches: ``n`` from the footer and
+    ``batch_rows = max(min_rows, ceil(n / batches))``."""
+    n = replay_row_count(path)
+    return n, max(min_rows, -(-n // batches))
+
+
+def replay_stream(
+    spark: SparkSession,
+    path: str,
+    batches: int,
+    *,
+    min_rows: int = 1,
+    source: str = "replay",
+    **options,
+) -> DataFrame:
+    """Open the parquet file ``path`` as a replay stream of
+    ``batchRows = max(min_rows, ceil(n / batches))`` rows per
+    micro-batch (`replay_batch_rows`). ``source`` is ``"replay"`` (the
+    driver-side simple reader) or ``"replay_part"`` (the partitioned
+    reader); ``options`` go to the source unchanged (``orderBy``,
+    ``startRow``, ``endRow``, ``numPartitions``)."""
+    from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.sources.replay_partitioned import register_replay_partitioned
+
+    register = {
+        "replay": register_replay_source,
+        "replay_part": register_replay_partitioned,
+    }[source]
+    register(spark)
+    _, batch_rows = replay_batch_rows(path, batches, min_rows)
+    return (
+        spark.readStream.format(source)
+        .option("path", path)
+        .option("batchRows", batch_rows)
+        .options(**options)
+        .load()
+    )
+
+
+@contextmanager
+def drain_rows(
+    spark: SparkSession, stream: DataFrame, output_mode: str = "append"
+) -> Iterator[DataFrame]:
+    """Run ``stream`` to completion (`run_stream`) into a foreachBatch
+    sink that appends every micro-batch to parquet in a temp dir, and
+    yield the rows read back, with the stream's schema (an empty frame
+    when no batch emitted a row). The dir is removed on exit, also when
+    the stream or the body raises, so the body must materialize what
+    it returns.
+
+    For per-row (fact-grain) output — joins, dedup survivors, running
+    totals — which must land in a distributed sink, not on the driver
+    (`drain_partials` is the sketch-grain drain)."""
+    tmp = tempfile.mkdtemp(prefix="drain_rows_")
+    try:
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(tmp)
+
+        run_stream(
+            stream.writeStream.foreachBatch(sink).outputMode(output_mode).start())
+        yield spark.read.schema(stream.schema).parquet(tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @contextmanager
@@ -248,16 +322,8 @@ def replay_partials(
     ``n_batches``. ``n_batches`` never comes from the partials, whose
     batches can be empty (q479: an all-singleton batch has no
     Misra-Gries counter)."""
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    with replay_file(spark, rows, order_by, drop) as (path, n):
-        batch_rows = max(1, -(-n // N_BATCHES))
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", path)
-            .option("batchRows", batch_rows)
-            .load()
-        )
-        parts = drain_partials(spark, stream, partial_of)
+    with replay_file(spark, rows, order_by, drop) as (path, _):
+        n, batch_rows = replay_batch_rows(path, N_BATCHES)
+        parts = drain_partials(
+            spark, replay_stream(spark, path, N_BATCHES), partial_of)
     return parts, n, batch_rows, -(-n // batch_rows)

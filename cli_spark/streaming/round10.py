@@ -28,7 +28,11 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
-from cli_spark.streaming.drain import collect_memory_sink, run_stream
+from cli_spark.streaming.drain import (
+    collect_memory_sink,
+    replay_stream,
+    run_stream,
+)
 
 
 @register(
@@ -74,22 +78,11 @@ def q425_multiwatermark_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as graded here (and 'max' is how you trade its late data
     for latency). Both runs replay event-time-ordered, so the 'min'
     run is drop-free and bit-exact vs the oracle."""
-    import pyarrow.parquet as pq
-
-    from cli_spark.sources.replay_datasource import register_replay_source
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 7) // 8)
-
     def census(policy: str) -> DataFrame:
         def side(parity: int, delay: str) -> DataFrame:
             return (
-                spark.readStream.format("replay")
-                .option("path", f"{sf_dir}/events.parquet")
-                .option("batchRows", batch_rows)
-                .option("orderBy", "ts,event_id")
-                .load()
+                replay_stream(
+                    spark, f"{sf_dir}/events.parquet", 8, orderBy="ts,event_id")
                 .filter(F.col("event_id") % 2 == parity)
                 .withWatermark("ts", delay)
             )
@@ -198,20 +191,10 @@ def q426_state_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
     replay deterministically from the checkpoint."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from cli_spark.sources.replay_datasource import register_replay_source
     from cli_spark.streaming.round10_handlers import session_timeout_handler
 
-    import pyarrow.parquet as pq
-
-    register_replay_source(spark)
-    n_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    batch_rows = max(1, (n_rows + 7) // 8)
     stream = (
-        spark.readStream.format("replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batchRows", batch_rows)
-        .option("orderBy", "ts,event_id")
-        .load()
+        replay_stream(spark, f"{sf_dir}/events.parquet", 8, orderBy="ts,event_id")
         .select("user_id", "ts")
         .withWatermark("ts", "0 seconds")
     )

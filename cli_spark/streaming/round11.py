@@ -160,8 +160,12 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     pins)."""
     import tempfile
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import replay_file
+    from cli_spark.session import (
+        STREAM_PARTITIONS,
+        scoped_replay_ckpt_manager,
+        scoped_shuffle_partitions,
+    )
+    from cli_spark.streaming.drain import replay_file, replay_stream, run_stream
 
     e = load_table(spark, sf_dir, "events")
     lo, hi = e.agg(
@@ -187,18 +191,12 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         tempfile.TemporaryDirectory(prefix="q453_sink_",
                                     ignore_cleanup_errors=True) as out_root,
         replay_file(spark, echoed, ("arr_us", "event_id", "copy"),
-                    drop=("arr_us", "copy")) as (part, n),
+                    drop=("arr_us", "copy")) as (part, _),
     ):
-        bsz = -(-n // 40)  # ceil: ~40 batches over both copies
-        register_replay_source(spark)
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part)
-            .option("batchRows", bsz)
-            .load()
-        )
         deduped = (
-            stream.withWatermark("ts", f"{delay_us} microseconds")
+            # ~40 batches over both copies
+            replay_stream(spark, part, 40)
+            .withWatermark("ts", f"{delay_us} microseconds")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "event_type")
         )
@@ -210,7 +208,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
             # — measured +43 s on the full run (round-15 A/B,
             # BENCH_r15_opt_before/mid). File count per batch is
             # instead bounded by the stream's state partitioning
-            # (stream_partitions(), 8 locally), sized to batch volume.
+            # (STREAM_PARTITIONS), sized to batch volume.
             # Committer v2 + no _SUCCESS marker (round 16, guide §1.4):
             # ~40 job commits per run each paid the v1 two-level
             # rename plus a marker create — per-WRITE options, so
@@ -240,7 +238,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         # state store per shuffle partition and re-pays that
         # per-partition fixed cost EVERY batch — size it to the
         # ~5k-row batch grain, not the core count (session.py
-        # stream_partitions; round-15 optimization, guide §2.2/§5)
+        # STREAM_PARTITIONS; round-15 optimization, guide §2.2/§5)
         # scoped_replay_ckpt_manager (round 16): the FileSystem-API
         # checkpoint manager for this throwaway per-invocation
         # checkpoint. Both managers are rename-based (temp file +
@@ -248,14 +246,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         # default FileContext path, paid for every offset/commit log
         # entry and every state-store delta file (8 partitions x ~40
         # batches) — see session.py for the file-operation diff.
-        from cli_spark.session import (
-            scoped_replay_ckpt_manager,
-            scoped_shuffle_partitions,
-            stream_partitions,
-        )
-        from cli_spark.streaming.drain import run_stream
-
-        with scoped_shuffle_partitions(spark, stream_partitions()), \
+        with scoped_shuffle_partitions(spark, STREAM_PARTITIONS), \
                 scoped_replay_ckpt_manager(spark):
             run_stream(deduped.writeStream.foreachBatch(sink).start())
         emitted = spark.read.parquet(f"{out_root}/emitted")

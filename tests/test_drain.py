@@ -1,13 +1,16 @@
-"""Focused tests for cli_spark.streaming.drain — the replay prep
-(`replay_file`), the sketch streams' drain (`drain_partials`,
+"""Focused tests for cli_spark.streaming.drain — opening a replay
+stream (`replay_stream`), the per-row drain (`drain_rows`), the replay
+prep (`replay_file`), the sketch streams' drain (`drain_partials`,
 `replay_partials`) and the stream ending (`run_stream`). Asserts the
-helpers' contracts directly: every batch's partial rows survive, the
-schema is the partial plan's schema plus the ``batch_id`` tag the
-drain adds, batch ids tag rows correctly across >= 2 real
+helpers' contracts directly: the batch sizing and the source options
+reach the stream, every batch's rows or partial rows survive, the
+schema is the stream's (or the partial plan's plus the ``batch_id``
+tag the drain adds), batch ids tag rows correctly across >= 2 real
 micro-batches, NULL group keys merge like any other key, the batch
 count never depends on which partials are empty, the footer row count
-matches a Spark count of the same file, and the replay file is gone
-after a normal or a failed run."""
+matches a Spark count of the same file, temp dirs are gone after a
+normal or a failed run, and the replay checkpoint-manager scope keeps
+a session's own manager."""
 
 from __future__ import annotations
 
@@ -23,9 +26,13 @@ from cli_spark.sources.replay_datasource import register_replay_source
 import cli_spark.streaming.drain as drain
 from cli_spark.streaming.drain import (
     drain_partials,
+    drain_rows,
+    replay_batch_rows,
     replay_file,
     replay_partials,
     replay_row_count,
+    replay_stream,
+    run_stream,
 )
 
 
@@ -273,3 +280,105 @@ def test_replay_partials_removes_file_on_return_and_on_error(
                        match="partial failed"):
         replay_partials(spark, _grp_rows(spark, 5), ("id",), failing)
     assert not list(tmp_path.glob("replay_*"))
+
+
+def _batches_of(stream) -> dict[int, list[int]]:
+    """The ``id`` values of every micro-batch that carried rows, by
+    batch id."""
+    seen: dict[int, list[int]] = {}
+
+    def sink(batch_df, batch_id):
+        ids = [r["id"] for r in batch_df.collect()]
+        if ids:
+            seen[batch_id] = ids
+
+    run_stream(stream.writeStream.foreachBatch(sink).start())
+    return seen
+
+
+@pytest.mark.parametrize(("batches", "min_rows", "batch_rows"),
+                         [(4, 1, 25), (4, 40, 40), (2, 1, 49)])
+def test_replay_stream_sizes_batches(spark, replay_part, batches, min_rows,
+                                     batch_rows):
+    """``batchRows = max(min_rows, ceil(n / batches))``, and the 97-row
+    file arrives as ``ceil(n / batch_rows)`` consecutive data batches."""
+    assert replay_batch_rows(replay_part, batches, min_rows) == (97, batch_rows)
+    seen = _batches_of(
+        replay_stream(spark, replay_part, batches, min_rows=min_rows))
+    assert sorted(seen) == list(range(-(-97 // batch_rows)))
+    assert [seen[b] for b in sorted(seen)] == [
+        list(range(lo, min(lo + batch_rows, 97)))
+        for lo in range(0, 97, batch_rows)]
+
+
+def test_replay_stream_honours_order_by_and_end_row(spark, replay_part):
+    seen = _batches_of(
+        replay_stream(spark, replay_part, 4, orderBy="grp,id", endRow=50))
+    got = [i for b in sorted(seen) for i in seen[b]]
+    assert got == sorted(range(97), key=lambda i: (i % 7, i))[:50]
+
+
+def test_drain_rows_returns_the_streams_rows(spark, replay_part):
+    stream = replay_stream(spark, replay_part, 4)
+    with drain_rows(spark, stream) as rows:
+        got = sorted((r["id"], r["grp"]) for r in rows.collect())
+        assert rows.schema == stream.schema
+    assert got == [(i, i % 7) for i in range(97)]
+
+
+def test_drain_rows_empty_stream_keeps_schema(spark, replay_part):
+    stream = replay_stream(spark, replay_part, 4).filter(F.col("id") < 0)
+    with drain_rows(spark, stream) as rows:
+        assert rows.count() == 0
+        assert rows.schema == stream.schema
+
+
+@pytest.mark.parametrize("fail", ["body", "stream"])
+def test_drain_rows_removes_dir_on_exit_and_on_error(
+        spark, replay_part, tmp_path, monkeypatch, fail):
+    """The temp dir exists inside the block and is gone after a normal
+    exit and after the body or the stream raises."""
+    from pyspark.errors import StreamingQueryException
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with drain_rows(spark, replay_stream(spark, replay_part, 2)) as rows:
+        assert rows.count() == 97
+        assert list(tmp_path.glob("drain_rows_*"))
+    assert not list(tmp_path.glob("drain_rows_*"))
+
+    stream = replay_stream(spark, replay_part, 2)
+    if fail == "stream":
+        stream = stream.select(F.raise_error(F.lit("stream failed")))
+    with pytest.raises((ValueError, StreamingQueryException), match="failed"):
+        with drain_rows(spark, stream):
+            raise ValueError("body failed")
+    assert not list(tmp_path.glob("drain_rows_*"))
+
+
+_CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_replay_ckpt_manager_keeps_the_sessions_manager(spark):
+    """A session that sets its own checkpoint file manager keeps it
+    inside the replay scope and after it."""
+    from cli_spark.session import scoped_replay_ckpt_manager
+
+    own = ("org.apache.spark.sql.execution.streaming.checkpointing."
+           "FileContextBasedCheckpointFileManager")
+    spark.conf.set(_CKPT_KEY, own)
+    try:
+        with scoped_replay_ckpt_manager(spark):
+            assert spark.conf.get(_CKPT_KEY) == own
+        assert spark.conf.get(_CKPT_KEY) == own
+    finally:
+        spark.conf.unset(_CKPT_KEY)
+
+
+def test_replay_ckpt_manager_applies_default_and_unsets_it(spark):
+    from cli_spark.session import scoped_replay_ckpt_manager
+
+    assert spark.conf.get(_CKPT_KEY, None) is None
+    with scoped_replay_ckpt_manager(spark):
+        assert spark.conf.get(_CKPT_KEY).endswith(
+            "FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(_CKPT_KEY, None) is None

@@ -10,7 +10,9 @@ and runs with every pytest session, so the scan is effectively
 pre-commit.
 
 A second scan keeps wall-clock polling loops out of the streaming
-layer (see `test_no_polling_sleeps_in_streaming`).
+layer (see `test_no_polling_sleeps_in_streaming`), and a third keeps
+every replay stream opening through `drain.replay_stream` (see
+`test_replay_streams_open_through_drain`).
 """
 
 from __future__ import annotations
@@ -74,3 +76,39 @@ def test_no_polling_sleeps_in_streaming():
                     hits.append(
                         f"{path.relative_to(REPO)}:{node.lineno} in {name or 'module'}")
     assert not hits, "sleep() calls outside the allow-list:\n" + "\n".join(hits)
+
+
+# Replay streams open through drain.replay_stream: only drain.py and
+# the sources themselves register the replay sources or name them in
+# a reader's .format(...).
+REPLAY_REGISTRARS = {"register_replay_source", "register_replay_partitioned"}
+REPLAY_FORMATS = {"replay", "replay_part"}
+
+
+def _opens_replay_stream(node) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    if name in REPLAY_REGISTRARS:
+        return True
+    return (
+        name == "format"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value in REPLAY_FORMATS
+    )
+
+
+def test_replay_streams_open_through_drain():
+    allowed = {REPO / "cli_spark/streaming/drain.py"}
+    hits: list[str] = []
+    for path in sorted(REPO.glob("cli_spark/**/*.py")):
+        if path in allowed or "sources" in path.relative_to(REPO / "cli_spark").parts:
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for node in ast.walk(tree):
+            if _opens_replay_stream(node):
+                hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not hits, (
+        "replay stream opened outside drain.replay_stream:\n" + "\n".join(hits))
