@@ -447,7 +447,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stream-STREAM interval join: two independent readStream
     instances over the events parquet (purchases, errors), inner-
     joined per user on an event-time interval (errors in the 30
-    minutes before each purchase), drained through a foreachBatch
+    minutes before each purchase), drained through `drain_rows`'
     parquet sink — the q160 pattern, because a raw join's output is
     per-pair (unbounded) and so must land in a distributed sink, not
     a driver-resident memory table. Both sides carry watermarks (the
@@ -826,7 +826,7 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
         F.md5(F.col("event_id").cast("string")).alias("_k"),
     )
     with replay_file(spark, scrambled, ("_k", "event_id"),
-                     drop=("_k",)) as (part, _):
+                     drop=("_k",)) as part:
         agg = (
             replay_stream(spark, part, 40, min_rows=500)
             .withWatermark("ts", "2 hours")
@@ -874,7 +874,7 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
     real) emits each key's FIRST-seen row; duplicates arriving in
     LATER batches are suppressed by keyed state, which is the part a
     single-batch run never exercises (q179's documented limitation).
-    Emitted rows flow through a distributed foreachBatch parquet sink
+    Emitted rows flow through `drain_rows`' distributed parquet sink
     (per-row output is unbounded at scale — the memory-sink contract
     forbids it), and the per-language census of survivors is graded
     exactly: replay order is doc_id order, so first-seen ≡ min doc_id
@@ -945,7 +945,7 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
 
     Scale shape: keys hash-shard across executors via the groupBy;
     state is one small row per user in the state store (RocksDB in
-    production); per-batch output rides a distributed foreachBatch
+    production); per-batch output rides `drain_rows`' distributed
     parquet sink."""
     from collections.abc import Iterator
 
@@ -1095,7 +1095,7 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
     no future error can still match it. Both sides replay the events
     file through the `replay` DataSource in ~10 batches under a
     2-hour watermark; per-row join output is unbounded at scale, so
-    it lands in a distributed foreachBatch parquet sink (the q264
+    it lands in `drain_rows`' distributed parquet sink (the q264
     contract), and the graded result is the per-user census of
     matched pairs and watermark-released null rows. Purchases above
     the final watermark are still in the join state when the stream
@@ -1545,8 +1545,8 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     rows only when the global watermark proves no future partner can
     arrive — purchases once the watermark passes their own timestamp,
     errors once it passes the end of their 30-minute forward match
-    window. Per-row output is unbounded at 100 TB, so it lands in a
-    distributed foreachBatch parquet sink and the graded result is
+    window. Per-row output is unbounded at 100 TB, so it lands in
+    `drain_rows`' distributed parquet sink and the graded result is
     the per-user census of pairs and both null-side families. Rows
     still inside the final watermark stay in state unemitted — the
     production steady-state — and the oracle reproduces both strict

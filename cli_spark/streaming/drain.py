@@ -15,8 +15,8 @@ Entry points:
   yielded read back; the dir is removed on exit.
 * `replay_file(spark, rows, order_by, drop=())` — the sorted replay
   prep: one single-file parquet of ``rows`` in ``order_by`` order,
-  yielded as ``(path, n)`` and removed on exit (q279, q453 and the
-  sketch streams).
+  yielded as its path and removed on exit (q279, q453 and the sketch
+  streams).
 * `replay_partials(spark, rows, order_by, partial_of, drop=())` — the
   mergeable-sketch streams (q473/q476/q479/q481/q486/q491/q493/q496/
   q500): `replay_file`, `replay_stream` at ``N_BATCHES`` and
@@ -265,11 +265,10 @@ def replay_file(
     rows: DataFrame,
     order_by: tuple[str | Column, ...],
     drop: tuple[str, ...] = (),
-) -> Iterator[tuple[str, int]]:
+) -> Iterator[str]:
     """Write ``rows`` as ONE parquet file sorted by ``order_by``, minus
-    the ``drop`` columns, and yield ``(path, n)`` with ``n`` read from
-    the footer. The temp dir is removed on exit, also when the body
-    raises.
+    the ``drop`` columns, and yield its path. The temp dir is removed
+    on exit, also when the body raises.
 
     The file is the replay source's input: `replay` reads one file in
     row order, so the sort here IS the stream's arrival order
@@ -285,7 +284,7 @@ def replay_file(
             .parquet(tmp)
         )
         [path] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        yield path, replay_row_count(path)
+        yield path
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -322,7 +321,7 @@ def replay_partials(
     ``n_batches``. ``n_batches`` never comes from the partials, whose
     batches can be empty (q479: an all-singleton batch has no
     Misra-Gries counter)."""
-    with replay_file(spark, rows, order_by, drop) as (path, _):
+    with replay_file(spark, rows, order_by, drop) as path:
         n, batch_rows = replay_batch_rows(path, N_BATCHES)
         parts = drain_partials(
             spark, replay_stream(spark, path, N_BATCHES), partial_of)

@@ -191,7 +191,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         tempfile.TemporaryDirectory(prefix="q453_sink_",
                                     ignore_cleanup_errors=True) as out_root,
         replay_file(spark, echoed, ("arr_us", "event_id", "copy"),
-                    drop=("arr_us", "copy")) as (part, _),
+                    drop=("arr_us", "copy")) as part,
     ):
         deduped = (
             # ~40 batches over both copies

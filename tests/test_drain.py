@@ -242,12 +242,12 @@ def test_replay_partials_counts_batches_with_empty_partials(spark, monkeypatch):
 
 def test_replay_file_yields_sorted_single_file(spark, tmp_path, monkeypatch):
     """The file holds ``rows`` in ``order_by`` order minus ``drop``,
-    and ``n`` is its footer count."""
+    and its footer count is the row count."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     rows = spark.range(0, 50).select(
         "id", (F.lit(49) - F.col("id")).alias("rev"))
-    with replay_file(spark, rows, ("rev",), drop=("rev",)) as (path, n):
-        assert n == 50
+    with replay_file(spark, rows, ("rev",), drop=("rev",)) as path:
+        assert replay_row_count(path) == 50
         got = spark.read.parquet(path)
         assert got.columns == ["id"]
         assert [r["id"] for r in got.collect()] == list(range(49, -1, -1))
