@@ -113,6 +113,92 @@ def shingles_df(spark: SparkSession, sf_dir: str,
     return d.select("doc_id", "lang", sh.alias("shingles"))
 
 
+_N_BANDS = 4
+
+
+def minhash_signature(sh: DataFrame, n: int = _N_BANDS,
+                      g2_shift: int = 0) -> DataFrame:
+    """(doc_id, shingles, h0..h{n-1}) — the single-digest MinHash
+    signature of a (doc_id, shingles) frame.
+
+    Each shingle is hashed ONCE: md5 hex chars 1-15 and 17-31 become
+    the 60-bit halves g1/g2, and the i-th hash family is
+    g1 + i*(g2 >> g2_shift) (Kirsch-Mitzenmacher double hashing; the
+    shift keeps the top member of a wider family under 2^63, ANSI-
+    safe). h_i is array_min over the per-row hashed array — a narrow
+    expression, so signatures need no explode + groupBy shuffle. A
+    document without shingles gets NULL hashes (array_min of [])."""
+    def _halves(m: Column) -> Column:
+        g2 = F.conv(F.substring(m, 17, 15), 16, 10).cast("long")
+        return F.struct(
+            F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
+            # integer shift, never float /: a double mantissa can't
+            # hold a 60-bit hash exactly
+            (F.shiftright(g2, g2_shift) if g2_shift else g2).alias("g2"),
+        )
+
+    # nested transforms guarantee ONE md5 per shingle (the inner
+    # transform materializes digests; the outer only slices them —
+    # no reliance on codegen CSE inside lambda bodies)
+    hashed = sh.select(
+        "doc_id",
+        "shingles",
+        F.transform(
+            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
+            _halves,
+        ).alias("hs"),
+    )
+
+    def _family(i: int):
+        # single-parameter lambda: a two-parameter signature would make
+        # PySpark pass the ARRAY INDEX as the second argument (the
+        # `lambda x, i=i:` arity trap), silently replacing the family
+        # seed with the element position
+        return lambda x: x["g1"] + F.lit(i) * x["g2"]
+
+    return hashed.select(
+        "doc_id",
+        "shingles",
+        *[F.array_min(F.transform(F.col("hs"), _family(i))).alias(f"h{i}")
+          for i in range(n)],
+    )
+
+
+def band_rows(sig: DataFrame, n: int = _N_BANDS) -> DataFrame:
+    """(doc_id, band_id, band_key) — one band row per signature hash.
+    A NULL key (a document without shingles) yields no row, as the
+    oracles' unnest of an empty shingle list yields none; the filter
+    sits above the explode, so the signature expressions are never
+    evaluated a second time for it."""
+    return sig.select(
+        "doc_id",
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
+            for i in range(n)
+        ])).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_key").filter(
+        F.col("band_key").isNotNull()
+    )
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) candidate pairs, doc_a < doc_b: the
+    documents sharing a (band_id, band_key) bucket. The equi-self-join
+    shuffles only short bigint keys — linear in corpus size times the
+    bucket collision rate, never all-pairs."""
+    a, b = bands.alias("ba"), bands.alias("bb")
+    return (
+        a.join(
+            b,
+            (F.col("ba.band_id") == F.col("bb.band_id"))
+            & (F.col("ba.band_key") == F.col("bb.band_key"))
+            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
+        )
+        .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def _jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
@@ -210,9 +296,6 @@ def q72_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_N_BANDS = 4
-
-
 @register(
     "q73_minhash_lsh",
     oracle=f"""
@@ -288,58 +371,8 @@ def q73_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    # nested transforms guarantee ONE md5 per shingle (the inner
-    # transform materializes digests; the outer only slices them —
-    # no reliance on codegen CSE inside lambda bodies)
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-    def _band(i: int):
-        # single-parameter lambda: a two-parameter signature would make
-        # PySpark pass the ARRAY INDEX as the second argument (the
-        # `lambda x, i=i:` arity trap), silently replacing the band
-        # seed with the element position
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    ).persist()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig = minhash_signature(sh).persist()
+    cand = band_pairs(band_rows(sig))
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     j = _jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -1061,8 +1094,8 @@ GROUP BY b.doc_id
 def q208_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup screening — the LSH complement of q196's
     exact-hash admission gate: a new batch (doc_id % 10 >= 8) is
-    probed against the catalog's MinHash band keys (q73's
-    single-digest double-hashing signature), and a batch doc whose
+    probed against the catalog's MinHash band keys
+    (minhash_signature + band_rows), and a batch doc whose
     signature collides with the catalog in ANY band is flagged a
     near-dup suspect for downstream exact verification.
 
@@ -1076,41 +1109,11 @@ def q208_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    hashed = sh.select(
-        "doc_id",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _band(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
     # persisted: BOTH the catalog and batch branches consume the band
     # relation, and in production the catalog posting list is durable
     # index state anyway (q73's persist pattern; LRU-bounded at scale)
-    sig = hashed.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    ).persist()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
+    sig = minhash_signature(sh).drop("shingles").persist()
+    bands = band_rows(sig)
     catalog = (
         bands.filter(F.col("doc_id") % 10 < 8)
         .select("band_id", "band_key")
@@ -1244,49 +1247,7 @@ def q333_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             j_ppm.alias("j_ppm"),
         )
     )
-    hashed = sh.select(
-        "doc_id",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _band333(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band333(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_key") == F.col("bb.band_key"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(band_rows(minhash_signature(sh)))
     flagged = _persist_slot(
         spark,
         (sf_dir, "q333", "flagged"),
@@ -1406,8 +1367,8 @@ def q212_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the quadratic ground-truth join runs ONLY on the
     md5-sampled subset (the standard calibration protocol — exact
-    truth on a sample, never the corpus); the LSH side reuses q73's
-    single-digest arithmetic. Both sides and their intersection
+    truth on a sample, never the corpus); the LSH side is
+    minhash_signature → band_rows → band_pairs. Both sides and their intersection
     reduce to three broadcast-sized pair sets before the 1-row
     census."""
     d = load_table(spark, sf_dir, "documents")
@@ -1440,50 +1401,10 @@ def q212_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(j >= 0.5)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")),
     )
-    hashed = sh.select(
-        "doc_id",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
+    cand = _persist_slot(
+        spark, (sf_dir, "q212", "cand"),
+        band_pairs(band_rows(minhash_signature(sh))),
     )
-
-    def _band(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band_id") == F.col("bb.band_id"))
-            & (F.col("ba.band_key") == F.col("bb.band_key"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    cand = _persist_slot(spark, (sf_dir, "q212", "cand"), cand)
     tp = truth.join(cand, ["doc_a", "doc_b"])
     n_sample = sh.agg(F.count(F.lit(1)).cast("long").alias("n_sample"))
     n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
@@ -1558,9 +1479,10 @@ def q218_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches SUBSET duplication (a short doc embedded inside a long
     one) that symmetric Jaccard structurally misses when sizes
     differ (|A∩B|/|A∪B| is dragged down by the big doc's extra
-    shingles). The candidate set is q73's band-bucket equi-join, so
-    no all-pairs shape appears; the exact containment check is
-    integer arithmetic (n_shared·10 ≥ n_smaller·8).
+    shingles). The candidate set is the band-bucket equi-join of
+    minhash_signature → band_rows → band_pairs, so no all-pairs shape
+    appears; the exact containment check is integer arithmetic
+    (n_shared·10 ≥ n_smaller·8).
 
     Scale shape: identical to q73 — persisted narrow signatures,
     bigint band keys, candidates only; the shingle arrays travel
@@ -1568,51 +1490,8 @@ def q218_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _band(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    ).persist()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig = minhash_signature(sh).persist()
+    cand = band_pairs(band_rows(sig))
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     shared = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1707,46 +1586,15 @@ def q267_minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     size cap would silently skip), the estimator statistics are
     unchanged per pair, and a full enumeration remains available via
     q73's threshold join when the goal is dedup rather than
-    calibration. Same narrow-signature construction as q73 (one md5
-    per shingle, array_min signatures, bigint band keys); the exact
-    verify touches only sampled pairs."""
+    calibration. Signatures and band rows come from
+    minhash_signature + band_rows (a document without shingles has
+    no band, so it never enters a bucket); the exact verify touches
+    only sampled pairs."""
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _band(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    ).persist()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
+    sig = minhash_signature(sh).persist()
+    bands = band_rows(sig)
     from pyspark.sql.window import Window as _W
 
     wb = _W.partitionBy("band_id", "band_key").orderBy("doc_id")
@@ -1909,7 +1757,9 @@ def _q290_sweep_build(spark: SparkSession, sf_dir: str):
     pair count plus precision at Jaccard ≥ 0.5 measured on a linear
     per-bucket sample, in ppm — the empirical S-curve tradeoff (more
     rows per band → fewer, cleaner candidates) that picks (b, r)
-    before a 100 TB dedup run.
+    before a 100 TB dedup run. Signatures come from
+    minhash_signature(sh, 8, 3); a document without shingles has NULL
+    hashes, so its band keys are NULL and it enters no bucket.
 
     Plan shape (round-11 fused rework — the class sat at 1.37× its
     per-class gate on the r10 driver box, the worst in the 31-class
@@ -1935,33 +1785,7 @@ def _q290_sweep_build(spark: SparkSession, sf_dir: str):
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                # integer shift, never float /: a double mantissa
-                # can't hold a 60-bit hash exactly
-                F.shiftright(
-                    F.conv(F.substring(m, 17, 15), 16, 10).cast("long"), 3
-                ).alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _fam(i: int):
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.array_min(F.transform(F.col("hs"), _fam(i))).alias(f"h{i}")
-            for i in range(8)
-        ],
-    ).persist()
+    sig = minhash_signature(sh, 8, 3).persist()
 
     from pyspark.sql.window import Window as _BWIN
 
@@ -1982,7 +1806,9 @@ def _q290_sweep_build(spark: SparkSession, sf_dir: str):
     ]
     bands = sig.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.config", "band.band_id", "band.band_key")
+    ).select("doc_id", "band.config", "band.band_id", "band.band_key").filter(
+        F.col("band_key").isNotNull()
+    )
     a_s, b_s = bands.alias("a"), bands.alias("b")
     # exact candidate count: the narrow (16-byte) pair join feeds a
     # COUNT directly — n_candidates IS the swept statistic and never

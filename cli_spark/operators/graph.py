@@ -41,7 +41,13 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cli_spark.operators.dedup import _N_BANDS, _SQL_SHINGLES, shingles_df
+from cli_spark.operators.dedup import (
+    _SQL_SHINGLES,
+    band_pairs,
+    band_rows,
+    minhash_signature,
+    shingles_df,
+)
 from cli_spark.plans.registry import register
 from cli_spark.tables import load_table
 
@@ -128,10 +134,9 @@ def _edge_cache_put(key: tuple[str, str], edges: DataFrame) -> None:
 
 def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric (src, dst) candidate-pair edges: doc pairs sharing at
-    least one MinHash band key — the SAME single-digest double-hashing
-    signature as q73 (one md5 per shingle, array_min narrow
-    aggregation so signatures need no explode+groupBy shuffle, bigint
-    band keys for a 4× narrower candidate shuffle).
+    least one MinHash band key — minhash_signature → band_rows →
+    band_pairs, the same candidate generator as q73 (one md5 per
+    shingle, narrow array_min signatures, bigint band keys).
 
     The band self-join generates each pair ONCE in canonical order
     (a < b — halving join output vs the naive != condition) and
@@ -149,50 +154,9 @@ def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    hashed = sh.select(
-        "doc_id",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-
-    def _band(i: int):
-        # single-parameter lambda — a two-parameter signature would
-        # bind the band seed to transform's ARRAY INDEX argument
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(_N_BANDS)
-        ],
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                    for i in range(_N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
     canon = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
+        band_pairs(band_rows(minhash_signature(sh)))
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .localCheckpoint()
     )
     edges = canon.union(

@@ -727,7 +727,8 @@ def q385_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages; nothing is quadratic at any stage. Redesigned from an
     all-pairs stage-3 verify after it measured 55 s at sf0.1 — the
     same mega-bucket lesson as the r7 q267/q290 fixes."""
-    from cli_spark.operators.dedup import shingles_df
+    from cli_spark.operators.dedup import (
+        band_pairs, band_rows, minhash_signature, shingles_df)
 
     docs = load_table(spark, sf_dir, "documents")
     # n0/n1 in ONE aggregation (round 16, VERDICT r15 item 5): keep1
@@ -763,52 +764,8 @@ def q385_dedup_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(keep1, "doc_id")
         .select("doc_id", "shingles")
     )
-    hashed = sh.select(
-        "doc_id",
-        "shingles",
-        F.transform(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.encode(s, "utf-8"))),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("g1"),
-                F.conv(F.substring(m, 17, 15), 16, 10).cast("long").alias("g2"),
-            ),
-        ).alias("hs"),
-    )
-    def _band(i: int):
-        # single-parameter lambda (the q73 arity trap: a 2-arg lambda
-        # would receive the ARRAY INDEX as its second argument)
-        return lambda x: x["g1"] + F.lit(i) * x["g2"]
-
-    sig = hashed.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.array_min(F.transform(F.col("hs"), _band(i))).alias(f"h{i}")
-            for i in range(4)
-        ],
-    ).persist()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-                for i in range(4)
-            ])
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    sig = minhash_signature(sh).persist()
+    cand = band_pairs(band_rows(sig))
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb"))
     jac = (

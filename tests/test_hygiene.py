@@ -10,9 +10,11 @@ and runs with every pytest session, so the scan is effectively
 pre-commit.
 
 A second scan keeps wall-clock polling loops out of the streaming
-layer (see `test_no_polling_sleeps_in_streaming`), and a third keeps
+layer (see `test_no_polling_sleeps_in_streaming`), a third keeps
 every replay stream opening through `drain.replay_stream` (see
-`test_replay_streams_open_through_drain`).
+`test_replay_streams_open_through_drain`), and a fourth keeps every
+MinHash signature built by `dedup.minhash_signature` (see
+`test_minhash_signature_built_only_in_dedup_helper`).
 """
 
 from __future__ import annotations
@@ -112,3 +114,46 @@ def test_replay_streams_open_through_drain():
                 hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not hits, (
         "replay stream opened outside drain.replay_stream:\n" + "\n".join(hits))
+
+
+# MinHash signatures are built in one place: dedup.minhash_signature
+# holds the per-shingle md5 transform and the array_min(transform(..))
+# hash family. Any other builder is a copy of it.
+MINHASH_HOME = (REPO / "cli_spark/operators/dedup.py", "minhash_signature")
+
+
+def _call_name(node) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _builds_minhash(node) -> bool:
+    name = _call_name(node)
+    if name == "array_min":
+        return bool(node.args) and _call_name(node.args[0]) == "transform"
+    if name == "transform":
+        return any(
+            isinstance(arg, ast.Lambda)
+            and any(_call_name(n) == "md5" for n in ast.walk(arg.body))
+            for arg in node.args
+        )
+    return False
+
+
+def test_minhash_signature_built_only_in_dedup_helper():
+    hits: list[str] = []
+    for path in sorted(REPO.glob("cli_spark/**/*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            name = getattr(top, "name", None)
+            if (path, name) == MINHASH_HOME:
+                continue
+            for node in ast.walk(top):
+                if _builds_minhash(node):
+                    hits.append(
+                        f"{path.relative_to(REPO)}:{node.lineno} in {name or 'module'}")
+    assert not hits, (
+        "MinHash signature built outside dedup.minhash_signature:\n"
+        + "\n".join(hits))

@@ -182,3 +182,60 @@ def test_session_gap_exactly_30min_half_open(spark, tmp_path):
     by_user = sdf.groupby("user_id").size().to_dict()
     assert by_user == {1: 1, 2: 1, 3: 2}, by_user
     assert not _compare(sdf, odf, "q102_session_gap_fixture")
+
+
+# MinHash-LSH queries over a corpus where some documents have no
+# shingles (fewer than 3 words). Their oracles unnest an empty list,
+# which yields no row, so such a document has no signature and no
+# band; Spark's array_min([]) is NULL, and a NULL band key must not
+# become a bucket (q267/q290 lead() windows) or a batch row (q208).
+# q76 reads the same bands through graph._candidate_edges.
+_NO_SHINGLE_QUERIES = [
+    "q73_minhash_lsh", "q208_minhash_incremental", "q212_lsh_recall_audit",
+    "q218_containment_join", "q267_minhash_estimator_audit",
+    "q290_lsh_parameter_sweep", "q333_lsh_pr_curve",
+    "q385_dedup_cascade_audit", "q76_dedup_connected_components",
+]
+
+
+@pytest.fixture(scope="module")
+def no_shingle_sf(sf_dir, tmp_path_factory):
+    """A copy of ``sf_dir`` whose documents table has 4 texts set to
+    "two words" — 2 catalog docs (doc_id % 10 < 8) and 2 batch docs
+    (doc_id % 10 >= 8, q208's increment) — with the other tables
+    symlinked, plus a DuckDB connection over it."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cli_spark.tables import TABLE_NAMES
+
+    out = tmp_path_factory.mktemp("no_shingle_sf")
+    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
+    docs = tbl.to_pandas()
+    ids = docs["doc_id"].sort_values()
+    picked = list(ids[ids % 10 < 8][:2]) + list(ids[ids % 10 >= 8][:2])
+    docs.loc[docs["doc_id"].isin(picked), "text"] = "two words"
+    pq.write_table(pa.Table.from_pandas(docs, schema=tbl.schema,
+                                        preserve_index=False),
+                   out / "documents.parquet")
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        if t != "documents":
+            os.symlink(f"{sf_dir}/{t}.parquet", out / f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{out}/{t}.parquet')")
+    yield str(out), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _NO_SHINGLE_QUERIES)
+def test_no_shingle_docs_parity(name, spark, no_shingle_sf):
+    sf, con = no_shingle_sf
+    spec = _SPECS[name]
+    sdf = spec.fn(spark, sf).toPandas()
+    odf = con.execute(spec.oracle).df()
+    problems = _compare(sdf, odf, name)
+    assert not problems, f"{name}: " + "; ".join(problems[:5])
