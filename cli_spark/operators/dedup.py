@@ -164,17 +164,18 @@ def minhash_signature(sh: DataFrame, n: int = _N_BANDS,
     )
 
 
-def band_rows(sig: DataFrame, n: int = _N_BANDS) -> DataFrame:
-    """(doc_id, band_id, band_key) — one band row per signature hash.
-    A NULL key (a document without shingles) yields no row, as the
+def band_rows(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) — one band row per signature hash
+    column h<i> of ``sig``, so the bands always match the signature's
+    width. A NULL key (a document without shingles) yields no row, as the
     oracles' unnest of an empty shingle list yields none; the filter
     sits above the explode, so the signature expressions are never
     evaluated a second time for it."""
     return sig.select(
         "doc_id",
         F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band_id"), F.col(f"h{i}").alias("band_key"))
-            for i in range(n)
+            F.struct(F.lit(int(c[1:])).alias("band_id"), F.col(c).alias("band_key"))
+            for c in sig.columns if c[:1] == "h" and c[1:].isdigit()
         ])).alias("band"),
     ).select("doc_id", "band.band_id", "band.band_key").filter(
         F.col("band_key").isNotNull()

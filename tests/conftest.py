@@ -57,9 +57,17 @@ def duck(sf_dir):
     """DuckDB connection with the driver's view set registered."""
     import duckdb
 
+    con = duckdb.connect()
+    register_views(con, sf_dir)
+    yield con
+    con.close()
+
+
+def register_views(con, sf_dir):
+    """Register the driver's table views over ``sf_dir`` on DuckDB
+    connection ``con``."""
     from cli_spark.tables import TABLE_NAMES
 
-    con = duckdb.connect()
     for t in TABLE_NAMES:
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):
@@ -67,5 +75,3 @@ def duck(sf_dir):
             # (e.g. the synthetic sf1 set from cli_spark.bench_scale)
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    yield con
-    con.close()

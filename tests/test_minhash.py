@@ -50,13 +50,15 @@ def test_signature_matches_md5_reference(sh, n, shift):
     assert ("shiftright" in plan) == bool(shift)
 
 
-def test_band_rows_skip_doc_without_shingles(sh):
-    rows = band_rows(minhash_signature(sh)).collect()
+@pytest.mark.parametrize("n, shift", [(4, 0), (8, 3)])
+def test_band_rows_skip_doc_without_shingles(sh, n, shift):
+    # one band per hash column, whatever the signature's width
+    rows = band_rows(minhash_signature(sh, n, shift)).collect()
     got = {(r["doc_id"], r["band_id"]): r["band_key"] for r in rows}
     want = {
         (d, i): h
         for d, s in SHINGLES.items() if s
-        for i, h in enumerate(_ref_signature(s, 4, 0))
+        for i, h in enumerate(_ref_signature(s, n, shift))
     }
     assert got == want
     assert len(rows) == len(want)

@@ -18,6 +18,7 @@ import pandas as pd
 import pytest
 
 from cli_spark.plans.registry import registry
+from tests.conftest import register_views
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -221,12 +222,11 @@ def no_shingle_sf(sf_dir, tmp_path_factory):
     pq.write_table(pa.Table.from_pandas(docs, schema=tbl.schema,
                                         preserve_index=False),
                    out / "documents.parquet")
-    con = duckdb.connect()
     for t in TABLE_NAMES:
         if t != "documents":
             os.symlink(f"{sf_dir}/{t}.parquet", out / f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{out}/{t}.parquet')")
+    con = duckdb.connect()
+    register_views(con, str(out))
     yield str(out), con
     con.close()
 
