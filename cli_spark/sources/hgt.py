@@ -5,9 +5,9 @@ Semantics preserved from the public SRTM format (the reference mount
 is empty — SURVEY.md §0):
 * one ``.hgt`` file = (N×N) grid of big-endian int16 samples covering
   a 1°×1° cell; N inferred from file size (size/2 must be a perfect
-  square; SRTM3 → 1201, SRTM1 → 3601) [A5];
-* filename ``N46E007.hgt`` encodes the bottom-left corner; S/W are
-  negative [A4];
+  square, N ≥ 2; SRTM3 → 1201, SRTM1 → 3601) [A5];
+* filename ``N46E007.hgt`` (or ``N46E007.SRTMGL1.hgt``) encodes the
+  bottom-left corner; S/W are negative [A4];
 * row 0 is the NORTHERN edge: lat = corner_lat + 1 - row/(N-1),
   lng = corner_lng + col/(N-1) [A6];
 * void sentinel -32768 → SQL NULL [A8];
@@ -16,7 +16,9 @@ is empty — SURVEY.md §0):
 
 Architecture: `binaryFile` datasource → numpy decode inside
 `mapInPandas` (Arrow-batched, vectorized — never a per-row Python
-UDF). Each 1°-cell file decodes independently, so at 100 TB the scan
+UDF). Every decoder in the engine reads the bytes through :func:`grid`
+and names the cell through :func:`cell_of` (or its column form,
+:func:`cell_name_cols`), so they agree on shape and name checks. Each 1°-cell file decodes independently, so at 100 TB the scan
 parallelizes per-file with zero shuffle; point lookup (A7) is a pure
 column expression over the raw bytes — O(1) per file, no decode.
 """
@@ -25,6 +27,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import zipfile
 from collections.abc import Iterator
 
@@ -38,40 +41,67 @@ VOID = -32768
 
 # ------------------------------------------------------------------ filename
 
-_CELL_RE = r"([NS])(\d{2})([EW])(\d{3})"
+# Anchored at the start of the base name and ended by a dot or the end,
+# so ``N46E007.SRTMGL1.hgt`` is cell ``N46E007``; Python's ``re`` and the
+# JVM's regexp_extract read it alike.
+_CELL_RE = r"^([NS])(\d{2})([EW])(\d{3})(?=\.|$)"
+_NOT_A_CELL = ": not an HGT cell name"
+_NOT_A_GRID = " bytes is not a square HGT grid"
+
+
+def cell_of(path: str) -> tuple[str, int, int]:
+    """The one cell-name rule [A4]: a file path or name → (canonical
+    cell, corner_lat, corner_lng). ``.../N46E007.SRTMGL1.hgt`` →
+    ("N46E007", 46, 7); ``S01W072`` → ("S01W072", -1, -72). Raises
+    ValueError naming the file when its base name is no cell name."""
+    m = re.match(_CELL_RE, os.path.basename(path))
+    if not m:
+        raise ValueError(path + _NOT_A_CELL)
+    lat = int(m.group(2)) * (1 if m.group(1) == "N" else -1)
+    lng = int(m.group(4)) * (1 if m.group(3) == "E" else -1)
+    return m.group(0), lat, lng
 
 
 def parse_cell_name(name: str) -> tuple[int, int]:
     """``N46E007`` → (46, 7); ``S01W072`` → (-1, -72) [A4]."""
-    import re
-
-    m = re.match(_CELL_RE, name)
-    if not m:
-        raise ValueError(f"not an HGT cell name: {name}")
-    lat = int(m.group(2)) * (1 if m.group(1) == "N" else -1)
-    lng = int(m.group(4)) * (1 if m.group(3) == "E" else -1)
-    return lat, lng
+    return cell_of(name)[1:]
 
 
 def cell_name_cols(path: Column) -> list[Column]:
     """Column expressions extracting (cell, corner_lat, corner_lng)
-    from a binaryFile path — pure built-ins (regexp_extract + sign
-    CASE), mirroring :func:`parse_cell_name`."""
+    from a binaryFile path — :func:`cell_of` in built-ins: the same
+    anchored regexp, ``raise_error`` naming the file on no match."""
     base = F.element_at(F.split(path, "/"), -1)
-    cell = F.regexp_extract(base, _CELL_RE, 0)
-    lat = F.regexp_extract(base, _CELL_RE, 2).cast("int") * F.when(
-        F.regexp_extract(base, _CELL_RE, 1) == "N", 1
-    ).otherwise(-1)
-    lng = F.regexp_extract(base, _CELL_RE, 4).cast("int") * F.when(
-        F.regexp_extract(base, _CELL_RE, 3) == "E", 1
-    ).otherwise(-1)
+    found = F.regexp_extract(base, _CELL_RE, 0)
+    cell = F.when(found != "", found).otherwise(
+        F.raise_error(F.concat(path, F.lit(_NOT_A_CELL))))
+    lat = F.substring(cell, 2, 2).cast("int") * F.when(
+        F.substring(cell, 1, 1) == "N", 1).otherwise(-1)
+    lng = F.substring(cell, 5, 3).cast("int") * F.when(
+        F.substring(cell, 4, 1) == "E", 1).otherwise(-1)
     return [cell.alias("cell"), lat.alias("corner_lat"), lng.alias("corner_lng")]
 
 
-def grid_size_col(length: Column) -> Column:
-    """Grid side N from file byte length: N = sqrt(length/2) [A5].
-    (Validity — perfect-square — is enforced at decode time.)"""
-    return F.sqrt((length / 2).cast("double")).cast("int").alias("grid_n")
+def grid_size_col(length: Column, path: Column) -> Column:
+    """Grid side N from file byte length: N = sqrt(length/2) [A5],
+    with ``raise_error`` naming the file unless length = 2·N², N ≥ 2
+    (the sizes :func:`grid` rejects)."""
+    n = F.sqrt((length / 2).cast("double")).cast("int")
+    ok = (n >= 2) & (n.cast("long") * n * 2 == length)
+    return F.when(ok, n).otherwise(F.raise_error(
+        F.concat(path, F.lit(": "), length.cast("string"), F.lit(_NOT_A_GRID)))
+    ).alias("grid_n")
+
+
+def grid(buf: bytes, name: str) -> np.ndarray:
+    """The one HGT decode [A5/A6]: the (n, n) big-endian int16 sample
+    view of one file's bytes, row 0 = northern edge. Raises ValueError
+    naming the file unless len(buf) = 2·n² with n ≥ 2 (one sample has
+    no grid step). Callers cast to the dtype they compute in."""
+    n = math.isqrt(len(buf) // 2)
+    if n < 2 or 2 * n * n != len(buf):
+        raise ValueError(f"{name}: {len(buf)}{_NOT_A_GRID}")
+    return np.frombuffer(buf, dtype=">i2").reshape(n, n)
 
 
 # ------------------------------------------------------------------ scan
@@ -89,7 +119,7 @@ def read_hgt(spark: SparkSession, path: str) -> DataFrame:
     return raw.select(
         "path",
         *cell_name_cols(F.col("path")),
-        grid_size_col(F.col("length")),
+        grid_size_col(F.col("length"), F.col("path")),
         "content",
     )
 
@@ -103,20 +133,14 @@ def decode_points(raw: DataFrame) -> DataFrame:
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for _, row in pdf.iterrows():
-                buf = bytes(row["content"])
-                n2 = len(buf) // 2
-                n = math.isqrt(n2)
-                if n * n != n2:
-                    raise ValueError(
-                        f"{row['cell']}: size {len(buf)} is not a square grid"
-                    )
-                grid = np.frombuffer(buf, dtype=">i2").astype(np.int32).reshape(n, n)
+                g = grid(row["content"], row["path"]).astype(np.int32)
+                n = g.shape[0]
                 step = 1.0 / (n - 1)
                 # row 0 = northern edge
                 lats = row["corner_lat"] + 1 - np.arange(n) * step
                 lngs = row["corner_lng"] + np.arange(n) * step
                 lat_m, lng_m = np.meshgrid(lats, lngs, indexing="ij")
-                alt = grid.ravel()
+                alt = g.ravel()
                 out = pd.DataFrame(
                     {
                         "cell": row["cell"],
@@ -129,7 +153,7 @@ def decode_points(raw: DataFrame) -> DataFrame:
                 out.loc[alt == VOID, "alt"] = pd.NA
                 yield out
 
-    return raw.select("cell", "corner_lat", "corner_lng", "content").mapInPandas(
+    return raw.select("path", "cell", "corner_lat", "corner_lng", "content").mapInPandas(
         _decode, schema
     )
 
@@ -148,14 +172,13 @@ def decode_tiles(raw: DataFrame, width: int, height: int) -> DataFrame:
     def _tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for _, row in pdf.iterrows():
-                buf = bytes(row["content"])
-                n = math.isqrt(len(buf) // 2)
-                grid = np.frombuffer(buf, dtype=">i2").astype(np.int32).reshape(n, n)
+                g = grid(row["content"], row["path"]).astype(np.int32)
+                n = g.shape[0]
                 step = 1.0 / (n - 1)
                 recs = []
                 for tr in range(math.ceil(n / height)):
                     for tc in range(math.ceil(n / width)):
-                        block = grid[
+                        block = g[
                             tr * height : (tr + 1) * height, tc * width : (tc + 1) * width
                         ]
                         recs.append(
@@ -172,7 +195,7 @@ def decode_tiles(raw: DataFrame, width: int, height: int) -> DataFrame:
                         )
                 yield pd.DataFrame(recs)
 
-    return raw.select("cell", "corner_lat", "corner_lng", "content").mapInPandas(
+    return raw.select("path", "cell", "corner_lat", "corner_lng", "content").mapInPandas(
         _tiles, schema
     )
 
@@ -275,15 +298,15 @@ def read_hgt_zips(spark: SparkSession, path: str) -> DataFrame:
                         if not name.endswith(".hgt"):
                             continue
                         buf = zf.read(name)
-                        cell = os.path.basename(name).replace(".hgt", "")
-                        lat, lng = parse_cell_name(cell)
+                        path = row["path"] + "!" + name
+                        cell, lat, lng = cell_of(name)
                         recs.append(
                             {
-                                "path": row["path"] + "!" + name,
+                                "path": path,
                                 "cell": cell,
                                 "corner_lat": lat,
                                 "corner_lng": lng,
-                                "grid_n": math.isqrt(len(buf) // 2),
+                                "grid_n": grid(buf, path).shape[0],
                                 "content": buf,
                             }
                         )

@@ -10,9 +10,10 @@ of executors), and each task decodes its file vectorized in numpy and
 ships Arrow RecordBatches straight into the scan node — no Python row
 loop anywhere.
 
-Semantics are identical to `hgt.decode_points` (north-edge-first rows,
-S/W-signed corners, fencepost grid, void→NULL) and asserted equal in
-tests/test_hgt.py.
+Each file decodes through the same helpers as `hgt.decode_points`:
+`hgt.grid` (north-edge-first rows, fencepost grid, void→NULL) and the
+`hgt.cell_of` name rule (canonical cell, S/W-signed corners), so the
+two decoders' rows are asserted equal in tests/test_hgt.py.
 
 Usage::
 
@@ -24,7 +25,6 @@ Usage::
 from __future__ import annotations
 
 import glob
-import math
 import os
 from collections.abc import Iterator
 
@@ -39,8 +39,6 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
-
-VOID = -32768
 
 SCHEMA = "cell string, lat double, lng double, alt int"
 
@@ -84,18 +82,18 @@ class HgtReader(DataSourceReader):
                 self.pushed.append(f)
             yield f  # pruning-only: Spark re-evaluates everything
 
-    def _cell_survives(self, cell: str) -> bool:
-        """Conservative bbox test for one cell against pushed filters.
+    def _cell_survives(self, path: str) -> bool:
+        """Conservative bbox test for one cell file against pushed filters.
 
         A cell named for corner (lat0, lng0) covers the CLOSED square
         [lat0, lat0+1] × [lng0, lng0+1] (fencepost rows/cols include
         both edges), so interval tests are inclusive."""
-        from cli_spark.sources.hgt import parse_cell_name
+        from cli_spark.sources.hgt import cell_of
 
         try:
-            lat0, lng0 = parse_cell_name(cell)
+            cell, lat0, lng0 = cell_of(path)
         except ValueError:
-            return True  # unparseable name: never prune
+            return True  # unparseable name: never prune (read() raises)
         lo = {"lat": float(lat0), "lng": float(lng0)}
         hi = {"lat": float(lat0) + 1.0, "lng": float(lng0) + 1.0}
         for f in self.pushed:
@@ -130,10 +128,7 @@ class HgtReader(DataSourceReader):
             files = [self.path]
         if not files:
             raise FileNotFoundError(f"no .hgt files under {self.path}")
-        kept = [
-            f for f in files
-            if self._cell_survives(os.path.basename(f).replace(".hgt", ""))
-        ]
+        kept = [f for f in files if self._cell_survives(f)]
         # Fully-pruned scans return []; the planner worker then calls
         # read(None) once, which read() guards against (yields nothing).
         return [InputPartition(f) for f in kept]
@@ -143,7 +138,7 @@ class HgtReader(DataSourceReader):
         import numpy as np
         import pyarrow as pa
 
-        from cli_spark.sources.hgt import parse_cell_name
+        from cli_spark.sources.hgt import VOID, cell_of, grid
 
         if partition is None:
             # Fully-pruned scan: when partitions() returns [], Spark's
@@ -152,15 +147,11 @@ class HgtReader(DataSourceReader):
             # 0 rows instead of crashing on `None.value`.
             return
         path = partition.value
-        cell = os.path.basename(path).replace(".hgt", "")
-        corner_lat, corner_lng = parse_cell_name(cell)
+        cell, corner_lat, corner_lng = cell_of(path)
         with open(path, "rb") as fh:
-            buf = fh.read()
-        n2 = len(buf) // 2
-        n = math.isqrt(n2)
-        if n * n != n2:
-            raise ValueError(f"{cell}: size {len(buf)} is not a square grid")
-        grid = np.frombuffer(buf, dtype=">i2").astype(np.int32)
+            g = grid(fh.read(), path).astype(np.int32)
+        n = g.shape[0]
+        alt = g.ravel()
         step = 1.0 / (n - 1)
         lats = corner_lat + 1 - np.arange(n) * step  # row 0 = north edge
         lngs = corner_lng + np.arange(n) * step
@@ -170,7 +161,7 @@ class HgtReader(DataSourceReader):
                 pa.array([cell] * (n * n), type=pa.string()),
                 pa.array(lat_m.ravel(), type=pa.float64()),
                 pa.array(lng_m.ravel(), type=pa.float64()),
-                pa.array(grid, type=pa.int32(), mask=(grid == VOID)),
+                pa.array(alt, type=pa.int32(), mask=(alt == VOID)),
             ],
             names=["cell", "lat", "lng", "alt"],
         )

@@ -12,7 +12,12 @@ Fixtures are generated deterministically under the repo's own
 from __future__ import annotations
 
 import os
+from collections import deque
+from collections.abc import Iterator
+from types import SimpleNamespace
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,11 +25,266 @@ from cli_spark.plans.registry import register
 from cli_spark.sources import hgt
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".fixtures", "hgt")
+ACQUIRE_DIR = os.path.join(os.path.dirname(FIXTURE_DIR), "hgt_acquire")
+MOSAIC_FIXTURE_DIR = os.path.join(os.path.dirname(FIXTURE_DIR), "hgt_mosaic")
 
 
 def _raw(spark: SparkSession) -> DataFrame:
     hgt.ensure_fixtures(FIXTURE_DIR)
     return hgt.read_hgt(spark, FIXTURE_DIR)
+
+
+def _mosaic_raw(spark: SparkSession) -> DataFrame:
+    hgt.ensure_mosaic_fixtures(MOSAIC_FIXTURE_DIR)
+    return hgt.read_hgt(spark, MOSAIC_FIXTURE_DIR)
+
+
+# ------------------------------------------------------------ terrain kernels
+#
+# Every terrain query below is built from these helpers: one per-cell
+# decode shell, one D8 table shared by the numpy and the Catalyst
+# kernels, and one mosaic geometry.
+
+def _per_cell(raw: DataFrame, kernel, schema: str, *cols: str) -> DataFrame:
+    """The mapInPandas shell of every terrain query: each ``.hgt`` file
+    of ``raw`` is decoded by ``hgt.grid`` (as int64: the fixed-point D8
+    weights overflow int32) and named by ``hgt.cell_of``, then
+    ``kernel(cell, la, lo, g, *extra)`` returns its output rows in any
+    form ``pd.DataFrame`` takes; ``extra`` are the file's ``cols``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            frames = []
+            for path, content, *extra in zip(
+                    pdf["path"], pdf["content"], *(pdf[c] for c in cols)):
+                cell, la, lo = hgt.cell_of(path)
+                g = hgt.grid(content, path).astype(np.int64)
+                out = pd.DataFrame(kernel(cell, la, lo, g, *extra))
+                if len(out):
+                    frames.append(out)
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    return raw.select("path", "content", *cols).mapInPandas(run, schema)
+
+
+# D8 directions: (ESRI code, row offset, col offset) in ascending code
+# order; the row index grows southward. A drop scores drop × CARD towards
+# a cardinal neighbor and drop × DIAG towards a diagonal one, so
+# CARD/DIAG is sqrt(2) in exact fixed point and numpy, Catalyst and the
+# golden script argmax the same integers.
+CARD, DIAG = 1414214, 1000000
+DIRS = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
+        (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
+WEIGHT = {code: CARD if dr == 0 or dc == 0 else DIAG for code, dr, dc in DIRS}
+_CODES = np.array([code for code, _dr, _dc in DIRS])
+
+
+def _d8(g: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The numpy D8 kernel. Returns (codes, ok) as (n, n) grids: ``ok``
+    marks the samples D8 is defined on (interior, whole 3×3
+    neighborhood valid); ``codes`` holds the ESRI code of each one's
+    steepest-descent neighbor by drop/distance (first max = lowest code
+    on ties, 0 for pits and flats) and 0 off ``ok``."""
+    n = g.shape[0]
+    v = g != hgt.VOID
+    ok = np.zeros_like(v)
+    ok[1:-1, 1:-1] = v[1:-1, 1:-1]
+    ws = []
+    for code, dr, dc in DIRS:
+        nb = np.s_[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
+        ok[1:-1, 1:-1] &= v[nb]
+        ws.append((g[1:-1, 1:-1] - g[nb]) * WEIGHT[code])
+    stack = np.stack(ws)
+    codes = np.zeros_like(g)
+    codes[1:-1, 1:-1] = np.where(
+        stack.max(axis=0) > 0, _CODES[stack.argmax(axis=0)], 0)
+    codes[~ok] = 0
+    return codes, ok
+
+
+def _d8_census(cell: str, la: int, lo: int, g: np.ndarray) -> dict:
+    """Per-cell D8 direction census over the samples D8 is defined on."""
+    codes, ok = _d8(g)
+    direction, n_points = np.unique(codes[ok], return_counts=True)
+    return {"cell": cell, "direction": direction, "n_points": n_points}
+
+
+def _next(codes: np.ndarray) -> np.ndarray:
+    """Flat index of each sample's D8 target; code 0 points at itself."""
+    n = codes.shape[0]
+    step = np.zeros(_CODES.max() + 1, dtype=np.int64)
+    for code, dr, dc in DIRS:
+        step[code] = dr * n + dc
+    return np.arange(n * n) + step[codes.ravel()]
+
+
+def _terminals(codes: np.ndarray) -> np.ndarray:
+    """Flat index of the code-0 sample each sample's D8 chain ends at,
+    by pointer doubling (next = next[next] to a fixpoint): O(log
+    longest path) vectorized gathers."""
+    nxt = _next(codes)
+    while True:
+        nxt2 = nxt[nxt]
+        if np.array_equal(nxt2, nxt):
+            return nxt
+        nxt = nxt2
+
+
+def _accumulate(codes: np.ndarray, acc: np.ndarray) -> np.ndarray:
+    """D8 flow accumulation by one Kahn topological pass: the direction
+    grid is a forest (out-degree ≤ 1), so a sample forwards its total
+    once every upstream sample has; code-0 samples receive but never
+    forward. ``acc`` holds each sample's own units; returns the totals."""
+    nxt = _next(codes).tolist()
+    flat = acc.ravel().tolist()
+    indeg = [0] * len(nxt)
+    for u, t in enumerate(nxt):
+        if t != u:
+            indeg[t] += 1
+    q = deque(u for u, d in enumerate(indeg) if d == 0)
+    while q:
+        u = q.popleft()
+        t = nxt[u]
+        if t == u:
+            continue
+        flat[t] += flat[u]
+        indeg[t] -= 1
+        if indeg[t] == 0:
+            q.append(t)
+    return np.array(flat, dtype=np.int64).reshape(acc.shape)
+
+
+ACCUM_SCHEMA = ("n_sources long, n_small long, n_medium long, "
+                "n_large long, max_accum long")
+
+
+def _accum_bands(acc: np.ndarray) -> dict:
+    """Accumulation-band census: sources (1), 2-10, 11-100, >100 and
+    the maximum."""
+    return {
+        "n_sources": int((acc == 1).sum()),
+        "n_small": int(((acc >= 2) & (acc <= 10)).sum()),
+        "n_medium": int(((acc >= 11) & (acc <= 100)).sum()),
+        "n_large": int((acc > 100).sum()),
+        "max_accum": int(acc.max()),
+    }
+
+
+# The 2×2 mosaic (hgt.MOSAIC_CELLS at the fixture grid size) in global
+# sample coordinates: y grows northward, x eastward, one unit is
+# 1/(n-1) degree. Seams are the internal shared lines, the border the
+# mosaic's outer edge.
+MOSAIC_N = 241
+GID = 100000  # gid = y * GID + x
+YMIN, YMAX = 46 * (MOSAIC_N - 1), 48 * (MOSAIC_N - 1)
+XMIN, XMAX = 7 * (MOSAIC_N - 1), 9 * (MOSAIC_N - 1)
+YSEAM, XSEAM = 47 * (MOSAIC_N - 1), 8 * (MOSAIC_N - 1)
+
+
+def _owner(y, x):
+    """Index of the mosaic cell that owns a sample (0..3, row-major from
+    the south-west). The north/east cell claims a seam line, so every
+    sample is owned exactly once."""
+    return (np.minimum((y - YMIN) // (MOSAIC_N - 1), 1) * 2
+            + np.minimum((x - XMIN) // (MOSAIC_N - 1), 1))
+
+
+def _mosaic_samples(la: int, lo: int, v: np.ndarray) -> SimpleNamespace:
+    """One mosaic cell's samples, flattened row-major: ``gid``; masks
+    ``on_border`` (outer edge), ``on_seam`` (internal seam lines, border
+    excluded), ``owned`` (valid off-seam samples this cell owns) and
+    ``near`` (owned samples one step from a seam: every in-cell target
+    a seam sample's D8 can have); ``idx`` is the cell's owner index."""
+    n = v.shape[0]
+    r, c = np.divmod(np.arange(n * n), n)
+    y = (la + 1) * (n - 1) - r  # row 0 = northern edge
+    x = lo * (n - 1) + c
+    on_border = (y == YMIN) | (y == YMAX) | (x == XMIN) | (x == XMAX)
+    on_seam = ((y == YSEAM) | (x == XSEAM)) & ~on_border
+    idx = _owner(la * (n - 1), lo * (n - 1))  # a cell owns its SW corner
+    owned = v.ravel() & ~on_seam & (_owner(y, x) == idx)
+    near = owned & ((np.abs(y - YSEAM) <= 1) | (np.abs(x - XSEAM) <= 1))
+    return SimpleNamespace(gid=y * GID + x, on_border=on_border,
+                           on_seam=on_seam, owned=owned, near=near, idx=idx)
+
+
+def _band_samples(cell: str, la: int, lo: int, g: np.ndarray) -> dict:
+    """A cell's outer two sample lines on global coordinates, void → NULL."""
+    n = g.shape[0]
+    band = np.ones((n, n), dtype=bool)
+    band[2:-2, 2:-2] = False
+    r, c = np.nonzero(band)
+    alt = pd.array(g[band], dtype="Int64")
+    alt[g[band] == hgt.VOID] = pd.NA
+    return {"y": (la + 1) * (n - 1) - r, "x": lo * (n - 1) + c, "alt": alt}
+
+
+def _band(raw: DataFrame) -> DataFrame:
+    """The mosaic border-band exchange: every cell's outer two sample
+    lines (O(perimeter), not O(area)), deduplicated on global (y, x).
+    The fencepost check is executed, not assumed: it raises when the two
+    files holding a shared sample disagree on it. Returns (y, x, alt)."""
+    copies = _per_cell(raw, _band_samples, "y long, x long, alt int")
+    band = copies.groupBy("y", "x").agg(
+        F.countDistinct(F.coalesce("alt", F.lit(hgt.VOID))).alias("variants"),
+        F.min("alt").alias("alt"),
+    )
+    n_mismatch = band.filter(F.col("variants") > 1).count()
+    if n_mismatch:
+        raise ValueError(
+            f"fencepost mismatch: {n_mismatch} shared border samples "
+            f"differ between adjacent cells"
+        )
+    return band.select("y", "x", "alt")
+
+
+def _seam_d8(band: DataFrame) -> DataFrame:
+    """Catalyst D8 of the valid samples on the mosaic's internal seam
+    lines, read from the exchanged band: eight broadcast shifted
+    equi-joins and a fixed-point argmax (ascending code = lowest-code
+    tie-break), no Python. Returns (y, x, s, ok, dir, ng): ``ok`` = the
+    3×3 neighborhood is valid, ``dir`` is 0 unless ok, ``s`` and ``ng``
+    are the global ids of the sample and its D8 target (NULL at 0)."""
+    joined = band.filter(
+        ((F.col("y") == YSEAM) | (F.col("x") == XSEAM))
+        & (F.col("y") > YMIN) & (F.col("y") < YMAX)
+        & (F.col("x") > XMIN) & (F.col("x") < XMAX)
+        # void seam samples are not basin members and (all-valid D8
+        # rule) can never be pointer targets — drop them here
+        & F.col("alt").isNotNull()
+    ).select(F.col("y").alias("sy"), F.col("x").alias("sx"),
+             F.col("alt").alias("alt0"))
+    # row offset dr (southward) maps to global dy = −dr
+    for code, dr, dc in DIRS:
+        nb = band.select(
+            (F.col("y") + F.lit(dr)).alias("sy"),
+            (F.col("x") - F.lit(dc)).alias("sx"),
+            F.col("alt").alias(f"alt{code}"),
+        )
+        joined = joined.join(F.broadcast(nb), ["sy", "sx"], "left")
+    ok = F.col("alt0").isNotNull()
+    for code in WEIGHT:
+        ok = ok & F.col(f"alt{code}").isNotNull()
+    ws = {code: (F.col("alt0") - F.col(f"alt{code}")) * F.lit(w)
+          for code, w in WEIGHT.items()}
+    mx = F.greatest(*ws.values())
+    chain = None
+    for code, w in ws.items():  # ascending code = lowest-code tie-break
+        chain = (F.when(w == mx, F.lit(code)) if chain is None
+                 else chain.when(w == mx, F.lit(code)))
+    direction = F.when(~ok | (mx <= 0), F.lit(0)).otherwise(chain)
+    ng = F.lit(None).cast("long")
+    for code, dr, dc in DIRS:
+        ng = F.when(
+            direction == code,
+            (F.col("sy") - F.lit(dr)) * GID + (F.col("sx") + F.lit(dc)),
+        ).otherwise(ng)
+    return joined.select(
+        F.col("sy").alias("y"), F.col("sx").alias("x"),
+        (F.col("sy") * GID + F.col("sx")).alias("s"),
+        ok.alias("ok"), direction.alias("dir"), ng.alias("ng"),
+    )
 
 
 @register(
@@ -47,8 +307,9 @@ SELECT * FROM (VALUES
 def q110_hgt_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-grid scan [A6] + void normalization [A8] rolled up per
     cell: sample counts, void counts, min/max/sum elevation. Exercises
-    filename parse [A4], shape inference [A5], numpy mapInPandas
-    decode, and NULL semantics of the void sentinel."""
+    filename parse [A4], shape inference [A5], the `hgt.decode_points`
+    decode (`hgt.grid`, `hgt.cell_of`), and NULL semantics of the void
+    sentinel."""
     pts = hgt.decode_points(_raw(spark))
     return (
         pts.groupBy("cell")
@@ -178,50 +439,29 @@ def q265_hgt_slope_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and maximum absolute rise in both axes, and steep-step censuses
     (|Δ| > 80 east-west, > 120 north-south). A step is valid only if
     BOTH endpoints are non-void [A8]. The differences are vectorized
-    numpy inside the same Arrow-batched mapInPandas as the grid
-    decode — one pass over the raw bytes, no point-level shuffle (the
-    per-cell stats aggregate inside the decoder), and the tiny
-    3-row rollup is the only thing that leaves Python."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    raw = _raw(spark).select("path", "content")
+    numpy inside the `_per_cell` decode shell — one pass over the raw
+    bytes, no point-level shuffle (the per-cell stats aggregate inside
+    the decoder), and the tiny 3-row rollup is the only thing that
+    leaves Python."""
     schema = (
         "cell string, n_dx long, n_dy long, sum_abs_dx long, sum_abs_dy long, "
         "max_abs_dx long, max_abs_dy long, n_steep_dx long, n_steep_dy long"
     )
 
-    def _slopes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in
-                    ("cell", "n_dx", "n_dy", "sum_abs_dx", "sum_abs_dy",
-                     "max_abs_dx", "max_abs_dy", "n_steep_dx", "n_steep_dy")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                valid = g != hgt.VOID
-                both_h = valid[:, 1:] & valid[:, :-1]
-                both_v = valid[1:, :] & valid[:-1, :]
-                dx = (g[:, 1:] - g[:, :-1])[both_h]
-                dy = (g[1:, :] - g[:-1, :])[both_v]
-                recs["cell"].append(cell)
-                recs["n_dx"].append(int(both_h.sum()))
-                recs["n_dy"].append(int(both_v.sum()))
-                recs["sum_abs_dx"].append(int(np.abs(dx).sum()))
-                recs["sum_abs_dy"].append(int(np.abs(dy).sum()))
-                recs["max_abs_dx"].append(int(np.abs(dx).max()))
-                recs["max_abs_dy"].append(int(np.abs(dy).max()))
-                recs["n_steep_dx"].append(int((np.abs(dx) > 80).sum()))
-                recs["n_steep_dy"].append(int((np.abs(dy) > 120).sum()))
-            yield pd.DataFrame(recs)
+    def slopes(cell, la, lo, g):
+        valid = g != hgt.VOID
+        both_h = valid[:, 1:] & valid[:, :-1]
+        both_v = valid[1:, :] & valid[:-1, :]
+        dx = np.abs(g[:, 1:] - g[:, :-1])[both_h]
+        dy = np.abs(g[1:, :] - g[:-1, :])[both_v]
+        return [{
+            "cell": cell, "n_dx": int(both_h.sum()), "n_dy": int(both_v.sum()),
+            "sum_abs_dx": int(dx.sum()), "sum_abs_dy": int(dy.sum()),
+            "max_abs_dx": int(dx.max()), "max_abs_dy": int(dy.max()),
+            "n_steep_dx": int((dx > 80).sum()), "n_steep_dy": int((dy > 120).sum()),
+        }]
 
-    return raw.mapInPandas(_slopes, schema).orderBy("cell")
-
-
-ACQUIRE_DIR = os.path.join(os.path.dirname(FIXTURE_DIR), "hgt_acquire")
+    return _per_cell(_raw(spark), slopes, schema).orderBy("cell")
 
 
 @register(
@@ -247,8 +487,8 @@ def q266_hgt_acquire_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers, proving the acquire path lands byte-identical grids.
     Fetch parallelism is Spark tasks over the catalog relation (the
     reference's worker pool [A13] replaced by the scheduler);
-    everything below the catalog is the same mapInPandas decode as
-    q110."""
+    everything below the catalog is the same `hgt.decode_points`
+    decode as q110."""
     import json
 
     src = os.path.join(ACQUIRE_DIR, "remote")
@@ -385,46 +625,31 @@ def q287_hgt_aspect_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     central-difference gradient — E/W when |Δx| ≥ |Δy| (sign of Δx),
     else N/S (sign of Δy; +row is southward in the north-first grid
     [A4 trap]) — the integer skeleton of a hillshade/aspect raster
-    product. Vectorized numpy inside the decode mapInPandas (same
-    one-pass shape as q265): only the per-(cell, aspect) counts leave
-    Python."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
+    product. Vectorized numpy inside the `_per_cell` decode shell:
+    only the per-(cell, aspect) counts leave Python."""
 
-    raw = _raw(spark).select("path", "content")
-    schema = "cell string, aspect string, n_points long"
+    def aspects(cell, la, lo, g):
+        v = g != hgt.VOID
+        ok = (v[1:-1, 1:-1] & v[1:-1, 2:] & v[1:-1, :-2]
+              & v[2:, 1:-1] & v[:-2, 1:-1])
+        dx = (g[1:-1, 2:] - g[1:-1, :-2])[ok]
+        dy = (g[2:, 1:-1] - g[:-2, 1:-1])[ok]
+        flat = (dx == 0) & (dy == 0)
+        ew = (~flat) & (np.abs(dx) >= np.abs(dy))
+        ns = (~flat) & ~ew
+        counts = {
+            "E": int((ew & (dx > 0)).sum()),
+            "W": int((ew & (dx < 0)).sum()),
+            "S": int((ns & (dy > 0)).sum()),
+            "N": int((ns & (dy < 0)).sum()),
+            "FLAT": int(flat.sum()),
+        }
+        return [{"cell": cell, "aspect": aspect, "n_points": cnt}
+                for aspect, cnt in counts.items() if cnt]
 
-    def _aspects(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"cell": [], "aspect": [], "n_points": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ok = (v[1:-1, 1:-1] & v[1:-1, 2:] & v[1:-1, :-2]
-                      & v[2:, 1:-1] & v[:-2, 1:-1])
-                dx = (g[1:-1, 2:] - g[1:-1, :-2])[ok]
-                dy = (g[2:, 1:-1] - g[:-2, 1:-1])[ok]
-                flat = (dx == 0) & (dy == 0)
-                ew = (~flat) & (np.abs(dx) >= np.abs(dy))
-                ns = (~flat) & ~ew
-                for aspect, cnt in (
-                    ("E", int((ew & (dx > 0)).sum())),
-                    ("W", int((ew & (dx < 0)).sum())),
-                    ("S", int((ns & (dy > 0)).sum())),
-                    ("N", int((ns & (dy < 0)).sum())),
-                    ("FLAT", int(flat.sum())),
-                ):
-                    if cnt:
-                        recs["cell"].append(cell)
-                        recs["aspect"].append(aspect)
-                        recs["n_points"].append(cnt)
-            yield pd.DataFrame(recs)
-
-    return raw.mapInPandas(_aspects, schema).orderBy("cell", "aspect")
+    return (_per_cell(_raw(spark), aspects,
+                      "cell string, aspect string, n_points long")
+            .orderBy("cell", "aspect"))
 
 
 @register(
@@ -455,47 +680,30 @@ def q299_hgt_contour_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle the level (one endpoint above, one at-or-below) along
     both grid axes — the integer skeleton of marching-squares
     contouring (crossing count ≈ total contour length in sample
-    units). Vectorized numpy inside the decode mapInPandas; only the
-    9-row census leaves Python."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    raw = _raw(spark).select("path", "content")
+    units). Vectorized numpy inside the `_per_cell` decode shell; only
+    the 9-row census leaves Python."""
     schema = (
         "cell string, level long, h_crossings long, v_crossings long, "
         "total_crossings long"
     )
-    levels = (-500, 0, 500)
 
-    def _cross(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in
-                    ("cell", "level", "h_crossings", "v_crossings",
-                     "total_crossings")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                bh = v[:, 1:] & v[:, :-1]
-                bv = v[1:, :] & v[:-1, :]
-                ah, bh_ = g[:, 1:][bh], g[:, :-1][bh]
-                av, bv_ = g[1:, :][bv], g[:-1, :][bv]
-                for level in levels:
-                    ch = int((((ah > level) & (bh_ <= level))
-                              | ((ah <= level) & (bh_ > level))).sum())
-                    cv = int((((av > level) & (bv_ <= level))
-                              | ((av <= level) & (bv_ > level))).sum())
-                    recs["cell"].append(cell)
-                    recs["level"].append(level)
-                    recs["h_crossings"].append(ch)
-                    recs["v_crossings"].append(cv)
-                    recs["total_crossings"].append(ch + cv)
-            yield pd.DataFrame(recs)
+    def crossings(cell, la, lo, g):
+        v = g != hgt.VOID
+        bh = v[:, 1:] & v[:, :-1]
+        bv = v[1:, :] & v[:-1, :]
+        ah, bh_ = g[:, 1:][bh], g[:, :-1][bh]
+        av, bv_ = g[1:, :][bv], g[:-1, :][bv]
+        rows = []
+        for level in (-500, 0, 500):
+            ch = int((((ah > level) & (bh_ <= level))
+                      | ((ah <= level) & (bh_ > level))).sum())
+            cv = int((((av > level) & (bv_ <= level))
+                      | ((av <= level) & (bv_ > level))).sum())
+            rows.append({"cell": cell, "level": level, "h_crossings": ch,
+                         "v_crossings": cv, "total_crossings": ch + cv})
+        return rows
 
-    return raw.mapInPandas(_cross, schema).orderBy("cell", "level")
+    return _per_cell(_raw(spark), crossings, schema).orderBy("cell", "level")
 
 
 @register(
@@ -547,49 +755,13 @@ def q319_hgt_flow_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cardinal weight = drop x 1414214, diagonal = drop x 1000000 --
     integer arithmetic, so both engines and the golden script agree
     bit-for-bit, no float sqrt(2)), ESRI power-of-two codes with
-    lowest-code tie-break, 0 for pits/flats. Vectorized numpy inside
-    the decode mapInPandas (the q287 one-pass shape): eight shifted
-    subtractions, one argmax, one bincount -- only the <=9-row census
+    lowest-code tie-break, 0 for pits/flats. The shared `_d8` kernel
+    inside the `_per_cell` decode shell (`_d8_census`): eight shifted
+    subtractions, one argmax, one np.unique -- only the <=9-row census
     per cell leaves Python, the same plan at any number of cells."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    raw = _raw(spark).select("path", "content")
-    schema = "cell string, direction int, n_points long"
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
-
-    def _flow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"cell": [], "direction": [], "n_points": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ok = v[1:-1, 1:-1].copy()
-                ws = []
-                for code, dr, dc in dirs:  # ascending code order
-                    ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    ws.append((g[1:-1, 1:-1] - zn)
-                              * (CARD if dr == 0 or dc == 0 else DIAG))
-                stack = np.stack(ws)
-                best = np.argmax(stack, axis=0)   # first max = lowest code
-                bestw = np.max(stack, axis=0)
-                code_arr = np.array([c for c, _, _ in dirs])[best]
-                code_arr = np.where(bestw > 0, code_arr, 0)[ok]
-                uniq, counts = np.unique(code_arr, return_counts=True)
-                for code, cnt in zip(uniq.tolist(), counts.tolist()):
-                    recs["cell"].append(cell)
-                    recs["direction"].append(int(code))
-                    recs["n_points"].append(int(cnt))
-            yield pd.DataFrame(recs)
-
-    return raw.mapInPandas(_flow, schema).orderBy("cell", "direction")
+    return (_per_cell(_raw(spark), _d8_census,
+                      "cell string, direction int, n_points long")
+            .orderBy("cell", "direction"))
 
 
 @register(
@@ -614,90 +786,26 @@ def q326_hgt_flow_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells whose steepest-descent paths pass through it (O'Callaghan &
     Mark 1984; the product behind stream extraction and watershed
     delineation). The direction grid is a forest (out-degree <= 1),
-    so accumulation is one Kahn topological pass: sources (in-degree
-    0) push their counts downstream, pits/flats (code 0) receive but
-    never forward. Census per cell: sources / 2-10 / 11-100 / >100
-    accumulation bands and the maximum channel load.
+    so accumulation is one Kahn topological pass (`_accumulate`):
+    sources (in-degree 0) push their counts downstream, pits/flats
+    (code 0) receive but never forward. Census per cell: sources /
+    2-10 / 11-100 / >100 accumulation bands and the maximum channel
+    load.
 
     Scale shape: per-CELL work is the in-decode pass (each 1-degree
     tile is independent — the embarrassingly parallel unit of global
     terrain processing); cross-tile drainage at planetary scale
     exchanges only border rows between neighbors, which is the same
     per-cell plan plus a 1-row-per-edge join, not a different
-    algorithm."""
-    import numpy as np
-    import pandas as pd
-    from collections import deque
-    from collections.abc import Iterator
+    algorithm (q439)."""
 
-    raw = _raw(spark).select("path", "content")
-    schema = ("cell string, n_sources long, n_small long, n_medium long, "
-              "n_large long, max_accum long")
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
+    def accum(cell, la, lo, g):
+        v = g != hgt.VOID
+        acc = _accumulate(_d8(g)[0], v.astype(np.int64))
+        return [{"cell": cell, **_accum_bands(acc[v])}]
 
-    def _accum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in ("cell", "n_sources", "n_small",
-                                    "n_medium", "n_large", "max_accum")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ok = v[1:-1, 1:-1].copy()
-                ws = []
-                for _c, dr, dc in dirs:
-                    ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                zc = g[1:-1, 1:-1]
-                for code, dr, dc in dirs:
-                    zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    ws.append((zc - zn)
-                              * (CARD if dr == 0 or dc == 0 else DIAG))
-                stack = np.stack(ws)
-                best = np.argmax(stack, axis=0)
-                bestw = np.max(stack, axis=0)
-                code_arr = np.array([c for c, _, _ in dirs])[best]
-                code_arr = np.where((bestw > 0) & ok, code_arr, 0)
-                codes = np.zeros_like(g)
-                codes[1:-1, 1:-1] = code_arr
-
-                acc = np.ones_like(g)
-                acc[~v] = 0
-                off = {c: (dr, dc) for c, dr, dc in dirs}
-                indeg = np.zeros_like(acc)
-                targets = {}
-                for (r, c), code in np.ndenumerate(codes):
-                    if code:
-                        dr, dc = off[int(code)]
-                        targets[(r, c)] = (r + dr, c + dc)
-                        indeg[r + dr, c + dc] += 1
-                q = deque(rc for rc, _ in np.ndenumerate(codes)
-                          if indeg[rc] == 0)
-                while q:
-                    rc = q.popleft()
-                    t = targets.get(rc)
-                    if t is None:
-                        continue
-                    acc[t] += acc[rc]
-                    indeg[t] -= 1
-                    if indeg[t] == 0:
-                        q.append(t)
-                valid = acc[v]
-                recs["cell"].append(cell)
-                recs["n_sources"].append(int((valid == 1).sum()))
-                recs["n_small"].append(int(((valid >= 2) & (valid <= 10)).sum()))
-                recs["n_medium"].append(int(((valid >= 11) & (valid <= 100)).sum()))
-                recs["n_large"].append(int((valid > 100).sum()))
-                recs["max_accum"].append(int(valid.max()))
-            yield pd.DataFrame(recs)
-
-    return raw.mapInPandas(_accum, schema).orderBy("cell")
-
-
-MOSAIC_FIXTURE_DIR = os.path.join(os.path.dirname(FIXTURE_DIR), "hgt_mosaic")
+    return (_per_cell(_raw(spark), accum, "cell string, " + ACCUM_SCHEMA)
+            .orderBy("cell"))
 
 
 @register(
@@ -731,141 +839,30 @@ def q350_hgt_mosaic_seams(spark: SparkSession, sf_dir: str) -> DataFrame:
     files exactly as real SRTM tiles are) is processed as ONE
     seamless terrain:
 
-    * per cell, the interior D8 census computes in-decode (the q319
-      pass — each tile independent, the embarrassingly parallel unit);
+    * per cell, the interior D8 census computes in-decode
+      (`_d8_census`, q319's kernel — each tile independent, the
+      embarrassingly parallel unit);
     * the cells' BORDER BANDS (outer two sample lines per edge —
-      O(perimeter), not O(area)) are exchanged: deduplicated on
-      global sample coordinates with a consistency census that
-      RAISES on any altitude mismatch between the two copies of a
-      shared line (the fencepost check, executed not assumed);
+      O(perimeter), not O(area)) are exchanged by `_band`:
+      deduplicated on global sample coordinates with a consistency
+      census that RAISES on any altitude mismatch between the two
+      copies of a shared line (the fencepost check, executed not
+      assumed);
     * seam-line points get their D8 from the banded relation via
-      eight broadcast-sized shifted equi-joins and a pure-Catalyst
-      fixed-point argmax (lowest-code tie-break, no Python) — the
-      border-row exchange q326's docstring describes, made real.
+      `_seam_d8`: eight broadcast-sized shifted equi-joins and a
+      pure-Catalyst fixed-point argmax (lowest-code tie-break, no
+      Python) — the border-row exchange q326's docstring describes,
+      made real.
 
     The graded census must equal the golden computed on the seamless
     global mosaic: any discontinuity at the shared edges (dropped or
     doubled fencepost lines, wrong row order at the northern edge)
     shifts the n_on_seam column."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    hgt.ensure_mosaic_fixtures(MOSAIC_FIXTURE_DIR)
-    raw = hgt.read_hgt(spark, MOSAIC_FIXTURE_DIR).select("path", "content")
-
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
-
-    def _interior(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"direction": [], "n_points": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ok = v[1:-1, 1:-1].copy()
-                ws = []
-                for code, dr, dc in dirs:
-                    ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    ws.append((g[1:-1, 1:-1] - zn)
-                              * (CARD if dr == 0 or dc == 0 else DIAG))
-                stack = np.stack(ws)
-                best = np.argmax(stack, axis=0)
-                bestw = np.max(stack, axis=0)
-                code_arr = np.array([c for c, _, _ in dirs])[best]
-                code_arr = np.where(bestw > 0, code_arr, 0)[ok]
-                uniq, counts = np.unique(code_arr, return_counts=True)
-                recs["direction"].extend(int(u) for u in uniq)
-                recs["n_points"].extend(int(c) for c in counts)
-            yield pd.DataFrame(recs)
-
-    def _band(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"y": [], "x": [], "alt": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                la, lo = hgt.parse_cell_name(cell)
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                r, c = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-                band = ((r <= 1) | (r >= n - 2) | (c <= 1) | (c >= n - 2))
-                y = (la + 1) * (n - 1) - r[band]
-                x = lo * (n - 1) + c[band]
-                vals = g[band]
-                recs["y"].extend(y.tolist())
-                recs["x"].extend(x.tolist())
-                recs["alt"].extend(
-                    None if v == hgt.VOID else int(v) for v in vals.tolist()
-                )
-            yield pd.DataFrame(
-                {
-                    "y": recs["y"],
-                    "x": recs["x"],
-                    "alt": pd.array(recs["alt"], dtype="Int64"),
-                }
-            )
-
-    local = raw.mapInPandas(_interior, "direction int, n_points long")
-    band_raw = raw.mapInPandas(_band, "y long, x long, alt int")
-
-    # fencepost consistency: the duplicated border lines must agree
-    consist = band_raw.groupBy("y", "x").agg(
-        F.count(F.lit(1)).alias("copies"),
-        F.countDistinct(F.coalesce("alt", F.lit(hgt.VOID))).alias("variants"),
-        F.min("alt").alias("alt"),
-    )
-    n_mismatch = consist.filter(F.col("variants") > 1).count()
-    if n_mismatch:
-        raise ValueError(
-            f"fencepost mismatch: {n_mismatch} shared border samples "
-            f"differ between adjacent cells"
-        )
-    band = consist.select("y", "x", "alt")
-
-    n = 241
-    ymin, ymax = 46 * (n - 1), 48 * (n - 1)
-    xmin, xmax = 7 * (n - 1), 9 * (n - 1)
-    yseam, xseam = 47 * (n - 1), 8 * (n - 1)
-    seam = band.filter(
-        ((F.col("y") == yseam) | (F.col("x") == xseam))
-        & (F.col("y") > ymin) & (F.col("y") < ymax)
-        & (F.col("x") > xmin) & (F.col("x") < xmax)
-    ).select(F.col("y").alias("sy"), F.col("x").alias("sx"),
-             F.col("alt").alias("alt0"))
-    # eight shifted broadcast equi-joins: row offset dr (southward)
-    # maps to global dy = −dr
-    joined = seam
-    for k, (code, dr, dc) in enumerate(dirs):
-        nb = band.select(
-            (F.col("y") + F.lit(dr)).alias("sy"),
-            (F.col("x") - F.lit(dc)).alias("sx"),
-            F.col("alt").alias(f"alt{code}"),
-        )
-        joined = joined.join(F.broadcast(nb), ["sy", "sx"], "left")
-    ok = F.col("alt0").isNotNull()
-    for code, _dr, _dc in dirs:
-        ok = ok & F.col(f"alt{code}").isNotNull()
-    ws = {
-        code: (F.col("alt0") - F.col(f"alt{code}"))
-        * F.lit(CARD if dr == 0 or dc == 0 else DIAG)
-        for code, dr, dc in dirs
-    }
-    mx = F.greatest(*ws.values())
-    direction = F.when(mx <= 0, F.lit(0))
-    chain = None
-    for code, _dr, _dc in dirs:  # ascending code = lowest-code tie-break
-        cond = ws[code] == mx
-        chain = F.when(cond, F.lit(code)) if chain is None else chain.when(cond, F.lit(code))
-    direction = direction.otherwise(chain)
+    raw = _mosaic_raw(spark)
+    local = _per_cell(raw, _d8_census, "cell string, direction int, n_points long")
     seam_census = (
-        joined.filter(ok)
-        .select(direction.alias("direction"))
-        .groupBy("direction")
+        _seam_d8(_band(raw)).filter("ok")
+        .groupBy(F.col("dir").alias("direction"))
         .agg(F.count(F.lit(1)).alias("n_points"))
         .select("direction", "n_points", F.col("n_points").alias("n_on_seam"))
     )
@@ -910,15 +907,11 @@ def q372_hgt_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     The hillshade normalization 1/sqrt(1+p^2+q^2) is strictly
     positive, so sign(L) partitions lit vs shadowed samples exactly
     as the float hillshade does while every graded number stays an
-    exact integer (the q319 fixed-point discipline). One numpy pass
-    inside the decode mapInPandas; only the 3-row census leaves
-    Python -- the same plan at any cell count, with cross-cell seams
-    handled by the q350 border-exchange pattern when mosaicked."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    raw = _raw(spark).select("path", "content")
+    exact integer (the fixed-point discipline of the D8 weights). One
+    numpy pass inside the `_per_cell` decode shell; only the 3-row
+    census leaves Python -- the same plan at any cell count, with
+    cross-cell seams handled by the `_band`/`_seam_d8` exchange when
+    mosaicked."""
     schema = (
         "cell string, n_points long, n_lit long, n_shadow long, "
         "n_neutral long, sum_lit_load long, sum_shadow_load long, "
@@ -926,41 +919,32 @@ def q372_hgt_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     FP = 707107
 
-    def _shade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in
-                    ("cell", "n_points", "n_lit", "n_shadow", "n_neutral",
-                     "sum_lit_load", "sum_shadow_load", "max_load")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ok = v[1:-1, 1:-1].copy()
-                for dr in (-1, 0, 1):
-                    for dc in (-1, 0, 1):
-                        ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
+    def shade(cell, la, lo, g):
+        n = g.shape[0]
+        v = g != hgt.VOID
+        ok = v[1:-1, 1:-1].copy()
+        for dr in (-1, 0, 1):
+            for dc in (-1, 0, 1):
+                ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
 
-                def w(dr, dc):
-                    return g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
+        def w(dr, dc):
+            return g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
 
-                gx = (w(-1, 1) + 2 * w(0, 1) + w(1, 1)) \
-                    - (w(-1, -1) + 2 * w(0, -1) + w(1, -1))
-                gy = (w(1, -1) + 2 * w(1, 0) + w(1, 1)) \
-                    - (w(-1, -1) + 2 * w(-1, 0) + w(-1, 1))
-                load = (FP * (gx + gy))[ok]
-                recs["cell"].append(cell)
-                recs["n_points"].append(int(ok.sum()))
-                recs["n_lit"].append(int((load > 0).sum()))
-                recs["n_shadow"].append(int((load < 0).sum()))
-                recs["n_neutral"].append(int((load == 0).sum()))
-                recs["sum_lit_load"].append(int(load[load > 0].sum()))
-                recs["sum_shadow_load"].append(int(-load[load < 0].sum()))
-                recs["max_load"].append(int(load.max()))
-            yield pd.DataFrame(recs)
+        gx = (w(-1, 1) + 2 * w(0, 1) + w(1, 1)) \
+            - (w(-1, -1) + 2 * w(0, -1) + w(1, -1))
+        gy = (w(1, -1) + 2 * w(1, 0) + w(1, 1)) \
+            - (w(-1, -1) + 2 * w(-1, 0) + w(-1, 1))
+        load = (FP * (gx + gy))[ok]
+        return [{
+            "cell": cell, "n_points": int(ok.sum()),
+            "n_lit": int((load > 0).sum()), "n_shadow": int((load < 0).sum()),
+            "n_neutral": int((load == 0).sum()),
+            "sum_lit_load": int(load[load > 0].sum()),
+            "sum_shadow_load": int(-load[load < 0].sum()),
+            "max_load": int(load.max()),
+        }]
 
-    return raw.mapInPandas(_shade, schema).orderBy("cell")
+    return _per_cell(_raw(spark), shade, schema).orderBy("cell")
 
 
 @register(
@@ -983,76 +967,32 @@ def q373_hgt_watershed_basins(spark: SparkSession, sf_dir: str) -> DataFrame:
     / `Basin`): every valid sample drains along its D8 pointer chain
     to a TERMINAL cell (direction 0: pit, flat, border or
     invalid-neighborhood), and the terminal cell labels the basin.
-    Labels are computed by POINTER DOUBLING (next = next[next] to
-    fixpoint) -- O(log longest-path) passes, each a vectorized gather,
-    the identical contraction the distributed q76/q297 connected-
-    components run as keyed joins, so the per-tile numpy here and a
-    1000-executor label-exchange implementation share one algorithm.
-    Census per cell: basin count, largest basin, singleton count and
-    the valid-cell total (basin sizes must conserve it). Basin counts
-    run ~5.7k/cell on the trig fixture: pit-dense synthetic terrain,
-    so the census also regression-pins the tie-break rule (lowest
-    ESRI code wins) that decides which pit captures a ridge sample."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    raw = _raw(spark).select("path", "content")
+    Labels are computed by POINTER DOUBLING (`_terminals`: next =
+    next[next] to fixpoint) -- O(log longest-path) passes, each a
+    vectorized gather, the identical contraction the distributed
+    q76/q297 connected-components run as keyed joins, so the per-tile
+    numpy here and a 1000-executor label-exchange implementation share
+    one algorithm. Census per cell: basin count, largest basin,
+    singleton count and the valid-cell total (basin sizes must
+    conserve it). Basin counts run ~5.7k/cell on the trig fixture:
+    pit-dense synthetic terrain, so the census also regression-pins
+    the tie-break rule (lowest ESRI code wins) that decides which pit
+    captures a ridge sample."""
     schema = (
         "cell string, n_basins long, max_basin_size long, "
         "n_singletons long, n_valid_cells long"
     )
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
 
-    def _basins(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in
-                    ("cell", "n_basins", "max_basin_size",
-                     "n_singletons", "n_valid_cells")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                # D8 direction grid (q319 rule: fixed-point sqrt(2),
-                # lowest-code ties, 0 at border/pits/invalid nbhd)
-                ok = v[1:-1, 1:-1].copy()
-                ws = []
-                for code, dr, dc in dirs:
-                    ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    ws.append((g[1:-1, 1:-1] - zn)
-                              * (CARD if dr == 0 or dc == 0 else DIAG))
-                stack = np.stack(ws)
-                best = np.argmax(stack, axis=0)
-                bestw = np.max(stack, axis=0)
-                code_arr = np.array([c for c, _, _ in dirs])[best]
-                code_arr = np.where((bestw > 0) & ok, code_arr, 0)
-                codes = np.zeros_like(g)
-                codes[1:-1, 1:-1] = code_arr
-                # pointer-doubling contraction to terminal labels
-                nxt = np.arange(n * n, dtype=np.int64)
-                for code, dr, dc in dirs:
-                    r, c = np.nonzero(codes == code)
-                    nxt[r * n + c] = (r + dr) * n + (c + dc)
-                while True:
-                    nxt2 = nxt[nxt]
-                    if np.array_equal(nxt2, nxt):
-                        break
-                    nxt = nxt2
-                labels = nxt[v.ravel()]
-                _, sizes = np.unique(labels, return_counts=True)
-                recs["cell"].append(cell)
-                recs["n_basins"].append(int(sizes.size))
-                recs["max_basin_size"].append(int(sizes.max()))
-                recs["n_singletons"].append(int((sizes == 1).sum()))
-                recs["n_valid_cells"].append(int(v.sum()))
-            yield pd.DataFrame(recs)
+    def basins(cell, la, lo, g):
+        v = (g != hgt.VOID).ravel()
+        _, sizes = np.unique(_terminals(_d8(g)[0])[v], return_counts=True)
+        return [{
+            "cell": cell, "n_basins": int(sizes.size),
+            "max_basin_size": int(sizes.max()),
+            "n_singletons": int((sizes == 1).sum()), "n_valid_cells": int(v.sum()),
+        }]
 
-    return raw.mapInPandas(_basins, schema).orderBy("cell")
+    return _per_cell(_raw(spark), basins, schema).orderBy("cell")
 
 
 @register(
@@ -1078,15 +1018,16 @@ def q437_hgt_mosaic_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     file boundaries:
 
     * per cell, the decode kernel contracts every OWNED sample's D8
-      chain by pointer doubling (O(area) work, zero shuffle) down to
-      either a local terminal (basin root) or an EXIT onto a seam
-      line whose D8 the cell cannot know — emitting only aggregated
-      (root, member-count) and (seam-exit, member-count) rows plus a
-      near-seam resolution map, all O(perimeter);
-    * the cells' border bands are exchanged exactly as q350 (outer
-      two lines, deduplicated on global coordinates, altitude
-      consistency RAISED on mismatch), seam-line samples get their
-      D8 from eight broadcast shifted equi-joins;
+      chain by pointer doubling (`_terminals`; O(area) work, zero
+      shuffle) down to either a local terminal (basin root) or an
+      EXIT onto a seam line whose D8 the cell cannot know — emitting
+      only aggregated (root, member-count) and (seam-exit,
+      member-count) rows plus a near-seam resolution map, all
+      O(perimeter);
+    * the cells' border bands are exchanged by `_band` exactly as in
+      q350 (outer two lines, deduplicated on global coordinates,
+      altitude consistency RAISED on mismatch), seam-line samples get
+      their D8 from `_seam_d8`'s eight broadcast shifted equi-joins;
     * the seam graph (seam sample → resolved target, ~10³ rows at
       any cell count) is contracted by distributed pointer jumping —
       self-joins to fixpoint, the same O(log path) recursion q76's
@@ -1097,188 +1038,39 @@ def q437_hgt_mosaic_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     basin, and the seam-spanning basin count/mass that per-cell
     processing gets structurally wrong (it would report 0 spanning
     basins and split their mass). Ownership of a sample is canonical
-    ((min((y−ymin)/(n−1),1), min((x−xmin)/(n−1),1)) — north/east cell
-    claims a seam line), so every valid sample is counted exactly
-    once across the fleet of per-cell kernels."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
+    (`_owner`: north/east cell claims a seam line), so every valid
+    sample is counted exactly once across the fleet of per-cell
+    kernels."""
+    raw = _mosaic_raw(spark)
 
-    hgt.ensure_mosaic_fixtures(MOSAIC_FIXTURE_DIR)
-    raw = hgt.read_hgt(spark, MOSAIC_FIXTURE_DIR).select("path", "content")
-
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
-    GID = 100000  # gid = y * GID + x (global sample coordinates)
-
-    def _local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def local(cell, la, lo, g):
         """Per-cell contraction. Emits a tagged union:
         rel='B' a=root_gid  b=count      c=owner_cell_idx
         rel='X' a=seam_gid  b=count      c=owner_cell_idx
         rel='C' a=gid       b=target_gid c=kind (0 terminal, 1 seam)"""
-        for pdf in batches:
-            rel, av, bv, cv = [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                la, lo = hgt.parse_cell_name(cell)
-                la, lo = int(la), int(lo)
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                v = g != hgt.VOID
-                ymin_g, ymax_g = 46 * (n - 1), 48 * (n - 1)
-                xmin_g, xmax_g = 7 * (n - 1), 9 * (n - 1)
-                yseam, xseam = 47 * (n - 1), 8 * (n - 1)
-                cell_idx = (la - 46) * 2 + (lo - 7)
-                # interior D8 (q373 rule) + in-file pointer doubling;
-                # file-edge lines are absorbing (their D8 is either
-                # border-terminal or seam — classified globally below)
-                ok = v[1:-1, 1:-1].copy()
-                ws = []
-                for _c, dr, dc in dirs:
-                    ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                zc = g[1:-1, 1:-1]
-                for code, dr, dc in dirs:
-                    zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-                    ws.append((zc - zn) * (CARD if dr == 0 or dc == 0 else DIAG))
-                stack = np.stack(ws)
-                best = np.argmax(stack, axis=0)
-                bestw = np.max(stack, axis=0)
-                code_arr = np.array([c for c, _, _ in dirs])[best]
-                code_arr = np.where((bestw > 0) & ok, code_arr, 0)
-                codes = np.zeros_like(g)
-                codes[1:-1, 1:-1] = code_arr
-                nxt = np.arange(n * n, dtype=np.int64)
-                for code, dr, dc in dirs:
-                    r, c = np.nonzero(codes == code)
-                    nxt[r * n + c] = (r + dr) * n + (c + dc)
-                while True:
-                    nxt2 = nxt[nxt]
-                    if np.array_equal(nxt2, nxt):
-                        break
-                    nxt = nxt2
-                # global coordinates and sample classes
-                rr = np.arange(n * n) // n
-                cc = np.arange(n * n) % n
-                y = (la + 1) * (n - 1) - rr
-                x = lo * (n - 1) + cc
-                gid = y * GID + x
-                on_border = ((y == ymin_g) | (y == ymax_g)
-                             | (x == xmin_g) | (x == xmax_g))
-                on_seam = (((y == yseam) | (x == xseam)) & ~on_border)
-                owner = (np.minimum((y - ymin_g) // (n - 1), 1) * 2
-                         + np.minimum((x - xmin_g) // (n - 1), 1))
-                owned = v.ravel() & ~on_seam & (owner == cell_idx)
-                fin = nxt[np.nonzero(owned)[0]]
-                exit_mask = on_seam[fin]
-                # 'B': members whose chain ends at a terminal root
-                roots, cnts = np.unique(gid[fin[~exit_mask]],
-                                        return_counts=True)
-                rel.extend("B" for _ in roots)
-                av.extend(roots.tolist())
-                bv.extend(cnts.tolist())
-                cv.extend(cell_idx for _ in roots)
-                # 'X': members whose chain exits onto a seam sample
-                seams, scnts = np.unique(gid[fin[exit_mask]],
-                                         return_counts=True)
-                rel.extend("X" for _ in seams)
-                av.extend(seams.tolist())
-                bv.extend(scnts.tolist())
-                cv.extend(cell_idx for _ in seams)
-                # 'C': near-seam resolution map (everything a seam
-                # sample's D8 can point to, minus seam samples)
-                near = owned & ((np.abs(y - yseam) <= 1)
-                                | (np.abs(x - xseam) <= 1))
-                idx = np.nonzero(near)[0]
-                f2 = nxt[idx]
-                rel.extend("C" for _ in idx)
-                av.extend(gid[idx].tolist())
-                bv.extend(gid[f2].tolist())
-                cv.extend(np.where(on_seam[f2], 1, 0).tolist())
-            yield pd.DataFrame({"rel": rel, "a": av, "b": bv, "c": cv})
+        # file-edge lines are absorbing (their D8 is either
+        # border-terminal or seam — classified globally below)
+        nxt = _terminals(_d8(g)[0])
+        m = _mosaic_samples(la, lo, g != hgt.VOID)
+        fin = nxt[m.owned]
+        exit_mask = m.on_seam[fin]
+        # 'B': members whose chain ends at a terminal root
+        roots, cnts = np.unique(m.gid[fin[~exit_mask]], return_counts=True)
+        # 'X': members whose chain exits onto a seam sample
+        seams, scnts = np.unique(m.gid[fin[exit_mask]], return_counts=True)
+        # 'C': near-seam resolution map (everything a seam sample's
+        # D8 can point to, minus seam samples)
+        f2 = nxt[m.near]
+        return {
+            "rel": ["B"] * roots.size + ["X"] * seams.size + ["C"] * f2.size,
+            "a": np.concatenate([roots, seams, m.gid[m.near]]),
+            "b": np.concatenate([cnts, scnts, m.gid[f2]]),
+            "c": np.concatenate([np.full(roots.size + seams.size, m.idx),
+                                 m.on_seam[f2].astype(np.int64)]),
+        }
 
-    def _band(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"y": [], "x": [], "alt": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                la, lo = hgt.parse_cell_name(cell)
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                r, c = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-                band = ((r <= 1) | (r >= n - 2) | (c <= 1) | (c >= n - 2))
-                recs["y"].extend(((la + 1) * (n - 1) - r[band]).tolist())
-                recs["x"].extend((lo * (n - 1) + c[band]).tolist())
-                recs["alt"].extend(
-                    None if val == hgt.VOID else int(val)
-                    for val in g[band].tolist()
-                )
-            yield pd.DataFrame({
-                "y": recs["y"], "x": recs["x"],
-                "alt": pd.array(recs["alt"], dtype="Int64"),
-            })
-
-    tagged = raw.mapInPandas(
-        _local, "rel string, a long, b long, c long").persist()
-    band_raw = raw.mapInPandas(_band, "y long, x long, alt int")
-    consist = band_raw.groupBy("y", "x").agg(
-        F.countDistinct(F.coalesce("alt", F.lit(hgt.VOID))).alias("variants"),
-        F.min("alt").alias("alt"),
-    )
-    if consist.filter(F.col("variants") > 1).count():
-        raise ValueError("fencepost mismatch on shared border samples")
-    band = consist.select("y", "x", "alt")
-
-    n = 241
-    ymin_g, ymax_g = 46 * (n - 1), 48 * (n - 1)
-    xmin_g, xmax_g = 7 * (n - 1), 9 * (n - 1)
-    yseam, xseam = 47 * (n - 1), 8 * (n - 1)
-    seam = band.filter(
-        ((F.col("y") == yseam) | (F.col("x") == xseam))
-        & (F.col("y") > ymin_g) & (F.col("y") < ymax_g)
-        & (F.col("x") > xmin_g) & (F.col("x") < xmax_g)
-        # void seam samples are not basin members and (all-valid D8
-        # rule) can never be pointer targets — drop them here
-        & F.col("alt").isNotNull()
-    ).select(F.col("y").alias("sy"), F.col("x").alias("sx"),
-             F.col("alt").alias("alt0"))
-    joined = seam
-    for code, dr, dc in dirs:
-        nb = band.select(
-            (F.col("y") + F.lit(dr)).alias("sy"),
-            (F.col("x") - F.lit(dc)).alias("sx"),
-            F.col("alt").alias(f"alt{code}"),
-        )
-        joined = joined.join(F.broadcast(nb), ["sy", "sx"], "left")
-    okc = F.col("alt0").isNotNull()
-    for code, _dr, _dc in dirs:
-        okc = okc & F.col(f"alt{code}").isNotNull()
-    ws = {
-        code: (F.col("alt0") - F.col(f"alt{code}"))
-        * F.lit(CARD if dr == 0 or dc == 0 else DIAG)
-        for code, dr, dc in dirs
-    }
-    mx = F.greatest(*ws.values())
-    chain = None
-    for code, _dr, _dc in dirs:
-        cond = ws[code] == mx
-        chain = (F.when(cond, F.lit(code)) if chain is None
-                 else chain.when(cond, F.lit(code)))
-    direction = F.when(~okc | (mx <= 0), F.lit(0)).otherwise(chain)
-    # next-gid per direction: row offset dr (southward) is global -dy
-    ngid = F.lit(None).cast("long")
-    for code, dr, dc in dirs:
-        ngid = F.when(
-            direction == code,
-            (F.col("sy") - F.lit(dr)) * GID + (F.col("sx") + F.lit(dc)),
-        ).otherwise(ngid)
-    sgid = F.col("sy") * GID + F.col("sx")
-    seam_next = joined.select(
-        sgid.alias("s"), direction.alias("dir"), ngid.alias("ng"),
-        F.col("sy").alias("y"), F.col("sx").alias("x"),
-    ).persist()
+    tagged = _per_cell(raw, local, "rel string, a long, b long, c long").persist()
+    seam_next = _seam_d8(_band(raw)).select("s", "dir", "ng", "y", "x").persist()
 
     seam_ids = seam_next.select(F.col("s").alias("sid2"))
     near_map = tagged.filter(F.col("rel") == "C").select(
@@ -1324,9 +1116,9 @@ def q437_hgt_mosaic_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve = r.select(F.col("s").alias("rs"), F.col("t").alias("root"))
 
     owner_expr = (
-        F.least((F.col("y") - F.lit(ymin_g)) / F.lit(n - 1), F.lit(1.0))
+        F.least((F.col("y") - F.lit(YMIN)) / F.lit(MOSAIC_N - 1), F.lit(1.0))
         .cast("long") * 2
-        + F.least((F.col("x") - F.lit(xmin_g)) / F.lit(n - 1), F.lit(1.0))
+        + F.least((F.col("x") - F.lit(XMIN)) / F.lit(MOSAIC_N - 1), F.lit(1.0))
         .cast("long")
     )
     members = (
@@ -1398,10 +1190,11 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     and border samples receive water from MULTIPLE cells and
     transit mass re-enters downstream cells. The decomposition:
 
-    * pass 1 (per cell, decode kernel): local Kahn accumulation of
-      the cell's interior units; emits the O(perimeter) arrival
-      masses at edge lines plus the near-seam routing map
-      (entry → absorbing target, classed interior/seam/border);
+    * pass 1 (per cell, decode kernel): local Kahn accumulation
+      (`_accumulate`) of the cell's interior units; emits the
+      O(perimeter) arrival masses at edge lines plus the near-seam
+      routing map (entry → absorbing target, classed
+      interior/seam/border);
     * seam graph: M0(s) = 1 + local arrivals; contracted edges
       (seam→seam, directly or through a cell transit) closed by
       pointer-doubled transitive closure, so acc(s) = M0(s) +
@@ -1419,238 +1212,54 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Census: source count, accumulation bands, global max, and max
     accumulation ON a seam line — a number a per-cell plan
     structurally reports as unavailable."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
+    raw = _mosaic_raw(spark)
 
-    hgt.ensure_mosaic_fixtures(MOSAIC_FIXTURE_DIR)
-    raw = hgt.read_hgt(spark, MOSAIC_FIXTURE_DIR).select("path", "content")
+    def inner_units(v):
+        """One unit on every valid sample off the file's edge lines."""
+        units = np.zeros(v.shape, dtype=np.int64)
+        units[1:-1, 1:-1] = v[1:-1, 1:-1]
+        return units
 
-    CARD, DIAG = 1414214, 1000000
-    dirs = [(1, 0, 1), (2, 1, 1), (4, 1, 0), (8, 1, -1),
-            (16, 0, -1), (32, -1, -1), (64, -1, 0), (128, -1, 1)]
-    GID = 100000
-    N_FIX = 241
-    YMIN, YMAX = 46 * (N_FIX - 1), 48 * (N_FIX - 1)
-    XMIN, XMAX = 7 * (N_FIX - 1), 9 * (N_FIX - 1)
-    YSEAM, XSEAM = 47 * (N_FIX - 1), 8 * (N_FIX - 1)
-
-    def _grid_ctx(path: str, content: bytes):
-        """Shared per-file decode: codes, absorbing pointer map and
-        the global-coordinate arrays."""
-        from collections import deque
-
-        cell = os.path.splitext(os.path.basename(path))[0]
-        la, lo = (int(v) for v in hgt.parse_cell_name(cell))
-        buf = np.frombuffer(bytes(content), dtype=">i2")
-        n = int(np.sqrt(buf.size))
-        g = buf.reshape(n, n).astype(np.int64)
-        v = g != hgt.VOID
-        ok = v[1:-1, 1:-1].copy()
-        ws = []
-        for _c, dr, dc in dirs:
-            ok &= v[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-        zc = g[1:-1, 1:-1]
-        for code, dr, dc in dirs:
-            zn = g[1 + dr:n - 1 + dr, 1 + dc:n - 1 + dc]
-            ws.append((zc - zn) * (CARD if dr == 0 or dc == 0 else DIAG))
-        stack = np.stack(ws)
-        best = np.argmax(stack, axis=0)
-        bestw = np.max(stack, axis=0)
-        code_arr = np.array([c for c, _, _ in dirs])[best]
-        code_arr = np.where((bestw > 0) & ok, code_arr, 0)
-        codes = np.zeros_like(g)
-        codes[1:-1, 1:-1] = code_arr
-        rr = np.arange(n * n) // n
-        cc = np.arange(n * n) % n
-        y = (la + 1) * (n - 1) - rr
-        x = lo * (n - 1) + cc
-        return cell, n, g, v, codes, y, x, deque
-
-    def _kahn(codes: np.ndarray, n: int, acc: np.ndarray, deque):
-        """In-file mass propagation along interior pointers (edge
-        lines absorb). Mutates acc in place."""
-        nxt = np.full(n * n, -1, dtype=np.int64)
-        for code, dr, dc in dirs:
-            r, c = np.nonzero(codes == code)
-            nxt[r * n + c] = (r + dr) * n + (c + dc)
-        indeg = np.zeros(n * n, dtype=np.int64)
-        valid_nxt = nxt[nxt >= 0]
-        np.add.at(indeg, valid_nxt, 1)
-        q = deque(np.nonzero(indeg == 0)[0].tolist())
-        flat = acc.ravel()
-        while q:
-            u = q.popleft()
-            t = nxt[u]
-            if t < 0:
-                continue
-            flat[t] += flat[u]
-            indeg[t] -= 1
-            if indeg[t] == 0:
-                q.append(int(t))
-
-    def _pass1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pass1(cell, la, lo, g):
         """rel='X' a=edge_gid b=arrived_mass
         rel='C' a=gid b=absorb_target_gid c=kind
                 (0 interior-terminal, 1 seam, 2 border, 3 self-border)"""
-        for pdf in batches:
-            rel, av, bv, cv = [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                _cell, n, _g, v, codes, y, x, deque = _grid_ctx(path, content)
-                gid = y * GID + x
-                on_border = ((y == YMIN) | (y == YMAX)
-                             | (x == XMIN) | (x == XMAX))
-                on_seam = (((y == YSEAM) | (x == XSEAM)) & ~on_border)
-                rr = np.arange(n * n) // n
-                cc = np.arange(n * n) % n
-                interior = ((rr >= 1) & (rr <= n - 2)
-                            & (cc >= 1) & (cc <= n - 2))
-                acc = np.zeros((n, n), dtype=np.int64)
-                acc.ravel()[interior & v.ravel()] = 1
-                _kahn(codes, n, acc, deque)
-                edge = ~interior
-                arrived = acc.ravel()[edge]
-                egid = gid[edge]
-                nz = arrived > 0
-                rel.extend("X" for _ in range(int(nz.sum())))
-                av.extend(egid[nz].tolist())
-                bv.extend(arrived[nz].tolist())
-                cv.extend(0 for _ in range(int(nz.sum())))
-                # near-seam routing map over OWNED valid samples
-                owner = (np.minimum((y - YMIN) // (n - 1), 1) * 2
-                         + np.minimum((x - XMIN) // (n - 1), 1))
-                la, lo = (int(t) for t in hgt.parse_cell_name(
-                    os.path.splitext(os.path.basename(path))[0]))
-                cell_idx = (la - 46) * 2 + (lo - 7)
-                owned = v.ravel() & ~on_seam & (owner == cell_idx)
-                near = owned & ((np.abs(y - YSEAM) <= 1)
-                                | (np.abs(x - XSEAM) <= 1))
-                # absorbing map via pointer doubling
-                nxt = np.arange(n * n, dtype=np.int64)
-                for code, dr, dc in dirs:
-                    r, c = np.nonzero(codes == code)
-                    nxt[r * n + c] = (r + dr) * n + (c + dc)
-                while True:
-                    nxt2 = nxt[nxt]
-                    if np.array_equal(nxt2, nxt):
-                        break
-                    nxt = nxt2
-                idx = np.nonzero(near)[0]
-                f2 = nxt[idx]
-                kind = np.where(
-                    on_border[idx], 3,
-                    np.where(on_seam[f2], 1,
-                             np.where(on_border[f2], 2, 0)))
-                rel.extend("C" for _ in idx)
-                av.extend(gid[idx].tolist())
-                bv.extend(gid[f2].tolist())
-                cv.extend(kind.tolist())
-            yield pd.DataFrame({"rel": rel, "a": av, "b": bv, "c": cv})
+        v = g != hgt.VOID
+        codes = _d8(g)[0]
+        units = inner_units(v)
+        acc = _accumulate(codes, units).ravel()
+        # mass arrived on the edge lines: D8 never points at a void,
+        # so every non-unit sample holding mass is an edge sample
+        arrived = (units.ravel() == 0) & (acc > 0)
+        m = _mosaic_samples(la, lo, v)
+        # near-seam routing map over OWNED valid samples, through the
+        # absorbing pointer map
+        f2 = _terminals(codes)[m.near]
+        kind = np.where(
+            m.on_border[m.near], 3,
+            np.where(m.on_seam[f2], 1, np.where(m.on_border[f2], 2, 0)))
+        return {
+            "rel": ["X"] * int(arrived.sum()) + ["C"] * f2.size,
+            "a": np.concatenate([m.gid[arrived], m.gid[m.near]]),
+            "b": np.concatenate([acc[arrived], m.gid[f2]]),
+            "c": np.concatenate([np.zeros(int(arrived.sum()), np.int64), kind]),
+        }
 
-    def _pass2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pass2(cell, la, lo, g, injs):
         """Final interior census with injected transit masses."""
-        for pdf in batches:
-            recs = {k: [] for k in ("n_sources", "n_small", "n_medium",
-                                    "n_large", "mx")}
-            for path, content, injs in zip(pdf["path"], pdf["content"],
-                                           pdf["injs"]):
-                _cell, n, _g, v, codes, y, x, deque = _grid_ctx(path, content)
-                la, lo = (int(t) for t in hgt.parse_cell_name(_cell))
-                rr = np.arange(n * n) // n
-                cc = np.arange(n * n) % n
-                interior = ((rr >= 1) & (rr <= n - 2)
-                            & (cc >= 1) & (cc <= n - 2))
-                acc = np.zeros((n, n), dtype=np.int64)
-                acc.ravel()[interior & v.ravel()] = 1
-                if injs is not None and len(injs):
-                    for inj in injs:
-                        gy, gx = inj["gid"] // GID, inj["gid"] % GID
-                        r = (la + 1) * (n - 1) - gy
-                        c = gx - lo * (n - 1)
-                        acc[r, c] += inj["mass"]
-                _kahn(codes, n, acc, deque)
-                sel = acc.ravel()[interior & v.ravel()]
-                recs["n_sources"].append(int((sel == 1).sum()))
-                recs["n_small"].append(int(((sel >= 2) & (sel <= 10)).sum()))
-                recs["n_medium"].append(int(((sel >= 11) & (sel <= 100)).sum()))
-                recs["n_large"].append(int((sel > 100).sum()))
-                recs["mx"].append(int(sel.max()))
-            yield pd.DataFrame(recs)
+        n = g.shape[0]
+        units = inner_units(g != hgt.VOID)
+        inner = units == 1
+        for inj in injs if injs is not None else ():
+            gy, gx = divmod(int(inj["gid"]), GID)
+            units[(la + 1) * (n - 1) - gy, gx - lo * (n - 1)] += inj["mass"]
+        return [_accum_bands(_accumulate(_d8(g)[0], units)[inner])]
 
-    tagged = raw.mapInPandas(
-        _pass1, "rel string, a long, b long, c long").persist()
+    tagged = _per_cell(raw, pass1, "rel string, a long, b long, c long").persist()
 
     # --- band relation + seam D8 (the q350/q437 exchange) ---
-    def _band(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"y": [], "x": [], "alt": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                cell = os.path.splitext(os.path.basename(path))[0]
-                la, lo = hgt.parse_cell_name(cell)
-                buf = np.frombuffer(bytes(content), dtype=">i2")
-                n = int(np.sqrt(buf.size))
-                g = buf.reshape(n, n).astype(np.int64)
-                r, c = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-                band = ((r <= 1) | (r >= n - 2) | (c <= 1) | (c >= n - 2))
-                recs["y"].extend(((la + 1) * (n - 1) - r[band]).tolist())
-                recs["x"].extend((lo * (n - 1) + c[band]).tolist())
-                recs["alt"].extend(
-                    None if val == hgt.VOID else int(val)
-                    for val in g[band].tolist()
-                )
-            yield pd.DataFrame({
-                "y": recs["y"], "x": recs["x"],
-                "alt": pd.array(recs["alt"], dtype="Int64"),
-            })
-
-    band_raw = raw.mapInPandas(_band, "y long, x long, alt int")
-    consist = band_raw.groupBy("y", "x").agg(
-        F.countDistinct(F.coalesce("alt", F.lit(hgt.VOID))).alias("variants"),
-        F.min("alt").alias("alt"),
-    )
-    if consist.filter(F.col("variants") > 1).count():
-        raise ValueError("fencepost mismatch on shared border samples")
-    band = consist.select("y", "x", "alt")
-    seam = band.filter(
-        ((F.col("y") == YSEAM) | (F.col("x") == XSEAM))
-        & (F.col("y") > YMIN) & (F.col("y") < YMAX)
-        & (F.col("x") > XMIN) & (F.col("x") < XMAX)
-        & F.col("alt").isNotNull()
-    ).select(F.col("y").alias("sy"), F.col("x").alias("sx"),
-             F.col("alt").alias("alt0"))
-    joined = seam
-    for code, dr, dc in dirs:
-        nb = band.select(
-            (F.col("y") + F.lit(dr)).alias("sy"),
-            (F.col("x") - F.lit(dc)).alias("sx"),
-            F.col("alt").alias(f"alt{code}"),
-        )
-        joined = joined.join(F.broadcast(nb), ["sy", "sx"], "left")
-    okc = F.col("alt0").isNotNull()
-    for code, _dr, _dc in dirs:
-        okc = okc & F.col(f"alt{code}").isNotNull()
-    ws = {
-        code: (F.col("alt0") - F.col(f"alt{code}"))
-        * F.lit(CARD if dr == 0 or dc == 0 else DIAG)
-        for code, dr, dc in dirs
-    }
-    mx = F.greatest(*ws.values())
-    chain = None
-    for code, _dr, _dc in dirs:
-        cond = ws[code] == mx
-        chain = (F.when(cond, F.lit(code)) if chain is None
-                 else chain.when(cond, F.lit(code)))
-    direction = F.when(~okc | (mx <= 0), F.lit(0)).otherwise(chain)
-    ngid = F.lit(None).cast("long")
-    for code, dr, dc in dirs:
-        ngid = F.when(
-            direction == code,
-            (F.col("sy") - F.lit(dr)) * GID + (F.col("sx") + F.lit(dc)),
-        ).otherwise(ngid)
-    seam_next = joined.select(
-        (F.col("sy") * GID + F.col("sx")).alias("s"),
-        direction.alias("dir"), ngid.alias("ng"),
-    ).persist()
+    band = _band(raw)
+    seam_next = _seam_d8(band).select("s", "dir", "ng").persist()
 
     # --- seam node initial masses and contracted edges ---
     gy = F.col("a").cast("long") / GID
@@ -1763,9 +1372,9 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("entry").alias("gid"), "mass",
             (F.lit(46) + F.floor((F.floor(F.col("entry") / GID) - YMIN)
-                                 / (N_FIX - 1)).cast("long")).alias("la"),
+                                 / (MOSAIC_N - 1)).cast("long")).alias("la"),
             (F.lit(7) + F.floor(((F.col("entry") % GID) - XMIN)
-                                / (N_FIX - 1)).cast("long")).alias("lo"),
+                                / (MOSAIC_N - 1)).cast("long")).alias("lo"),
         )
         .withColumn(
             "cell",
@@ -1775,38 +1384,29 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell")
         .agg(F.collect_list(F.struct("gid", "mass")).alias("injs"))
     )
-    raw2 = (
-        raw.withColumn(
-            "cell", F.regexp_extract("path", r"([NS]\d+[EW]\d+)\.hgt", 1))
-        .join(F.broadcast(inj), "cell", "left")
-        .select("path", "content", "injs")
-    )
-    interior_census = raw2.mapInPandas(
-        _pass2,
-        "n_sources long, n_small long, n_medium long, n_large long, mx long",
-    )
+    interior_census = _per_cell(
+        raw.join(F.broadcast(inj), "cell", "left"), pass2, ACCUM_SCHEMA, "injs")
 
-    def _bands(df, acc_col):
+    def _bands(df):
+        acc = F.col("acc")
         return df.agg(
-            F.sum(F.when(F.col(acc_col) == 1, 1).otherwise(0))
-            .alias("n_sources"),
-            F.sum(F.when((F.col(acc_col) >= 2) & (F.col(acc_col) <= 10), 1)
-                  .otherwise(0)).alias("n_small"),
-            F.sum(F.when((F.col(acc_col) >= 11) & (F.col(acc_col) <= 100), 1)
-                  .otherwise(0)).alias("n_medium"),
-            F.sum(F.when(F.col(acc_col) > 100, 1).otherwise(0))
-            .alias("n_large"),
-            F.max(acc_col).alias("mx"),
+            F.sum(F.when(acc == 1, 1).otherwise(0)).alias("n_sources"),
+            F.sum(F.when((acc >= 2) & (acc <= 10), 1).otherwise(0))
+            .alias("n_small"),
+            F.sum(F.when((acc >= 11) & (acc <= 100), 1).otherwise(0))
+            .alias("n_medium"),
+            F.sum(F.when(acc > 100, 1).otherwise(0)).alias("n_large"),
+            F.max(acc).alias("max_accum"),
         )
 
-    seam_census = _bands(acc_seam, "acc")
-    border_census = _bands(acc_border, "acc")
+    seam_census = _bands(acc_seam)
+    border_census = _bands(acc_border)
     interior_total = interior_census.agg(
         F.sum("n_sources").alias("n_sources"),
         F.sum("n_small").alias("n_small"),
         F.sum("n_medium").alias("n_medium"),
         F.sum("n_large").alias("n_large"),
-        F.max("mx").alias("mx"),
+        F.max("max_accum").alias("max_accum"),
     )
     combined = interior_total.unionByName(seam_census).unionByName(
         border_census)
@@ -1816,7 +1416,7 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_small").cast("long").alias("n_small"),
         F.sum("n_medium").cast("long").alias("n_medium"),
         F.sum("n_large").cast("long").alias("n_large"),
-        F.max("mx").cast("long").alias("max_accum"),
+        F.max("max_accum").cast("long").alias("max_accum"),
     ).crossJoin(F.broadcast(seam_max.select(
         F.col("max_accum_on_seam").cast("long").alias("max_accum_on_seam"))))
     # Materialize the one-row census (collect + local rebuild keeps

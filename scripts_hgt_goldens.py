@@ -1,11 +1,20 @@
 #!/usr/bin/env python
-"""Regenerate the VALUES-literal oracles for the Tier-A terrain
-queries q277 (hypsometry), q287 (aspect census) and q299 (contour
-crossings) from the fixture DEFINITION alone (ADVICE r6: the goldens'
+"""Regenerate the VALUES-literal oracles for the ten Tier-A terrain
+queries from the fixture DEFINITION alone (ADVICE r6: the goldens'
 independent-numpy provenance must be reproducible from a checked-in
-script, not a comment).
+script, not a comment):
 
-This script never imports the query implementations or touches Spark:
+* per cell of the 3-cell fixture: q277 hypsometry (`hypsometry_rows`),
+  q287 aspect census (`aspect_rows`), q299 contour crossings
+  (`contour_rows`), q319 D8 flow direction (`flow_rows`), q326 flow
+  accumulation (`accum_rows`), q372 hillshade (`hillshade_rows`) and
+  q373 watershed basins (`basin_rows`);
+* over the seamless 2×2 mosaic: q350 seam D8 census (`mosaic_rows`),
+  q437 watershed (`mosaic_basin_rows`) and q439 accumulation
+  (`mosaic_accum_rows`).
+
+This script never imports the query implementations or their terrain
+kernels (cli_spark/sources/hgt_queries.py) or touches Spark:
 it rebuilds each fixture grid from `synth_grid` (the same deterministic
 trig field the engine's fixtures serialize to big-endian .hgt files),
 applies the mathematical definition of each statistic in plain numpy,
@@ -15,7 +24,7 @@ in_script asserts the printed rows equal the registry oracles, so any
 drift between fixture, implementation and golden is caught.
 
 Definitions (what the numbers MEAN, independent of how Spark computes
-them):
+them; the other seven are in each function's docstring):
 
 * hypsometry — over valid samples, band = floor(alt / 500 m); per
   (cell, band): sample count and cumulative share of samples in bands

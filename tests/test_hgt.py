@@ -337,3 +337,117 @@ def test_mosaic_watershed_and_accumulation_mismatch_raise(
         HQ.q437_hgt_mosaic_watershed(spark, "unused")
     with pytest.raises(ValueError, match="fencepost mismatch"):
         HQ.q439_hgt_mosaic_accumulation(spark, "unused")
+
+
+def _write_cell(directory, name: str, buf: bytes) -> str:
+    os.makedirs(directory, exist_ok=True)
+    with open(os.path.join(directory, name), "wb") as fh:
+        fh.write(buf)
+    return str(directory)
+
+
+SMALL = hgt.synth_grid(5, 0.0).astype(">i2").tobytes()  # 5×5 = 25 samples
+
+
+def test_one_cell_name_rule_for_every_decoder(spark, tmp_path):
+    """SRTM product names carry a suffix after the cell. decode_points,
+    format("hgt") and read_hgt_zips all name the cell by the same
+    anchored rule, so a cell filter returns the same rows from each."""
+    import zipfile
+
+    from cli_spark.sources.hgt_datasource import register_hgt_source
+
+    name = "N46E007.SRTMGL1.hgt"
+    d = _write_cell(tmp_path / "cells", name, SMALL)
+    zdir = tmp_path / "zips"
+    zdir.mkdir()
+    with zipfile.ZipFile(zdir / (name + ".zip"), "w") as zf:
+        zf.writestr(name, SMALL)
+
+    register_hgt_source(spark)
+    points = {
+        "decode_points": hgt.decode_points(hgt.read_hgt(spark, d)),
+        "format_hgt": spark.read.format("hgt").load(d),
+    }
+    for label, df in points.items():
+        got = df.groupBy("cell").agg(F.min("lat"), F.min("lng")).collect()
+        assert [tuple(r) for r in got] == [("N46E007", 46.0, 7.0)], label
+    for label, raw in (("read_hgt", hgt.read_hgt(spark, d)),
+                       ("read_hgt_zips", hgt.read_hgt_zips(spark, str(zdir)))):
+        got = raw.select("cell", "corner_lat", "corner_lng").collect()
+        assert [tuple(r) for r in got] == [("N46E007", 46, 7)], label
+    counts = {label: df.where(F.col("cell") == "N46E007").count()
+              for label, df in points.items()}
+    assert counts == {"decode_points": 25, "format_hgt": 25}
+
+
+def test_non_cell_name_raises_naming_the_file(spark, tmp_path):
+    from cli_spark.sources.hgt_datasource import register_hgt_source
+
+    d = _write_cell(tmp_path / "lower", "n46e007.hgt", SMALL)
+    register_hgt_source(spark)
+    msg = r"n46e007\.hgt: not an HGT cell name"
+    with pytest.raises(Exception, match=msg):
+        hgt.decode_points(hgt.read_hgt(spark, d)).collect()
+    with pytest.raises(Exception, match=msg):
+        spark.read.format("hgt").load(d).collect()
+
+
+@pytest.mark.parametrize("size", [7, 6, 2, 0],
+                         ids=["odd", "non_square", "one_sample", "empty"])
+def test_bad_grid_size_raises_naming_the_file(spark, tmp_path, monkeypatch, size):
+    """Every decoder checks the shape through hgt.grid, and read_hgt's
+    grid_n rejects the same sizes, so point_lookup_col never reads
+    offsets into a file that holds no square grid."""
+    import cli_spark.sources.hgt_queries as HQ
+    from cli_spark.sources.hgt_datasource import register_hgt_source
+
+    d = _write_cell(tmp_path / "bad", "N46E007.hgt", bytes(size))
+    # the fixture marker keeps ensure_fixtures from filling the dir
+    _write_cell(tmp_path / "bad", ".ready_241", b"ok")
+    monkeypatch.setattr(HQ, "FIXTURE_DIR", d)
+    register_hgt_source(spark)
+    runs = {
+        "decode_points": lambda: hgt.decode_points(hgt.read_hgt(spark, d)),
+        "decode_tiles": lambda: hgt.decode_tiles(hgt.read_hgt(spark, d), 2, 2),
+        "format_hgt": lambda: spark.read.format("hgt").load(d),
+        "q265": lambda: HQ.q265_hgt_slope_stats(spark, "unused"),
+        "grid_n": lambda: hgt.read_hgt(spark, d).select("grid_n"),
+    }
+    msg = rf"N46E007\.hgt: {size} bytes is not a square HGT grid"
+    raising = runs if size else {"format_hgt": runs.pop("format_hgt")}
+    for label, run in raising.items():
+        with pytest.raises(Exception, match=msg):
+            run().collect()
+            pytest.fail(label)
+    if not size:
+        # Spark's file scan drops zero-length files before any task
+        # runs, so the binaryFile readers never see an empty cell file.
+        for label, run in runs.items():
+            assert run().count() == 0, label
+
+
+def test_d8_kernel_matches_golden_reference():
+    """The shared numpy D8 kernel's full code grid equals the
+    independent golden script's, sample by sample, on the 3 fixture
+    cells and the 4 mosaic cells (the oracles check only censuses).
+    The golden script stays independent of the kernels it checks."""
+    import ast
+
+    import scripts_hgt_goldens as G
+    from cli_spark.sources.hgt_queries import _d8
+
+    tree = ast.parse(open(G.__file__, encoding="utf-8").read())
+    imported = {getattr(node, "module", None) or alias.name
+                for node in ast.walk(tree)
+                if isinstance(node, (ast.Import, ast.ImportFrom))
+                for alias in node.names}
+    assert not any("hgt_queries" in m for m in imported), imported
+
+    grids = [hgt.synth_grid(241, phase) for _cell, phase in hgt.FIXTURE_CELLS]
+    grids += [hgt.synth_mosaic_cell(la, lo, 241) for la, lo in hgt.MOSAIC_CELLS]
+    for g in grids:
+        decoded = hgt.grid(g.astype(">i2").tobytes(), "cell").astype(np.int64)
+        codes, _ok = _d8(decoded)
+        golden, _dirs = G._d8_codes(g.astype(np.int64))
+        np.testing.assert_array_equal(codes, golden)

@@ -14,7 +14,9 @@ layer (see `test_no_polling_sleeps_in_streaming`), a third keeps
 every replay stream opening through `drain.replay_stream` (see
 `test_replay_streams_open_through_drain`), and a fourth keeps every
 MinHash signature built by `dedup.minhash_signature` (see
-`test_minhash_signature_built_only_in_dedup_helper`).
+`test_minhash_signature_built_only_in_dedup_helper`), and a fifth
+keeps one HGT grid decoder (`hgt.grid`) and one D8 weight table (see
+`test_one_hgt_grid_decoder_and_one_d8_weight_table`).
 """
 
 from __future__ import annotations
@@ -157,3 +159,49 @@ def test_minhash_signature_built_only_in_dedup_helper():
     assert not hits, (
         "MinHash signature built outside dedup.minhash_signature:\n"
         + "\n".join(hits))
+
+
+# HGT bytes decode in one place, hgt.grid: the only np.frombuffer(...,
+# ">i2") in cli_spark. The fixed-point D8 weights live in one table,
+# hgt_queries' module-level CARD, DIAG assignment: the only 1414214.
+GRID_HOME = (REPO / "cli_spark/sources/hgt.py", "grid")
+D8_WEIGHTS_HOME = (REPO / "cli_spark/sources/hgt_queries.py", "CARD")
+CARD_WEIGHT = 1414214
+
+
+def _top_names(top) -> set[str]:
+    if isinstance(top, ast.Assign):
+        return {n.id for t in top.targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)}
+    return {getattr(top, "name", "module")}
+
+
+def _decodes_hgt(node) -> bool:
+    return _call_name(node) == "frombuffer" and any(
+        isinstance(a, ast.Constant) and a.value == ">i2"
+        for a in [*node.args, *(k.value for k in node.keywords)]
+    )
+
+
+def _is_card_weight(node) -> bool:
+    return (isinstance(node, ast.Constant) and type(node.value) is int
+            and node.value == CARD_WEIGHT)
+
+
+def test_one_hgt_grid_decoder_and_one_d8_weight_table():
+    hits: list[str] = []
+    for path in sorted(REPO.glob("cli_spark/**/*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            names = _top_names(top)
+            for node in ast.walk(top):
+                for what, found, (home, home_name) in (
+                    ("HGT decode", _decodes_hgt(node), GRID_HOME),
+                    ("D8 weight", _is_card_weight(node), D8_WEIGHTS_HOME),
+                ):
+                    if found and not (path == home and home_name in names):
+                        hits.append(f"{what} {path.relative_to(REPO)}:"
+                                    f"{node.lineno} in {', '.join(sorted(names))}")
+    assert not hits, (
+        "HGT grid decode outside hgt.grid or D8 weight outside the one "
+        "table:\n" + "\n".join(hits))
