@@ -231,6 +231,28 @@ PROMOTED48_QUERIES = [
     "q500_streaming_psi_monitor",         # ~20 TRUE micro-batches
 ]
 
+# The promoted sets in timing order, each with the class count its
+# cumulative sum is reported under (`value_<NN>class`).
+PROMOTED_CLASSES = (
+    (18, PROMOTED_QUERIES),
+    (23, PROMOTED23_QUERIES),
+    (26, PROMOTED26_QUERIES),
+    (30, PROMOTED30_QUERIES),
+    (31, PROMOTED31_QUERIES),
+    (33, PROMOTED33_QUERIES),
+    (34, PROMOTED34_QUERIES),
+    (36, PROMOTED36_QUERIES),
+    (37, PROMOTED37_QUERIES),
+    (38, PROMOTED38_QUERIES),
+    (39, PROMOTED39_QUERIES),
+    (41, PROMOTED41_QUERIES),
+    (43, PROMOTED43_QUERIES),
+    (45, PROMOTED45_QUERIES),
+    (46, PROMOTED46_QUERIES),
+    (47, PROMOTED47_QUERIES),
+    (48, PROMOTED48_QUERIES),
+)
+
 REPORT_TAIL_BASELINES: dict = {
     # round-11/12 builds (dedicated sessions, BASELINE.md v8/v9)
     "q454_skipgram_pmi": 1.14,
@@ -376,40 +398,10 @@ def main() -> None:
     headline_total = round(sum(times.values()), 4)
     # iterative classes run many jobs per invocation — warm + min of 2
     # keeps their tracking cost bounded (declared in BASELINE.md v2)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED_QUERIES})
-    total_18 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED23_QUERIES})
-    total_23 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED26_QUERIES})
-    total_26 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED30_QUERIES})
-    total_30 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED31_QUERIES})
-    total_31 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED33_QUERIES})
-    total_33 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED34_QUERIES})
-    total_34 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED36_QUERIES})
-    total_36 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED37_QUERIES})
-    total_37 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED38_QUERIES})
-    total_38 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED39_QUERIES})
-    total_39 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED41_QUERIES})
-    total_41 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED43_QUERIES})
-    total_43 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED45_QUERIES})
-    total_45 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED46_QUERIES})
-    total_46 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED47_QUERIES})
-    total_47 = round(sum(times.values()), 4)
-    times.update({name: timed(name, sf_dir, 2) for name in PROMOTED48_QUERIES})
-    total_48 = round(sum(times.values()), 4)
+    class_totals = {}
+    for nn, names in PROMOTED_CLASSES:
+        times.update({name: timed(name, sf_dir, 2) for name in names})
+        class_totals[f"value_{nn}class"] = round(sum(times.values()), 4)
     # report-tail classes: tracked individually AND collectively gated
     # (VERDICT r13 #1) — the sum of end-of-bench readings vs 2× the
     # sum of dedicated baselines
@@ -445,23 +437,7 @@ def main() -> None:
         "queries": times,
         "sf": sf,
         "value_7class": legacy_total,
-        "value_18class": total_18,
-        "value_23class": total_23,
-        "value_26class": total_26,
-        "value_30class": total_30,
-        "value_31class": total_31,
-        "value_33class": total_33,
-        "value_34class": total_34,
-        "value_36class": total_36,
-        "value_37class": total_37,
-        "value_38class": total_38,
-        "value_39class": total_39,
-        "value_41class": total_41,
-        "value_43class": total_43,
-        "value_45class": total_45,
-        "value_46class": total_46,
-        "value_47class": total_47,
-        "value_48class": total_48,
+        **class_totals,
         "value_report_tail": report_tail,
         "report_tail_baseline": report_tail_base,
         "report_tail_flag": report_tail > 2 * report_tail_base,

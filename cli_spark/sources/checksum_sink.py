@@ -1,7 +1,7 @@
 """`df.write.format("checksum")` — a Spark 4 Python DataSource
-WRITER (the batch-sink counterpart of the custom readers in
-hgt_datasource.py / replay_datasource.py, completing the Python
-DataSource surface: batch read, streaming read, batch write).
+WRITER (the sink counterpart of the custom reader in
+hgt_datasource.py, completing the Python DataSource surface: batch
+read, batch write, stream write).
 
 The sink materializes an order/partitioning-independent integrity
 manifest instead of the data itself: every executor task hashes its

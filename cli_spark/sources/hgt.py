@@ -110,12 +110,20 @@ def read_hgt(spark: SparkSession, path: str) -> DataFrame:
     """Raw HGT scan: binaryFile source + filename/shape metadata.
 
     Returns (path, cell, corner_lat, corner_lng, grid_n, content).
+    Raises :func:`grid`'s error for a zero-byte ``.hgt``: Spark's file
+    scan drops zero-length files before any task runs, so
+    ``grid_size_col`` would never see one. The check reads the file
+    listing ``load()`` already made, on the driver, with no Spark job.
     """
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.hgt")
         .load(path)
     )
+    files = raw._jdf.queryExecution().analyzed().relation().location().allFiles()
+    for i in range(files.size()):
+        if files.apply(i).getLen() == 0:
+            grid(b"", files.apply(i).getPath().toString())
     return raw.select(
         "path",
         *cell_name_cols(F.col("path")),

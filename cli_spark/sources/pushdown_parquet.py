@@ -12,8 +12,7 @@ This is the custom-connector analogue of the built-in scan's
 PushedFilters: at 100 TB the difference between shipping every row
 group to executors and opening only the ones whose [min, max] can
 satisfy the predicate. Partition = one surviving row group, so
-executor-side IO is also row-group-pruned (same layout contract as
-replay_partitioned.py, batch form).
+executor-side IO is also row-group-pruned.
 
 Graded by q402 (below): a value-sorted copy of the events table with
 10 small row groups, probed with `value >= threshold` — the source

@@ -13,6 +13,7 @@ stateful processing) are covered by tests/test_streaming.py.
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +31,7 @@ from cli_spark.streaming.drain import (
     drain_rows,
     replay_batch_rows,
     replay_file,
+    replay_in_phases,
     replay_stream,
     run_stream,
 )
@@ -505,48 +507,50 @@ GROUP BY date_trunc('hour', ts), event_type
 )
 def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE MULTI-micro-batch streaming: the events table replayed
-    through the custom `replay` Python DataSource in ~20 batches of
-    at least 500 rows (the single-file testdata otherwise arrives in
-    ONE batch and cross-batch state accumulation never executes —
-    q103's documented limitation), aggregated under complete mode so
+    through `drain.replay_stream` in ~20 batches of at least 500 rows
+    (the single-file testdata otherwise arrives in ONE batch and
+    cross-batch state accumulation never executes — q103's documented
+    limitation), aggregated under complete mode so
     per-window state must accumulate correctly ACROSS batches. The
     result is read after the source reports exhaustion; complete-mode
     aggregation is batch-slicing-invariant, so it must equal the batch
     oracle exactly whatever the batch boundaries."""
-    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 20, min_rows=500)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value")).alias("value_sum"),
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 20, min_rows=500
+    ) as stream:
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum(F.col("value")).alias("value_sum"),
+            )
+            .select(
+                ts_str(F.col("window.start")).alias("window_start"),
+                "event_type",
+                "n_events",
+                "value_sum",
+            )
         )
-        .select(
-            ts_str(F.col("window.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-    return _drain_memory_sink(spark, agg, "replay_graded")
+        return _drain_memory_sink(spark, agg, "replay_graded")
 
 
 def _run_restart_recovery(
-    spark: SparkSession, sf_dir: str, fmt: str = "replay",
-    extra_options: dict | None = None,
+    spark: SparkSession, sf_dir: str, files_per_batch: int = 1
 ) -> tuple[DataFrame, dict]:
     """Shared engine for q310/q352: run the replayed windowed
     aggregation with a checkpoint, STOP it mid-stream, restart it from
     the same checkpoint, drain to exhaustion, and return (result,
-    evidence). The stop is made by the source: phase 1 replays with
-    ``endRow`` = 2 batches, so it drains exactly rows [0, 2·batchRows)
-    and commits them; phase 2 omits the option and must resume at row
-    2·batchRows. Evidence records phase 1's event count and the offset
-    phase 2 resumed from, so tests can assert the restart really was a
-    mid-stream recovery rather than a fresh start.
-    ``fmt`` selects the source: "replay" (driver-side simple reader)
-    or "replay_part" (q330's partitioned DataSourceStreamReader —
-    recovery then re-plans executor-side partitions for the
-    uncommitted range)."""
+    evidence). The stop is made by the input (`replay_in_phases`):
+    phase 1 runs with only the files of batches 0 and 1 on disk, so it
+    drains exactly rows [0, 2·batch_rows) and commits them; then the
+    remaining batch files are cut into the same directory and phase 2
+    restarts from the checkpoint, whose file-source log already holds
+    batches 0 and 1, so it must start at ``logOffset`` 1 and read only
+    the rest. Evidence records both phases' input row counts and the
+    offset phase 2 started from, so tests can assert the restart
+    really was a mid-stream recovery rather than a fresh start.
+    ``files_per_batch`` > 1 (q352) cuts each batch into that many
+    files, read together as one multi-partition micro-batch."""
     import json
     import shutil
     import tempfile
@@ -556,15 +560,11 @@ def _run_restart_recovery(
     ckpt = tempfile.mkdtemp(prefix="cli_spark_ckpt_")
     # ~10 micro-batches at ANY scale factor, so the stop always lands
     # mid-stream
-    _, batch_rows = replay_batch_rows(path, 10)
+    n, batch_rows = replay_batch_rows(path, 10)
 
-    def start(name: str, end_row: int | None = None):
-        options = dict(extra_options or {})
-        if end_row is not None:
-            options["endRow"] = end_row
+    def start(stream: DataFrame, name: str):
         agg = (
-            replay_stream(spark, path, 10, source=fmt, **options)
-            .groupBy(F.window("ts", "1 hour"), "event_type")
+            stream.groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 dsum(F.col("value")).alias("value_sum"),
@@ -584,27 +584,34 @@ def _run_restart_recovery(
             .start()
         )
 
-    evidence: dict = {"batch_rows": batch_rows}
-    try:
-        # ---- phase 1: the source runs dry after two batches
-        name1 = "restart_p1_" + _uuid.uuid4().hex[:8]
-        run_stream(start(name1, end_row=2 * batch_rows))
-        p1 = collect_memory_sink(spark, name1)
-        evidence["phase1_events"] = int(p1.agg(F.sum("n_events")).first()[0])
+    def rows_read(query) -> int:
+        return sum(p.numInputRows for p in query.recentProgress)
 
-        # ---- phase 2: restart from the SAME checkpoint, drain fully
-        name2 = "restart_p2_" + _uuid.uuid4().hex[:8]
-        q2 = start(name2)
-        run_stream(q2)
-        for p in q2.recentProgress:
-            so = (p.get("sources") or [{}])[0].get("startOffset")
-            if so is not None:
-                # Python stream sources report the offset dict's repr
-                # (single quotes), not JSON
-                so = json.loads(so.replace("'", '"')) if isinstance(so, str) else so
-                evidence["phase2_start_row"] = int(so["row"])
-                break
-        out = collect_memory_sink(spark, name2)
+    evidence: dict = {"n": n, "batch_rows": batch_rows}
+    try:
+        with replay_in_phases(
+            spark, path, 10, 2, files_per_batch=files_per_batch
+        ) as (stream, cut_rest):
+            # ---- phase 1: only batches 0 and 1 are on disk
+            name1 = "restart_p1_" + _uuid.uuid4().hex[:8]
+            q1 = start(stream, name1)
+            run_stream(q1)
+            spark.catalog.dropTempView(name1)
+            evidence["phase1_rows"] = rows_read(q1)
+
+            # ---- phase 2: the rest arrives; restart from the SAME
+            # checkpoint and drain fully
+            cut_rest()
+            name2 = "restart_p2_" + _uuid.uuid4().hex[:8]
+            q2 = start(stream, name2)
+            run_stream(q2)
+            evidence["phase2_rows"] = rows_read(q2)
+            # the progress reports the offset as a dict's repr (single
+            # quotes), not JSON; a fresh start reports none
+            so = q2.recentProgress[0].sources[0].startOffset
+            evidence["phase2_start_offset"] = (
+                json.loads(so.replace("'", '"')) if so else None)
+            out = collect_memory_sink(spark, name2)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return out, evidence
@@ -626,14 +633,16 @@ def q310_streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     """TRUE streaming CHECKPOINT RECOVERY, graded (VERDICT r6 #8): the
     replayed event stream's windowed aggregation is started with a
     checkpoint directory, STOPPED after its first two committed
-    micro-batches (a simulated driver crash; the source's ``endRow``
-    makes the stop point deterministic), then RESTARTED from the same
-    checkpoint and drained to exhaustion. The restarted query resumes
-    from the recorded replay offset with its state-store contents
-    intact, so the final complete-mode result must equal the
-    uninterrupted batch aggregation EXACTLY — any lost state
-    undercounts, any replayed-and-recounted batch overcounts, so a
-    bit-exact oracle match IS the exactly-once evidence. Offset
+    micro-batches (a simulated driver crash; only those two batches'
+    files exist in phase 1, which makes the stop point deterministic),
+    then RESTARTED from the same checkpoint once the remaining batch
+    files have arrived, and drained to exhaustion. The restarted query
+    resumes from the file-source log offset recorded in the checkpoint
+    with its state-store contents intact, so the final complete-mode
+    result must equal the uninterrupted batch aggregation EXACTLY —
+    any lost state undercounts, any replayed-and-recounted batch
+    overcounts, so a bit-exact oracle match IS the exactly-once
+    evidence. Offset
     resumption (not a silent from-zero rerun) is asserted separately
     in tests/test_streaming.py via the recovery evidence dict."""
     out, _evidence = _run_restart_recovery(spark, sf_dir)
@@ -654,23 +663,16 @@ GROUP BY date_trunc('hour', ts), event_type
           "datasource", "partitioned"),
 )
 def q352_partitioned_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint recovery × PARTITIONED streaming source (VERDICT r7
-    #8): q310's kill/restart protocol run through q330's full
-    DataSourceStreamReader — the source whose micro-batches split
-    into executor-side row-group-reading partitions. A restart
-    recovers the committed row offset from the checkpoint's offset
-    log and the source must RE-PLAN partitions for only the
-    uncommitted range: per-partition slices are derived from the
-    recovered offsets each batch, so resumption is exact even though
-    no individual partition is itself checkpointed (the
-    contiguous-slice planning contract, asserted in
-    tests/test_streaming.py). Bit-exact oracle match of the drained
-    complete-mode aggregate is the exactly-once evidence — a
-    partition re-read after the crash overcounts, a skipped
-    uncommitted range undercounts."""
-    out, _evidence = _run_restart_recovery(
-        spark, sf_dir, fmt="replay_part", extra_options={"numPartitions": 4}
-    )
+    """Checkpoint recovery × MULTI-PARTITION micro-batches (VERDICT r7
+    #8): q310's kill/restart protocol over q330's layout, where every
+    batch is 4 contiguous files read together as 4 scan tasks. A
+    restart recovers the committed log offset from the checkpoint and
+    the file source must plan only the files not yet in its log, 4 per
+    batch, so resumption is exact even though no individual file or
+    task is itself checkpointed. Bit-exact oracle match of the drained
+    complete-mode aggregate is the exactly-once evidence — a file
+    re-read after the crash overcounts, a skipped one undercounts."""
+    out, _evidence = _run_restart_recovery(spark, sf_dir, files_per_batch=4)
     return out
 
 
@@ -704,36 +706,37 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
     pattern that keeps per-trigger state small (10-min partials) while
     serving a coarser SLA rollup, without running two queries or
     re-reading the stream. Both levels run in append mode with one
-    event-time watermark; the replay source delivers rows in EVENT
-    TIME order (new `orderBy` option), which makes the 0-second
+    event-time watermark; the replay delivers rows in EVENT TIME
+    order (`replay_stream`'s ``order_by``), which makes the 0-second
     watermark drop-free, so the graded result is exactly the batch
     hourly census cut at the last finalized hour — any state lost
     between the chained operators, or a mis-propagated watermark,
     breaks the hash."""
-    stream = replay_stream(
-        spark, f"{sf_dir}/events.parquet", 10, orderBy="ts,event_id")
-    lvl1 = (
-        stream.withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "10 minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(quantize(F.col("value")).cast("decimal(38,0)")).alias("qs"),
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 10, order_by=("ts", "event_id")
+    ) as stream:
+        lvl1 = (
+            stream.withWatermark("ts", "0 seconds")
+            .groupBy(F.window("ts", "10 minutes"))
+            .agg(
+                F.count(F.lit(1)).alias("c"),
+                F.sum(quantize(F.col("value")).cast("decimal(38,0)")).alias("qs"),
+            )
         )
-    )
-    lvl2 = (
-        lvl1.groupBy(F.window(F.window_time("window"), "1 hour"))
-        .agg(
-            F.sum("c").alias("n_events"),
-            (F.sum("qs").cast("double") / F.lit(float(10 ** MONEY_SCALE)))
-            .alias("value_sum"),
+        lvl2 = (
+            lvl1.groupBy(F.window(F.window_time("window"), "1 hour"))
+            .agg(
+                F.sum("c").alias("n_events"),
+                (F.sum("qs").cast("double") / F.lit(float(10 ** MONEY_SCALE)))
+                .alias("value_sum"),
+            )
+            .select(
+                ts_str(F.col("window.start")).alias("window_start"),
+                "n_events",
+                "value_sum",
+            )
         )
-        .select(
-            ts_str(F.col("window.start")).alias("window_start"),
-            "n_events",
-            "value_sum",
-        )
-    )
-    return _drain_memory_sink(spark, lvl2, "chained", "append")
+        return _drain_memory_sink(spark, lvl2, "chained", "append")
 
 
 @register(
@@ -825,11 +828,13 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
         "value",
         F.md5(F.col("event_id").cast("string")).alias("_k"),
     )
-    with replay_file(spark, scrambled, ("_k", "event_id"),
-                     drop=("_k",)) as part:
+    with (
+        replay_file(spark, scrambled, ("_k", "event_id"),
+                    drop=("_k",)) as part,
+        replay_stream(spark, part, 40, min_rows=500) as stream,
+    ):
         agg = (
-            replay_stream(spark, part, 40, min_rows=500)
-            .withWatermark("ts", "2 hours")
+            stream.withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -882,26 +887,28 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
 
     ORDERING DEPENDENCY (ADVICE r6): when duplicates of a key CO-OCCUR
     in one micro-batch, `dropDuplicates` keeps whichever row its tasks
-    encounter first — "first ≡ min doc_id" then holds only because the
-    replay source emits a SINGLE ordered partition and Spark's shuffle
-    reads preserve per-mapper order, so the state store always meets
-    the lower doc_id first. A multi-partition source voids that
-    guarantee; the production form would pre-collapse each batch to
+    encounter first — "first ≡ min doc_id" then holds only because each
+    micro-batch is ONE file read as a single ordered scan partition and
+    Spark's shuffle reads preserve per-mapper order, so the state store
+    always meets the lower doc_id first. A multi-partition source voids
+    that guarantee; the production form would pre-collapse each batch to
     its min-doc_id row per key (deterministic reduce) before the
     stateful dedup. The single-partition replay contract is asserted
     by this query's bit-exact oracle match across ~20 batches."""
-    stream = replay_stream(spark, f"{sf_dir}/documents.parquet", 20, min_rows=50)
-    deduped = stream.select(
-        "doc_id", "lang", F.md5(F.expr("substring(text, 1, 100)")).alias("h")
-    ).dropDuplicates(["h"])
-    with drain_rows(spark, deduped) as kept:
-        result = kept.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_unique"),
-            F.sum("doc_id").alias("doc_id_sum"),
-            F.min("doc_id").alias("min_doc"),
-            F.max("doc_id").alias("max_doc"),
-        )
-        return spark.createDataFrame(result.collect(), result.schema)
+    with replay_stream(
+        spark, f"{sf_dir}/documents.parquet", 20, min_rows=50
+    ) as stream:
+        deduped = stream.select(
+            "doc_id", "lang", F.md5(F.expr("substring(text, 1, 100)")).alias("h")
+        ).dropDuplicates(["h"])
+        with drain_rows(spark, deduped) as kept:
+            result = kept.groupBy("lang").agg(
+                F.count(F.lit(1)).alias("n_unique"),
+                F.sum("doc_id").alias("doc_id_sum"),
+                F.min("doc_id").alias("min_doc"),
+                F.max("doc_id").alias("max_doc"),
+            )
+            return spark.createDataFrame(result.collect(), result.schema)
 
 
 @register(
@@ -953,8 +960,6 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.window import Window as _Win
 
-    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 25, min_rows=500)
-
     def _update(key, batches: Iterator[pd.DataFrame], state: GroupState):
         cnt, cents, ub = state.get if state.exists else (0, 0, 0)
         for pdf in batches:
@@ -975,29 +980,32 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
             }
         )
 
-    totals = stream.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType="user_id long, n_events long, value_cents long, "
-        "n_update_batches long",
-        stateStructType="cnt long, cents long, ub long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    with drain_rows(spark, totals, "update") as upd:
-        # `ub` increases by 1 on every emission for a key, so a user's
-        # last emission is the one with the largest n_update_batches
-        last = (
-            upd.withColumn(
-                "rn",
-                F.row_number().over(
-                    _Win.partitionBy("user_id")
-                    .orderBy(F.col("n_update_batches").desc())
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select("user_id", "n_events", "value_cents", "n_update_batches")
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 25, min_rows=500
+    ) as stream:
+        totals = stream.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
+            _update,
+            outputStructType="user_id long, n_events long, value_cents long, "
+            "n_update_batches long",
+            stateStructType="cnt long, cents long, ub long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        return spark.createDataFrame(last.collect(), last.schema)
+        with drain_rows(spark, totals, "update") as upd:
+            # `ub` increases by 1 on every emission for a key, so a user's
+            # last emission is the one with the largest n_update_batches
+            last = (
+                upd.withColumn(
+                    "rn",
+                    F.row_number().over(
+                        _Win.partitionBy("user_id")
+                        .orderBy(F.col("n_update_batches").desc())
+                    ),
+                )
+                .filter(F.col("rn") == 1)
+                .select("user_id", "n_events", "value_cents", "n_update_batches")
+            )
+            return spark.createDataFrame(last.collect(), last.schema)
 
 
 @register(
@@ -1023,17 +1031,19 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rank has full tie-breaks. The memory sink holds K rows,
     not the keyed state, so the driver footprint is K regardless of
     user cardinality."""
-    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 20, min_rows=500)
-    ranked = (
-        stream.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value")).alias("value_sum"),
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 20, min_rows=500
+    ) as stream:
+        ranked = (
+            stream.groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum(F.col("value")).alias("value_sum"),
+            )
+            .orderBy(F.col("n_events").desc(), F.col("user_id").asc())
+            .limit(10)
         )
-        .orderBy(F.col("n_events").desc(), F.col("user_id").asc())
-        .limit(10)
-    )
-    return _drain_memory_sink(spark, ranked, "topk")
+        return _drain_memory_sink(spark, ranked, "topk")
 
 
 @register(
@@ -1101,8 +1111,10 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
     the final watermark are still in the join state when the stream
     ends — exactly as in production, where they'd emit on the next
     day's data — and the oracle reproduces that strict cut."""
-    pur, err, cond = _stream_join_sides(spark, sf_dir)
-    with drain_rows(spark, pur.join(err, cond, "leftOuter")) as rows:
+    with (
+        _stream_join_sides(spark, sf_dir) as (pur, err, cond),
+        drain_rows(spark, pur.join(err, cond, "leftOuter")) as rows,
+    ):
         matched = (
             rows.filter(F.col("e_user").isNotNull())
             .groupBy(F.col("p_user").alias("u"))
@@ -1141,34 +1153,31 @@ GROUP BY date_trunc('hour', ts), event_type
     tags=("streaming", "true_stream", "datasource", "partitioned"),
 )
 def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE streaming through the PARTITIONED Python DataSource
-    (sources/replay_partitioned.py): each micro-batch's row range is
-    split into 4 executor-side partitions that open the parquet file
-    themselves and read only their overlapping row groups — the
-    production streaming-source shape (driver plans offsets, fleet
-    reads bytes), upgrading the simple replay source's documented
-    driver-side-IO limitation to the full DataSourceStreamReader
-    API. Windowed complete-mode aggregation across ~10 batches must
-    equal the batch oracle exactly; correctness is batch-slicing- AND
-    partition-slicing-invariant, so any row lost or duplicated at a
-    partition boundary breaks the hash."""
-    stream = replay_stream(
-        spark, f"{sf_dir}/events.parquet", 10, source="replay_part",
-        numPartitions=4)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value")).alias("value_sum"),
+    """TRUE streaming over MULTI-PARTITION micro-batches: each of the
+    ~10 batches is cut into 4 contiguous files, and the file source
+    reads 4 files per trigger (`replay_stream(files_per_batch=4)`), so
+    every batch runs as 4 scan tasks over disjoint row slices.
+    Windowed complete-mode aggregation must equal the batch oracle
+    exactly; correctness is batch-slicing- AND partition-slicing-
+    invariant, so any row lost or duplicated at a file boundary breaks
+    the hash."""
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 10, files_per_batch=4
+    ) as stream:
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum(F.col("value")).alias("value_sum"),
+            )
+            .select(
+                ts_str(F.col("window.start")).alias("window_start"),
+                "event_type",
+                "n_events",
+                "value_sum",
+            )
         )
-        .select(
-            ts_str(F.col("window.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-    return _drain_memory_sink(spark, agg, "replay_part")
+        return _drain_memory_sink(spark, agg, "replay_part")
 
 
 @register(
@@ -1224,10 +1233,9 @@ def _run_idempotent_sink_recovery(
     out_root = tempfile.mkdtemp(prefix="cli_spark_idem_out_")
     evidence: dict = {"crash_batch_id": _Q331_CRASH_BATCH, "phase2_batch_ids": []}
 
-    def start(sink):
+    def start(stream: DataFrame, sink):
         return (
-            replay_stream(spark, f"{sf_dir}/events.parquet", 10)
-            .select("event_id", "ts", "value")
+            stream.select("event_id", "ts", "value")
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .start()
@@ -1252,19 +1260,20 @@ def _run_idempotent_sink_recovery(
         write(batch_df, batch_id)
 
     try:
-        # phase 1: the sink crashes after writing the crash batch, so
-        # that batch is in the offset log but not the commit log
-        try:
-            run_stream(start(crashing_sink))
-        except StreamingQueryException as exc:
-            if "q331: simulated crash" not in str(exc):
-                raise
-        else:
-            raise RuntimeError("q331: phase 1 drained without the simulated crash")
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 10) as stream:
+            # phase 1: the sink crashes after writing the crash batch, so
+            # that batch is in the offset log but not the commit log
+            try:
+                run_stream(start(stream, crashing_sink))
+            except StreamingQueryException as exc:
+                if "q331: simulated crash" not in str(exc):
+                    raise
+            else:
+                raise RuntimeError("q331: phase 1 drained without the simulated crash")
 
-        # phase 2: restart from the checkpoint; the in-flight batch
-        # re-executes and OVERWRITES its own partition (idempotent)
-        run_stream(start(recording_sink))
+            # phase 2: restart from the checkpoint; the in-flight batch
+            # re-executes and OVERWRITES its own partition (idempotent)
+            run_stream(start(stream, recording_sink))
         rows = spark.read.parquet(out_root + "/rows")
         result = (
             rows.groupBy(F.window("ts", "1 hour"))
@@ -1301,9 +1310,12 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backfill + live-tail cutover — the lambda-architecture merge
     every pipeline runs when streaming starts against a table with
     history: the BATCH side owns the first 60% of events (by the
-    replay order), the STREAM side replays from 5 batches BEFORE the
-    cutover (a deliberate overlap window — in production you always
-    overlap rather than risk a gap), per-event rows land in a
+    replay order), the STREAM side replays from half a batch BEFORE
+    the cutover (a deliberate overlap window — in production you
+    always overlap rather than risk a gap): its batch files are cut
+    from that row on, at the full file's batch size, so the tail's
+    batches keep the same size as an unshifted replay's. Per-event
+    rows land in a
     distributed parquet sink, and the union dedupes the overlap by
     event_id before the census. The graded result must equal the
     full-history batch aggregation exactly: a gap undercounts, an
@@ -1369,13 +1381,15 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stream side: replay from BEFORE the cutover (overlap on purpose)
-    stream = replay_stream(spark, path, 10, startRow=overlap_start).select(
-        "event_id", "ts", "user_id", "value")
-    with drain_rows(spark, stream) as tail:
+    with (
+        replay_stream(spark, path, 10, start_row=overlap_start) as stream,
+        drain_rows(spark, stream.select(
+            "event_id", "ts", "user_id", "value")) as tail,
+    ):
         # The merge is gap-free iff the file's replay order equals
         # event_id order (first `cutover` file rows = smallest
         # `cutover` ids). Assert it instead of assuming it (ADVICE
-        # r7): the tail replays from file row `overlap_start`, so its
+        # r7): the tail's files are cut from row `overlap_start`, so its
         # min event_id must be the id at rank overlap_start.
         tail_min = tail.agg(F.min("event_id")).collect()[0][0]
         if tail_min != overlap_id:
@@ -1430,9 +1444,9 @@ FROM n CROSS JOIN h
 )
 def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Python DataSource WRITER (Spark 4
-    `DataSourceStreamWriter`) — the last cell of the custom-source
-    API matrix (batch read, simple + partitioned stream read, batch
-    write, STREAM write): events replay in ~10 micro-batches into the
+    `DataSourceStreamWriter`) — the stream-write cell of the
+    custom-source API matrix (batch read, batch write, STREAM write):
+    events replay in ~10 micro-batches into the
     checksum stream sink, whose executor tasks fold (count, 48-bit
     xor) commit messages and whose per-batch commit writes ONE
     manifest file named by batch id via atomic rename — a replayed
@@ -1453,14 +1467,14 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_root = tempfile.mkdtemp(prefix="q338_cks_")
     ckpt = tempfile.mkdtemp(prefix="q338_ckpt_")
     try:
-        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
-            F.col("event_id").cast("string").alias("k"))
-        run_stream(
-            stream.writeStream.format("checksum")
-            .option("path", out_root)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 10) as stream:
+            run_stream(
+                stream.select(F.col("event_id").cast("string").alias("k"))
+                .writeStream.format("checksum")
+                .option("path", out_root)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
         total, acc, n_batches = 0, 0, 0
         for f in sorted(_os.listdir(out_root)):
             if not f.startswith("batch_"):
@@ -1551,8 +1565,10 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     still inside the final watermark stay in state unemitted — the
     production steady-state — and the oracle reproduces both strict
     eviction cuts exactly."""
-    pur, err, cond = _stream_join_sides(spark, sf_dir)
-    with drain_rows(spark, pur.join(err, cond, "fullOuter")) as rows:
+    with (
+        _stream_join_sides(spark, sf_dir) as (pur, err, cond),
+        drain_rows(spark, pur.join(err, cond, "fullOuter")) as rows,
+    ):
         matched = (
             rows.filter(F.col("p_id").isNotNull() & F.col("e_id").isNotNull())
             .groupBy(F.col("p_user").alias("u"))
@@ -1624,19 +1640,19 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="q371_ckpt_")
     name = "ss_" + uuid.uuid4().hex[:8]
     try:
-        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 6)
-        agg = stream.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * (10 ** MONEY_SCALE)).cast("long"))
-            .alias("value_cents"),
-        )
-        run_stream(
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 6) as stream:
+            agg = stream.groupBy("event_type").agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.round(F.col("value") * (10 ** MONEY_SCALE)).cast("long"))
+                .alias("value_cents"),
+            )
+            run_stream(
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
         spark.catalog.dropTempView(name)
         md = spark.read.format("state-metadata").load(ckpt).collect()
         if len(md) != 1 or md[0]["operatorName"] != "stateStoreSave":
@@ -1692,7 +1708,6 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
     import shutil
     import tempfile
 
-    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 8)
     out_root = tempfile.mkdtemp(prefix="q383_pivot_")
     try:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1706,7 +1721,8 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
             )
             partial.write.mode("append").parquet(f"{out_root}/partials")
 
-        run_stream(stream.writeStream.foreachBatch(sink).start())
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 8) as stream:
+            run_stream(stream.writeStream.foreachBatch(sink).start())
         partials = spark.read.parquet(f"{out_root}/partials")
         types = ["click", "error", "purchase", "signup", "view"]
         pivoted = (
@@ -1783,20 +1799,21 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
             ((F.col("user_id") + F.col("version")) % 3).alias("tier"),
         )
     )
-    stream = replay_stream(spark, f"{sf_dir}/events.parquet", 8).withColumn(
-        "t_us", F.unix_micros("ts"))
-    enriched = stream.join(
-        dim,
-        (stream.user_id == dim.user_id)
-        & (F.col("t_us") >= F.col("from_us"))
-        & (F.col("t_us") < F.col("to_us")),
-        "inner",
-    ).select("tier", "value")
-    agg = enriched.groupBy("tier").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        dsum(F.col("value")).alias("value_sum"),
-    )
-    return _drain_memory_sink(spark, agg, "scd2").select(
+    with replay_stream(spark, f"{sf_dir}/events.parquet", 8) as src:
+        stream = src.withColumn("t_us", F.unix_micros("ts"))
+        enriched = stream.join(
+            dim,
+            (stream.user_id == dim.user_id)
+            & (F.col("t_us") >= F.col("from_us"))
+            & (F.col("t_us") < F.col("to_us")),
+            "inner",
+        ).select("tier", "value")
+        agg = enriched.groupBy("tier").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum(F.col("value")).alias("value_sum"),
+        )
+        sink = _drain_memory_sink(spark, agg, "scd2")
+    return sink.select(
         F.col("tier").cast("long").alias("tier"), "n_events", "value_sum"
     )
 
@@ -1898,34 +1915,27 @@ def q391_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and GC-hostile at 100 TB), while RocksDB keeps state off-heap on
     local SSD with incremental changelog checkpointing, which is why
     every large-scale deployment (and transformWithState) requires
-    it. Graded, not just unit-tested: the events table is re-laid as
-    six event-time-range files and streamed with
-    `maxFilesPerTrigger=1` (the FILE stream source's rate limit), so
-    the hourly census accumulates across >= 6 micro-batches of
+    it. Graded, not just unit-tested: the events table is replayed in
+    event-time order as six batch files (`replay_stream`, one file per
+    trigger), so the hourly census accumulates across 6 micro-batches of
     RocksDB get/put/commit cycles — a wrong provider wiring, a lost
     RocksDB commit, or a version rollback breaks the bit-exact match
     with the batch oracle. The run asserts RocksDB custom metrics in
     the final progress (proof the provider actually served the
     stateful operator) and restores the session's provider conf."""
-    import shutil
     import tempfile
 
-    e = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q391_rocksdb_")
     key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    try:
-        # six event-time-ordered range files -> six micro-batches
-        e.repartitionByRange(6, "ts", "event_id").write.parquet(tmp + "/in")
-        schema = spark.read.parquet(tmp + "/in").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(tmp + "/in")
-        )
+    with (
+        tempfile.TemporaryDirectory(prefix="q391_rocksdb_",
+                                    ignore_cleanup_errors=True) as tmp,
+        replay_stream(spark, f"{sf_dir}/events.parquet", 6,
+                      order_by=("ts", "event_id")) as stream,
+    ):
         agg = stream.groupBy(
             F.window("ts", "1 hour"), "event_type"
         ).agg(
@@ -1967,8 +1977,6 @@ def q391_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1997,7 +2005,7 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted in the output directory, and the graded read-back census
     still matches the batch oracle bit-exactly — a listing-based
     read would double-count the orphan's rows and break the hash.
-    Multi-batch (replay source, ~10 micro-batches), append mode."""
+    Multi-batch (`replay_stream`, ~10 micro-batches), append mode."""
     import glob as _glob
     import os
     import shutil
@@ -2006,15 +2014,15 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="q395_filesink_")
     out_dir = tmp + "/out"
     try:
-        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
-            "event_id", "event_type", "value")
-        run_stream(
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", tmp + "/ck")
-            .outputMode("append")
-            .start()
-        )
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 10) as stream:
+            run_stream(
+                stream.select("event_id", "event_type", "value")
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", tmp + "/ck")
+                .outputMode("append")
+                .start()
+            )
         if not os.path.isdir(out_dir + "/_spark_metadata"):
             raise RuntimeError("q395: file sink wrote no _spark_metadata log")
         # plant an orphan: copy a committed part file under an
@@ -2035,43 +2043,46 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@contextmanager
 def _stream_join_sides(spark: SparkSession, sf_dir: str):
-    """Purchase / error replay-source sides shared by the
-    stream-stream join-type matrix (q318 outer, q370 full outer,
-    q396 semi, q397 anti, q414's state reader): both streams replay
-    the same events file in ~10 micro-batches with a 2-hour watermark.
+    """Purchase / error replay sides shared by the stream-stream
+    join-type matrix (q318 outer, q370 full outer, q396 semi, q397
+    anti, q414's state reader): each side replays the events file from
+    its own directory in ~10 micro-batches with a 2-hour watermark, and
+    ``(pur, err, cond)`` is yielded while both directories exist.
     Each side carries every column a caller reads; the callers
     aggregate named columns, so the extra ones change no result."""
-
-    def src() -> DataFrame:
-        return replay_stream(spark, f"{sf_dir}/events.parquet", 10)
-
-    pur = (
-        src().filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
+    path = f"{sf_dir}/events.parquet"
+    with (
+        replay_stream(spark, path, 10) as pur_src,
+        replay_stream(spark, path, 10) as err_src,
+    ):
+        pur = (
+            pur_src.filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "2 hours")
+            .select(
+                F.col("event_id").alias("p_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("ts").alias("p_ts"),
+                F.col("value").alias("p_value"),
+            )
         )
-    )
-    err = (
-        src().filter(F.col("event_type") == "error")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("e_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-            F.col("value").alias("e_value"),
+        err = (
+            err_src.filter(F.col("event_type") == "error")
+            .withWatermark("ts", "2 hours")
+            .select(
+                F.col("event_id").alias("e_id"),
+                F.col("user_id").alias("e_user"),
+                F.col("ts").alias("e_ts"),
+                F.col("value").alias("e_value"),
+            )
         )
-    )
-    cond = (
-        (F.col("e_user") == F.col("p_user"))
-        & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
-        & (F.col("e_ts") <= F.col("p_ts"))
-    )
-    return pur, err, cond
+        cond = (
+            (F.col("e_user") == F.col("p_user"))
+            & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
+            & (F.col("e_ts") <= F.col("p_ts"))
+        )
+        yield pur, err, cond
 
 
 @register(
@@ -2112,8 +2123,10 @@ def q396_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grade censuses flagged purchases per user, which catches
     both failure modes: a per-match duplicate emission overcounts
     vs the DISTINCT oracle, a dropped match undercounts."""
-    pur, err, cond = _stream_join_sides(spark, sf_dir)
-    with drain_rows(spark, pur.join(err, cond, "leftSemi")) as rows:
+    with (
+        _stream_join_sides(spark, sf_dir) as (pur, err, cond),
+        drain_rows(spark, pur.join(err, cond, "leftSemi")) as rows,
+    ):
         res = rows.groupBy(F.col("p_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_flagged"),
             dsum(F.col("p_value")).alias("flagged_value_sum"),
@@ -2179,9 +2192,11 @@ def q397_streaming_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces the strict eviction cut exactly — an early emission
     (before the watermark proof) would be a false positive on any
     fixture where the match arrives late."""
-    pur, err, cond = _stream_join_sides(spark, sf_dir)
-    joined = pur.join(err, cond, "leftOuter").filter(F.col("e_id").isNull())
-    with drain_rows(spark, joined) as rows:
+    with (
+        _stream_join_sides(spark, sf_dir) as (pur, err, cond),
+        drain_rows(spark, pur.join(err, cond, "leftOuter")
+                   .filter(F.col("e_id").isNull())) as rows,
+    ):
         res = rows.groupBy(F.col("p_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_clean"),
             dsum(F.col("p_value")).alias("clean_value_sum"),
@@ -2242,44 +2257,45 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches) or never flushes them; both break the bit-exact match
     with the drained-to-exhaustion oracle."""
 
-    def src() -> DataFrame:
-        return replay_stream(
-            spark, f"{sf_dir}/events.parquet", 10, orderBy="ts,event_id")
-
-    pur = (
-        src().filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "0 seconds")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-    )
-    err = (
-        src().filter(F.col("event_type") == "error")
-        .withWatermark("ts", "0 seconds")
-        .select(
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-            F.col("value").alias("e_value"),
+    path, order = f"{sf_dir}/events.parquet", ("ts", "event_id")
+    with (
+        replay_stream(spark, path, 10, order_by=order) as pur_src,
+        replay_stream(spark, path, 10, order_by=order) as err_src,
+    ):
+        pur = (
+            pur_src.filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "0 seconds")
+            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
         )
-    )
-    joined = pur.join(
-        err,
-        (F.col("e_user") == F.col("p_user"))
-        & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
-        & (F.col("e_ts") <= F.col("p_ts")),
-        "inner",
-    )
-    hourly = (
-        joined.groupBy(F.window("p_ts", "1 hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            dsum(F.col("e_value")).alias("err_value_sum"),
+        err = (
+            err_src.filter(F.col("event_type") == "error")
+            .withWatermark("ts", "0 seconds")
+            .select(
+                F.col("user_id").alias("e_user"),
+                F.col("ts").alias("e_ts"),
+                F.col("value").alias("e_value"),
+            )
         )
-        .select(
-            ts_str(F.col("window.start")).alias("window_start"),
-            "n_pairs",
-            "err_value_sum",
+        joined = pur.join(
+            err,
+            (F.col("e_user") == F.col("p_user"))
+            & (F.col("e_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
+            & (F.col("e_ts") <= F.col("p_ts")),
+            "inner",
         )
-    )
-    return _drain_memory_sink(spark, hourly, "joinagg", "append")
+        hourly = (
+            joined.groupBy(F.window("p_ts", "1 hour"))
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                dsum(F.col("e_value")).alias("err_value_sum"),
+            )
+            .select(
+                ts_str(F.col("window.start")).alias("window_start"),
+                "n_pairs",
+                "err_value_sum",
+            )
+        )
+        return _drain_memory_sink(spark, hourly, "joinagg", "append")
 
 
 @register(
@@ -2313,9 +2329,6 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_root = tempfile.mkdtemp(prefix="q411_fanout_")
     try:
-        stream = replay_stream(spark, f"{sf_dir}/events.parquet", 10).select(
-            "event_id", "event_type", "value")
-
         def fanout(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.persist()
             try:
@@ -2324,7 +2337,10 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 batch_df.unpersist()
 
-        run_stream(stream.writeStream.foreachBatch(fanout).start())
+        with replay_stream(spark, f"{sf_dir}/events.parquet", 10) as stream:
+            run_stream(
+                stream.select("event_id", "event_type", "value")
+                .writeStream.foreachBatch(fanout).start())
 
         def census(path: str, prefix: str) -> DataFrame:
             return spark.read.parquet(path).groupBy("event_type").agg(
@@ -2400,16 +2416,15 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    pur, err, cond = _stream_join_sides(spark, sf_dir)
-    joined = pur.join(err, cond, "inner")
     ckpt = tempfile.mkdtemp(prefix="q414_ckpt_")
     try:
         # the join rows are never read: only the checkpoint's state is
-        run_stream(
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        with _stream_join_sides(spark, sf_dir) as (pur, err, cond):
+            run_stream(
+                pur.join(err, cond, "inner").writeStream.format("noop")
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
         left = (
             spark.read.format("statestore")
             .option("path", ckpt).option("joinSide", "left").load()

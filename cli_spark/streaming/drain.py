@@ -1,22 +1,36 @@
 """How the TRUE-stream queries replay their input and how they end.
 
+Every replay stream is Spark's own parquet file source over a
+directory of per-batch files. `replay_stream` reads the input parquet
+with pyarrow (no Spark job), sorts it when asked, and writes batch
+``b`` — rows ``[b * batch_rows, (b + 1) * batch_rows)`` — as
+``files_per_batch`` files with strictly increasing mtimes. The file
+source reads new files oldest first, ``maxFilesPerTrigger =
+files_per_batch`` at a time, so micro-batch ``b`` is exactly batch
+file group ``b``. The stream's schema is the Arrow table's, and
+timestamps are cast to UTC micros on the way.
+
 Entry points:
 
-* `replay_stream(spark, path, batches, *, min_rows=1, source="replay",
-  **options)` — every replay stream opens here: it registers the
-  source, reads ``n`` from the parquet footer, sets
-  ``batchRows = max(min_rows, ceil(n / batches))`` and passes the
-  source options through (``orderBy``, ``startRow``, ``endRow``,
-  ``numPartitions``). `replay_batch_rows` gives the same ``(n,
-  batch_rows)`` to callers that need the numbers.
+* `replay_stream(spark, path, batches, *, min_rows=1, order_by=(),
+  start_row=0, files_per_batch=1)` — context manager yielding the
+  stream of ``batch_rows = max(min_rows, ceil(n / batches))`` rows per
+  micro-batch (``n`` counts the whole file, also when the cut starts
+  at ``start_row``); the batch files are removed on exit.
+  `replay_batch_rows` gives the same ``(n, batch_rows)`` from the
+  footer to callers that need the numbers.
+* `replay_in_phases(..., first_batches, ...)` — the same, with only
+  the first ``first_batches`` batches on disk until the yielded
+  ``cut_rest()`` writes the others: the restart queries' (q310/q352)
+  deterministic mid-stream stop.
 * `drain_rows(spark, stream, output_mode="append")` — the per-row
   (fact-grain) drain: the stream runs into a foreachBatch sink that
   appends each micro-batch to parquet in a temp dir, and the rows are
   yielded read back; the dir is removed on exit.
 * `replay_file(spark, rows, order_by, drop=())` — the sorted replay
-  prep: one single-file parquet of ``rows`` in ``order_by`` order,
-  yielded as its path and removed on exit (q279, q453 and the sketch
-  streams).
+  prep for a DataFrame input: one single-file parquet of ``rows`` in
+  ``order_by`` order, yielded as its path and removed on exit (q279,
+  q453 and the sketch streams).
 * `replay_partials(spark, rows, order_by, partial_of, drop=())` — the
   mergeable-sketch streams (q473/q476/q479/q481/q486/q491/q493/q496/
   q500): `replay_file`, `replay_stream` at ``N_BATCHES`` and
@@ -52,6 +66,7 @@ import glob
 import os
 import shutil
 import tempfile
+import time
 from collections.abc import Iterator
 from contextlib import contextmanager
 from typing import Callable
@@ -200,37 +215,115 @@ def replay_batch_rows(path: str, batches: int, min_rows: int = 1) -> tuple[int, 
     return n, max(min_rows, -(-n // batches))
 
 
+def _replay_table(path: str, order_by: tuple[str, ...]):
+    """The parquet file (or directory) ``path`` as one Arrow table in
+    replay order: sorted by ``order_by`` (a stable sort, so ties keep
+    file order), with every timestamp cast to UTC micros. The cast
+    truncates nanos, as the batch loader's ``ts div 1000`` does, and
+    makes the stream read the file's naive values as UTC instants."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(path)
+    if order_by:
+        tbl = tbl.sort_by([(c, "ascending") for c in order_by])
+    for i, field in enumerate(tbl.schema):
+        if pa.types.is_timestamp(field.type):
+            tbl = tbl.set_column(i, field.name, pc.cast(
+                tbl.column(i), pa.timestamp("us", tz="UTC"), safe=False))
+    return tbl
+
+
+def _cut_batches(tbl, out_dir: str, batch_rows: int, files_per_batch: int,
+                 batches: range, t0_ms: int) -> None:
+    """Write batches ``batches`` of ``tbl`` into ``out_dir``: batch
+    ``b`` is rows ``[b * batch_rows, (b + 1) * batch_rows)``, cut into
+    ``files_per_batch`` contiguous files (some empty when the batch has
+    fewer rows). File ``i`` in batch order gets mtime ``t0_ms + i`` ms,
+    strictly increasing, which is the order the file source reads new
+    files in."""
+    import pyarrow.parquet as pq
+
+    for b in batches:
+        lo = b * batch_rows
+        size = min(batch_rows, tbl.num_rows - lo)
+        for k in range(files_per_batch):
+            i = b * files_per_batch + k
+            a = lo + size * k // files_per_batch
+            z = lo + size * (k + 1) // files_per_batch
+            f = os.path.join(out_dir, f"{i:06d}.parquet")
+            pq.write_table(tbl.slice(a, z - a), f)
+            os.utime(f, ns=((t0_ms + i) * 1_000_000,) * 2)
+
+
+@contextmanager
+def replay_in_phases(
+    spark: SparkSession,
+    path: str,
+    batches: int,
+    first_batches: int | None,
+    *,
+    min_rows: int = 1,
+    order_by: tuple[str, ...] = (),
+    start_row: int = 0,
+    files_per_batch: int = 1,
+) -> Iterator[tuple[DataFrame, Callable[[], None]]]:
+    """Cut the parquet ``path`` into one directory of per-batch files
+    (`replay_stream` states the layout) and yield ``(stream,
+    cut_rest)``. Only batches ``0..first_batches-1`` are on disk on
+    entry (all of them when ``first_batches`` is None); ``cut_rest()``
+    writes the others into the same directory, where a restart from
+    the stream's checkpoint picks them up. The directory is removed on
+    exit, also when the body raises, so the stream must not outlive
+    the block. No Spark job runs here: the cut is pyarrow, and the
+    stream's schema is the Arrow table's."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    tbl = _replay_table(path, order_by)
+    batch_rows = max(min_rows, -(-tbl.num_rows // batches))
+    tbl = tbl.slice(start_row)
+    n_batches = -(-tbl.num_rows // batch_rows)
+    split = n_batches if first_batches is None else min(first_batches, n_batches)
+    # the newest file gets an mtime near now: the file source's
+    # maxFileAge counts back from the newest file it has seen
+    t0_ms = time.time_ns() // 1_000_000 - n_batches * files_per_batch
+    tmp = tempfile.mkdtemp(prefix="replay_stream_")
+    try:
+        _cut_batches(tbl, tmp, batch_rows, files_per_batch, range(split), t0_ms)
+        stream = (
+            spark.readStream.schema(from_arrow_schema(tbl.schema))
+            .option("maxFilesPerTrigger", files_per_batch)
+            .parquet(tmp)
+        )
+        yield stream, lambda: _cut_batches(
+            tbl, tmp, batch_rows, files_per_batch, range(split, n_batches), t0_ms)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
 def replay_stream(
     spark: SparkSession,
     path: str,
     batches: int,
     *,
     min_rows: int = 1,
-    source: str = "replay",
-    **options,
-) -> DataFrame:
-    """Open the parquet file ``path`` as a replay stream of
-    ``batchRows = max(min_rows, ceil(n / batches))`` rows per
-    micro-batch (`replay_batch_rows`). ``source`` is ``"replay"`` (the
-    driver-side simple reader) or ``"replay_part"`` (the partitioned
-    reader); ``options`` go to the source unchanged (``orderBy``,
-    ``startRow``, ``endRow``, ``numPartitions``)."""
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.sources.replay_partitioned import register_replay_partitioned
-
-    register = {
-        "replay": register_replay_source,
-        "replay_part": register_replay_partitioned,
-    }[source]
-    register(spark)
-    _, batch_rows = replay_batch_rows(path, batches, min_rows)
-    return (
-        spark.readStream.format(source)
-        .option("path", path)
-        .option("batchRows", batch_rows)
-        .options(**options)
-        .load()
-    )
+    order_by: tuple[str, ...] = (),
+    start_row: int = 0,
+    files_per_batch: int = 1,
+) -> Iterator[DataFrame]:
+    """Yield the parquet file ``path`` replayed as a stream of
+    ``batch_rows = max(min_rows, ceil(n / batches))`` rows per
+    micro-batch (`replay_batch_rows`), in ``order_by`` order, from row
+    ``start_row`` on. Each batch is ``files_per_batch`` files of Spark's
+    file source, read ``maxFilesPerTrigger = files_per_batch`` at a
+    time; the files are removed on exit (`replay_in_phases`)."""
+    with replay_in_phases(
+        spark, path, batches, None, min_rows=min_rows, order_by=order_by,
+        start_row=start_row, files_per_batch=files_per_batch,
+    ) as (stream, _):
+        yield stream
 
 
 @contextmanager
@@ -270,7 +363,7 @@ def replay_file(
     the ``drop`` columns, and yield its path. The temp dir is removed
     on exit, also when the body raises.
 
-    The file is the replay source's input: `replay` reads one file in
+    The file is `replay_stream`'s input, which cuts it into batches in
     row order, so the sort here IS the stream's arrival order
     (repartition(1) + an in-partition sort — no driver collect, no
     global range exchange)."""
@@ -307,8 +400,8 @@ def replay_partials(
     ``nb`` CTEs. The temp file is gone by the time this returns; the
     partials never reference it.
 
-    Batch identity: the source cuts the file into consecutive
-    ``batch_rows``-row slices, and `drain_partials` checks that the
+    Batch identity: `replay_stream` cuts the file into consecutive
+    ``batch_rows``-row batch files, and `drain_partials` checks that the
     batches carrying rows are numbered ``0..k-1``, so batch
     ``batch_id`` holds rows ``[batch_id * batch_rows,
     (batch_id + 1) * batch_rows)`` of the sorted file and
@@ -321,8 +414,10 @@ def replay_partials(
     ``n_batches``. ``n_batches`` never comes from the partials, whose
     batches can be empty (q479: an all-singleton batch has no
     Misra-Gries counter)."""
-    with replay_file(spark, rows, order_by, drop) as path:
+    with (
+        replay_file(spark, rows, order_by, drop) as path,
+        replay_stream(spark, path, N_BATCHES) as stream,
+    ):
         n, batch_rows = replay_batch_rows(path, N_BATCHES)
-        parts = drain_partials(
-            spark, replay_stream(spark, path, N_BATCHES), partial_of)
+        parts = drain_partials(spark, stream, partial_of)
     return parts, n, batch_rows, -(-n // batch_rows)

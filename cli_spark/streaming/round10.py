@@ -78,47 +78,52 @@ def q425_multiwatermark_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as graded here (and 'max' is how you trade its late data
     for latency). Both runs replay event-time-ordered, so the 'min'
     run is drop-free and bit-exact vs the oracle."""
-    def census(policy: str) -> DataFrame:
-        def side(parity: int, delay: str) -> DataFrame:
-            return (
-                replay_stream(
-                    spark, f"{sf_dir}/events.parquet", 8, orderBy="ts,event_id")
-                .filter(F.col("event_id") % 2 == parity)
-                .withWatermark("ts", delay)
-            )
+    path, order = f"{sf_dir}/events.parquet", ("ts", "event_id")
 
-        u = side(0, "0 seconds").unionByName(side(1, "2 hours"))
-        agg = (
-            u.groupBy(F.window("ts", "1 hour"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                (F.sum(quantize(F.col("value")).cast("decimal(38,0)"))
-                 .cast("double") / F.lit(float(10 ** MONEY_SCALE)))
-                .alias("value_sum"),
+    def census(policy: str) -> DataFrame:
+        # one replay directory per side
+        with (
+            replay_stream(spark, path, 8, order_by=order) as even,
+            replay_stream(spark, path, 8, order_by=order) as odd,
+        ):
+            u = (
+                even.filter(F.col("event_id") % 2 == 0)
+                .withWatermark("ts", "0 seconds")
+                .unionByName(
+                    odd.filter(F.col("event_id") % 2 == 1)
+                    .withWatermark("ts", "2 hours"))
             )
-            .select(
-                ts_str(F.col("window.start")).alias("window_start"),
-                "n_events",
-                "value_sum",
+            agg = (
+                u.groupBy(F.window("ts", "1 hour"))
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    (F.sum(quantize(F.col("value")).cast("decimal(38,0)"))
+                     .cast("double") / F.lit(float(10 ** MONEY_SCALE)))
+                    .alias("value_sum"),
+                )
+                .select(
+                    ts_str(F.col("window.start")).alias("window_start"),
+                    "n_events",
+                    "value_sum",
+                )
             )
-        )
-        key = "spark.sql.streaming.multipleWatermarkPolicy"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, policy)
-        try:
-            name = f"q425_{policy}_{_uuid.uuid4().hex[:8]}"
-            run_stream(
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            return collect_memory_sink(spark, name)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+            key = "spark.sql.streaming.multipleWatermarkPolicy"
+            prev = spark.conf.get(key, None)
+            spark.conf.set(key, policy)
+            try:
+                name = f"q425_{policy}_{_uuid.uuid4().hex[:8]}"
+                run_stream(
+                    agg.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("append")
+                    .start()
+                )
+                return collect_memory_sink(spark, name)
+            finally:
+                if prev is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, prev)
 
     min_out = census("min")
     max_out = census("max")
@@ -193,25 +198,28 @@ def q426_state_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from cli_spark.streaming.round10_handlers import session_timeout_handler
 
-    stream = (
-        replay_stream(spark, f"{sf_dir}/events.parquet", 8, orderBy="ts,event_id")
-        .select("user_id", "ts")
-        .withWatermark("ts", "0 seconds")
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        session_timeout_handler,
-        outputStructType="user_id long, n_rows long, t0_us long, t1_us long",
-        stateStructType="t0_us long, t1_us long, n_rows long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
     name = f"q426_{_uuid.uuid4().hex[:8]}"
-    run_stream(
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
+    with replay_stream(
+        spark, f"{sf_dir}/events.parquet", 8, order_by=("ts", "event_id")
+    ) as stream:
+        sessions = (
+            stream.select("user_id", "ts")
+            .withWatermark("ts", "0 seconds")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                session_timeout_handler,
+                outputStructType="user_id long, n_rows long, t0_us long, t1_us long",
+                stateStructType="t0_us long, t1_us long, n_rows long",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+        )
+        run_stream(
+            sessions.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .start()
+        )
     raw = collect_memory_sink(spark, name)
     return (
         raw.groupBy((F.col("user_id") % 10).alias("user_bucket"))

@@ -2,7 +2,8 @@
 end-to-end over TRUE micro-batches.
 
 The operator's protocol was pinned EMPIRICALLY against Spark 4.1.2
-this round, through the same replay source the graded query uses.
+through the same replay input the graded query uses
+(`drain.replay_stream`).
 The seven committed regression pins in tests/test_streaming_ddww.py
 each assert one clause below (two-batch lag, strict late filter at
 equality AND survival just above the watermark, live-state dedup
@@ -155,7 +156,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     evicted. Every boundary — the TWO-batch watermark lag, the strict
     late filter, the non-strict eviction, no expiry extension by
     dropped duplicates — was pinned empirically against Spark 4.1.2
-    through this same replay source (module docstring;
+    through this same replay input (module docstring;
     tests/test_streaming_ddww.py keeps the probes as regression
     pins)."""
     import tempfile
@@ -192,11 +193,11 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
                                     ignore_cleanup_errors=True) as out_root,
         replay_file(spark, echoed, ("arr_us", "event_id", "copy"),
                     drop=("arr_us", "copy")) as part,
+        # ~40 batches over both copies
+        replay_stream(spark, part, 40) as stream,
     ):
         deduped = (
-            # ~40 batches over both copies
-            replay_stream(spark, part, 40)
-            .withWatermark("ts", f"{delay_us} microseconds")
+            stream.withWatermark("ts", f"{delay_us} microseconds")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "event_type")
         )
@@ -226,14 +227,8 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
                 .parquet(f"{out_root}/emitted")
             )
 
-        # default trigger + processAllAvailable, NOT availableNow:
-        # PythonMicroBatchStream implements neither
-        # SupportsAdmissionControl nor SupportsTriggerAvailableNow
-        # (verified against the Spark 4.1.2 class), so an
-        # available-now run goes through the wrapper, snapshots
-        # latestOffset ONCE and folds everything into batch 0 —
-        # the default trigger drains it batchRows at a time
-        # (~40 real micro-batches).
+        # default trigger + processAllAvailable: the file source
+        # reads one batch file per trigger (~40 real micro-batches)
         # scoped_shuffle_partitions: the stateful dedup creates one
         # state store per shuffle partition and re-pays that
         # per-partition fixed cost EVERY batch — size it to the

@@ -1,9 +1,11 @@
 """Focused tests for cli_spark.streaming.drain — opening a replay
-stream (`replay_stream`), the per-row drain (`drain_rows`), the replay
-prep (`replay_file`), the sketch streams' drain (`drain_partials`,
-`replay_partials`) and the stream ending (`run_stream`). Asserts the
-helpers' contracts directly: the batch sizing and the source options
-reach the stream, every batch's rows or partial rows survive, the
+stream (`replay_stream`, `replay_in_phases`), the per-row drain
+(`drain_rows`), the replay prep (`replay_file`), the sketch streams'
+drain (`drain_partials`, `replay_partials`) and the stream ending
+(`run_stream`). Asserts the helpers' contracts directly: the batch
+sizing, order, start row and phase cut reach the stream, its schema
+and rows equal a batch read of the file, every batch's rows or
+partial rows survive, the
 schema is the stream's (or the partial plan's plus the ``batch_id``
 tag the drain adds), batch ids tag rows correctly across >= 2 real
 micro-batches, NULL group keys merge like any other key, the batch
@@ -22,13 +24,13 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from cli_spark.sources.replay_datasource import register_replay_source
 import cli_spark.streaming.drain as drain
 from cli_spark.streaming.drain import (
     drain_partials,
     drain_rows,
     replay_batch_rows,
     replay_file,
+    replay_in_phases,
     replay_partials,
     replay_row_count,
     replay_stream,
@@ -51,19 +53,13 @@ def replay_part(spark):
 
 
 def test_drain_partials_accumulates_every_batch(spark, replay_part):
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", replay_part)
-        .option("batchRows", 25)  # 97 rows -> 4 micro-batches
-        .load()
-    )
-
     def partial_of(batch_df, batch_id):
         return batch_df.groupBy("grp").agg(
             F.count(F.lit(1)).cast("long").alias("c"))
 
-    parts = drain_partials(spark, stream, partial_of)
+    # 97 rows -> 4 micro-batches of 25
+    with replay_stream(spark, replay_part, 4) as stream:
+        parts = drain_partials(spark, stream, partial_of)
     rows = parts.collect()
     batch_ids = sorted({r["batch_id"] for r in rows})
     assert len(batch_ids) >= 2, "must see multiple real micro-batches"
@@ -87,14 +83,6 @@ def test_replay_row_count_matches_spark_count(spark, replay_part):
 def test_drain_partials_keeps_empty_partials(spark, replay_part):
     """A batch whose partial is EMPTY (the q479 Misra-Gries case)
     contributes no rows but must not break accumulation or schema."""
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", replay_part)
-        .option("batchRows", 40)
-        .load()
-    )
-
     def partial_of(batch_df, batch_id):
         # drop everything from odd batches — an always-empty partial
         return (
@@ -103,7 +91,9 @@ def test_drain_partials_keeps_empty_partials(spark, replay_part):
             .filter(F.lit(batch_id % 2 == 0))
         )
 
-    parts = drain_partials(spark, stream, partial_of)
+    # batches of 40 rows
+    with replay_stream(spark, replay_part, 4, min_rows=40) as stream:
+        parts = drain_partials(spark, stream, partial_of)
     ids = {r["batch_id"] for r in parts.collect()}
     assert ids and all(i % 2 == 0 for i in ids)
 
@@ -117,20 +107,16 @@ def test_drain_partials_rejects_fact_grain_streams(spark, replay_part, monkeypat
     import cli_spark.streaming.drain as drain_mod
 
     monkeypatch.setattr(drain_mod, "MAX_PARTIAL_ROWS_PER_BATCH", 10)
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", replay_part)
-        .option("batchRows", 25)
-        .load()
-    )
 
     def fact_grain(batch_df, batch_id):
         return batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
 
     from pyspark.errors import StreamingQueryException
 
-    with pytest.raises((ValueError, StreamingQueryException), match="sketch-grain"):
+    with (
+        replay_stream(spark, replay_part, 4) as stream,
+        pytest.raises((ValueError, StreamingQueryException), match="sketch-grain"),
+    ):
         drain_mod.drain_partials(spark, stream, fact_grain)
 
 
@@ -154,16 +140,10 @@ def test_run_stream_empty_source_returns_empty_sink(spark, empty_replay_part):
 
     from cli_spark.streaming.drain import collect_memory_sink, run_stream
 
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", empty_replay_part)
-        .option("batchRows", 25)
-        .load()
-    )
     name = "empty_" + uuid.uuid4().hex[:6]
     t0 = time.monotonic()
-    run_stream(stream.writeStream.format("memory").queryName(name).start())
+    with replay_stream(spark, empty_replay_part, 4) as stream:
+        run_stream(stream.writeStream.format("memory").queryName(name).start())
     assert time.monotonic() - t0 < 60
     out = collect_memory_sink(spark, name)
     assert out.count() == 0
@@ -173,14 +153,10 @@ def test_run_stream_empty_source_returns_empty_sink(spark, empty_replay_part):
 def test_drain_partials_rejects_empty_stream(spark, empty_replay_part):
     """The same zero-row file through drain_partials runs no
     micro-batch, so there is no partial schema to return."""
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", empty_replay_part)
-        .option("batchRows", 25)
-        .load()
-    )
-    with pytest.raises(RuntimeError, match="delivered no micro-batch"):
+    with (
+        replay_stream(spark, empty_replay_part, 4) as stream,
+        pytest.raises(RuntimeError, match="delivered no micro-batch"),
+    ):
         drain_partials(spark, stream, lambda df, _bid: df)
 
 
@@ -300,11 +276,11 @@ def _batches_of(stream) -> dict[int, list[int]]:
                          [(4, 1, 25), (4, 40, 40), (2, 1, 49)])
 def test_replay_stream_sizes_batches(spark, replay_part, batches, min_rows,
                                      batch_rows):
-    """``batchRows = max(min_rows, ceil(n / batches))``, and the 97-row
+    """``batch_rows = max(min_rows, ceil(n / batches))``, and the 97-row
     file arrives as ``ceil(n / batch_rows)`` consecutive data batches."""
     assert replay_batch_rows(replay_part, batches, min_rows) == (97, batch_rows)
-    seen = _batches_of(
-        replay_stream(spark, replay_part, batches, min_rows=min_rows))
+    with replay_stream(spark, replay_part, batches, min_rows=min_rows) as stream:
+        seen = _batches_of(stream)
     assert sorted(seen) == list(range(-(-97 // batch_rows)))
     assert [seen[b] for b in sorted(seen)] == [
         list(range(lo, min(lo + batch_rows, 97)))
@@ -312,25 +288,40 @@ def test_replay_stream_sizes_batches(spark, replay_part, batches, min_rows,
 
 
 def test_replay_stream_honours_order_by_and_end_row(spark, replay_part):
-    seen = _batches_of(
-        replay_stream(spark, replay_part, 4, orderBy="grp,id", endRow=50))
-    got = [i for b in sorted(seen) for i in seen[b]]
-    assert got == sorted(range(97), key=lambda i: (i % 7, i))[:50]
+    """``order_by`` sets the arrival order. With only the first two
+    batches cut (`replay_in_phases`), the stream ends at row
+    ``2 * batch_rows`` = 50; with ``start_row`` the cut starts there and
+    keeps the full file's batch size."""
+    order = sorted(range(97), key=lambda i: (i % 7, i))
+    with replay_in_phases(
+        spark, replay_part, 4, 2, order_by=("grp", "id")
+    ) as (stream, _):
+        seen = _batches_of(stream)
+    assert [i for b in sorted(seen) for i in seen[b]] == order[:50]
+
+    with replay_stream(
+        spark, replay_part, 4, order_by=("grp", "id"), start_row=47
+    ) as stream:
+        seen = _batches_of(stream)
+    assert [seen[b] for b in sorted(seen)] == [order[47:72], order[72:]]
 
 
 def test_drain_rows_returns_the_streams_rows(spark, replay_part):
-    stream = replay_stream(spark, replay_part, 4)
-    with drain_rows(spark, stream) as rows:
+    with (
+        replay_stream(spark, replay_part, 4) as stream,
+        drain_rows(spark, stream) as rows,
+    ):
         got = sorted((r["id"], r["grp"]) for r in rows.collect())
         assert rows.schema == stream.schema
     assert got == [(i, i % 7) for i in range(97)]
 
 
 def test_drain_rows_empty_stream_keeps_schema(spark, replay_part):
-    stream = replay_stream(spark, replay_part, 4).filter(F.col("id") < 0)
-    with drain_rows(spark, stream) as rows:
-        assert rows.count() == 0
-        assert rows.schema == stream.schema
+    with replay_stream(spark, replay_part, 4) as src:
+        stream = src.filter(F.col("id") < 0)
+        with drain_rows(spark, stream) as rows:
+            assert rows.count() == 0
+            assert rows.schema == stream.schema
 
 
 @pytest.mark.parametrize("fail", ["body", "stream"])
@@ -341,18 +332,67 @@ def test_drain_rows_removes_dir_on_exit_and_on_error(
     from pyspark.errors import StreamingQueryException
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    with drain_rows(spark, replay_stream(spark, replay_part, 2)) as rows:
+    with (
+        replay_stream(spark, replay_part, 2) as stream,
+        drain_rows(spark, stream) as rows,
+    ):
         assert rows.count() == 97
         assert list(tmp_path.glob("drain_rows_*"))
     assert not list(tmp_path.glob("drain_rows_*"))
 
-    stream = replay_stream(spark, replay_part, 2)
-    if fail == "stream":
-        stream = stream.select(F.raise_error(F.lit("stream failed")))
-    with pytest.raises((ValueError, StreamingQueryException), match="failed"):
-        with drain_rows(spark, stream):
-            raise ValueError("body failed")
+    with replay_stream(spark, replay_part, 2) as stream:
+        if fail == "stream":
+            stream = stream.select(F.raise_error(F.lit("stream failed")))
+        with pytest.raises((ValueError, StreamingQueryException), match="failed"):
+            with drain_rows(spark, stream):
+                raise ValueError("body failed")
     assert not list(tmp_path.glob("drain_rows_*"))
+
+
+def test_replay_stream_removes_dir_on_exit_and_on_error(
+        spark, replay_part, tmp_path, monkeypatch):
+    """The batch files exist inside the block and are gone after a
+    normal exit and after the body raises."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with replay_stream(spark, replay_part, 4):
+        [d] = tmp_path.glob("replay_stream_*")
+        assert len(list(d.glob("*.parquet"))) == 4
+    assert not list(tmp_path.glob("replay_stream_*"))
+    with pytest.raises(ValueError, match="body failed"):
+        with replay_stream(spark, replay_part, 4):
+            raise ValueError("body failed")
+    assert not list(tmp_path.glob("replay_stream_*"))
+
+
+def test_replay_stream_schema_matches_batch_read(spark, tmp_path):
+    """The stream's schema and rows equal ``spark.read.parquet`` of the
+    same file for types beyond long/int/double/string: date, int16,
+    decimal(10,2), a nullable int64 with NULLs and a UTC timestamp."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "types.parquet")
+    pq.write_table(pa.table({
+        "d": pa.array([datetime.date(2024, 1, i) for i in range(1, 8)],
+                      pa.date32()),
+        "s": pa.array(range(7), pa.int16()),
+        "m": pa.array([decimal.Decimal(f"{i}.25") for i in range(7)],
+                      pa.decimal128(10, 2)),
+        "n": pa.array([1, None, 3, None, 5, 6, None], pa.int64()),
+        "ts": pa.array([datetime.datetime(2024, 1, 1, i) for i in range(7)],
+                       pa.timestamp("us", tz="UTC")),
+    }), path)
+    want = spark.read.parquet(path)
+    with replay_stream(spark, path, 3) as stream:
+        assert stream.schema == want.schema
+        seen: dict = {}
+        run_stream(stream.writeStream.foreachBatch(
+            lambda df, bid: seen.setdefault(bid, df.collect())).start())
+    assert [len(seen[b]) for b in sorted(seen)] == [3, 3, 1]
+    assert [r for b in sorted(seen) for r in seen[b]] == want.collect()
 
 
 _CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"

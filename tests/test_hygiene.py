@@ -82,19 +82,24 @@ def test_no_polling_sleeps_in_streaming():
     assert not hits, "sleep() calls outside the allow-list:\n" + "\n".join(hits)
 
 
-# Replay streams open through drain.replay_stream: only drain.py and
-# the sources themselves register the replay sources or name them in
-# a reader's .format(...).
-REPLAY_REGISTRARS = {"register_replay_source", "register_replay_partitioned"}
+# Replay streams open through drain.replay_stream, which cuts the input
+# into per-batch files for Spark's file source and owns the only
+# maxFilesPerTrigger: no module names the deleted Python replay sources
+# (a `.format("replay"|"replay_part")` or a `register_replay_*` call),
+# and no module outside drain.py rate-limits a file stream itself.
 REPLAY_FORMATS = {"replay", "replay_part"}
 
 
 def _opens_replay_stream(node) -> bool:
+    if isinstance(node, ast.keyword):
+        return (node.arg or "").lower() == "maxfilespertrigger"
+    if isinstance(node, ast.Constant):
+        return str(node.value).lower() == "maxfilespertrigger"
     if not isinstance(node, ast.Call):
         return False
     f = node.func
     name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-    if name in REPLAY_REGISTRARS:
+    if (name or "").startswith("register_replay"):
         return True
     return (
         name == "format"
@@ -105,14 +110,15 @@ def _opens_replay_stream(node) -> bool:
 
 
 def test_replay_streams_open_through_drain():
-    allowed = {REPO / "cli_spark/streaming/drain.py"}
+    drain = REPO / "cli_spark/streaming/drain.py"
     hits: list[str] = []
     for path in sorted(REPO.glob("cli_spark/**/*.py")):
-        if path in allowed or "sources" in path.relative_to(REPO / "cli_spark").parts:
-            continue
         tree = ast.parse(path.read_text(encoding="utf-8"))
         for node in ast.walk(tree):
-            if _opens_replay_stream(node):
+            if not _opens_replay_stream(node):
+                continue
+            is_call = isinstance(node, ast.Call)
+            if path != drain or is_call:
                 hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not hits, (
         "replay stream opened outside drain.replay_stream:\n" + "\n".join(hits))

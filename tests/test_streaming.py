@@ -572,7 +572,7 @@ def test_stateful_event_time_timeout_expiry(spark, stream_dir):
 
 
 def test_replay_source_multibatch_equals_batch(spark, sf_dir):
-    """The replay Python DataSource must deliver the events table in
+    """`drain.replay_stream` must deliver the events table in
     MULTIPLE micro-batches (the single-file testdata otherwise
     arrives in one batch and cross-batch semantics go unexercised)
     and the streamed windowed aggregate must equal the batch result
@@ -581,30 +581,23 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import run_stream
+    from cli_spark.streaming.drain import replay_stream, run_stream
     from cli_spark.tables import load_table
 
-    register_replay_source(spark)
     path = f"{sf_dir}/events.parquet"
     batch_total = load_table(spark, sf_dir, "events").count()
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", path)
-        .option("batchRows", 400)
-        .load()
-    )
-    agg = stream.groupBy(F.window("ts", "1 hour")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
     name = "replay_mb_" + uuid.uuid4().hex[:6]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    run_stream(q)
+    with replay_stream(spark, path, 3) as stream:
+        agg = stream.groupBy(F.window("ts", "1 hour")).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .start()
+        )
+        run_stream(q)
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) >= 2, "replay must split into micro-batches"
     assert sum(p["numInputRows"] for p in data_batches) == batch_total
@@ -619,10 +612,10 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
 
 
 def test_replay_restart_recovery_midstream(spark, sf_dir):
-    """VERDICT r6 #8: kill a checkpointed replay-source query
-    MID-STREAM and restart it from the same checkpoint — the restart
-    must resume from the recorded offset (not silently re-run from
-    row 0) and the final result must be bit-identical to the
+    """VERDICT r6 #8: kill a checkpointed replay query MID-STREAM and
+    restart it from the same checkpoint — the restart must resume
+    from the recorded file-source log offset (not silently re-run
+    from batch 0) and the final result must be bit-identical to the
     uninterrupted batch aggregation (state recovered + no batch
     double-counted = exactly-once)."""
     from cli_spark.streaming.batch_windows import _run_restart_recovery
@@ -636,14 +629,13 @@ def test_replay_restart_recovery_midstream(spark, sf_dir):
 
     # phase 2 resumed from a COMMITTED nonzero offset: genuine
     # recovery, not a fresh start (phase 1 must also have stopped
-    # before the end, or the "restart" proves nothing). Phase 1's
-    # source runs dry at endRow = 2 batches, so the stop point is
+    # before the end, or the "restart" proves nothing). Phase 1 sees
+    # only the files of batches 0 and 1, so the stop point is
     # deterministic and this evidence is asserted on every run.
-    assert ev["phase2_start_row"] == 2 * ev["batch_rows"], ev
-    assert ev["phase1_events"] == ev["phase2_start_row"], ev
-    assert ev["phase2_start_row"] > 0, ev
-    assert ev["phase1_events"] < got_total, ev
-    assert ev["phase2_start_row"] <= ev["phase1_events"] + 1000, ev
+    assert ev["phase1_rows"] == 2 * ev["batch_rows"], ev
+    assert ev["phase2_start_offset"] == {"logOffset": 1}, ev
+    assert ev["phase2_rows"] == ev["n"] - 2 * ev["batch_rows"], ev
+    assert ev["phase1_rows"] < got_total, ev
 
     # identical to the uninterrupted run (batch semantics)
     from cli_spark.plans.registry import registry
@@ -662,37 +654,6 @@ def test_replay_restart_recovery_midstream(spark, sf_dir):
     }
     for r in re_agg:
         assert expected[r["window_start"]] == r["n_events"]
-
-
-def test_replay_partitioned_planning_contract(sf_dir):
-    """Partition planning (driver-side unit contract): a batch range
-    splits into numPartitions contiguous gap-free slices whose
-    row-group annotations cover their rows, and the executor read of
-    all slices returns each row exactly once."""
-    from cli_spark.sources.replay_partitioned import (
-        ReplayPartitionedStreamReader,
-    )
-
-    r = ReplayPartitionedStreamReader(
-        {"path": f"{sf_dir}/events.parquet", "batchRows": "300",
-         "numPartitions": "4"}
-    )
-    parts = r.partitions({"row": 100}, {"row": 400})
-    assert len(parts) == 4
-    assert parts[0].lo == 100 and parts[-1].hi == 400
-    for a, b in zip(parts, parts[1:]):
-        assert a.hi == b.lo  # contiguous, gap-free
-    rows = []
-    for p in parts:
-        rows.extend(r.read(p))
-    assert len(rows) == 300
-    ids = sorted(t[0] for t in rows)
-    assert len(set(ids)) == 300  # no duplicates across slices
-
-    # offset protocol: floor advances via planning, latest is bounded
-    assert r.latestOffset()["row"] == min(r.n_rows, 400 + 300)
-    r.commit({"row": 700})
-    assert r.latestOffset()["row"] == min(r.n_rows, 1000)
 
 
 def test_replay_partitioned_stream_equals_batch(spark, sf_dir):
@@ -723,17 +684,15 @@ def test_replay_partitioned_stream_equals_batch(spark, sf_dir):
 
 
 def test_partitioned_restart_recovery_midstream(spark, sf_dir):
-    """VERDICT r7 #8: q310's kill/restart protocol through the
-    PARTITIONED DataSourceStreamReader (q330's source) — recovery
-    must resume from the committed row offset and re-plan
-    executor-side partitions for only the uncommitted range, with the
-    drained result bit-identical to the batch aggregation. Same
-    deterministic endRow stop as the simple-source test."""
+    """VERDICT r7 #8: q310's kill/restart protocol over q330's
+    4-files-per-batch layout — recovery must resume from the
+    committed log offset and plan only the files not yet read, 4 per
+    batch, with the drained result bit-identical to the batch
+    aggregation. Same deterministic two-batch stop as the
+    single-file test."""
     from cli_spark.streaming.batch_windows import _run_restart_recovery
 
-    out, ev = _run_restart_recovery(
-        spark, sf_dir, fmt="replay_part", extra_options={"numPartitions": 4}
-    )
+    out, ev = _run_restart_recovery(spark, sf_dir, files_per_batch=4)
 
     total = 10_000 if "0.01" in sf_dir else None
     got_total = out.agg(F.sum("n_events")).collect()[0][0]
@@ -756,11 +715,10 @@ def test_partitioned_restart_recovery_midstream(spark, sf_dir):
     for r in re_agg:
         assert expected[r["window_start"]] == r["n_events"]
 
-    assert ev["phase2_start_row"] == 2 * ev["batch_rows"], ev
-    assert ev["phase1_events"] == ev["phase2_start_row"], ev
-    assert ev["phase2_start_row"] > 0, ev
-    assert ev["phase1_events"] < got_total, ev
-    assert ev["phase2_start_row"] <= ev["phase1_events"] + 1000, ev
+    assert ev["phase1_rows"] == 2 * ev["batch_rows"], ev
+    assert ev["phase2_start_offset"] == {"logOffset": 1}, ev
+    assert ev["phase2_rows"] == ev["n"] - 2 * ev["batch_rows"], ev
+    assert ev["phase1_rows"] < got_total, ev
 
 
 def test_idempotent_sink_reexecutes_failed_batch(spark, sf_dir):
@@ -794,8 +752,7 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
     before it silently flips the q354 oracle."""
     import uuid
 
-    from cli_spark.sources.replay_datasource import register_replay_source
-    from cli_spark.streaming.drain import run_stream
+    from cli_spark.streaming.drain import replay_stream, run_stream
 
     pdf = pd.DataFrame(
         {
@@ -814,31 +771,25 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
         pdf, "event_id long, ts timestamp, value double"
     ).coalesce(1).write.parquet(path)
 
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("replay")
-        .option("path", path)
-        .option("batchRows", 2)
-        .option("orderBy", "ts,event_id")
-        .load()
-    )
-    lvl1 = (
-        stream.withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "10 minutes"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    lvl2 = (
-        lvl1.groupBy(F.window(F.window_time("window"), "1 hour"))
-        .agg(F.sum("c").alias("n_events"))
-        .select(F.col("window.start").alias("window_start"), "n_events")
-    )
     name = "boundary_" + uuid.uuid4().hex[:6]
-    run_stream(
-        lvl2.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
+    # 2 batches of 2 rows
+    with replay_stream(spark, path, 2, order_by=("ts", "event_id")) as stream:
+        lvl1 = (
+            stream.withWatermark("ts", "0 seconds")
+            .groupBy(F.window("ts", "10 minutes"))
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        lvl2 = (
+            lvl1.groupBy(F.window(F.window_time("window"), "1 hour"))
+            .agg(F.sum("c").alias("n_events"))
+            .select(F.col("window.start").alias("window_start"), "n_events")
+        )
+        run_stream(
+            lvl2.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .start()
+        )
     rows = spark.table(name).collect()
     # Non-strict cut: the [00:00, 01:00) hour (end == max ts) DID
     # finalize, with exactly the 3 pre-boundary rows; the hour

@@ -1,6 +1,6 @@
 """Regression pins for the dropDuplicatesWithinWatermark protocol
 that q453's oracle encodes — pinned empirically against Spark 4.1.2
-through the replay source (the same path the graded query uses).
+through `drain.replay_stream` (the same path the graded query uses).
 
 If any of these flips on a Spark upgrade, q453's oracle must be
 re-derived before trusting its parity.
@@ -24,30 +24,27 @@ def _ts(hm: str) -> datetime.datetime:
 
 
 def _run(spark, rows, delay="60 minutes"):
-    """Replay `rows` one per micro-batch through the replay source,
+    """Replay `rows` one per micro-batch through `replay_stream`,
     dedup on event_id within `delay`, return emitted (id, HH:MM)."""
-    from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import replay_stream
 
-    register_replay_source(spark)
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, event_type string")
     tmp = tempfile.mkdtemp(prefix="ddww_probe_")
     try:
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        stream = (
-            spark.readStream.format("replay")
-            .option("path", part).option("batchRows", 1).load()
-        )
-        dd = (stream.withWatermark("ts", delay)
-              .dropDuplicatesWithinWatermark(["event_id"]))
         name = "ddww_" + uuid.uuid4().hex[:8]
-        q = (dd.writeStream.format("memory").queryName(name)
-             .outputMode("append").start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        # one row per batch
+        with replay_stream(spark, part, len(rows)) as stream:
+            dd = (stream.withWatermark("ts", delay)
+                  .dropDuplicatesWithinWatermark(["event_id"]))
+            q = (dd.writeStream.format("memory").queryName(name)
+                 .outputMode("append").start())
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
         return sorted(
             (r["event_id"], str(r["ts"])[11:16])
             for r in spark.table(name).collect()
