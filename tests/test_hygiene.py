@@ -115,10 +115,10 @@ def test_replay_streams_open_through_drain():
     for path in sorted(REPO.glob("cli_spark/**/*.py")):
         tree = ast.parse(path.read_text(encoding="utf-8"))
         for node in ast.walk(tree):
-            if not _opens_replay_stream(node):
-                continue
-            is_call = isinstance(node, ast.Call)
-            if path != drain or is_call:
+            # drain.py may name maxFilesPerTrigger, nothing may open the
+            # deleted sources
+            if _opens_replay_stream(node) and (
+                    path != drain or isinstance(node, ast.Call)):
                 hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not hits, (
         "replay stream opened outside drain.replay_stream:\n" + "\n".join(hits))
