@@ -93,15 +93,33 @@ def grid_size_col(length: Column, path: Column) -> Column:
     ).alias("grid_n")
 
 
+def grid_side(nbytes: int) -> int:
+    """Grid side n of an HGT file of ``nbytes`` bytes [A5]: nbytes =
+    2·n² with n ≥ 2 (one sample has no grid step); 0 for any other
+    size."""
+    n = math.isqrt(nbytes // 2)
+    return n if n >= 2 and 2 * n * n == nbytes else 0
+
+
 def grid(buf: bytes, name: str) -> np.ndarray:
     """The one HGT decode [A5/A6]: the (n, n) big-endian int16 sample
     view of one file's bytes, row 0 = northern edge. Raises ValueError
-    naming the file unless len(buf) = 2·n² with n ≥ 2 (one sample has
-    no grid step). Callers cast to the dtype they compute in."""
-    n = math.isqrt(len(buf) // 2)
-    if n < 2 or 2 * n * n != len(buf):
+    naming the file unless :func:`grid_side` finds a grid of that size.
+    Callers cast to the dtype they compute in."""
+    n = grid_side(len(buf))
+    if not n:
         raise ValueError(f"{name}: {len(buf)}{_NOT_A_GRID}")
     return np.frombuffer(buf, dtype=">i2").reshape(n, n)
+
+
+def axes(n: int, corner_lat: int, corner_lng: int) -> tuple[np.ndarray, np.ndarray]:
+    """The one sample-coordinate rule [A6]: the per-row lats (row 0 =
+    northern edge, lat = corner_lat + 1 - row/(n-1)) and per-column lngs
+    (lng = corner_lng + col/(n-1)) of an (n, n) grid. Every decoder and
+    the ``format("hgt")`` window read coordinates from here, so a
+    sample's lat/lng is the same double everywhere."""
+    step = 1.0 / (n - 1)
+    return corner_lat + 1 - np.arange(n) * step, corner_lng + np.arange(n) * step
 
 
 # ------------------------------------------------------------------ scan
@@ -142,11 +160,7 @@ def decode_points(raw: DataFrame) -> DataFrame:
         for pdf in batches:
             for _, row in pdf.iterrows():
                 g = grid(row["content"], row["path"]).astype(np.int32)
-                n = g.shape[0]
-                step = 1.0 / (n - 1)
-                # row 0 = northern edge
-                lats = row["corner_lat"] + 1 - np.arange(n) * step
-                lngs = row["corner_lng"] + np.arange(n) * step
+                lats, lngs = axes(g.shape[0], row["corner_lat"], row["corner_lng"])
                 lat_m, lng_m = np.meshgrid(lats, lngs, indexing="ij")
                 alt = g.ravel()
                 out = pd.DataFrame(
@@ -182,7 +196,7 @@ def decode_tiles(raw: DataFrame, width: int, height: int) -> DataFrame:
             for _, row in pdf.iterrows():
                 g = grid(row["content"], row["path"]).astype(np.int32)
                 n = g.shape[0]
-                step = 1.0 / (n - 1)
+                lats, lngs = axes(n, row["corner_lat"], row["corner_lng"])
                 recs = []
                 for tr in range(math.ceil(n / height)):
                     for tc in range(math.ceil(n / width)):
@@ -194,8 +208,8 @@ def decode_tiles(raw: DataFrame, width: int, height: int) -> DataFrame:
                                 "cell": row["cell"],
                                 "tile_row": tr,
                                 "tile_col": tc,
-                                "origin_lat": row["corner_lat"] + 1 - tr * height * step,
-                                "origin_lng": row["corner_lng"] + tc * width * step,
+                                "origin_lat": float(lats[tr * height]),
+                                "origin_lng": float(lngs[tc * width]),
                                 "width": block.shape[1],
                                 "height": block.shape[0],
                                 "values": block.ravel().tolist(),

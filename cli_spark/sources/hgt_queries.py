@@ -224,12 +224,18 @@ def _band(raw: DataFrame) -> DataFrame:
     """The mosaic border-band exchange: every cell's outer two sample
     lines (O(perimeter), not O(area)), deduplicated on global (y, x).
     The fencepost check is executed, not assumed: it raises when the two
-    files holding a shared sample disagree on it. Returns (y, x, alt)."""
+    files holding a shared sample disagree on it. Returns (y, x, alt).
+
+    The deduplicated band is materialized once (an eager
+    localCheckpoint, freed by the ContextCleaner once unreferenced):
+    the check counts over it, and the callers' nine-way seam join and
+    border census read it instead of re-running the per-cell decode
+    and the group-by."""
     copies = _per_cell(raw, _band_samples, "y long, x long, alt int")
     band = copies.groupBy("y", "x").agg(
         F.countDistinct(F.coalesce("alt", F.lit(hgt.VOID))).alias("variants"),
         F.min("alt").alias("alt"),
-    )
+    ).localCheckpoint(eager=True)
     n_mismatch = band.filter(F.col("variants") > 1).count()
     if n_mismatch:
         raise ValueError(

@@ -40,8 +40,10 @@ Entry points:
   `processAllAvailable()` returns once the source reports no new data
   AND every data and no-data micro-batch (the final watermark advance
   that flushes append-mode windows) has committed, so no result
-  depends on wall-clock polling. Memory sinks are read back with
-  `collect_memory_sink`.
+  depends on wall-clock polling. It raises when a file source's
+  directory is gone, so a replay stream drained after its block has
+  exited fails instead of returning no rows. Memory sinks are read
+  back with `collect_memory_sink`.
 
 `drain_partials` is the sketch family's sink. Each micro-batch's
 partial is collected to the driver instead of appended to parquet:
@@ -64,6 +66,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -94,12 +97,37 @@ def run_stream(query: StreamingQuery) -> None:
     read `rate-micro-batch`, which always has another batch, so
     `processAllAvailable()` would never return, and available-now
     folds it into a single batch; they keep their data-predicate
-    waits, which raise on a shortfall."""
+    waits, which raise on a shortfall.
+
+    Raises FileNotFoundError when a local file source's directory no
+    longer exists once the drain returns: Spark's file source lists a
+    missing directory as empty, so a replay stream started after its
+    `replay_stream` block had removed the batch files would otherwise
+    end with no rows and no error."""
     try:
         query.processAllAvailable()
+        _check_file_sources(query)
     finally:
         query.stop()
         query.awaitTermination()
+
+
+# toString of Spark's FileStreamSource: the qualified base path
+_FILE_SOURCE = re.compile(r"FileStreamSource\[file:(.*)\]")
+
+
+def _check_file_sources(query: StreamingQuery) -> None:
+    """Raise FileNotFoundError naming the first local file-source path
+    of ``query`` that matches nothing on disk. The sources are the
+    started query's own (set before its first trigger), so the check
+    reads no progress event and runs no Spark job."""
+    sources = query._jsq.streamingQuery().sources()
+    for i in range(sources.size()):
+        m = _FILE_SOURCE.fullmatch(sources.apply(i).toString())
+        if m and not (os.path.exists(m.group(1)) or glob.glob(m.group(1))):
+            raise FileNotFoundError(
+                f"{m.group(1)}: the stream's source directory is gone (a "
+                "replay stream must run inside its replay_stream block)")
 
 
 def collect_memory_sink(spark: SparkSession, name: str) -> DataFrame:
@@ -276,8 +304,9 @@ def replay_in_phases(
     writes the others into the same directory, where a restart from
     the stream's checkpoint picks them up. The directory is removed on
     exit, also when the body raises, so the stream must not outlive
-    the block. No Spark job runs here: the cut is pyarrow, and the
-    stream's schema is the Arrow table's."""
+    the block (`run_stream` raises on a stream that does). No Spark job
+    runs here: the cut is pyarrow, and the stream's schema is the Arrow
+    table's."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     tbl = _replay_table(path, order_by)

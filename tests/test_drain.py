@@ -11,7 +11,8 @@ tag the drain adds), batch ids tag rows correctly across >= 2 real
 micro-batches, NULL group keys merge like any other key, the batch
 count never depends on which partials are empty, the footer row count
 matches a Spark count of the same file, temp dirs are gone after a
-normal or a failed run, and the replay checkpoint-manager scope keeps
+normal or a failed run, a stream started after its replay block
+raises, and the replay checkpoint-manager scope keeps
 a session's own manager."""
 
 from __future__ import annotations
@@ -362,6 +363,29 @@ def test_replay_stream_removes_dir_on_exit_and_on_error(
         with replay_stream(spark, replay_part, 4):
             raise ValueError("body failed")
     assert not list(tmp_path.glob("replay_stream_*"))
+
+
+@pytest.mark.parametrize("opener", ["replay_stream", "replay_in_phases"])
+def test_stream_started_after_its_block_raises(spark, replay_part, opener):
+    """A replay stream started after its block has removed the batch
+    files raises in run_stream, naming the directory, instead of
+    draining an empty source to 0 rows; the query is stopped."""
+    import uuid
+
+    if opener == "replay_stream":
+        with replay_stream(spark, replay_part, 4) as stream:
+            pass
+    else:
+        with replay_in_phases(spark, replay_part, 4, 2) as (stream, _):
+            pass
+    query = stream.writeStream.format("memory").queryName(
+        "late_" + uuid.uuid4().hex[:6]).start()
+    with pytest.raises(FileNotFoundError, match="replay_stream_.*is gone"):
+        run_stream(query)
+    assert not query.isActive
+    with pytest.raises(FileNotFoundError, match="is gone"):
+        with drain_rows(spark, stream):
+            pass
 
 
 def test_replay_stream_schema_matches_batch_read(spark, tmp_path):

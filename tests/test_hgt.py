@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import math
+import operator
 import os
 
 import numpy as np
@@ -445,3 +446,179 @@ def test_d8_kernel_matches_golden_reference():
         codes, _ok = _d8(decoded)
         golden, _dirs = G._d8_codes(g.astype(np.int64))
         np.testing.assert_array_equal(codes, golden)
+
+
+# ------------------------------------------------- format("hgt") window
+
+_CMP = {"<": operator.lt, "<=": operator.le, ">": operator.gt,
+        ">=": operator.ge, "=": operator.eq}
+
+
+def _spark_holds(op: str, x: np.ndarray, v: float) -> np.ndarray:
+    """Spark's double comparison of ``x`` (never NaN) with ``v``: NaN
+    sorts above every double, so only ``<`` and ``<=`` hold against it."""
+    if math.isnan(v):
+        return np.full(x.shape, op in ("<", "<="))
+    return _CMP[op](x, v)
+
+
+def _filter_of(col: str, op: str, v: float):
+    from pyspark.sql.datasource import (
+        EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
+
+    cls = {"<": LessThan, "<=": LessThanOrEqual, ">": GreaterThan,
+           ">=": GreaterThanOrEqual, "=": EqualTo}[op]
+    return cls((col,), v)
+
+
+def _reader_batches(directory: str, box) -> list:
+    """The Arrow batches `HgtReader` yields for ``box`` (a list of
+    (column, op, value)) pushed as filters — planner and tasks driven
+    in-process."""
+    from cli_spark.sources.hgt_datasource import HgtReader
+
+    r = HgtReader({"path": directory})
+    assert len(list(r.pushFilters([_filter_of(*f) for f in box]))) == len(box)
+    return [b for p in r.partitions() for b in r.read(p)]
+
+
+def _passing(batches, box) -> tuple[int, set]:
+    """(rows read, the read rows that pass every filter of ``box``)."""
+    read, kept = 0, set()
+    for b in batches:
+        cols = {name: b.column(name).to_numpy(zero_copy_only=False)
+                for name in ("cell", "lat", "lng")}
+        ok = np.ones(b.num_rows, bool)
+        for col, op, v in box:
+            ok &= _spark_holds(op, cols[col], v)
+        read += b.num_rows
+        alt = b.column("alt").to_pylist()
+        kept |= {(cols["cell"][i], cols["lat"][i], cols["lng"][i], alt[i])
+                 for i in np.flatnonzero(ok)}
+    return read, kept
+
+
+def _box_values(rng, col: str) -> list[float]:
+    """Filter literals for ``col``: exact sample coordinates and cell
+    edges (both grid lines) of every fixture cell, points between grid
+    lines, values outside every cell, NaN and ±inf."""
+    vals = [math.nan, math.inf, -math.inf, 80.0, -80.0, 200.0, -200.0]
+    for cell, _ in hgt.FIXTURE_CELLS:
+        lat0, lng0 = hgt.parse_cell_name(cell)
+        corner = lat0 if col == "lat" else lng0
+        axis = hgt.axes(N, lat0, lng0)[0 if col == "lat" else 1]
+        k = rng.integers(0, N - 1, 3)
+        vals += [corner, corner + 1, *axis[k], *(axis[k] + axis[k + 1]) / 2,
+                 *rng.uniform(corner - 0.2, corner + 1.2, 2)]
+    return [float(v) for v in vals]
+
+
+def _random_boxes(seed: int, count: int) -> list[list[tuple[str, str, float]]]:
+    """Seeded random conjunctions of 1-4 lat/lng comparisons; a box's
+    bounds may be inverted (lo > hi), and one box in eight is an
+    ``=`` on a single exact sample coordinate."""
+    rng = np.random.default_rng(seed)
+    pools = {c: _box_values(rng, c) for c in ("lat", "lng")}
+    boxes = []
+    for i in range(count):
+        box = []
+        for _ in range(int(rng.integers(1, 5))):
+            col = ("lat", "lng")[int(rng.integers(0, 2))]
+            op = ("<", "<=", ">", ">=", "=")[int(rng.integers(0, 5))]
+            box.append((col, op, pools[col][int(rng.integers(0, len(pools[col])))]))
+        if i % 8 == 0:
+            lat0, lng0 = hgt.parse_cell_name(hgt.FIXTURE_CELLS[i % 3][0])
+            lats, lngs = hgt.axes(N, lat0, lng0)
+            box = [("lat", "=", float(lats[int(rng.integers(0, N))])),
+                   ("lng", "=", float(lngs[int(rng.integers(0, N))]))]
+        boxes.append(box)
+    return boxes
+
+
+def test_hgt_window_reads_a_superset_of_the_filtered_rows(fixture_dir):
+    """Window pushdown, driven through the reader: for seeded random
+    boxes, the rows the windowed reads keep under Spark's comparison
+    rules equal the rows a full read keeps, so the window never drops a
+    matching sample. Without a NaN literal the window is exact (it reads
+    only matching rows); with one it cuts nothing."""
+    full = _reader_batches(fixture_dir, [])
+    assert sum(b.num_rows for b in full) == len(hgt.FIXTURE_CELLS) * N * N
+    for box in _random_boxes(seed=7, count=200):
+        want = _passing(full, box)[1]
+        read, got = _passing(_reader_batches(fixture_dir, box), box)
+        assert got == want, box
+        if not any(math.isnan(v) for _, _, v in box):
+            assert read == len(want), box
+
+
+def test_hgt_window_decodes_only_the_box(fixture_dir):
+    """A box inside one cell schedules that cell alone and decodes only
+    the box's rows and columns, not the cell's N² samples."""
+    lats, lngs = hgt.axes(N, 46, 7)
+    box = [("lat", ">=", float(lats[60])), ("lat", "<=", float(lats[40])),
+           ("lng", ">", float(lngs[10])), ("lng", "<", float(lngs[20]))]
+    [batch] = _reader_batches(fixture_dir, box)
+    assert batch.num_rows == 21 * 9
+    assert set(batch.column("cell").to_pylist()) == {"N46E007"}
+    assert batch.column("lat").to_numpy().max() == lats[40]
+    assert batch.column("lng").to_numpy().min() == lngs[11]
+
+
+def _pred(box):
+    pred = F.lit(True)
+    for col, op, v in box:
+        pred = pred & _CMP[op](F.col(col), F.lit(v))
+    return pred
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("box", [
+    [("lat", "<", math.nan)], [("lat", "<=", math.nan)],
+    [("lat", ">", math.nan)], [("lat", "=", math.nan)],
+    [("lng", "<", math.nan), ("lat", ">=", 46.0)],
+    [("lat", ">", -math.inf), ("lat", "<", math.inf)],
+    [("lng", ">=", -math.inf), ("lng", "<=", math.inf)],
+    [("lat", ">", math.inf)], [("lng", "<", -math.inf)],
+], ids=["lat<nan", "lat<=nan", "lat>nan", "lat=nan", "lng<nan&lat>=46",
+        "lat_in_inf", "lng_in_inf", "lat>inf", "lng<-inf"])
+def test_hgt_nan_and_inf_bounds_match_decode_points(spark, fixture_dir, box):
+    """A NaN literal never prunes or windows: Spark orders NaN above
+    every double, so ``lat < NaN`` holds on every row. ±inf bounds prune
+    exactly as Spark compares them."""
+    from cli_spark.sources.hgt_datasource import register_hgt_source
+
+    register_hgt_source(spark)
+    ds = spark.read.format("hgt").load(fixture_dir).where(_pred(box))
+    via_map = hgt.decode_points(hgt.read_hgt(spark, fixture_dir)).where(_pred(box))
+    assert _sorted_rows(ds) == _sorted_rows(via_map)
+
+
+def test_hgt_window_matches_decode_points_on_random_boxes(spark, fixture_dir):
+    """End to end: ``format("hgt").where(box)`` returns exactly
+    ``decode_points(...).where(box)``, row for row, for boxes with edges
+    on grid lines, ``=`` on an exact sample coordinate, inverted bounds,
+    boxes outside every cell and NaN/±inf literals."""
+    from cli_spark.sources.hgt_datasource import register_hgt_source
+
+    register_hgt_source(spark)
+    lats, lngs = hgt.axes(N, 46, 7)
+    boxes = [
+        [("lat", ">=", 46.0), ("lat", "<=", float(lats[50])),
+         ("lng", ">=", float(lngs[25])), ("lng", "<", 8.0)],
+        [("lat", "=", float(lats[33])), ("lng", "=", float(lngs[77]))],
+        [("lat", ">=", 46.75), ("lat", "<=", 46.25)],
+        [("lat", ">", 60.0), ("lng", "<", -100.0)],
+        [("lat", ">=", -0.5), ("lat", "<=", 0.5), ("lng", "<=", math.nan)],
+        [("lat", ">", 0.0), ("lat", "<", 1.0), ("lng", ">", -math.inf)],
+        *_random_boxes(seed=11, count=8),
+    ]
+    via_map = hgt.decode_points(hgt.read_hgt(spark, fixture_dir)).cache()
+    try:
+        for box in boxes:
+            ds = spark.read.format("hgt").load(fixture_dir).where(_pred(box))
+            assert _sorted_rows(ds) == _sorted_rows(via_map.where(_pred(box))), box
+    finally:
+        via_map.unpersist()

@@ -16,7 +16,9 @@ every replay stream opening through `drain.replay_stream` (see
 MinHash signature built by `dedup.minhash_signature` (see
 `test_minhash_signature_built_only_in_dedup_helper`), and a fifth
 keeps one HGT grid decoder (`hgt.grid`) and one D8 weight table (see
-`test_one_hgt_grid_decoder_and_one_d8_weight_table`).
+`test_one_hgt_grid_decoder_and_one_d8_weight_table`), and a sixth keeps
+one HGT sample-coordinate rule (`hgt.axes`, see
+`test_one_hgt_coordinate_rule`).
 """
 
 from __future__ import annotations
@@ -211,3 +213,41 @@ def test_one_hgt_grid_decoder_and_one_d8_weight_table():
     assert not hits, (
         "HGT grid decode outside hgt.grid or D8 weight outside the one "
         "table:\n" + "\n".join(hits))
+
+
+# Sample coordinates come from one rule, hgt.axes: lat = corner + 1 -
+# row * step, lng = corner + col * step with step = 1.0 / (n - 1). In
+# the HGT modules, neither a float grid step (a float constant divided
+# by ``x - 1``) nor an ``arange(...)`` times anything appears anywhere
+# else, so the decoders and the format("hgt") window compare
+# and emit the same doubles.
+AXES_HOME = (REPO / "cli_spark/sources/hgt.py", "axes")
+
+
+def _computes_sample_coords(node) -> bool:
+    if not isinstance(node, ast.BinOp):
+        return False
+    if isinstance(node.op, ast.Mult):
+        return "arange" in (_call_name(node.left), _call_name(node.right))
+    r = node.right
+    return (isinstance(node.op, ast.Div)
+            and isinstance(node.left, ast.Constant)
+            and type(node.left.value) is float
+            and isinstance(r, ast.BinOp) and isinstance(r.op, ast.Sub)
+            and isinstance(r.right, ast.Constant) and r.right.value == 1)
+
+
+def test_one_hgt_coordinate_rule():
+    hits: list[str] = []
+    for path in sorted(REPO.glob("cli_spark/sources/hgt*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            names = _top_names(top)
+            if path == AXES_HOME[0] and AXES_HOME[1] in names:
+                continue
+            for node in ast.walk(top):
+                if _computes_sample_coords(node):
+                    hits.append(f"{path.relative_to(REPO)}:{node.lineno} in "
+                                f"{', '.join(sorted(names))}")
+    assert not hits, (
+        "HGT sample coordinates computed outside hgt.axes:\n" + "\n".join(hits))
