@@ -1318,7 +1318,9 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("s").alias("u"), F.col("ng").alias("entry"))
 
     # transitive closure over the contracted seam forest (doubling)
+    # one count() per round: the previous round's count is carried
     pairs = edges.select(F.col("u"), F.col("d")).localCheckpoint(eager=True)
+    n_pairs = pairs.count()
     for _ in range(24):
         hop = pairs.select(F.col("u").alias("u2"), F.col("d").alias("d2"))
         grown = (
@@ -1329,10 +1331,11 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if grown.count() == pairs.count():
-            pairs = grown
+        n_grown = grown.count()
+        converged = n_grown == n_pairs
+        pairs, n_pairs = grown, n_grown
+        if converged:
             break
-        pairs = grown
     else:
         raise ValueError("seam closure did not converge")
     acc_seam = (

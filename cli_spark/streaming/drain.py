@@ -36,6 +36,9 @@ Entry points:
   q500): `replay_file`, `replay_stream` at ``N_BATCHES`` and
   `drain_partials`. It owns the file layout, the batch sizing and the
   batch identity, so a query only states its partial and its merge.
+  `replay_partials_and_rows` is the same as a context manager that
+  also yields the replayed rows, each tagged with its batch, while the
+  replay file still exists (q476's exact audit).
 * `run_stream(query)` — how every stream over a bounded source ends:
   `processAllAvailable()` returns once the source reports no new data
   AND every data and no-data micro-batch (the final watermark advance
@@ -45,12 +48,21 @@ Entry points:
   exited fails instead of returning no rows. Memory sinks are read
   back with `collect_memory_sink`.
 
+The row-to-batch rule: in the single sorted file `replay_file` writes,
+the row at position ``i`` (Spark's ``_metadata.row_index``, which
+counts from the file's first row whatever split reads it) arrives in
+micro-batch ``i DIV batch_rows``, and `drain_partials` checks that the
+batches carrying rows are numbered ``0..k-1``. `_with_batch_id` is the
+only place that states it.
+
 `drain_partials` is the sketch family's sink. Each micro-batch's
 partial is collected to the driver instead of appended to parquet:
 with a per-batch `write.mode("append").parquet(...)` each ~20-batch
 run paid ~20 FileFormatWriter commit protocols plus a read-back
 (round 15: addBatch ~250 ms/batch, ~110 ms of it the write; tmpfs
-changed nothing), and driver collection cut addBatch ~40%.
+changed nothing), and driver collection cut addBatch ~40%. The
+partials come back as Arrow tables and leave as one JVM local relation
+(`local_relation`), so the merge plan over them runs no Python worker.
 
 Driver accumulation is sound only because every partial is
 SKETCH-grain — O(buckets | registers | counters | bottom-k samples)
@@ -77,6 +89,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 # Target micro-batch count of the sketch streams. Read at call time
 # so tests can patch it (the fast-mode fixture runs 5); the oracles
@@ -157,10 +170,10 @@ def drain_partials(
 ) -> DataFrame:
     """Run ``stream`` to completion under the default trigger,
     evaluating ``partial_of(batch_df, batch_id)`` in each micro-batch's
-    foreachBatch and accumulating the partial's rows on the driver,
-    tagged with a ``batch_id`` long column. Returns ONE local
-    DataFrame holding every partial row (schema = the partial plan's
-    schema + ``batch_id``).
+    foreachBatch and accumulating the partial's rows on the driver
+    (``toArrow``), tagged with a ``batch_id`` long column. Returns ONE
+    local relation holding every partial row (schema = the partial
+    plan's schema + ``batch_id``).
 
     Raises ``ValueError`` when one batch's partial exceeds
     ``MAX_PARTIAL_ROWS_PER_BATCH`` rows — driver accumulation is only
@@ -169,10 +182,12 @@ def drain_partials(
     ``RuntimeError`` when no batch carried input rows, or when the
     batches that did are not numbered ``0..k-1`` — the batch identity
     the callers' mid-stream splits rely on. The ids are read from
-    ``recentProgress``, which keeps the last 100 progress events
-    (``spark.sql.streaming.numRecentProgressUpdates``): far more than
-    the ~21 a sketch stream runs."""
-    rows: list = []
+    ``recentProgress``, which keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates - 1`` progress events
+    (99 by default, far more than the ~21 a sketch stream runs); it
+    raises ``RuntimeError`` when the list is that long, because earlier
+    events may have been dropped."""
+    tables: list = []
     schema_cell: list = []
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,15 +197,15 @@ def drain_partials(
             schema_cell.append(partial.schema)
         # limit(cap + 1): a fact-grain batch trips the guard after at
         # most cap + 1 rows reach the driver, not after all of them
-        batch_rows = partial.limit(MAX_PARTIAL_ROWS_PER_BATCH + 1).collect()
-        if len(batch_rows) > MAX_PARTIAL_ROWS_PER_BATCH:
+        batch = partial.limit(MAX_PARTIAL_ROWS_PER_BATCH + 1).toArrow()
+        if batch.num_rows > MAX_PARTIAL_ROWS_PER_BATCH:
             raise ValueError(
                 f"drain_partials: batch {batch_id} produced more than "
                 f"{MAX_PARTIAL_ROWS_PER_BATCH} partial rows — partials must be "
                 "sketch-grain; use a durable sink for fact-grain "
                 "streams"
             )
-        rows.extend(batch_rows)
+        tables.append(batch)
 
     from cli_spark.session import scoped_replay_ckpt_manager
 
@@ -200,16 +215,39 @@ def drain_partials(
     with scoped_replay_ckpt_manager(spark):
         query = stream.writeStream.foreachBatch(_sink).start()
         run_stream(query)
+    # Spark drops the oldest event once the list reaches the cap, so a
+    # full list holds cap - 1 events and may have lost earlier ones
+    progress = query.recentProgress
+    keeps = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
+    if len(progress) >= keeps:
+        raise RuntimeError(
+            f"replay stream's recentProgress holds {len(progress)} events, as "
+            f"many as it keeps ({keeps}); earlier batch ids may be missing")
     # an empty source still runs one empty batch 0; there is nothing
     # to merge unless some batch carried rows
-    data_ids = _data_batch_ids(query.recentProgress)
+    data_ids = _data_batch_ids(progress)
     if not data_ids:
         raise RuntimeError("replay stream delivered no micro-batch with input rows")
     if data_ids != list(range(len(data_ids))):
         raise RuntimeError(
             f"replay stream's data batches are {data_ids}, not "
             f"0..{len(data_ids) - 1}")
-    return spark.createDataFrame(rows, schema_cell[0])
+    return local_relation(spark, tables, schema_cell[0])
+
+
+def local_relation(spark: SparkSession, tables: list, schema: StructType) -> DataFrame:
+    """The Arrow ``tables`` (e.g. ``DataFrame.toArrow()`` results) as ONE
+    DataFrame of ``schema`` held by the JVM (a local relation below
+    ``spark.sql.execution.arrow.localRelationThreshold``), so a plan
+    over it runs no Python worker (``createDataFrame`` of a list of
+    Rows scans a parallelized Python RDD: one Python task per
+    partition on every scan). The tables are combined into one chunk
+    first: ``createDataFrame`` sends a table chunk by chunk, and the
+    rows after a zero-row chunk were lost (an empty partial's table
+    dropped every later batch's rows)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.concat_tables(tables).combine_chunks(), schema)
 
 
 def _data_batch_ids(progress: list) -> list[int]:
@@ -411,6 +449,48 @@ def replay_file(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _with_batch_id(spark: SparkSession, path: str, batch_rows: int) -> DataFrame:
+    """The replay file ``path`` read back, each row tagged with the
+    ``batch_id`` of the micro-batch `replay_stream` cut it into:
+    ``_metadata.row_index DIV batch_rows``. The row index is the row's
+    position in the file, also when the scan reads the file in several
+    splits, so no sort, window or single partition is needed. The
+    schema comes from the footer, so no schema-inference job runs."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return (
+        spark.read.schema(from_arrow_schema(pq.read_schema(path))).parquet(path)
+        .select("*", F.expr(f"_metadata.row_index DIV {batch_rows}")
+                .alias("batch_id"))
+    )
+
+
+@contextmanager
+def replay_partials_and_rows(
+    spark: SparkSession,
+    rows: DataFrame,
+    order_by: tuple[str | Column, ...],
+    partial_of: Callable[[DataFrame, int], DataFrame],
+    drop: tuple[str, ...] = (),
+) -> Iterator[tuple[DataFrame, DataFrame, int, int, int]]:
+    """Replay ``rows`` (sorted by ``order_by``, minus ``drop``) through
+    ~``N_BATCHES`` TRUE micro-batches, drain each batch's
+    ``partial_of(batch_df, batch_id)`` to the driver, and yield
+    ``(parts, replayed, n, batch_rows, n_batches)``: `replay_partials`'
+    four values, plus ``replayed``, the replay file itself with every
+    row tagged with the ``batch_id`` it arrived in (`_with_batch_id`),
+    for an exact audit of the same batches. The file is removed on
+    exit, also when the body raises, so the body must collect what it
+    reads of ``replayed``; ``parts`` never references it."""
+    with replay_file(spark, rows, order_by, drop) as path:
+        n, batch_rows = replay_batch_rows(path, N_BATCHES)
+        with replay_stream(spark, path, N_BATCHES) as stream:
+            parts = drain_partials(spark, stream, partial_of)
+        yield (parts, _with_batch_id(spark, path, batch_rows), n, batch_rows,
+               -(-n // batch_rows))
+
+
 def replay_partials(
     spark: SparkSession,
     rows: DataFrame,
@@ -420,7 +500,8 @@ def replay_partials(
 ) -> tuple[DataFrame, int, int, int]:
     """Replay ``rows`` (sorted by ``order_by``, minus ``drop``) through
     ~``N_BATCHES`` TRUE micro-batches and drain each batch's
-    ``partial_of(batch_df, batch_id)`` to the driver.
+    ``partial_of(batch_df, batch_id)`` to the driver
+    (`replay_partials_and_rows`).
 
     Returns ``(parts, n, batch_rows, n_batches)``: the local relation
     of every partial row tagged with ``batch_id``, the replayed row
@@ -434,19 +515,18 @@ def replay_partials(
     batches carrying rows are numbered ``0..k-1``, so batch
     ``batch_id`` holds rows ``[batch_id * batch_rows,
     (batch_id + 1) * batch_rows)`` of the sorted file and
-    ``k == n_batches``. A first-half split is therefore
-    ``batch_id < n_batches DIV 2`` — the oracles'
-    ``rn <= (nb DIV 2) * bsz``. It is the same split the old
-    ``dense_rank`` form took: every data batch of a histogram or HLL
-    stream yields a non-empty partial, so its dense rank over the
-    partials' batch ids was ``batch_id + 1`` and its maximum was
-    ``n_batches``. ``n_batches`` never comes from the partials, whose
-    batches can be empty (q479: an all-singleton batch has no
-    Misra-Gries counter)."""
-    with (
-        replay_file(spark, rows, order_by, drop) as path,
-        replay_stream(spark, path, N_BATCHES) as stream,
-    ):
-        n, batch_rows = replay_batch_rows(path, N_BATCHES)
-        parts = drain_partials(spark, stream, partial_of)
-    return parts, n, batch_rows, -(-n // batch_rows)
+    ``k == n_batches``. Row to batch: the row at file position ``i``
+    (``_metadata.row_index``) is in batch ``i DIV batch_rows``, the tag
+    `replay_partials_and_rows` puts on the replayed rows. A first-half
+    split is therefore ``batch_id < n_batches DIV 2`` — the oracles'
+    ``rn <= (nb DIV 2) * bsz``, since ``rn = i + 1``. It is the same
+    split the old ``dense_rank`` form took: every data batch of a
+    histogram or HLL stream yields a non-empty partial, so its dense
+    rank over the partials' batch ids was ``batch_id + 1`` and its
+    maximum was ``n_batches``. ``n_batches`` never comes from the
+    partials, whose batches can be empty (q479: an all-singleton batch
+    has no Misra-Gries counter)."""
+    with replay_partials_and_rows(
+        spark, rows, order_by, partial_of, drop
+    ) as (parts, _, n, batch_rows, n_batches):
+        return parts, n, batch_rows, n_batches

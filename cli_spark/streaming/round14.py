@@ -15,12 +15,17 @@ of the batches) rides along as the convergence audit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cli_spark.plans.registry import register
-from cli_spark.streaming.drain import N_BATCHES, replay_partials
+from cli_spark.streaming.drain import (
+    N_BATCHES,
+    local_relation,
+    replay_partials,
+    replay_partials_and_rows,
+)
 from cli_spark.tables import load_table
 
 _BUCKETS = 64
@@ -333,7 +338,13 @@ def q476_streaming_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime and sf0.1 in the raw-estimator regime, so both estimator
     paths stay covered). The mid-stream scope is the batches with
     ``batch_id < n_batches DIV 2`` (`drain.replay_partials` states why
-    that is the oracle's row prefix)."""
+    that is the oracle's row prefix).
+
+    The exact audit reads the replay file itself, each row tagged with
+    the batch it arrived in, so it needs no global ordering: a user
+    counts in a type's mid scope when its first batch in that type is
+    in the first half. The two scopes' registers merge in ONE
+    aggregation (`_fused_hll`)."""
     e = load_table(spark, sf_dir, "events")
     base = e.select("event_type", "event_id", "user_id", "ts")
 
@@ -349,64 +360,90 @@ def q476_streaming_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("rho").alias("m"))
         )
 
-    regs, _, bsz, nb = replay_partials(
+    with replay_partials_and_rows(
         spark, base, (F.unix_micros("ts"), F.col("event_id")), partial_of,
-        drop=("ts",))
+        drop=("ts",),
+    ) as (regs, replayed, _, _, nb):
+        # audit baselines (exact distinct) over the very rows and
+        # batches the stream replayed. Equivalence with the oracle's
+        # COUNT(DISTINCT user_id) over all rows and over
+        # rn <= (nb DIV 2) * bsz: the replay file is the oracle's
+        # (ts_us, event_id) order, so a row's batch_id is
+        # (rn - 1) DIV bsz and the prefix is batch_id < nb DIV 2; a
+        # user is in a type's prefix iff its earliest batch in that
+        # type is, and count(user_id) skips the NULL-user group as
+        # COUNT(DISTINCT) skips NULL. The row index is a file
+        # position, so the rule holds however many splits read it.
+        first = replayed.groupBy("event_type", "user_id").agg(
+            F.min("batch_id").alias("first"))
+        audit = first.groupBy("event_type").agg(
+            F.count("user_id").cast("long").alias("n_exact"),
+            F.count(F.when(F.col("first") < nb // 2, F.col("user_id")))
+            .cast("long").alias("n_exact_mid"),
+        )
+        result = (
+            _fused_hll(regs, nb // 2)
+            .join(F.broadcast(audit), "event_type")
+            .select(
+                "event_type", "n_exact", "hll_final", "zeros",
+                "n_exact_mid", "hll_mid",
+                F.expr("CAST(abs(hll_final - n_exact) * 1000000 DIV n_exact "
+                       "AS BIGINT)").alias("err_ppm"),
+                F.lit(nb).cast("long").alias("n_batches"),
+            )
+        )
+        out = result.toArrow()
+    return local_relation(spark, [out], result.schema)
 
-    def estimate(r: DataFrame, exact: DataFrame) -> DataFrame:
-        merged = r.groupBy("event_type", "bucket").agg(
-            F.max("m").alias("m"))
-        per = merged.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("nbk"),
-            F.expr("CAST(SUM(CAST(power(2.0, 55 - m) AS BIGINT)) "
-                   "+ (64 - COUNT(*)) * 36028797018963968 AS BIGINT)")
-            .alias("reg_sum"),
-        )
-        est = per.join(exact, "event_type").select(
-            "event_type", "n_exact",
-            (F.lit(64) - F.col("nbk")).cast("long").alias("zeros"),
-            F.expr(_HLL_RAW).alias("raw_est"),
-        )
-        return est.select(
-            "event_type", "n_exact", "zeros",
-            F.when((F.col("raw_est") <= 160) & (F.col("zeros") > 0),
-                   F.expr(_HLL_SMALL)).otherwise(F.col("raw_est"))
-            .alias("hll"),
-        )
 
-    # audit baselines (exact distinct) from the batch table, with
-    # the SAME deterministic prefix the oracle uses
-    ordered = base.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.orderBy(F.unix_micros("ts"), F.col("event_id"))),
+def _fused_hll(regs: DataFrame, half: int) -> DataFrame:
+    """``(event_type, zeros, hll_final, hll_mid)`` from the drained
+    per-batch registers ``regs`` (``event_type, bucket, m, batch_id``):
+    the final scope merges every batch, the mid scope the batches with
+    ``batch_id < half``, both in one register merge.
+
+    Equivalence with merging each scope on its own (max ``m`` per
+    ``(event_type, bucket)``, then ``nbk = COUNT(*)`` and the register
+    sum per type): the final scope's ``m`` is unchanged. A bucket is in
+    the mid scope iff one of its rows has ``batch_id < half`` (``mid``)
+    and its mid register is the max over those rows (``m_mid``, NULL
+    elsewhere), so ``count_if(mid)`` is the mid ``nbk`` and the SUM
+    over ``m_mid`` skips exactly the buckets the mid merge never saw.
+    A NULL ``user_id`` hashes to a NULL ``bucket`` and ``m``: its group
+    counts in ``nbk`` (and in the mid ``nbk`` when it has a mid row)
+    and adds nothing to the SUM, as in the per-scope merge. A type with
+    no mid row has no mid group at all, so it is dropped
+    (``nbk_mid > 0``), as the per-scope form's inner join dropped it."""
+    reg = regs.groupBy("event_type", "bucket").agg(
+        F.max("m").alias("m"),
+        F.max(F.when(F.col("batch_id") < half, F.col("m"))).alias("m_mid"),
+        F.max(F.col("batch_id") < half).alias("mid"),
     )
-    ex_f = ordered.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("n_exact"))
-    ex_m = (
-        ordered.filter(F.col("rn") <= (nb // 2) * bsz)
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").cast("long").alias("n_exact"))
+    per = reg.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("nbk"),
+        F.expr("CAST(SUM(CAST(power(2.0, 55 - m) AS BIGINT)) "
+               "+ (64 - COUNT(*)) * 36028797018963968 AS BIGINT)")
+        .alias("reg_sum"),
+        F.count_if("mid").cast("long").alias("nbk_mid"),
+        F.expr("CAST(SUM(CAST(power(2.0, 55 - m_mid) AS BIGINT)) "
+               "+ (64 - COUNT_IF(mid)) * 36028797018963968 AS BIGINT)")
+        .alias("reg_sum_mid"),
+    ).filter(F.col("nbk_mid") > 0)
+
+    def estimate(sfx: str) -> Column:
+        # q465's estimator expressions name ``reg_sum`` and ``zeros``;
+        # each scope substitutes its own register sum and zero count
+        raw =F.expr(_HLL_RAW.replace("reg_sum", f"reg_sum{sfx}"))
+        zeros = F.lit(64) - F.col(f"nbk{sfx}")
+        small = F.expr(_HLL_SMALL.replace("zeros", f"(64 - nbk{sfx})"))
+        return F.when((raw <= 160) & (zeros > 0), small).otherwise(raw)
+
+    return per.select(
+        "event_type",
+        (F.lit(64) - F.col("nbk")).cast("long").alias("zeros"),
+        estimate("").alias("hll_final"),
+        estimate("_mid").alias("hll_mid"),
     )
-    fin = estimate(regs, ex_f)
-    mid = (
-        estimate(regs.filter(F.col("batch_id") < nb // 2), ex_m)
-        .select(F.col("event_type").alias("et2"),
-                F.col("n_exact").alias("n_exact_mid"),
-                F.col("hll").alias("hll_mid"))
-    )
-    result = (
-        fin.join(mid, F.col("et2") == F.col("event_type"))
-        .select(
-            "event_type", "n_exact",
-            F.col("hll").alias("hll_final"), "zeros",
-            "n_exact_mid", "hll_mid",
-            F.expr("CAST(abs(hll - n_exact) * 1000000 DIV n_exact "
-                   "AS BIGINT)").alias("err_ppm"),
-            F.lit(nb).cast("long").alias("n_batches"),
-        )
-    )
-    return spark.createDataFrame(result.collect(), result.schema)
 
 
 _MG_K = 8  # Misra-Gries counters; error bound n/(k+1)

@@ -12,8 +12,10 @@ micro-batches, NULL group keys merge like any other key, the batch
 count never depends on which partials are empty, the footer row count
 matches a Spark count of the same file, temp dirs are gone after a
 normal or a failed run, a stream started after its replay block
-raises, and the replay checkpoint-manager scope keeps
-a session's own manager."""
+raises, the drain refuses a progress list that may have dropped
+events, the row-to-batch rule over the replay file equals the batch
+each row was drained in (in one split or several), and the replay
+checkpoint-manager scope keeps a session's own manager."""
 
 from __future__ import annotations
 
@@ -29,10 +31,12 @@ import cli_spark.streaming.drain as drain
 from cli_spark.streaming.drain import (
     drain_partials,
     drain_rows,
+    local_relation,
     replay_batch_rows,
     replay_file,
     replay_in_phases,
     replay_partials,
+    replay_partials_and_rows,
     replay_row_count,
     replay_stream,
     run_stream,
@@ -215,6 +219,86 @@ def test_replay_partials_counts_batches_with_empty_partials(spark, monkeypatch):
     assert n_batches == -(-n // batch_rows) == 5
     ids = {r["batch_id"] for r in parts.collect()}
     assert ids == {0, 2, 4}
+
+
+def test_local_relation_keeps_rows_after_an_empty_table(spark):
+    """Every table's rows survive, also after a zero-row table, and
+    the frame is a JVM local relation with the given schema."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([StructField("x", LongType())])
+
+    def table(xs):
+        return pa.table({"x": pa.array(xs, pa.int64())})
+
+    df = local_relation(spark, [table([1, 2]), table([]), table([3])], schema)
+    assert sorted(r["x"] for r in df.collect()) == [1, 2, 3]
+    assert df.schema == schema
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+
+_PROGRESS_KEY = "spark.sql.streaming.numRecentProgressUpdates"
+
+
+def test_drain_partials_refuses_a_full_progress_list(spark, replay_part):
+    """``recentProgress`` keeps only the last ``numRecentProgressUpdates
+    - 1`` events; a run with as many events as that may have dropped
+    batch ids, so the drain raises instead of checking a partial list.
+    The 4-batch stream runs at least 4 events, more than a cap of 4
+    keeps."""
+    def partial_of(batch_df, batch_id):
+        return batch_df.groupBy("grp").agg(
+            F.count(F.lit(1)).cast("long").alias("c"))
+
+    spark.conf.set(_PROGRESS_KEY, "4")
+    try:
+        with (
+            replay_stream(spark, replay_part, 4) as stream,
+            pytest.raises(RuntimeError, match=r"as many as it keeps \(3\)"),
+        ):
+            drain_partials(spark, stream, partial_of)
+    finally:
+        spark.conf.unset(_PROGRESS_KEY)
+    with replay_stream(spark, replay_part, 4) as stream:
+        assert drain_partials(spark, stream, partial_of).count() > 0
+
+
+@pytest.mark.parametrize("splits", ["one", "several"])
+def test_batch_rule_matches_drained_batch_ids(spark, monkeypatch, splits):
+    """Over the replay file, ``_metadata.row_index DIV batch_rows`` (the
+    ``batch_id`` of ``replayed``) is the batch ``drain_partials`` saw each
+    row in, also when the file has many row groups and is read in
+    several splits."""
+    monkeypatch.setattr(drain, "N_BATCHES", 4)
+    rows = spark.range(0, 2000).select(
+        "id", (F.lit(1999) - F.col("id")).alias("rev"))
+
+    def partial_of(batch_df, batch_id):
+        return batch_df.select("id")
+
+    # row groups of ~100 rows, so splits of a few KB hold rows
+    small = {"parquet.block.size": "2048",
+             "spark.sql.files.maxPartitionBytes": "4096"}
+    if splits == "several":
+        for k, v in small.items():
+            spark.conf.set(k, v)
+    try:
+        with replay_partials_and_rows(
+            spark, rows, ("rev",), partial_of
+        ) as (parts, replayed, n, batch_rows, n_batches):
+            tagged = {r["id"]: r["batch_id"] for r in replayed.collect()}
+            used = replayed.groupBy(F.spark_partition_id()).count().count()
+    finally:
+        for k in small:
+            spark.conf.unset(k)
+    assert (n, batch_rows, n_batches) == (2000, 500, 4)
+    assert (used > 1) == (splits == "several")
+    drained = {r["id"]: r["batch_id"] for r in parts.collect()}
+    assert len(drained) == 2000
+    assert tagged == drained
+    # the file is in ``rev`` order: id 1999 arrives first
+    assert drained[1999] == 0 and drained[0] == 3
 
 
 def test_replay_file_yields_sorted_single_file(spark, tmp_path, monkeypatch):

@@ -9,6 +9,7 @@ import hashlib
 
 import duckdb
 import pandas as pd
+import pytest
 
 from cli_spark.operators.round14 import (
     q472_horvitz_thompson_audit,
@@ -178,6 +179,95 @@ def test_streaming_hll_multibatch_and_accuracy(spark, sf_dir,
         assert r["hll_final"] > 0 and r["hll_mid"] > 0
         # 64-register contract ~13% sigma; pin at < 50% realized
         assert r["err_ppm"] < 500_000
+
+
+def _q476_case(sf_dir: str, out, case: str):
+    """A copy of ``sf_dir`` whose ``events`` table is mutated for one
+    adversarial q476 case (the other tables symlinked), plus a DuckDB
+    connection over it. The mid cut is the oracle's
+    ``(nb DIV 2) * bsz`` rows of the ``(ts, event_id)`` order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cli_spark.tables import TABLE_NAMES
+    from tests.conftest import register_views
+
+    tbl = pq.read_table(f"{sf_dir}/events.parquet")
+    ev = tbl.to_pandas()
+    order = ev.sort_values(["ts", "event_id"]).index
+    bsz = -(-len(ev) // 20)
+    cut = (-(-len(ev) // bsz) // 2) * bsz
+    if case == "late_type":
+        # a type whose every row is in the second half
+        ev.loc[order[cut + 1::3], "event_type"] = "late_only"
+    elif case == "ts_ties":
+        # ten rows straddling the cut share one ts, and their event ids
+        # are reversed, so the tie-break moves the first five across
+        # the cut; fresh users make each row count in the mid audit
+        win = order[cut - 5:cut + 5]
+        ev.loc[win, "ts"] = ev.loc[order[cut], "ts"]
+        ev.loc[win, "event_id"] = ev.loc[win, "event_id"].to_numpy()[::-1]
+        ev.loc[win, "user_id"] = range(10**9, 10**9 + 10)
+    elif case == "single_user":
+        ev.loc[ev["event_type"] == ev["event_type"].iloc[0], "user_id"] = 7
+    elif case == "null_user":
+        ev["user_id"] = ev["user_id"].astype("Int64")
+        ev.loc[order[::7], "user_id"] = pd.NA
+    pq.write_table(pa.Table.from_pandas(ev, schema=tbl.schema,
+                                        preserve_index=False),
+                   out / "events.parquet")
+    for t in TABLE_NAMES:
+        if t != "events":
+            os.symlink(f"{sf_dir}/{t}.parquet", out / f"{t}.parquet")
+    con = duckdb.connect()
+    register_views(con, str(out))
+    return str(out), con
+
+
+@pytest.mark.parametrize("case", ["late_type", "ts_ties", "single_user"])
+def test_q476_adversarial_inputs_match_oracle(spark, sf_dir, tmp_path, case):
+    """q476 on mutated ``events`` against its DuckDB oracle, at the
+    graded 20 batches: a type with no first-half row drops out, ts ties
+    at the mid cut split by ``event_id`` as in the oracle's order, and
+    a single-user type estimates one user."""
+    from cli_spark.plans.registry import registry
+    from tests.test_parity import _compare
+
+    sf, con = _q476_case(sf_dir, tmp_path, case)
+    spec = registry()["q476_streaming_hll_union"]
+    sdf = spec.fn(spark, sf).toPandas()
+    odf = con.execute(spec.oracle).df()
+    assert not _compare(sdf, odf, spec.name)
+    if case == "late_type":
+        assert "late_only" not in set(sdf["event_type"])
+    if case == "single_user":
+        assert (sdf["n_exact"] == 1).sum() == 1
+
+
+def test_q476_null_user_matches_null_propagating_oracle(spark, sf_dir, tmp_path):
+    """A NULL ``user_id`` is a known oracle divergence: DuckDB's
+    ``concat('0x', NULL)`` is ``'0x'``, so the oracle's hash CAST
+    raises, while Spark's ``md5(NULL)`` is NULL and the row lands in a
+    NULL bucket with a NULL register. That bucket counts in ``nbk``
+    and adds nothing to the register sum, and the exact audit skips
+    the NULL user. The oracle with its hash made NULL-propagating, as
+    Spark's is, agrees with q476 exactly."""
+    from cli_spark.operators.round11 import _H60_DUCK
+    from cli_spark.plans.registry import registry
+    from tests.test_parity import _compare
+
+    sf, con = _q476_case(sf_dir, tmp_path, "null_user")
+    spec = registry()["q476_streaming_hll_union"]
+    with pytest.raises(duckdb.ConversionException, match="'0x'"):
+        con.execute(spec.oracle).df()
+    h = _H60_DUCK.format(key="user_id")
+    assert h in spec.oracle
+    odf = con.execute(spec.oracle.replace(
+        h, f"CASE WHEN user_id IS NOT NULL THEN {h} END")).df()
+    sdf = spec.fn(spark, sf).toPandas()
+    assert not _compare(sdf, odf, spec.name)
 
 
 def test_dp_release_domain_and_noise(spark, sf_dir):
