@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 # Bounded registry for persisted audit intermediates (q212/q333):
@@ -1737,8 +1738,6 @@ def q290_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     _Q290_SIG_CACHE registry, evicting any entry for another dataset
     (ADVICE r11 persist-leak rule, registry option)."""
     out, sig = _q290_sweep_build(spark, sf_dir)
-    from cli_spark.session import materialize_local
-
     out_local = materialize_local(out)
     for key in [k for k in _Q290_SIG_CACHE if k != sf_dir]:
         try:

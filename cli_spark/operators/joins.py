@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cli_spark.functions.determinism import dsum, sql_dsum
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 
@@ -458,7 +459,7 @@ def q399_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q399: runtime bloom filter was not injected into the "
                 "probe-side scan (no might_contain in executed plan)"
             )
-        out = spark.createDataFrame(res.collect(), res.schema)
+        out = materialize_local(res)
     finally:
         for k, v in saved.items():
             if v is None:

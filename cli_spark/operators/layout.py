@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 # ------------------------------------------------------------------ z-order
@@ -672,12 +673,13 @@ def q379_range_partition_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("prev_mx") >= F.col("mn"), 1).otherwise(0)
         ).cast("long").alias("range_violations"),
     )
-    row = audited.collect()[0]
+    out = materialize_local(audited)
+    row = out.collect()[0]
     if row["range_violations"] != 0:
         raise ValueError(f"range partitioning overlap: {row}")
     if row["n_partitions"] != 8:
         raise ValueError(f"expected 8 range partitions, got {row}")
-    return spark.createDataFrame([row], audited.schema)
+    return out
 
 
 # 8-bit × 8-bit Morton interleave, generated once as portable integer
@@ -832,7 +834,7 @@ def q410_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q410: aggregate was not pushed into the parquet scan "
                 "(no PushedAggregation in executed plan)"
             )
-        out = spark.createDataFrame(res.collect(), res.schema)
+        out = materialize_local(res)
     finally:
         for k, v in saved.items():
             if v is None:

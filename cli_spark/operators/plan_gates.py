@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from cli_spark.functions.determinism import quantize, sql_dsum, wide_sum
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 
@@ -48,12 +49,11 @@ def _confs(spark: SparkSession, settings: dict[str, str]):
 
 def _materialize(res: DataFrame, required_markers: dict[str, list[str]],
                  qname: str) -> DataFrame:
-    """collect() to finalize the adaptive plan, assert every marker
-    group (any-of within a group, all groups required), return the
-    rows as a fresh DataFrame so the driver's own collect() does not
-    re-run the gated job under different session confs."""
-    spark = res.sparkSession
-    rows = res.collect()
+    """Collect ``res`` to a local relation (finalizing its adaptive
+    plan), assert every marker group (any-of within a group, all groups
+    required) on that plan, and return the local relation, so the
+    driver's collect() does not re-run the job under other confs."""
+    out = materialize_local(res)
     plan = res._jdf.queryExecution().executedPlan().toString()
     for what, any_of in required_markers.items():
         if not any(m in plan for m in any_of):
@@ -61,7 +61,7 @@ def _materialize(res: DataFrame, required_markers: dict[str, list[str]],
                 f"{qname}: executed plan lacks {what} "
                 f"(looked for any of {any_of})"
             )
-    return spark.createDataFrame(rows, res.schema)
+    return out
 
 
 @register(

@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
-from cli_spark.session import materialize_local
-from cli_spark.tables import load_table, register_views
+from cli_spark.tables import load_table
 
 # q428 blocking parameters (shared by engine and oracle): band width in
 # chars, max block population (cap bounds worst-case pair growth at

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from cli_spark.functions.determinism import quantize, sql_dsum, wide_sum
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 _CODECS = ("snappy", "zstd", "gzip")
@@ -84,7 +85,6 @@ def q435_compression_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         out = outs[0]
         for o in outs[1:]:
             out = out.unionByName(o)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return materialize_local(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

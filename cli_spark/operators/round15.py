@@ -24,6 +24,7 @@ from cli_spark.operators.dedup import _SQL_SHINGLES
 from cli_spark.operators.round11 import _H60_DUCK, _H60_SPARK
 from cli_spark.operators.round14 import _HT_TERM, _PRI
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 _SC_K = 8  # greedy set-cover picks
@@ -827,7 +828,7 @@ def q487_filter_cascade_ordering(
                 .rowsBetween(Window.unboundedPreceding, 0))
             .cast("long").alias("cum_cost_micro"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return materialize_local(out)
     finally:
         flags.unpersist()
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from cli_spark.functions.determinism import MONEY_SCALE, dsum, quantize, sql_dsum
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 N_SALT = 32
@@ -266,14 +267,13 @@ def q404_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             dsum(F.col("l_extendedprice")).alias("price_sum"),
         )
-        rows = res.collect()  # finalizes the adaptive plan
+        out = materialize_local(res)  # finalizes the adaptive plan
         plan = res._jdf.queryExecution().executedPlan().toString()
         if "AQEShuffleRead" not in plan or "coalesced" not in plan:
             raise RuntimeError(
                 "q404: final adaptive plan has no coalesced "
                 "AQEShuffleRead — AQE partition coalescing did not run"
             )
-        out = spark.createDataFrame(rows, res.schema)
     finally:
         for k, v in saved.items():
             if v is None:

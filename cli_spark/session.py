@@ -1,7 +1,11 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one way a result comes back to the driver.
 
 Centralizes every config the engine depends on so that tests, the
 driver entry point, and bench.py all run identical sessions.
+
+A small result comes back to the driver one way: `materialize_local`
+collects it as Arrow and rebuilds it as one JVM local relation
+(`local_relation`, also the sketch-stream partials' way back).
 
 Scale notes (the design target is a 1000-executor cluster over ~100 TB,
 even though tests run on local[N]):
@@ -23,7 +27,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
@@ -161,13 +166,27 @@ class scoped_replay_ckpt_manager:
             self.spark.conf.unset(_CKPT_MANAGER_KEY)
 
 
-def materialize_local(df):
-    """Collect a SMALL (few-row) result and rebuild it as a local
-    DataFrame with the identical schema. Used by queries that persist
-    heavy intermediates: the collect drives the full computation with
-    AQE intact (a `localCheckpoint(eager=True)` materialization would
-    run the plan through the non-adaptive RDD path — measured 3× on
-    q290's fused sweep), after which the caller can unpersist its
-    caches before returning (the ADVICE r10 persist-leak rule)."""
-    rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
+def local_relation(spark: SparkSession, tables: list, schema: StructType) -> DataFrame:
+    """The Arrow ``tables`` (e.g. ``DataFrame.toArrow()`` results) as ONE
+    DataFrame of ``schema`` held by the JVM (a local relation below
+    ``spark.sql.execution.arrow.localRelationThreshold``), so a plan
+    over it runs no Python worker (``createDataFrame`` of a list of
+    Rows scans a parallelized Python RDD: one Python task per
+    partition on every scan). The tables are combined into one chunk
+    first: ``createDataFrame`` sends a table chunk by chunk, and the
+    rows after a zero-row chunk were lost (an empty partial's table
+    dropped every later batch's rows)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.concat_tables(tables).combine_chunks(), schema)
+
+
+def materialize_local(df: DataFrame) -> DataFrame:
+    """Collect a SMALL (few-row) result as Arrow and rebuild it as a
+    local relation of the identical schema, whose collect runs no
+    Spark job. The collect drives the full computation with AQE intact
+    (a `localCheckpoint(eager=True)` materialization would run the
+    plan through the non-adaptive RDD path — measured 3× on q290's
+    fused sweep), after which the caller can unpersist its caches
+    before returning (the ADVICE r10 persist-leak rule)."""
+    return local_relation(df.sparkSession, [df.toArrow()], df.schema)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.sources import hgt
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".fixtures", "hgt")
@@ -1163,8 +1164,6 @@ def q437_hgt_mosaic_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session lifetime — noticeable in 400-query parity sessions); the
     # pointer-jumping localCheckpoints are freed by the ContextCleaner
     # once unreferenced.
-    from cli_spark.session import materialize_local
-
     res = materialize_local(out)
     tagged.unpersist()
     seam_next.unpersist()
@@ -1432,8 +1431,6 @@ def q439_hgt_mosaic_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE in the plan), then release the cached blocks (ADVICE r10
     # persist-leak fix; closure localCheckpoints are freed by the
     # ContextCleaner once unreferenced).
-    from cli_spark.session import materialize_local
-
     res = materialize_local(out)
     tagged.unpersist()
     seam_next.unpersist()

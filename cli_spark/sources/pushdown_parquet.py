@@ -145,6 +145,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cli_spark.functions.determinism import dsum, sql_dsum  # noqa: E402
 from cli_spark.plans.registry import register  # noqa: E402
+from cli_spark.session import materialize_local  # noqa: E402
 
 
 @register(
@@ -210,7 +211,8 @@ def q402_pushdown_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("n_planned").alias("planned"),
                 F.max("n_total").alias("total"),
             )
-            rows = agg.collect()
+            census = materialize_local(agg)
+            rows = census.select("planned", "total").collect()
             if not rows:
                 raise RuntimeError("q402: empty census")
             planned, total = rows[0]["planned"], rows[0]["total"]
@@ -220,11 +222,7 @@ def q402_pushdown_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"(planned {planned} of {total}) — filter pushdown "
                     f"was not exercised"
                 )
-            out = spark.createDataFrame(
-                [(r["event_type"], r["n_events"], r["value_sum"])
-                 for r in rows],
-                "event_type string, n_events bigint, value_sum double",
-            )
+            out = census.select("event_type", "n_events", "value_sum")
         finally:
             if prev is None:
                 spark.conf.unset(key)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cli_spark.functions.determinism import dsum, sql_dsum
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 
@@ -185,6 +186,6 @@ def q408_corrupt_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("value")).alias("value_sum"),
             )
         )
-        return spark.createDataFrame(res.collect(), res.schema)
+        return materialize_local(res)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -26,6 +26,7 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.streaming.drain import (
     collect_memory_sink,
     drain_rows,
@@ -490,7 +491,7 @@ def q264_streaming_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("e_value")).alias("error_value_sum"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return materialize_local(result)
 
 
 @register(
@@ -908,7 +909,7 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
                 F.min("doc_id").alias("min_doc"),
                 F.max("doc_id").alias("max_doc"),
             )
-            return spark.createDataFrame(result.collect(), result.schema)
+            return materialize_local(result)
 
 
 @register(
@@ -1005,7 +1006,7 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
                 .filter(F.col("rn") == 1)
                 .select("user_id", "n_events", "value_cents", "n_update_batches")
             )
-            return spark.createDataFrame(last.collect(), last.schema)
+            return materialize_local(last)
 
 
 @register(
@@ -1137,7 +1138,7 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
                 F.coalesce("err_value_sum", F.lit(0.0)).alias("err_value_sum"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return materialize_local(result)
 
 
 @register(
@@ -1287,7 +1288,7 @@ def _run_idempotent_sink_recovery(
                 "value_sum",
             )
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
+        out = materialize_local(result)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(out_root, ignore_errors=True)
@@ -1417,7 +1418,7 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_sum",
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return materialize_local(result)
 
 
 @register(
@@ -1600,7 +1601,7 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
                 F.coalesce("err_value_sum", F.lit(0.0)).alias("err_value_sum"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return materialize_local(result)
 
 
 @register(
@@ -1666,7 +1667,7 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("value.sum").cast("long").alias("value_cents"),
             )
         )
-        out = spark.createDataFrame(state.collect(), state.schema)
+        out = materialize_local(state)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return out
@@ -1741,7 +1742,7 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
             F.col("view").cast("long").alias("view_n"),
             F.col("total_cents").cast("long").alias("total_cents"),
         )
-        out = spark.createDataFrame(result.collect(), result.schema)
+        out = materialize_local(result)
     finally:
         shutil.rmtree(out_root, ignore_errors=True)
     return out
@@ -2037,7 +2038,7 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             dsum(F.col("value")).alias("value_sum"),
         )
-        out = spark.createDataFrame(res.collect(), res.schema)
+        out = materialize_local(res)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -2131,7 +2132,7 @@ def q396_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_flagged"),
             dsum(F.col("p_value")).alias("flagged_value_sum"),
         )
-        return spark.createDataFrame(res.collect(), res.schema)
+        return materialize_local(res)
 
 
 @register(
@@ -2201,7 +2202,7 @@ def q397_streaming_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_clean"),
             dsum(F.col("p_value")).alias("clean_value_sum"),
         )
-        return spark.createDataFrame(res.collect(), res.schema)
+        return materialize_local(res)
 
 
 @register(
@@ -2361,7 +2362,7 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a_sum").alias("value_sum"),
             F.lit(int(diverged)).cast("long").alias("sink_divergence"),
         )
-        out = spark.createDataFrame(res.collect(), res.schema)
+        out = materialize_local(res)
     finally:
         shutil.rmtree(out_root, ignore_errors=True)
     return out

@@ -45,8 +45,8 @@ Entry points:
   that flushes append-mode windows) has committed, so no result
   depends on wall-clock polling. It raises when a file source's
   directory is gone, so a replay stream drained after its block has
-  exited fails instead of returning no rows. Memory sinks are read
-  back with `collect_memory_sink`.
+  exited fails instead of returning no rows. `collect_memory_sink`
+  reads a memory sink back as a local relation (`materialize_local`).
 
 The row-to-batch rule: in the single sorted file `replay_file` writes,
 the row at position ``i`` (Spark's ``_metadata.row_index``, which
@@ -62,7 +62,8 @@ run paid ~20 FileFormatWriter commit protocols plus a read-back
 (round 15: addBatch ~250 ms/batch, ~110 ms of it the write; tmpfs
 changed nothing), and driver collection cut addBatch ~40%. The
 partials come back as Arrow tables and leave as one JVM local relation
-(`local_relation`), so the merge plan over them runs no Python worker.
+(`session.local_relation`), so the merge plan over them runs no Python
+worker.
 
 Driver accumulation is sound only because every partial is
 SKETCH-grain — O(buckets | registers | counters | bottom-k samples)
@@ -89,7 +90,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
+
+from cli_spark.session import local_relation, materialize_local, scoped_replay_ckpt_manager
 
 # Target micro-batch count of the sketch streams. Read at call time
 # so tests can patch it (the fast-mode fixture runs 5); the oracles
@@ -144,11 +146,10 @@ def _check_file_sources(query: StreamingQuery) -> None:
 
 
 def collect_memory_sink(spark: SparkSession, name: str) -> DataFrame:
-    """Materialize memory sink ``name`` as a local DataFrame and drop
+    """Materialize memory sink ``name`` as a local relation and drop
     its temp view, so repeated invocations in one session don't keep
     fully-materialized sink tables on the driver."""
-    sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
+    out = materialize_local(spark.table(name))
     spark.catalog.dropTempView(name)
     return out
 
@@ -207,8 +208,6 @@ def drain_partials(
             )
         tables.append(batch)
 
-    from cli_spark.session import scoped_replay_ckpt_manager
-
     # FileSystem-API checkpoint file manager for the bounded replay
     # run (round 16: ~1.8 s/query; see session.py for what it does
     # and does not change)
@@ -233,21 +232,6 @@ def drain_partials(
             f"replay stream's data batches are {data_ids}, not "
             f"0..{len(data_ids) - 1}")
     return local_relation(spark, tables, schema_cell[0])
-
-
-def local_relation(spark: SparkSession, tables: list, schema: StructType) -> DataFrame:
-    """The Arrow ``tables`` (e.g. ``DataFrame.toArrow()`` results) as ONE
-    DataFrame of ``schema`` held by the JVM (a local relation below
-    ``spark.sql.execution.arrow.localRelationThreshold``), so a plan
-    over it runs no Python worker (``createDataFrame`` of a list of
-    Rows scans a parallelized Python RDD: one Python task per
-    partition on every scan). The tables are combined into one chunk
-    first: ``createDataFrame`` sends a table chunk by chunk, and the
-    rows after a zero-row chunk were lost (an empty partial's table
-    dropped every later batch's rows)."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(pa.concat_tables(tables).combine_chunks(), schema)
 
 
 def _data_batch_ids(progress: list) -> list[int]:

@@ -28,6 +28,7 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.streaming.drain import (
     collect_memory_sink,
     replay_stream,
@@ -289,10 +290,8 @@ def q427_rate_micro_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    sink = spark.table(name)
-    rows = sink.filter(F.col("value") < need).collect()
+    got = materialize_local(spark.table(name).filter(F.col("value") < need))
     spark.catalog.dropTempView(name)
-    got = spark.createDataFrame(rows, sink.schema)
     n_ts = got.select("timestamp").distinct().count()
     if n_ts < n_batches:
         raise RuntimeError(

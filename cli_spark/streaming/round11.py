@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.tables import load_table
 
 # Echo-stream parameters, in PER-MILLE OF THE EVENT-TIME SPAN so the
@@ -267,4 +268,4 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
                 .cast("long").alias("n_fully_late"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return materialize_local(result)

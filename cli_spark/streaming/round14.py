@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.streaming.drain import (
     N_BATCHES,
-    local_relation,
     replay_partials,
     replay_partials_and_rows,
 )
@@ -144,11 +144,11 @@ def q473_streaming_histogram_quantiles(
     # micro-batch fresh, so a lazy `grid` inside the sink re-ran the
     # full-table min/max aggregation as a broadcast build EVERY batch
     # (round-15 optimization, guide §1/§5 — ~20 redundant scans per
-    # run). The collected rows feed the sink as map literals and
-    # rebuild the same `grid` relation for the post-run estimates.
+    # run). Its rows (a local collect, no job) feed the sink as map
+    # literals, and the same local relation serves the post-run
+    # estimates.
+    grid = materialize_local(grid)
     grid_rows = grid.collect()
-    grid = spark.createDataFrame(
-        grid_rows, "event_type string, minc long, maxc long")
 
     # grid lookup as MAP LITERALS built with the COLUMN API (one
     # row per event type), keeping the exact integer DIV chain:
@@ -234,7 +234,7 @@ def q473_streaming_histogram_quantiles(
             F.lit(nb).cast("long").alias("n_batches"),
         )
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)
 
 
 # HLL chains shared with the batch sketch (q465): exact-integer
@@ -392,8 +392,7 @@ def q476_streaming_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(nb).cast("long").alias("n_batches"),
             )
         )
-        out = result.toArrow()
-    return local_relation(spark, [out], result.schema)
+        return materialize_local(result)
 
 
 def _fused_hll(regs: DataFrame, half: int) -> DataFrame:
@@ -605,4 +604,4 @@ def q479_streaming_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(n // (_MG_K + 1)).cast("long").alias("bound"),
         F.lit(nb).cast("long").alias("n_batches"),
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)

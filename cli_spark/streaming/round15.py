@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from cli_spark.operators.round11 import _H60_DUCK, _H60_SPARK, _TWO60
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.streaming.drain import N_BATCHES, replay_partials
 from cli_spark.tables import load_table
 
@@ -249,7 +250,7 @@ def q481_streaming_theta_intersection(
         )
         .withColumn("n_batches", F.lit(nb).cast("long"))
     )
-    out = spark.createDataFrame(result.collect(), result.schema)
+    out = materialize_local(result)
     sk.unpersist()
     return out
 
@@ -418,7 +419,7 @@ def q486_streaming_priority_sample(
             F.lit(nb).cast("long").alias("n_batches"),
         )
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)
 
 
 # ---------------------------------------------------------------- q491
@@ -614,4 +615,4 @@ def q491_streaming_logbucket_quantiles(
             F.lit(nb).cast("long").alias("n_batches"),
         )
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)

@@ -26,6 +26,7 @@ from cli_spark.operators.round15 import (
     _MAXLONG,
 )
 from cli_spark.plans.registry import register
+from cli_spark.session import materialize_local
 from cli_spark.streaming.drain import N_BATCHES, replay_partials
 from cli_spark.tables import load_table
 
@@ -161,13 +162,9 @@ def q493_streaming_conformal_monitor(
     # the static calibration table shipped into every sink invocation:
     # one row per language, materialized so the stream never
     # recomputes the train/calibration chains per batch
-    static_rows = pred.join(
-        qh.select("lang", "n_calib", "qhat"), "lang").collect()
-    static = spark.createDataFrame(
-        static_rows,
-        "lang string, n_train long, pred_chars long, n_calib long, "
-        "qhat long",
-    )
+    static = materialize_local(
+        pred.join(qh.select("lang", "n_calib", "qhat"), "lang"))
+    static_rows = static.collect()
 
     test_rows = base.filter(F.col("split") == 2).select(
         "lang", "doc_id", "y")
@@ -225,7 +222,7 @@ def q493_streaming_conformal_monitor(
                    "THEN 1 ELSE 0 END AS BIGINT)"))
         .withColumn("n_batches", F.lit(nb).cast("long"))
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)
 
 
 # ---------------------------------------------------------------- q496
@@ -429,7 +426,7 @@ def q496_streaming_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(nb).cast("long").alias("n_batches"),
         )
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)
 
 
 # ---------------------------------------------------------------- q500
@@ -587,4 +584,4 @@ def q500_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(nb).cast("long").alias("n_batches"),
         )
     )
-    return spark.createDataFrame(result.collect(), result.schema)
+    return materialize_local(result)

@@ -28,10 +28,10 @@ import pytest
 from pyspark.sql import functions as F
 
 import cli_spark.streaming.drain as drain
+from cli_spark.session import local_relation
 from cli_spark.streaming.drain import (
     drain_partials,
     drain_rows,
-    local_relation,
     replay_batch_rows,
     replay_file,
     replay_in_phases,

@@ -18,7 +18,9 @@ MinHash signature built by `dedup.minhash_signature` (see
 keeps one HGT grid decoder (`hgt.grid`) and one D8 weight table (see
 `test_one_hgt_grid_decoder_and_one_d8_weight_table`), and a sixth keeps
 one HGT sample-coordinate rule (`hgt.axes`, see
-`test_one_hgt_coordinate_rule`).
+`test_one_hgt_coordinate_rule`), and a seventh keeps one way a
+collected result comes back as a DataFrame, the Arrow local relation
+of `session.materialize_local` (see `test_one_local_rebuild`).
 """
 
 from __future__ import annotations
@@ -251,3 +253,52 @@ def test_one_hgt_coordinate_rule():
                                 f"{', '.join(sorted(names))}")
     assert not hits, (
         "HGT sample coordinates computed outside hgt.axes:\n" + "\n".join(hits))
+
+
+# A collected result comes back as a DataFrame in one way:
+# session.materialize_local (toArrow -> local_relation). No module
+# rebuilds a collect's Row list (`createDataFrame(<x>.collect(), ...)`,
+# `createDataFrame(<rows>, ...)` with `<rows> = <x>.collect()`, or any
+# `createDataFrame(..., <x>.schema)`), and only session.py and the
+# sketch-stream sink in drain.py call toArrow().
+ARROW_HOMES = {REPO / "cli_spark/session.py", REPO / "cli_spark/streaming/drain.py"}
+
+
+def _is_collect(node) -> bool:
+    return _call_name(node) == "collect"
+
+
+def _rebuilds_rows(node, collected: set[str]) -> bool:
+    if _call_name(node) != "createDataFrame":
+        return False
+    data = node.args[0] if node.args else None
+    schema = node.args[1] if len(node.args) > 1 else next(
+        (k.value for k in node.keywords if k.arg == "schema"), None)
+    return (
+        _is_collect(data)
+        or (isinstance(data, ast.Name) and data.id in collected)
+        or (isinstance(schema, ast.Attribute) and schema.attr == "schema")
+    )
+
+
+def test_one_local_rebuild():
+    hits: set[str] = set()
+    for path in sorted(REPO.glob("cli_spark/**/*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.Module)):
+                continue
+            collected = {
+                t.id for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and _is_collect(n.value)
+                for t in n.targets if isinstance(t, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if _rebuilds_rows(node, collected):
+                    hits.add(f"{path.relative_to(REPO)}:{node.lineno} rebuild")
+        if path not in ARROW_HOMES:
+            hits |= {f"{path.relative_to(REPO)}:{node.lineno} toArrow"
+                     for node in ast.walk(tree) if _call_name(node) == "toArrow"}
+    assert not hits, (
+        "collected result rebuilt outside session.materialize_local:\n"
+        + "\n".join(sorted(hits)))
